@@ -349,6 +349,21 @@ def count_redaction_residuals(redacted: str | None,
     return sum(1 for s in spans if s["field"] in redact_fields)
 
 
+def _error_row(redact_fields: frozenset[str] | None = None) -> dict[str, Any]:
+    """The one ``status='error'`` row shape, for a payload whose extraction
+    raised: an empty extraction of kind 'unknown' (plus the redaction
+    columns when ``redact_fields`` is set)."""
+    row: dict[str, Any] = {
+        "payload_kind": "unknown", "extracted_text": "",
+        "fields": {}, "spans": [], "confidence_scores": {},
+        "low_confidence_fields": [], "n_fields": 0, "status": "error",
+    }
+    if redact_fields is not None:
+        row["redacted_text"] = None
+        row["redaction_residuals"] = 0
+    return row
+
+
 def extract_batch(batch: pd.DataFrame,
                   allowed_fields: frozenset[str] | None = None,
                   redact_fields: frozenset[str] | None = None) -> pd.DataFrame:
@@ -377,14 +392,7 @@ def extract_batch(batch: pd.DataFrame,
         try:
             row = extract_turn(text, allowed_fields, redact_fields)
         except Exception:
-            row = {
-                "payload_kind": "unknown", "extracted_text": "",
-                "fields": {}, "spans": [], "confidence_scores": {},
-                "low_confidence_fields": [], "n_fields": 0, "status": "error",
-            }
-            if redact_fields is not None:
-                row["redacted_text"] = None
-                row["redaction_residuals"] = 0
+            row = _error_row(redact_fields)
         for key, value in row.items():
             out[key][i] = value
 
@@ -470,10 +478,7 @@ def extract_documents_batch(batch: pd.DataFrame) -> pd.DataFrame:
                 idx = int(turn_idx)
             except Exception:
                 idx = -1  # unconvertible turn_idx: keep the row, flag it
-            seg_rows = [(0, {
-                "payload_kind": "unknown", "extracted_text": "",
-                "fields": {}, "low_confidence_fields": [],
-                "n_fields": 0, "status": "error"})]
+            seg_rows = [(0, _error_row())]
             segments = [""]
         for doc_idx, r in seg_rows:
             rows.append({

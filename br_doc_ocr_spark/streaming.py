@@ -375,14 +375,15 @@ def stream_media_features(
     One query per media ``kind``, mirroring the batch API's per-kind
     functions (``image_features`` / ``audio_features`` have different
     output schemas, so one parquet sink cannot hold both): ``kind='image'``
-    routes through the PNG+JPEG codecs, ``kind='audio'`` through the
-    RIFF/WAVE codec. A mixed landing zone is ingested by starting one
-    query per kind over the SAME input path, each with its own
-    checkpoint + output — rows of the other kinds are excluded by the
-    explicit kind predicate, never silently: the quarantine metric is
-    kind-filtered source rows minus sink rows per trigger (review r05 —
-    an image-only query counting audio rows as corrupt-payload drops
-    overstated quarantine and hid the audio family from streaming).
+    and ``kind='audio'`` both decode through ``MediaDecoder``'s codec
+    table (PNG/JPEG and RIFF/WAVE respectively). A mixed landing zone is
+    ingested by starting one query per kind over the SAME input path,
+    each with its own checkpoint + output — rows of the other kinds are
+    excluded by the explicit kind predicate, never silently: the
+    quarantine metric is kind-filtered source rows minus sink rows per
+    trigger (review r05 — an image-only query counting audio rows as
+    corrupt-payload drops overstated quarantine and hid the audio family
+    from streaming).
 
     ``on_error`` defaults to ``'skip'`` here, the OPPOSITE of the batch
     kernels' ``'raise'``: a landing zone at scale WILL contain truncated
@@ -399,17 +400,16 @@ def stream_media_features(
     from br_doc_ocr_spark.ops import multimodal as mm
 
     media = read_media_stream(spark, input_path, max_files_per_trigger)
+    decoder = decoder or mm.MediaDecoder()
     if kind == "image":
-        feats = mm.image_features(media, decoder=decoder or mm.ImageDecoder(),
-                                  on_error=on_error)
+        feats = mm.image_features(media, decoder=decoder, on_error=on_error)
     elif kind == "audio":
-        feats = mm.audio_features(media, decoder=decoder or mm.WavDecoder(),
-                                  on_error=on_error)
+        feats = mm.audio_features(media, decoder=decoder, on_error=on_error)
     else:
         raise ValueError(
-            f"kind must be 'image' or 'audio', got {kind!r} — video decode "
-            f"is a documented library seam (ops/multimodal.py), not a "
-            f"streaming path")
+            f"kind must be 'image' or 'audio', got {kind!r} — video (AVI) "
+            f"decodes in batch through ops/multimodal.sample_video_frames, "
+            f"which has no streaming path")
     writer = (feats.writeStream.format("parquet")
               .option("path", output_path)
               .option("checkpointLocation", checkpoint_path)

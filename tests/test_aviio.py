@@ -1,5 +1,5 @@
 """AVI (RIFF) container codec: roundtrips, orientation, the named-error
-fuzz contract, the AviDecoder seam, and the Spark e2e path on real bytes —
+fuzz contract, the MediaDecoder seam, and the Spark e2e path on real bytes —
 the video mirror of test_pngio/test_jpegio/test_wavio."""
 
 import struct
@@ -170,35 +170,36 @@ def test_encode_input_validation():
 # ---------------------------------------------------------------------------
 
 def test_avi_decoder_enforces_the_metadata_contract():
-    from br_doc_ocr_spark.ops.multimodal import AviDecoder
+    from br_doc_ocr_spark.ops.multimodal import MediaDecoder
 
     p = encode_avi(_frames(1, w=16, h=8), codec="DIB")
-    dec = AviDecoder()
+    dec = MediaDecoder()
     assert dec.decode_video_frame(p, 0, 16, 8).shape == (8, 16, 3)
     with pytest.raises(ValueError, match="refusing to feature-extract"):
         dec.decode_video_frame(p, 0, 32, 8)
-    with pytest.raises(NotImplementedError, match="video only"):
+    # AVI bytes in an image or audio row: a modality mismatch, refused
+    with pytest.raises(ValueError, match="AVI magic, a video format"):
         dec.decode_image(p, 16, 8)
-    with pytest.raises(NotImplementedError, match="video only"):
+    with pytest.raises(ValueError, match="AVI magic, a video format"):
         dec.decode_audio(p, 100)
 
 
 def test_library_decoder_routes_avi_video_dependency_free():
-    from br_doc_ocr_spark.ops.multimodal import LibraryDecoder
+    from br_doc_ocr_spark.ops.multimodal import MediaDecoder
 
     frames = _frames(1, w=16, h=8, seed=4)
     p = encode_avi(frames, codec="DIB")
-    d = LibraryDecoder().decode_video_frame(p, 0, 16, 8)
+    d = MediaDecoder().decode_video_frame(p, 0, 16, 8)
     assert np.array_equal(d, frames[0])
-    with pytest.raises(NotImplementedError, match="PyAV"):
-        LibraryDecoder().decode_video_frame(b"\x00\x01\x02\x03" * 4, 0, 16, 8)
+    with pytest.raises(ValueError, match="PyAV"):
+        MediaDecoder().decode_video_frame(b"\x00\x01\x02\x03" * 4, 0, 16, 8)
 
 
 def test_video_frames_end_to_end_on_real_avi(spark):
     from br_doc_ocr_spark.ops import multimodal as mm
 
     media = mm.synth_avi_media(spark, n=4, start_id=300)
-    out = (mm.sample_video_frames(media, decoder=mm.AviDecoder(),
+    out = (mm.sample_video_frames(media, decoder=mm.MediaDecoder(),
                                   every_nth=10)
            .orderBy("media_id", "frame_idx").collect())
     # n_frames cycle 12/21/30/12 → 2+3+3+2 sampled frames
@@ -228,11 +229,11 @@ def test_video_on_error_skip_quarantines_whole_media(spark):
     ]
     pdf = pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"])
     media = spark.createDataFrame(pdf, schema=mm.MEDIA_SCHEMA_DDL)
-    kept = (mm.sample_video_frames(media, decoder=mm.AviDecoder(),
+    kept = (mm.sample_video_frames(media, decoder=mm.MediaDecoder(),
                                    every_nth=1, on_error="skip").collect())
     assert sorted((r.media_id, r.frame_idx) for r in kept) == [(1, 0), (1, 1)]
     with pytest.raises(Exception, match="AVI"):
-        mm.sample_video_frames(media, decoder=mm.AviDecoder(),
+        mm.sample_video_frames(media, decoder=mm.MediaDecoder(),
                                every_nth=1).collect()
     with pytest.raises(ValueError, match="on_error must be"):
         mm.video_frame_sample_kernel(on_error="drop")

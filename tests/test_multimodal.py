@@ -1,5 +1,5 @@
 """Multimodal plumbing tests: real Spark schemas/batch shapes, deterministic
-fake decode, stubbed library decoder."""
+fake decode, the codec table's library overrides and row quarantine."""
 
 from __future__ import annotations
 
@@ -73,11 +73,11 @@ def test_video_frame_sampling_is_flatmap(media):
 
 
 def test_library_decoder_enforces_metadata_dimensions(monkeypatch):
-    """The PIL path must enforce the same decoded-vs-metadata contract as
-    PngDecoder/JpegDecoder: a mislabeled row otherwise IndexErrors outside
+    """The PIL override must enforce the same decoded-vs-metadata contract
+    as the built-in codecs: a mislabeled row otherwise IndexErrors outside
     the kernel quarantine (decoded smaller) or silently crops (decoded
-    larger) (review r05). PIL is absent in this container, so a stub stands
-    in for Image.open."""
+    larger) (review r05). A stub stands in for Image.open, so the test
+    runs whether or not PIL is installed."""
     import sys
     import types
 
@@ -90,20 +90,61 @@ def test_library_decoder_enforces_metadata_dimensions(monkeypatch):
     fake_image_mod = types.SimpleNamespace(open=lambda fp: _FakeImg())
     monkeypatch.setitem(sys.modules, "PIL",
                         types.SimpleNamespace(Image=fake_image_mod))
-    d = mm.LibraryDecoder()
+    d = mm.MediaDecoder()
     out = d.decode_image(b"whatever", 50, 50)
     assert out.shape == (50, 50, 3)
     with pytest.raises(ValueError, match="mismatched metadata"):
         d.decode_image(b"whatever", 100, 100)
 
 
-def test_library_decoder_is_clearly_stubbed():
-    d = mm.LibraryDecoder()
-    # non-PNG/JPEG payloads still raise the PIL gate without PIL installed;
-    # PNG/JPEG payloads fall back to the dependency-free codecs (test_jpegio)
-    with pytest.raises(NotImplementedError, match="PIL"):
+def test_library_decoder_is_clearly_stubbed(monkeypatch):
+    import sys
+
+    monkeypatch.setitem(sys.modules, "PIL", None)  # PIL absent
+    d = mm.MediaDecoder()
+    # formats outside the codec table raise ValueError (quarantinable under
+    # on_error='skip') naming the library that would decode them; PNG/JPEG
+    # payloads decode dependency-free (test_jpegio)
+    with pytest.raises(ValueError, match="PIL"):
         d.decode_image(b"GIF89a....", 1, 1)
-    with pytest.raises(NotImplementedError, match="torchaudio|soundfile"):
+    with pytest.raises(ValueError, match="torchaudio|soundfile"):
         d.decode_audio(b"", 1)
-    with pytest.raises(NotImplementedError, match="PyAV"):
+    with pytest.raises(ValueError, match="PyAV"):
         d.decode_video_frame(b"", 0, 1, 1)
+
+
+def test_media_decoder_quarantines_formats_outside_the_table(monkeypatch):
+    """A GIF image, an MP3 (ID3) audio payload and an MP4 video payload are
+    outside the codec table: each raises ValueError, so on_error='skip'
+    drops exactly those rows and keeps the good ones, and on_error='raise'
+    names the library that would decode the format. The kernel closures
+    run directly on pandas batches."""
+    import sys
+
+    import pandas as pd
+
+    from br_doc_ocr_spark.ops import aviio, pngio, wavio
+
+    monkeypatch.setitem(sys.modules, "PIL", None)  # PIL absent
+    img = np.zeros((8, 16, 3), np.uint8)
+    meta = {"width": 16, "height": 8, "n_frames": 2, "sample_rate": 8000,
+            "format": "mixed"}
+    cases = [
+        (mm.image_feature_kernel, pngio.encode_png(img),
+         b"GIF89a\x10\x00\x08\x00", "PIL"),
+        (mm.audio_feature_kernel,
+         wavio.encode_wav(np.zeros(800, np.int16), 8000),
+         b"ID3\x04\x00\x00\x00\x00\x00\x00", "torchaudio"),
+        (mm.video_frame_sample_kernel, aviio.encode_avi([img, img],
+                                                        codec="DIB"),
+         b"\x00\x00\x00\x18ftypmp42", "PyAV"),
+    ]
+    for kernel, good, bad, library in cases:
+        batch = pd.DataFrame(
+            [(1, good, meta), (2, bad, meta), (3, good, meta)],
+            columns=["media_id", "payload", "meta"])
+        kept = pd.concat(kernel(decoder=mm.MediaDecoder(),
+                                on_error="skip")([batch]))
+        assert kept["media_id"].tolist() == [1, 3]
+        with pytest.raises(ValueError, match=library):
+            list(kernel(decoder=mm.MediaDecoder())([batch]))

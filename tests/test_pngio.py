@@ -125,7 +125,7 @@ def test_unsupported_profiles_raise_named_errors():
 def test_png_decoder_validates_metadata():
     img = _rng_img(8, 6)
     payload = pngio.encode_png(img)
-    dec = mm.PngDecoder()
+    dec = mm.MediaDecoder()
     assert np.array_equal(dec.decode_image(payload, 6, 8), img)
     with pytest.raises(ValueError, match="mislabeled media"):
         dec.decode_image(payload, 8, 6)  # transposed metadata
@@ -136,7 +136,7 @@ def test_image_features_end_to_end_on_real_pngs(spark):
     phash) over REAL PNG bytes, same output schema as the Fake path, values
     pinned against a driver-side numpy recomputation."""
     media = mm.synth_png_media(spark, n=8)
-    feats = mm.image_features(media, decoder=mm.PngDecoder())
+    feats = mm.image_features(media, decoder=mm.MediaDecoder())
     got = {r["media_id"]: r for r in feats.collect()}
     assert len(got) == 8
     assert feats.columns == ["media_id", "out_width", "out_height",

@@ -259,7 +259,7 @@ def test_stream_media_real_codec_quarantines_corrupt_payload(spark,
     clean = pd.concat([png, jpg], ignore_index=True)
     expected = (mm.image_features(
         spark.createDataFrame(clean, schema=mm.MEDIA_SCHEMA_DDL),
-        decoder=mm.ImageDecoder()).toPandas()
+        decoder=mm.MediaDecoder()).toPandas()
         .sort_values("media_id").reset_index(drop=True))
     assert 999 not in set(got["media_id"])  # quarantined, not poisoned
     assert len(got) == len(expected) == 10
@@ -296,7 +296,7 @@ def test_stream_media_on_error_raise_fails_the_query(spark, stream_dirs):
 
 
 def test_stream_media_audio_kind_reaches_sink(spark, stream_dirs):
-    """kind='audio' routes real RIFF/WAVE payloads through WavDecoder to
+    """kind='audio' routes real RIFF/WAVE payloads through MediaDecoder to
     the streaming sink (review r05: the image-only routing made the audio
     family unreachable under streaming and counted its rows as quarantine
     drops). Mixed landing zone: image rows are excluded by the explicit
@@ -328,7 +328,7 @@ def test_stream_media_audio_kind_reaches_sink(spark, stream_dirs):
            .sort_values("media_id").reset_index(drop=True))
     expected = (mm.audio_features(
         spark.createDataFrame(wav, schema=mm.MEDIA_SCHEMA_DDL),
-        decoder=mm.WavDecoder()).toPandas()
+        decoder=mm.MediaDecoder()).toPandas()
         .sort_values("media_id").reset_index(drop=True))
     assert got["media_id"].tolist() == expected["media_id"].tolist()
     assert 999 not in set(got["media_id"])          # corrupt WAV quarantined

@@ -180,12 +180,12 @@ def test_fuzzed_payloads_raise_value_error_or_decode(pos, val):
 # ---------------------------------------------------------------------------
 
 def test_audio_features_end_to_end_on_real_wavs(spark):
-    """The audio kernel over actual RIFF bytes with WavDecoder: every row
+    """The audio kernel over actual RIFF bytes with MediaDecoder: every row
     decodes, n_samples reports FILE truth (not metadata), and values match
     a local decode of the same payloads exactly."""
     media = mm.synth_wav_media(spark, n=6)
     got = {r["media_id"]: r
-           for r in mm.audio_features(media, decoder=mm.WavDecoder()).collect()}
+           for r in mm.audio_features(media, decoder=mm.MediaDecoder()).collect()}
     assert sorted(got) == list(range(6))
     for row in media.collect():
         wave, rate = wavio.decode_wav(bytes(row["payload"]))
@@ -210,8 +210,8 @@ def test_audio_features_mismatched_metadata_refused(spark):
         "'format', meta.format) AS meta").limit(1)
     mixed = media.unionByName(lying)
     with pytest.raises(Exception, match="refusing to feature-extract"):
-        mm.audio_features(mixed, decoder=mm.WavDecoder()).collect()
-    good = mm.audio_features(mixed, decoder=mm.WavDecoder(),
+        mm.audio_features(mixed, decoder=mm.MediaDecoder()).collect()
+    good = mm.audio_features(mixed, decoder=mm.MediaDecoder(),
                              on_error="skip").collect()
     assert sorted(r["media_id"] for r in good) == [0, 1, 2]
 
@@ -222,16 +222,16 @@ def test_audio_features_corrupt_payload_quarantined(spark):
         "media_id + 50 AS media_id", "kind",
         "cast('not audio' as binary) AS payload", "meta").limit(1)
     mixed = media.unionByName(corrupt)
-    good = mm.audio_features(mixed, decoder=mm.WavDecoder(),
+    good = mm.audio_features(mixed, decoder=mm.MediaDecoder(),
                              on_error="skip").collect()
     assert sorted(r["media_id"] for r in good) == [0, 1, 2, 3]
     with pytest.raises(Exception, match="WAV:"):
-        mm.audio_features(mixed, decoder=mm.WavDecoder()).collect()
+        mm.audio_features(mixed, decoder=mm.MediaDecoder()).collect()
 
 
 def test_library_decoder_routes_riff_to_wav_decoder():
     payload = wavio.encode_wav(_tone(128), 8000)
-    wave = mm.LibraryDecoder().decode_audio(payload, 8000)
+    wave = mm.MediaDecoder().decode_audio(payload, 8000)
     assert wave.shape == (128,)
-    with pytest.raises(NotImplementedError, match="torchaudio"):
-        mm.LibraryDecoder().decode_audio(b"\x00\x01\x02\x03", 8000)
+    with pytest.raises(ValueError, match="torchaudio"):
+        mm.MediaDecoder().decode_audio(b"\x00\x01\x02\x03", 8000)
