@@ -7,7 +7,11 @@ Spark's execution model per the north rule:
 1. scan the transcript table (parquet here; the layout is Iceberg-compatible),
 2. **salted repartition by conv_id** — extraction is per-row, so we are free
    to break a 10^9-turn conversation across ``salt`` tasks; without salting a
-   single heavy conv_id stalls one task (SURVEY.md §4.3),
+   single heavy conv_id stalls one task (SURVEY.md §4.3). The partition count
+   is ``spark.sql.shuffle.partitions``, except for an input no bigger than
+   ``spark.sql.files.openCostInBytes`` per task slot: that gets one wave of
+   Python tasks, ``min(spark.sql.shuffle.partitions, defaultParallelism)``
+   (each Python task pays a fixed start-up charge, SCALE.md),
 3. exactly **one Arrow crossing**: ``mapInPandas(extract_batches)`` over the
    shared kernel (zero per-row Python at the Spark boundary),
 4. per-partition **lineage** rows (partition id, row counts, status tallies,
@@ -131,6 +135,37 @@ def _extract_partition(allowed_fields: frozenset[str] | None,
     return run
 
 
+def _salted_shuffle(transcripts: DataFrame, salt: int,
+                    target_partitions: int | None) -> DataFrame:
+    """The one Exchange in front of the extraction crossing: hash on
+    ``(conv_id, pmod(turn_idx, salt))`` into ``target_partitions``, by
+    default into ``spark.sql.shuffle.partitions`` — or, when the whole input
+    is at most ``spark.sql.files.openCostInBytes`` (Spark's byte-equivalent
+    of a fixed per-task charge) per task slot, into one wave of task slots.
+
+    Each Python task pays a fixed start-up charge that does not depend on
+    its rows (SCALE.md); on such a small input no task holds enough rows to
+    amortize it, so extra waves only add charges. Bigger inputs keep the
+    conf, and with it the wave smoothing of several tasks per slot. The
+    input size is Catalyst's driver-side estimate (it plans the query, runs
+    no job); a filtered input is sized by its unfiltered scan."""
+    spark = transcripts.sparkSession
+    n = target_partitions
+    if not n:
+        n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        slots = spark.sparkContext.defaultParallelism
+        # py4j handles (classic, non-Connect sessions only): Catalyst's size
+        # estimate and the parsed byte conf (the string may carry a unit)
+        size = transcripts._jdf.queryExecution().optimizedPlan().stats() \
+            .sizeInBytes()
+        open_cost = spark._jsparkSession.sessionState().conf() \
+            .filesOpenCostInBytes()
+        if int(size) <= slots * open_cost:
+            n = min(n, slots)
+    return transcripts.repartition(
+        n, sf.col("conv_id"), sf.pmod(sf.col("turn_idx"), sf.lit(salt)))
+
+
 def run_extraction(
     transcripts: DataFrame,
     salt: int = 8,
@@ -145,10 +180,13 @@ def run_extraction(
     ``salt`` splits each conv_id across up to ``salt`` shuffle keys
     (``pmod(turn_idx, salt)``) — deterministic, order-insensitive for a
     per-row map, and it defuses long-conversation skew. ``target_partitions``
-    defaults to the session shuffle-partition conf. ``schema`` enables
-    schema-guided extraction (US4): a JSON-Schema dict whose field names
-    bound the extracted field set (shipped to executors in the task closure —
-    the broadcast-variable pattern for a driver-side config).
+    defaults to ``spark.sql.shuffle.partitions``, or to one wave of task
+    slots for an input of at most ``spark.sql.files.openCostInBytes`` per
+    slot (Catalyst's size estimate) — see :func:`_salted_shuffle`.
+    ``schema`` enables schema-guided extraction (US4): a JSON-Schema dict
+    whose field names bound the extracted field set (shipped to executors in
+    the task closure — the broadcast-variable pattern for a driver-side
+    config).
 
     ``max_payload_chars`` caps each payload BEFORE the Arrow crossing with a
     codegen'd ``substring`` — the graft analog of the reference's
@@ -169,14 +207,10 @@ def run_extraction(
     (the write path measured 2× without it). Callers unpersist via
     :func:`unpersist_extraction`.
     """
-    spark = transcripts.sparkSession
-    n = target_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     if max_payload_chars is not None:
         transcripts = transcripts.withColumn(
             "text", sf.substring("text", 1, max_payload_chars))
-    salted = transcripts.repartition(
-        n, sf.col("conv_id"), sf.pmod(sf.col("turn_idx"), sf.lit(salt))
-    )
+    salted = _salted_shuffle(transcripts, salt, target_partitions)
     extracted = salted.mapInPandas(
         _extract_partition(schema_field_names(schema), redact_fields),
         schema=_extract_ddl(redact_fields is not None))
@@ -329,10 +363,7 @@ def run_multi_extraction(transcripts: DataFrame, salt: int = 8,
     """FR-015 flatMap form: one output row per detected document segment
     (reference: ``extract_document(multi_document=True)``, extraction.py:
     102-119). Same salted-shuffle discipline as the 1:1 kernel."""
-    spark = transcripts.sparkSession
-    n = target_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    salted = transcripts.repartition(
-        n, sf.col("conv_id"), sf.pmod(sf.col("turn_idx"), sf.lit(salt)))
+    salted = _salted_shuffle(transcripts, salt, target_partitions)
 
     def run(batches):
         for batch in batches:

@@ -12,7 +12,12 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# local[N] default: the CPUs this process may run on (affinity, so a
+# cpuset/taskset-limited container is not oversubscribed), overridable by
+# SPARK_GRAFT_CPUS
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or (
+    len(os.sched_getaffinity(0)) if hasattr(os, "sched_getaffinity")
+    else os.cpu_count() or 1))
 
 
 def driver_memory_for(cpus: int) -> str:

@@ -53,6 +53,41 @@ def test_extraction_has_single_arrow_crossing_and_shuffle(spark,
     assert "redacted_text" in rplan
 
 
+def test_extraction_partitions_are_task_slots_for_small_input_else_conf(
+        spark, tiny_transcripts_path):
+    """Unless target_partitions is given, the salted Exchange gets
+    min(shuffle.partitions, task slots) partitions when the input is at most
+    openCostInBytes per slot, and shuffle.partitions otherwise."""
+    import re
+
+    def exchange_partitions(**kw) -> int:
+        df = pipeline.read_transcripts(spark, tiny_transcripts_path)
+        results, _ = pipeline.run_extraction(df, salt=4, **kw)
+        counts = re.findall(
+            r"hashpartitioning\(conv_id#\d+, pmod\(turn_idx#\d+, 4\), (\d+)\)",
+            plan_of(results))
+        assert counts and len(set(counts)) == 1, counts
+        return int(counts[0])
+
+    df = pipeline.read_transcripts(spark, tiny_transcripts_path)
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    per_slot = -(-size // 4)  # smallest open cost with size <= 4 slots × it
+    assert spark.sparkContext.defaultParallelism == 4
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    assert exchange_partitions() == 4                       # small: one wave
+    assert exchange_partitions(target_partitions=16) == 16  # explicit wins
+    for key, value, expect in (
+            ("spark.sql.shuffle.partitions", "2", 2),       # conf below slots
+            ("spark.sql.files.openCostInBytes", str(per_slot), 4),
+            ("spark.sql.files.openCostInBytes", str(per_slot - 1), 8)):
+        old = spark.conf.get(key)
+        spark.conf.set(key, value)
+        try:
+            assert exchange_partitions() == expect, (key, value)
+        finally:
+            spark.conf.set(key, old)
+
+
 def test_small_dims_are_broadcast(spark):
     import re
 
