@@ -1,5 +1,6 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
+local[$SPARK_GRAFT_CPUS] (default: the CPUs this process may run on);
+prints ONE JSON line.
 
 The north metric is extraction throughput (turns/sec) on the transcript
 pipeline; the catalog queries cover the relational/ANN/dedup surface.
@@ -15,8 +16,11 @@ import json
 import os
 import time
 
+from br_doc_ocr_spark.session import DEFAULT_CPUS
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# SPARK_GRAFT_CPUS, else the CPUs this process may run on
+CPUS = DEFAULT_CPUS
 # turns for the synthetic extraction-bench table, proportional to sf; parse
 # the scale factor from a sfN.N BASENAME only (a bare substring match on the
 # whole path crashed on directories like .../transforms/ that contain 'sf')

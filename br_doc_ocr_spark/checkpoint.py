@@ -188,10 +188,11 @@ def run_resumable(
     ).withColumn(BUCKET_COL, bucket_of(sf.col("conv_id"), n_buckets))
     todo = transcripts.filter(sf.col(BUCKET_COL).isin([int(b) for b in pending]))
 
-    # persist: the bucket write and the lineage collection both consume the
-    # kernel output — one materialized pass instead of two kernel runs.
+    # persist: the ordered write's range-exchange sampling job, the write
+    # itself and the lineage collection all consume the kernel output — one
+    # materialized pass instead of two or three kernel runs.
     results, lineage = run_extraction(todo.drop(BUCKET_COL), salt=salt,
-                                      persist=lineage_path is not None)
+                                      persist=True)
     ordered = with_stable_order(results).withColumn(
         BUCKET_COL, bucket_of(sf.col("conv_id"), n_buckets))
 

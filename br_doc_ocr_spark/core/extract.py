@@ -64,16 +64,26 @@ _FIELD_FNS: dict[str, tuple[Any, Any]] = {
 
 # Stage 1 — candidate tokenizer: maximal digit-ish tokens (digits joined by
 # ./-/), currency, issuer acronyms, MG-prefixed RG, categoria-with-context.
-# Every branch leads with a concrete character class, so the regex engine
-# skips non-candidate positions fast (no lookarounds at branch heads).
+# The pattern opens with ONE character class holding every possible first
+# character, so `re` compiles a charset prefix and skips the positions that
+# cannot start a candidate in C (it builds no such skip when a top-level
+# branch starts with \d, \b or a flag group). Each branch then re-checks the
+# consumed character with a one-character lookbehind; no two branches share
+# a first character, so at most one can match at any position and spans are
+# those of the plain alternation 'R\$…|MG-…|\d…|\bSSP-…|(?i:categoria)…'.
 _CANDIDATE = re.compile(
-    r"R\$\s?\d(?:[\d.,]*\d)?"
-    r"|MG-\d{2}\.\d{3}\.\d{3}\b"
-    r"|\d(?:[\d./-]*\d)?"
-    r"|\b(?:SSP|DETRAN|PC|IFP|SDS|SESP|IGP)-[A-Z]{2}\b|\bIIRGD\b"
-    # the label is case-insensitive (OCR'd CNHs print 'CATEGORIA'); the
-    # category VALUE stays case-sensitive uppercase
-    r"|(?i:categoria)[:\s]+\b(?P<cat>ACC|AB|AC|AD|AE|BC|BD|BE|CD|CE|DE|[A-E])\b"
+    r"[\dRMSDPIcC]"
+    r"(?:(?<=\d)(?:[\d./-]*\d)?"
+    r"|(?<=R)\$\s?\d(?:[\d.,]*\d)?"
+    r"|(?<=M)G-\d{2}\.\d{3}\.\d{3}\b"
+    r"|(?<=\bS)(?:SP|DS|ESP)-[A-Z]{2}\b"
+    r"|(?<=\bD)ETRAN-[A-Z]{2}\b"
+    r"|(?<=\bP)C-[A-Z]{2}\b"
+    r"|(?<=\bI)(?:[FG]P-[A-Z]{2}|IRGD)\b"
+    # the label is case-insensitive (OCR'd CNHs print 'CATEGORIA'; only 'c'
+    # and 'C' case-fold to 'c'); the category VALUE stays uppercase
+    r"|(?<=[cC])(?i:ategoria)[:\s]+\b"
+    r"(?P<cat>ACC|AB|AC|AD|AE|BC|BD|BE|CD|CE|DE|[A-E])\b)"
 )
 
 # Stage 2 — anchored classification of a candidate token. Every classifier
@@ -121,17 +131,6 @@ def _classify_token(token: str) -> str | None:
         return "orgao_emissor"
     return None
 
-# Cheap pre-filter: every candidate branch implies one of these substrings —
-# a digit (currency/CPF/CNPJ/RG/NFe/date/MG- all contain digits), an issuer
-# token (always written with its '-UF' suffix except IIRGD), or the word
-# 'categoria'. A payload matching none cannot produce any field, so the
-# scanner is skipped — the projection-pushdown analog of the reference's
-# downscale-before-inference trick (preprocessing.py:66-96). False positives
-# only cost the scan; false negatives would drop fields (a digit-free
-# "Categoria: AB" payload was silently skipped before this alternation).
-_ANY_FIELD_HINT = re.compile(
-    r"\d|(?i:categoria)|SSP-|DETRAN-|PC-|IFP-|SDS-|SESP-|IGP-|IIRGD")
-
 
 def scan_fields(
     text: str,
@@ -146,7 +145,7 @@ def scan_fields(
     fields: dict[str, str] = {}
     spans: list[dict[str, Any]] = []
     scores: dict[str, float] = {}
-    if not text or not _ANY_FIELD_HINT.search(text):
+    if not text:
         return fields, spans, scores
 
     spans_append = spans.append

@@ -201,10 +201,12 @@ def run_extraction(
     every detected span of those fields masked as ``[FIELD]`` —
     ``core.extract.DEFAULT_REDACT_FIELDS`` covers the identifier fields.
 
-    ``persist=True`` materializes the kernel output (memory, spilling to
-    executor disk) so that consuming BOTH returned frames runs the kernel
-    once, not twice — required whenever results AND lineage are acted on
-    (the write path measured 2× without it). Callers unpersist via
+    ``persist=True`` materializes the kernel output (on executor disk) so
+    that consuming BOTH returned frames runs the kernel once, not twice —
+    required whenever results AND lineage are acted on, and whenever the
+    results are written through :func:`with_stable_order`, whose range
+    exchange samples its whole child in a job of its own (the write path
+    measured 2× without it). Callers unpersist via
     :func:`unpersist_extraction`.
     """
     if max_payload_chars is not None:
@@ -323,15 +325,13 @@ def run_pipeline(
     transcripts = read_transcripts(spark, input_path,
                                    table_format=table_format,
                                    snapshot_id=read_snapshot_id)
-    # persist ONLY when the ordered write AND the lineage write both
-    # consume the kernel output — with output alone there is exactly one
-    # action inside this function, and the DISK_ONLY materialization was
-    # pure overhead (~2x the I/O of the write path at 20M rows,
-    # review r05); the returned frames recompute either way since the
-    # cache is released before return.
+    # persist whenever the ordered write runs: with_stable_order's range
+    # exchange first runs a sampling job over its whole child, so without
+    # the cache even an output-only write runs the kernel twice (and the
+    # lineage write, when asked for, would be a third pass); the returned
+    # frames recompute either way since the cache is released before return.
     results, lineage = run_extraction(transcripts, salt=salt,
-                                      persist=bool(output_path and
-                                                   lineage_path),
+                                      persist=bool(output_path),
                                       max_payload_chars=max_payload_chars,
                                       schema=schema,
                                       redact_fields=redact_fields)

@@ -409,6 +409,59 @@ def test_run_pipeline_rejects_lineage_without_output(spark,
                               lineage_path="/tmp/never-written")
 
 
+def _rows_through_python(spark, action) -> int:
+    """Rows the extraction ``mapInPandas`` returned while ``action`` ran, from
+    the "number of output rows" SQL metric of every MapInPandas node in the
+    session's SQL status store (a kernel run twice counts its rows twice)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        seq = store.executionsList()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    before = max((e.executionId() for e in executions()), default=-1)
+    action()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    rows = 0
+    for e in executions():
+        if e.executionId() <= before:
+            continue
+        values = {}
+        it = store.executionMetrics(e.executionId()).iterator()
+        while it.hasNext():
+            kv = it.next()
+            values[kv._1()] = kv._2()
+        nodes = store.planGraph(e.executionId()).allNodes()
+        for node in (nodes.apply(i) for i in range(nodes.size())):
+            if node.name() != "MapInPandas":
+                continue
+            metrics = node.metrics()
+            for m in (metrics.apply(i) for i in range(metrics.size())):
+                if m.name() == "number of output rows":
+                    rows += int(values.get(m.accumulatorId(), "0")
+                                .replace(",", ""))
+    return rows
+
+
+def test_ordered_writes_run_the_kernel_once(spark, tiny_transcripts,
+                                            tiny_transcripts_path, tmp_path):
+    """with_stable_order's range exchange samples its whole child in a job of
+    its own, so an unpersisted kernel output ran through Python twice on an
+    output-only write (1 096 rows for the 548-turn fixture)."""
+    from br_doc_ocr_spark import checkpoint
+
+    n = len(tiny_transcripts)
+    assert _rows_through_python(spark, lambda: pipeline.run_pipeline(
+        spark, tiny_transcripts_path,
+        output_path=str(tmp_path / "out"))) == n
+    assert _rows_through_python(spark, lambda: pipeline.run_pipeline(
+        spark, tiny_transcripts_path, output_path=str(tmp_path / "out2"),
+        lineage_path=str(tmp_path / "lineage"))) == n
+    assert _rows_through_python(spark, lambda: checkpoint.run_resumable(
+        spark, tiny_transcripts_path, str(tmp_path / "buckets"),
+        str(tmp_path / "manifest.json"))) == n
+
+
 def test_compact_parquet_empty_input_returns_empty_stats(spark, tmp_path):
     """Zero parquet files under the input must return zeroed stats, not die
     in schema inference reading the empty output back (ADVICE r04)."""

@@ -166,6 +166,123 @@ def test_classify_token_canonical_examples(token):
     assert _classify_token(token) == _classify_reference(token)
 
 
+# --- candidate tokenizer equivalence ----------------------------------------
+# The shipped _CANDIDATE leads with one character class (so `re` can skip
+# non-candidate positions) and re-checks the consumed character per branch
+# with a lookbehind; this locks it against the plain alternation it replaced,
+# and scan_fields against that alternation behind the old _ANY_FIELD_HINT
+# pre-filter.
+
+_CANDIDATE_REFERENCE = _re.compile(
+    r"R\$\s?\d(?:[\d.,]*\d)?"
+    r"|MG-\d{2}\.\d{3}\.\d{3}\b"
+    r"|\d(?:[\d./-]*\d)?"
+    r"|\b(?:SSP|DETRAN|PC|IFP|SDS|SESP|IGP)-[A-Z]{2}\b|\bIIRGD\b"
+    r"|(?i:categoria)[:\s]+\b(?P<cat>ACC|AB|AC|AD|AE|BC|BD|BE|CD|CE|DE|[A-E])\b"
+)
+_HINT_REFERENCE = _re.compile(
+    r"\d|(?i:categoria)|SSP-|DETRAN-|PC-|IFP-|SDS-|SESP-|IGP-|IIRGD")
+
+# field fragments, their near misses, and the characters where Unicode case
+# folding, Unicode digits and \b could set the two patterns apart
+_FIELD_FRAGMENTS = [
+    "0", "7", "12", "٣", ".", "/", "-", ",", ":", "$", " ", "\n", "_", "x",
+    "R", "R$", "R$ ", "M", "MG-", "MG-12.345.678", "S", "D", "P", "I", "C",
+    "c", "SSP-SP", "SSP-", "DETRAN-RJ", "PC-MG", "IFP-RJ", "IGP-RS",
+    "SDS-PE", "SESP-", "IIRGD", "categoria", "CaTeGoRiA", "CATEGORIA: ",
+    "categorİa", "categorıa", "İ", "ı", "AB", " ACC", "E", "a",
+    "123.456.789-01", "12.345.678/0001-90", "12/05/1990", "1990-05-12",
+]
+_field_text = st.lists(st.sampled_from(_FIELD_FRAGMENTS), max_size=24).map(
+    "".join)
+
+
+def _tokens(pattern, s):
+    return [(m.span(), m.lastgroup, m.span("cat")) for m in pattern.finditer(s)]
+
+
+@given(_field_text)
+@settings(max_examples=600, deadline=None)
+def test_candidate_tokenizer_matches_plain_alternation(s):
+    from br_doc_ocr_spark.core.extract import _CANDIDATE
+
+    assert _tokens(_CANDIDATE, s) == _tokens(_CANDIDATE_REFERENCE, s)
+
+
+@given(_field_text)
+@settings(max_examples=300, deadline=None)
+def test_scan_fields_matches_hint_gated_plain_alternation(s):
+    from unittest import mock
+
+    from br_doc_ocr_spark.core import extract
+
+    if _HINT_REFERENCE.search(s):
+        with mock.patch.object(extract, "_CANDIDATE", _CANDIDATE_REFERENCE):
+            expected = extract.scan_fields(s)
+    else:
+        expected = ({}, [], {})
+    assert scan_fields(s) == expected
+
+
+@given(st.text(alphabet=st.characters(blacklist_categories=("Cs", "Nd")),
+               max_size=300).filter(lambda s: not _HINT_REFERENCE.search(s)))
+@settings(max_examples=300, deadline=None)
+def test_scan_fields_finds_nothing_in_hint_free_prose(s):
+    assert scan_fields(s) == ({}, [], {})
+
+
+# --- strip_html pinned output -----------------------------------------------
+# A seeded tag-soup corpus (nested and malformed boilerplate, self-closing
+# anchors, entities, raw-text elements, stray '<'); the sha256 of its joined
+# strip_html output was recorded before boilerplate text stopped being
+# buffered and the keep rule moved into the block flush.
+
+_SOUP_TAGS = ["nav", "header", "footer", "aside", "form", "div", "p", "a",
+              "span", "li", "ul", "section", "br", "script", "style", "td",
+              "b", "svg", "template", "noscript", "main", "h1"]
+_SOUP_ATTRS = ["", ' class="menu"', ' id="sidebar"', ' class="content"',
+               ' role="banner"', " class='ad x'", ' href="x/"', " id=footer",
+               ' class="social-share"']
+_SOUP_TEXT = ["Conteúdo principal do documento", "&amp;", "&lt;b&gt;",
+              "&#x41;&#66;&nbsp;", "R$ 1.234,56", "CPF 123.456.789-01",
+              "  \n ", "<", "x < y", "Mais texto longo para o bloco",
+              "Home", "Copyright 2024", ">", "'", '"', "é ç ã",
+              "a < b < c < d < e < f < g < h < i < j < k < l < m"]
+
+
+def _tag_soup(rng) -> str:
+    out = []
+    for _ in range(rng.randint(1, 40)):
+        r = rng.random()
+        tag = rng.choice(_SOUP_TAGS)
+        if r < 0.3:
+            out.append(f"<{tag}{rng.choice(_SOUP_ATTRS)}>")
+        elif r < 0.5:
+            out.append(f"</{tag.upper() if rng.random() < 0.2 else tag}>")
+        elif r < 0.55:
+            out.append(f"<{tag}/>")
+        elif r < 0.58:
+            out.append("<!-- comentário -->")
+        elif r < 0.6:
+            out.append("<a/>")
+        else:
+            out.append(rng.choice(_SOUP_TEXT))
+    return "".join(out)
+
+
+_SOUP_SHA256 = (
+    "2b4eb39ac5f835bc97d9732caa7fb4ff3a3acb4840e067327f0cad54a9ec0bcd")
+
+
+def test_strip_html_output_pinned_on_tag_soup():
+    import hashlib
+    import random
+
+    rng = random.Random(20261018)
+    out = "\x00".join(textops.strip_html(_tag_soup(rng)) for _ in range(4000))
+    assert hashlib.sha256(out.encode()).hexdigest() == _SOUP_SHA256
+
+
 @given(st.lists(st.text(
     alphabet=st.characters(blacklist_categories=("Cs",)), max_size=600),
     max_size=20))
