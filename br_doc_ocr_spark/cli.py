@@ -174,6 +174,8 @@ def cmd_resume(args) -> int:
 
 def cmd_multidoc(args) -> int:
     """FR-015: one output row per detected document segment."""
+    from pyspark import StorageLevel
+
     from br_doc_ocr_spark.pipeline import read_transcripts, run_multi_extraction
 
     spark = _session(args)
@@ -182,9 +184,15 @@ def cmd_multidoc(args) -> int:
                          table_format=args.table_format,
                          snapshot_id=args.snapshot_id),
         salt=args.salt)
-    (docs.repartitionByRange("conv_id", "turn_idx", "doc_idx")
-     .sortWithinPartitions("conv_id", "turn_idx", "doc_idx")
-     .write.mode("overwrite").parquet(args.output))
+    # persisted around the write: the range exchange samples its child in a
+    # job of its own, which would otherwise run the kernel a second time
+    docs = docs.persist(StorageLevel.DISK_ONLY)
+    try:
+        (docs.repartitionByRange("conv_id", "turn_idx", "doc_idx")
+         .sortWithinPartitions("conv_id", "turn_idx", "doc_idx")
+         .write.mode("overwrite").parquet(args.output))
+    finally:
+        docs.unpersist()
     n = spark.read.parquet(args.output).count()
     print(json.dumps({"output": args.output, "documents": n}))
     return 0

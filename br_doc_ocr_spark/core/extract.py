@@ -7,18 +7,19 @@ extraction (textops), the VLM kernel becomes the deterministic field scanner
 below, and postprocessing (normalize → confidence → low-confidence flags →
 status) keeps the reference's exact semantics (fields.py).
 
-It is consumed two ways, with identical bytes:
-
-- the Spark job wraps :func:`extract_batch` in ``mapInPandas`` (one Arrow
-  crossing per partition, zero per-row Python at the Spark boundary);
-- the golden oracle calls :func:`extract_batch` directly on a whole pandas
-  table, single-threaded.
+Every batch entry point runs one row loop, :func:`_extract_rows` — also the
+one error channel (a payload that raises becomes :func:`_error_row`) — under
+two kernels: :func:`extract_batch` (one row per turn) and
+:func:`extract_documents_batch` (one row per document segment). The Spark
+and streaming jobs run them through one ``mapInPandas`` adapter
+(``pipeline.map_kernel``); the golden oracles call them directly on a whole
+pandas table, single-threaded — identical bytes either way.
 """
 
 from __future__ import annotations
 
 import re
-from typing import Any, Iterable
+from typing import Any
 
 import pandas as pd
 
@@ -70,12 +71,14 @@ _FIELD_FNS: dict[str, tuple[Any, Any]] = {
 # branch starts with \d, \b or a flag group). Each branch then re-checks the
 # consumed character with a one-character lookbehind; no two branches share
 # a first character, so at most one can match at any position and spans are
-# those of the plain alternation 'R\$…|MG-…|\d…|\bSSP-…|(?i:categoria)…'.
+# those of the plain alternation 'R\$…|MG-…|[0-9]…|\bSSP-…|(?i:categoria)…'.
+# Digits are ASCII [0-9], not \d (which reads Arabic-Indic or Devanagari runs
+# as a CPF or a date); \b stays Unicode, for accented Portuguese words.
 _CANDIDATE = re.compile(
-    r"[\dRMSDPIcC]"
-    r"(?:(?<=\d)(?:[\d./-]*\d)?"
-    r"|(?<=R)\$\s?\d(?:[\d.,]*\d)?"
-    r"|(?<=M)G-\d{2}\.\d{3}\.\d{3}\b"
+    r"[0-9RMSDPIcC]"
+    r"(?:(?<=[0-9])(?:[0-9./-]*[0-9])?"
+    r"|(?<=R)\$\s?[0-9](?:[0-9.,]*[0-9])?"
+    r"|(?<=M)G-[0-9]{2}\.[0-9]{3}\.[0-9]{3}\b"
     r"|(?<=\bS)(?:SP|DS|ESP)-[A-Z]{2}\b"
     r"|(?<=\bD)ETRAN-[A-Z]{2}\b"
     r"|(?<=\bP)C-[A-Z]{2}\b"
@@ -119,8 +122,8 @@ def _classify_token(token: str) -> str | None:
     if c0 == "R" and token[1] == "$":
         return "valor"
     if c0.isdigit() or c0 == "M":
-        # tokenizer guarantees digit-branch chars ⊆ \d ∪ {., /, -} — isdigit()
-        # is exactly "no separators" here
+        # tokenizer guarantees digit-branch chars ⊆ [0-9] ∪ {., /, -} —
+        # isdigit() is exactly "no separators" here
         if token.isdigit():
             return _DIGIT_ONLY_BY_LEN.get(len(token))
         entry = _FORMATTED_BY_LEN.get(len(token))
@@ -211,14 +214,7 @@ def scan_fields(
 # Batch kernel
 # ---------------------------------------------------------------------------
 
-OUTPUT_COLUMNS = [
-    "conv_id", "turn_idx", "role", "tool", "ts", "payload_kind",
-    "extracted_text", "fields", "spans", "confidence_scores",
-    "low_confidence_fields", "n_fields", "status",
-]
-
-# Spark-side schema string for mapInPandas (kept adjacent to OUTPUT_COLUMNS so
-# they cannot drift apart).
+# Spark-side schema string for mapInPandas; the column lists are read off it.
 OUTPUT_SCHEMA_DDL = (
     "conv_id string, turn_idx int, role string, tool string, ts timestamp, "
     "payload_kind string, extracted_text string, fields map<string,string>, "
@@ -226,6 +222,24 @@ OUTPUT_SCHEMA_DDL = (
     "confidence_scores map<string,double>, "
     "low_confidence_fields array<string>, n_fields int, status string"
 )
+# the two columns ``redact_fields`` appends
+REDACT_SCHEMA_DDL = "redacted_text string, redaction_residuals int"
+
+
+def _ddl_columns(ddl: str) -> list[str]:
+    # nested types (map<string,string>, struct<...>) hold no ', '
+    return [field.split(" ", 1)[0] for field in ddl.split(", ")]
+
+
+OUTPUT_COLUMNS = _ddl_columns(OUTPUT_SCHEMA_DDL)
+REDACT_COLUMNS = _ddl_columns(REDACT_SCHEMA_DDL)
+_KEY_COLUMNS = OUTPUT_COLUMNS[:5]  # carried through from the transcript
+_TURN_COLUMNS = OUTPUT_COLUMNS[5:]  # computed by extract_turn
+
+
+def output_schema_ddl(redact: bool) -> str:
+    """Kernel-output DDL for mapInPandas, the redaction columns last."""
+    return OUTPUT_SCHEMA_DDL + (", " + REDACT_SCHEMA_DDL if redact else "")
 
 
 def extract_turn(text: str | None,
@@ -363,30 +377,15 @@ def _error_row(redact_fields: frozenset[str] | None = None) -> dict[str, Any]:
     return row
 
 
-def extract_batch(batch: pd.DataFrame,
-                  allowed_fields: frozenset[str] | None = None,
-                  redact_fields: frozenset[str] | None = None) -> pd.DataFrame:
-    """Vectorized-at-the-boundary batch kernel: pandas in → pandas out.
-
-    Row-wise work happens inside the Arrow batch (regex scanning is inherently
-    per-string); the Spark boundary sees exactly one ``mapInPandas`` crossing.
-    Per-row failures are captured into ``status='error'`` rows instead of
-    failing the task — the reference's batch error channel
-    (``cli/batch.py:155-160``).
-
-    ``redact_fields`` (PII scrubbing) appends a ``redacted_text`` column —
-    the raw payload with every detected span of those fields masked; the
-    base schema is unchanged when it is None.
-    """
-    n = len(batch)
-    cols = [
-        "payload_kind", "extracted_text", "fields", "spans",
-        "confidence_scores", "low_confidence_fields", "n_fields", "status",
-    ]
-    if redact_fields is not None:
-        cols += ["redacted_text", "redaction_residuals"]
-    out: dict[str, list[Any]] = {c: [None] * n for c in cols}
-    texts = batch["text"].tolist()
+def _extract_rows(texts: list[Any],
+                  allowed_fields: frozenset[str] | None,
+                  redact_fields: frozenset[str] | None) -> dict[str, list[Any]]:
+    """The one row loop of every batch kernel and its one error channel:
+    :func:`extract_turn` over ``texts`` → one list per computed column; a
+    payload whose extraction raises becomes :func:`_error_row` (the
+    reference's batch error channel, ``cli/batch.py:155-160``)."""
+    cols = _TURN_COLUMNS + (REDACT_COLUMNS if redact_fields is not None else [])
+    out: dict[str, list[Any]] = {c: [None] * len(texts) for c in cols}
     for i, text in enumerate(texts):
         try:
             row = extract_turn(text, allowed_fields, redact_fields)
@@ -394,33 +393,26 @@ def extract_batch(batch: pd.DataFrame,
             row = _error_row(redact_fields)
         for key, value in row.items():
             out[key][i] = value
+    return out
 
-    result = pd.DataFrame({
-        "conv_id": batch["conv_id"].values,
-        "turn_idx": batch["turn_idx"].values,
-        "role": batch["role"].values,
-        "tool": batch["tool"].values,
-        "ts": batch["ts"].values,
-        **out,
+
+def extract_batch(batch: pd.DataFrame,
+                  allowed_fields: frozenset[str] | None = None,
+                  redact_fields: frozenset[str] | None = None) -> pd.DataFrame:
+    """Vectorized-at-the-boundary batch kernel: pandas in → pandas out.
+
+    Row-wise work happens inside the Arrow batch (regex scanning is inherently
+    per-string); the Spark boundary sees exactly one ``mapInPandas`` crossing.
+    Per-row failures become ``status='error'`` rows.
+
+    ``redact_fields`` (PII scrubbing) appends a ``redacted_text`` column —
+    the raw payload with every detected span of those fields masked; the
+    base schema is unchanged when it is None.
+    """
+    return pd.DataFrame({
+        **{c: batch[c].values for c in _KEY_COLUMNS},
+        **_extract_rows(batch["text"].tolist(), allowed_fields, redact_fields),
     })
-    columns = OUTPUT_COLUMNS + (["redacted_text", "redaction_residuals"]
-                                if redact_fields is not None else [])
-    return result[columns]
-
-
-def extract_batches(batches: Iterable[pd.DataFrame],
-                    allowed_fields: frozenset[str] | None = None,
-                    redact_fields: frozenset[str] | None = None
-                    ) -> Iterable[pd.DataFrame]:
-    """Iterator form for ``DataFrame.mapInPandas`` — one task consumes one
-    partition's Arrow batches; per-partition init (compiled regexes) is free
-    because patterns live at module import. The canonical skip-empty-batch
-    wrapper for EVERY mapInPandas consumer (batch closures and streaming
-    alike) — bind extra kernel options with ``functools.partial`` instead of
-    re-implementing the loop."""
-    for batch in batches:
-        if len(batch):
-            yield extract_batch(batch, allowed_fields, redact_fields)
 
 
 # ---------------------------------------------------------------------------
@@ -439,6 +431,7 @@ MULTIDOC_SCHEMA_DDL = (
     "payload_kind string, extracted_text string, fields map<string,string>, "
     "low_confidence_fields array<string>, n_fields int, status string"
 )
+_MULTIDOC_COLUMNS = _ddl_columns(MULTIDOC_SCHEMA_DDL)
 
 
 def segment_payload(text: str | None) -> list[str]:
@@ -458,41 +451,36 @@ def extract_documents_batch(batch: pd.DataFrame) -> pd.DataFrame:
     Mirrors ``extract_document(multi_document=True)``: every segment runs the
     full per-document pipeline independently (per-segment kind detection —
     a PDF page and an HTML page can share one payload).
+
+    One :func:`_extract_rows` pass runs over the batch's segments, so a
+    segment that raises is one error row and its siblings keep their
+    results. A turn that cannot be segmented (a NaN turn_idx from a
+    malformed upstream join, flagged -1, or a non-string payload) is one
+    error row, not a dead scan partition (review r05).
     """
-    rows: list[dict[str, Any]] = []
+    if not len(batch):  # object columns, like a frame of no rows
+        return pd.DataFrame(columns=_MULTIDOC_COLUMNS)
+    # per output row: (conv_id, turn_idx, doc_idx, n_docs)
+    keys: list[tuple[Any, int, int, int]] = []
+    segments: list[str | None] = []
+    unsegmented: list[int] = []  # positions of those turns' one row
     for conv_id, turn_idx, text in zip(batch["conv_id"], batch["turn_idx"],
                                        batch["text"]):
-        # per-row error channel, same contract as extract_batch: one bad
-        # row (a NaN turn_idx from a malformed upstream join, an extractor
-        # exception) must surface as a status='error' row, not kill the
-        # whole scan partition (review r05 — this flatMap kernel silently
-        # lacked the batch error contract the module docstring promises)
+        idx, segs = -1, [None]
         try:
             idx = int(turn_idx)
-            segments = segment_payload(text)
-            seg_rows = [(doc_idx, extract_turn(segment))
-                        for doc_idx, segment in enumerate(segments)]
+            segs = segment_payload(text)
         except Exception:
-            try:
-                idx = int(turn_idx)
-            except Exception:
-                idx = -1  # unconvertible turn_idx: keep the row, flag it
-            seg_rows = [(0, _error_row())]
-            segments = [""]
-        for doc_idx, r in seg_rows:
-            rows.append({
-                "conv_id": conv_id, "turn_idx": idx,
-                "doc_idx": doc_idx, "n_docs": len(segments),
-                "payload_kind": r["payload_kind"],
-                "extracted_text": r["extracted_text"],
-                "fields": r["fields"],
-                "low_confidence_fields": r["low_confidence_fields"],
-                "n_fields": r["n_fields"], "status": r["status"],
-            })
-    return pd.DataFrame(rows, columns=[
-        "conv_id", "turn_idx", "doc_idx", "n_docs", "payload_kind",
-        "extracted_text", "fields", "low_confidence_fields", "n_fields",
-        "status"])
+            unsegmented.append(len(segments))
+        keys += [(conv_id, idx, doc_idx, len(segs))
+                 for doc_idx in range(len(segs))]
+        segments += segs
+    rows = _extract_rows(segments, None, None)
+    for i in unsegmented:
+        for key, value in _error_row().items():
+            rows[key][i] = value
+    out = pd.DataFrame(keys, columns=_MULTIDOC_COLUMNS[:4])
+    return out.assign(**{c: rows[c] for c in _MULTIDOC_COLUMNS[4:]})
 
 
 def oracle_extract_documents(transcripts: pd.DataFrame) -> pd.DataFrame:
@@ -570,39 +558,28 @@ def extract_one(
 
     def one(payload: str | None) -> dict[str, Any]:
         t0 = _time.perf_counter()
+        error_message = None
         try:
             if schema_error is not None:
                 raise schema_error
             r = extract_turn(payload, allowed, redact_fields)
-            result = {
-                "document_type": document_type or _document_type_of(r["fields"]),
-                "extracted_data": r["fields"],
-                "payload_kind": r["payload_kind"],
-                "extracted_text": r["extracted_text"],
-                "status": r["status"],
-                "error_message": None,
-                "model_version": model_version,
-            }
-            if confidence:
-                result["confidence_scores"] = r["confidence_scores"]
-                result["low_confidence_fields"] = r["low_confidence_fields"]
-            if redact_fields is not None:
-                result["redacted_text"] = r["redacted_text"]
-                result["redaction_residuals"] = r["redaction_residuals"]
         except Exception as e:  # the API's 500-channel, shaped as a result
-            result = {
-                "document_type": document_type or "unknown",
-                "extracted_data": {},
-                "payload_kind": "unknown", "extracted_text": "",
-                "status": "failed", "error_message": f"{type(e).__name__}: {e}",
-                "model_version": model_version,
-            }
-            if confidence:  # keys present whenever requested — contract
-                result["confidence_scores"] = {}
-                result["low_confidence_fields"] = []
-            if redact_fields is not None:
-                result["redacted_text"] = None
-                result["redaction_residuals"] = 0
+            r = {**_error_row(redact_fields), "status": "failed"}
+            error_message = f"{type(e).__name__}: {e}"
+        result = {
+            "document_type": document_type or _document_type_of(r["fields"]),
+            "extracted_data": r["fields"],
+            "payload_kind": r["payload_kind"],
+            "extracted_text": r["extracted_text"],
+            "status": r["status"],
+            "error_message": error_message,
+            "model_version": model_version,
+        }
+        if confidence:  # keys present whenever requested — contract
+            result["confidence_scores"] = r["confidence_scores"]
+            result["low_confidence_fields"] = r["low_confidence_fields"]
+        if redact_fields is not None:
+            result.update((c, r[c]) for c in REDACT_COLUMNS)
         result["processing_time_ms"] = int((_time.perf_counter() - t0) * 1000)
         return result
 

@@ -12,7 +12,7 @@ Spark's execution model per the north rule:
    ``spark.sql.files.openCostInBytes`` per task slot: that gets one wave of
    Python tasks, ``min(spark.sql.shuffle.partitions, defaultParallelism)``
    (each Python task pays a fixed start-up charge, SCALE.md),
-3. exactly **one Arrow crossing**: ``mapInPandas(extract_batches)`` over the
+3. exactly **one Arrow crossing**: ``map_kernel(extract_batch)`` over the
    shared kernel (zero per-row Python at the Spark boundary),
 4. per-partition **lineage** rows (partition id, row counts, status tallies,
    wall-clock) — PII-free by schema (counts and timings only, NFR-005/006),
@@ -24,9 +24,10 @@ Spark's execution model per the north rule:
 
 from __future__ import annotations
 
+import functools
 import time
 import weakref
-from typing import Iterable, Iterator
+from typing import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -34,30 +35,16 @@ from pyspark.sql import functions as sf
 
 from br_doc_ocr_spark.core.extract import (
     MULTIDOC_SCHEMA_DDL,
-    OUTPUT_SCHEMA_DDL,
     extract_batch,
     extract_documents_batch,
+    output_schema_ddl,
     schema_field_names,
 )
 
 TRANSCRIPT_COLUMNS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 
-# (Two former module constants deleted, review r05: LINEAGE_SCHEMA_DDL had
-# drifted from the lineage rows run_pipeline actually writes — missing the
-# run_id/snapshot_id stamps and the optional redaction_residuals column —
-# and EXTRACT_WITH_LINEAGE_DDL duplicated _extract_ddl(redact=False); both
-# had zero readers. The authoritative kernel-output schema is
-# _extract_ddl(); the lineage schema is the select in run_pipeline.)
-
-
-def _extract_ddl(redact: bool) -> str:
-    """Kernel-output DDL for mapInPandas; `redacted_text` +
-    `redaction_residuals` ride between the kernel columns and the lineage
-    tags exactly where extract_batch emits them, so name- and
-    position-matching modes both line up."""
-    base = OUTPUT_SCHEMA_DDL + (
-        ", redacted_text string, redaction_residuals int" if redact else "")
-    return base + ", _partition_id int, _batch_ms long"
+# the columns map_kernel tags every row with
+KERNEL_TAGS = ("_partition_id", "_batch_ms")
 
 
 def read_transcripts(spark: SparkSession, path: str,
@@ -108,12 +95,14 @@ def read_transcripts(spark: SparkSession, path: str,
     return spark.read.parquet(path).select(*TRANSCRIPT_COLUMNS)
 
 
-def _extract_partition(allowed_fields: frozenset[str] | None,
-                       redact_fields: frozenset[str] | None = None):
-    """Build the per-partition kernel closure. One task = one partition.
-    Emits extraction rows tagged with the task's partition id and per-batch
-    wall-clock (first row of each batch carries the batch's elapsed ms; the
-    rest carry 0) so lineage aggregates exactly."""
+def map_kernel(df: DataFrame,
+               kernel: Callable[[pd.DataFrame], pd.DataFrame],
+               ddl: str) -> DataFrame:
+    """The one Arrow adapter: ``mapInPandas`` of a batch kernel (pandas in,
+    rows of ``ddl`` out) over ``df``, skipping empty batches. Rows carry the
+    task's ``_partition_id``; the first row of each batch carries the
+    kernel's ``_batch_ms`` (the rest 0), so lineage aggregates exactly.
+    Callers without lineage drop :data:`KERNEL_TAGS` — a projection."""
 
     def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
@@ -124,7 +113,7 @@ def _extract_partition(allowed_fields: frozenset[str] | None,
             if not len(batch):
                 continue
             t0 = time.perf_counter()
-            out = extract_batch(batch, allowed_fields, redact_fields)
+            out = kernel(batch)
             elapsed_ms = int((time.perf_counter() - t0) * 1000)
             out["_partition_id"] = pid
             ms = [0] * len(out)
@@ -132,7 +121,8 @@ def _extract_partition(allowed_fields: frozenset[str] | None,
             out["_batch_ms"] = ms
             yield out
 
-    return run
+    return df.mapInPandas(
+        run, schema=ddl + ", _partition_id int, _batch_ms long")
 
 
 def _salted_shuffle(transcripts: DataFrame, salt: int,
@@ -213,9 +203,11 @@ def run_extraction(
         transcripts = transcripts.withColumn(
             "text", sf.substring("text", 1, max_payload_chars))
     salted = _salted_shuffle(transcripts, salt, target_partitions)
-    extracted = salted.mapInPandas(
-        _extract_partition(schema_field_names(schema), redact_fields),
-        schema=_extract_ddl(redact_fields is not None))
+    kernel = functools.partial(extract_batch,
+                               allowed_fields=schema_field_names(schema),
+                               redact_fields=redact_fields)
+    extracted = map_kernel(salted, kernel,
+                           output_schema_ddl(redact_fields is not None))
     if persist:
         from pyspark import StorageLevel
 
@@ -245,7 +237,7 @@ def run_extraction(
     lineage = extracted.groupBy(
         sf.col("_partition_id").alias("partition_id")
     ).agg(*aggs)
-    results = extracted.drop("_partition_id", "_batch_ms")
+    results = extracted.drop(*KERNEL_TAGS)
     if persist:
         _EXTRACTION_CACHES[results] = extracted
     return results, lineage
@@ -364,13 +356,8 @@ def run_multi_extraction(transcripts: DataFrame, salt: int = 8,
     (reference: ``extract_document(multi_document=True)``, extraction.py:
     102-119). Same salted-shuffle discipline as the 1:1 kernel."""
     salted = _salted_shuffle(transcripts, salt, target_partitions)
-
-    def run(batches):
-        for batch in batches:
-            if len(batch):
-                yield extract_documents_batch(batch)
-
-    return salted.mapInPandas(run, schema=MULTIDOC_SCHEMA_DDL)
+    return map_kernel(salted, extract_documents_batch,
+                      MULTIDOC_SCHEMA_DDL).drop(*KERNEL_TAGS)
 
 
 # ---------------------------------------------------------------------------
@@ -397,11 +384,13 @@ def write_json_sinks(results: DataFrame, output_dir: str) -> None:
     """JSONL results + quarantine channel, split by status (cli/batch.py:
     169-174,184-207): good rows to ``results/``, error rows to ``errors/``.
 
-    The split is two actions over one upstream plan — persist the ordered
-    frame (DISK_ONLY, heap-bounded) so the kernel and the range shuffle run
-    once, not twice (the same dual-consumer rule run_pipeline documents)."""
+    The split is two actions over one upstream plan, and the range exchange
+    samples its child in a job of its own: the kernel output and the ordered
+    frame are persisted for the call (DISK_ONLY, heap-bounded), so the kernel
+    and the range shuffle run once (the rule run_pipeline documents)."""
     from pyspark import StorageLevel
 
+    results = results.persist(StorageLevel.DISK_ONLY)
     ordered = with_stable_order(results).persist(StorageLevel.DISK_ONLY)
     try:
         good = ordered.filter(sf.col("status") != "error")
@@ -412,6 +401,7 @@ def write_json_sinks(results: DataFrame, output_dir: str) -> None:
             f"{output_dir}/errors")
     finally:
         ordered.unpersist()
+        results.unpersist()
 
 
 # ---------------------------------------------------------------------------

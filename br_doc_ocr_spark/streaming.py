@@ -9,8 +9,9 @@ exactly-once file-source progress tracking — the streaming twin of
 
 Two entry points:
 
-- :func:`stream_extract` — readStream → one ``mapInPandas`` crossing →
-  append-mode parquet sink (per-turn results, same schema as the batch job);
+- :func:`stream_extract` — readStream → one ``mapInPandas`` crossing
+  (``pipeline.map_kernel``, the batch job's adapter) → append-mode parquet
+  sink (per-turn results, same schema as the batch job);
 - :func:`stream_status_counts` — event-time tumbling-window status metrics
   with a watermark for late data (the lineage analog, windowed by turn ``ts``).
 
@@ -25,8 +26,8 @@ import functools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as sf
 
-from br_doc_ocr_spark.core.extract import OUTPUT_SCHEMA_DDL, extract_batches
-from br_doc_ocr_spark.pipeline import TRANSCRIPT_COLUMNS
+from br_doc_ocr_spark.core.extract import extract_batch, output_schema_ddl
+from br_doc_ocr_spark.pipeline import KERNEL_TAGS, TRANSCRIPT_COLUMNS, map_kernel
 
 TRANSCRIPT_SCHEMA_DDL = (
     "conv_id string, turn_idx int, role string, text string, tool string, "
@@ -63,12 +64,36 @@ def extract_stream(transcripts: DataFrame,
     see ``core.extract.redact_text``)."""
     if target_partitions:
         transcripts = transcripts.repartition(target_partitions)
-    ddl = OUTPUT_SCHEMA_DDL + (
-        ", redacted_text string, redaction_residuals int"
-        if redact_fields is not None else "")
-    kernel = (functools.partial(extract_batches, redact_fields=redact_fields)
-              if redact_fields is not None else extract_batches)
-    return transcripts.mapInPandas(kernel, schema=ddl)
+    kernel = functools.partial(extract_batch, redact_fields=redact_fields)
+    return map_kernel(transcripts, kernel,
+                      output_schema_ddl(redact_fields is not None)
+                      ).drop(*KERNEL_TAGS)
+
+
+def _start_parquet_sink(stream: DataFrame, output_path: str,
+                        checkpoint_path: str, available_now: bool):
+    """Start the append-mode parquet file sink every file-sink query here
+    uses (exactly-once under trigger retries, via the checkpoint)."""
+    writer = (stream.writeStream.format("parquet")
+              .option("path", output_path)
+              .option("checkpointLocation", checkpoint_path)
+              .outputMode("append"))
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _overwrite_batch(batch_df: DataFrame, batch_id: int, path: str) -> None:
+    """The idempotent foreachBatch write: rows stamped ``batch_seq`` and
+    written with dynamic partition overwrite, so a replayed batch rewrites
+    exactly its own partition. The overwrite mode is set per WRITE, not in
+    the session conf: a concurrent query sharing the session must never
+    observe a mutated global overwrite mode (ADVICE r01)."""
+    (batch_df.withColumn("batch_seq", sf.lit(batch_id))
+     .write.mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic")
+     .partitionBy("batch_seq")
+     .parquet(path))
 
 
 def deduplicated_stream(transcripts: DataFrame,
@@ -127,12 +152,8 @@ def stream_extract_deduplicated(
     deduped = deduplicated_stream(
         read_transcript_stream(spark, input_path), watermark)
     results = extract_stream(deduped, target_partitions=target_partitions)
-    writer = (results.writeStream.outputMode("append")
-              .option("checkpointLocation", checkpoint_path)
-              .format("parquet").option("path", output_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_parquet_sink(results, output_path, checkpoint_path,
+                               available_now)
 
 
 def stream_extract(
@@ -152,13 +173,8 @@ def stream_extract(
     results = extract_stream(
         read_transcript_stream(spark, input_path, max_files_per_trigger),
         target_partitions=target_partitions)
-    writer = (results.writeStream.format("parquet")
-              .option("path", output_path)
-              .option("checkpointLocation", checkpoint_path)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_parquet_sink(results, output_path, checkpoint_path,
+                               available_now)
 
 
 def status_counts(results: DataFrame, window: str = "1 hour",
@@ -182,13 +198,8 @@ def stream_status_counts(
     available_now: bool = False,
 ):
     counts = status_counts(extract_stream(read_transcript_stream(spark, input_path)))
-    writer = (counts.writeStream.format("parquet")
-              .option("path", output_path)
-              .option("checkpointLocation", checkpoint_path)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_parquet_sink(counts, output_path, checkpoint_path,
+                               available_now)
 
 
 def stream_extract_with_lineage(
@@ -221,23 +232,12 @@ def stream_extract_with_lineage(
 
         batch_df.persist(StorageLevel.DISK_ONLY)
         try:
-            # per-WRITE dynamic overwrite (not the session conf): a
-            # concurrent query sharing the session must never observe a
-            # mutated global overwrite mode (ADVICE r01)
-            (batch_df.withColumn("batch_seq", sf.lit(batch_id))
-             .write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("batch_seq")
-             .parquet(output_path))
-            (batch_df.groupBy("status")
-             .agg(sf.count("*").alias("row_count"),
-                  sf.sum("n_fields").alias("field_count"))
-             .withColumn("batch_seq", sf.lit(batch_id))
-             .coalesce(1)
-             .write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("batch_seq")
-             .parquet(lineage_path))
+            _overwrite_batch(batch_df, batch_id, output_path)
+            _overwrite_batch(
+                batch_df.groupBy("status")
+                .agg(sf.count("*").alias("row_count"),
+                     sf.sum("n_fields").alias("field_count"))
+                .coalesce(1), batch_id, lineage_path)
         finally:
             batch_df.unpersist()
 
@@ -330,11 +330,7 @@ def stream_assembled_conversations(
         extract_stream(read_transcript_stream(spark, input_path)))
 
     def write_snapshot(batch_df: DataFrame, batch_id: int) -> None:
-        (batch_df.withColumn("batch_seq", sf.lit(batch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_seq")
-         .parquet(output_path))
+        _overwrite_batch(batch_df, batch_id, output_path)
 
     return (assembled.writeStream.foreachBatch(write_snapshot)
             .outputMode("update")
@@ -410,10 +406,5 @@ def stream_media_features(
             f"kind must be 'image' or 'audio', got {kind!r} — video (AVI) "
             f"decodes in batch through ops/multimodal.sample_video_frames, "
             f"which has no streaming path")
-    writer = (feats.writeStream.format("parquet")
-              .option("path", output_path)
-              .option("checkpointLocation", checkpoint_path)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_parquet_sink(feats, output_path, checkpoint_path,
+                               available_now)

@@ -140,6 +140,19 @@ def test_scan_fields_digit_free_payloads():
     assert scan_fields("plain prose with no fields at all") == ({}, [], {})
 
 
+def test_non_ascii_digit_runs_yield_no_fields():
+    """Brazilian document numbers are ASCII: Arabic-Indic and Devanagari
+    digit runs in document shapes are not fields (a CPF at 0.95 and a date
+    were read from them while the tokenizer matched \\d)."""
+    for payload in ("CPF ١٢٣.٤٥٦.٧٨٩-٠٠", "data ١٢/٠٥/١٩٩٠",
+                    "CNPJ ١٢.٣٤٥.٦٧٨/٠٠٠١-٩٠", "RG MG-١٢.٣٤٥.٦٧٨",
+                    "valor R$ ١٢٣,٤٥", "chave " + "٣" * 44, "cpf " + "٣" * 11,
+                    "CPF १२३.४५६.७८९-००", "data १२/०५/१९९०", "cpf " + "७" * 11):
+        assert scan_fields(payload) == ({}, [], {}), payload
+    # the same shapes in ASCII digits still scan
+    assert scan_fields("CPF 123.456.789-00")[0] == {"cpf": "123.456.789-00"}
+
+
 def test_calendar_invalid_iso_date_scores_low_confidence():
     """'2020-02-31' must score 0.45 — comparing normalize_date(x) == x was
     vacuous because invalid input is returned unchanged."""

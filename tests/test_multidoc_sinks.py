@@ -62,6 +62,39 @@ def test_extract_documents_batch_error_channel():
     assert out.iloc[1]["n_fields"] == 0
 
 
+def test_extract_documents_batch_error_is_per_segment(monkeypatch):
+    """A segment whose extraction raises becomes one error row; its sibling
+    segments keep their results and the turn keeps its n_docs (the whole
+    turn used to collapse into one error row with n_docs=1)."""
+    import pandas as pd
+
+    from br_doc_ocr_spark.core import extract as ex
+
+    original = ex.extract_turn
+
+    def exploding(text, allowed=None, redact=None):
+        if text.startswith("BOOM"):
+            raise RuntimeError("synthetic kernel failure")
+        return original(text, allowed, redact)
+
+    monkeypatch.setattr(ex, "extract_turn", exploding)
+    df = pd.DataFrame({
+        "conv_id": ["c1", "c2"],
+        "turn_idx": [0, 1],
+        "text": ["CPF 123.456.789-00 pessoa um\n---\nBOOM segmento dois"
+                 "\n---\nCNPJ 12.345.678/0001-90 empresa",
+                 "sem separador CPF 111.111.111-11"],
+    })
+    out = extract_documents_batch(df)
+    assert list(out["turn_idx"]) == [0, 0, 0, 1]
+    assert list(out["doc_idx"]) == [0, 1, 2, 0]
+    assert list(out["n_docs"]) == [3, 3, 3, 1]
+    assert list(out["status"]) == ["success", "error", "success", "success"]
+    assert out.iloc[0]["fields"] == {"cpf": "123.456.789-00"}
+    assert out.iloc[1]["fields"] == {} and out.iloc[1]["extracted_text"] == ""
+    assert out.iloc[2]["fields"]["cnpj"] == "12.345.678/0001-90"
+
+
 def test_spark_multidoc_matches_oracle(spark, tiny_transcripts,
                                        tiny_transcripts_path):
     got = (pipeline.run_multi_extraction(

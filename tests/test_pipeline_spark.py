@@ -447,8 +447,10 @@ def test_ordered_writes_run_the_kernel_once(spark, tiny_transcripts,
                                             tiny_transcripts_path, tmp_path):
     """with_stable_order's range exchange samples its whole child in a job of
     its own, so an unpersisted kernel output ran through Python twice on an
-    output-only write (1 096 rows for the 548-turn fixture)."""
-    from br_doc_ocr_spark import checkpoint
+    output-only write (1 096 rows for the 548-turn fixture); the JSON sinks
+    and the multidoc CLI write range-partition the kernel output too."""
+    from br_doc_ocr_spark import checkpoint, cli
+    from br_doc_ocr_spark.core.extract import oracle_extract_documents
 
     n = len(tiny_transcripts)
     assert _rows_through_python(spark, lambda: pipeline.run_pipeline(
@@ -460,6 +462,14 @@ def test_ordered_writes_run_the_kernel_once(spark, tiny_transcripts,
     assert _rows_through_python(spark, lambda: checkpoint.run_resumable(
         spark, tiny_transcripts_path, str(tmp_path / "buckets"),
         str(tmp_path / "manifest.json"))) == n
+    results, _ = pipeline.run_extraction(
+        pipeline.read_transcripts(spark, tiny_transcripts_path))
+    assert _rows_through_python(spark, lambda: pipeline.write_json_sinks(
+        results, str(tmp_path / "sinks"))) == n
+    n_docs = len(oracle_extract_documents(tiny_transcripts))
+    assert _rows_through_python(spark, lambda: cli.main([
+        "multidoc", "--input", tiny_transcripts_path,
+        "--output", str(tmp_path / "docs")])) == n_docs
 
 
 def test_compact_parquet_empty_input_returns_empty_stats(spark, tmp_path):

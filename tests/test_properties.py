@@ -171,17 +171,18 @@ def test_classify_token_canonical_examples(token):
 # non-candidate positions) and re-checks the consumed character per branch
 # with a lookbehind; this locks it against the plain alternation it replaced,
 # and scan_fields against that alternation behind the old _ANY_FIELD_HINT
-# pre-filter.
+# pre-filter. Both references match ASCII digits only ([0-9]), like the
+# shipped tokenizer.
 
 _CANDIDATE_REFERENCE = _re.compile(
-    r"R\$\s?\d(?:[\d.,]*\d)?"
-    r"|MG-\d{2}\.\d{3}\.\d{3}\b"
-    r"|\d(?:[\d./-]*\d)?"
+    r"R\$\s?[0-9](?:[0-9.,]*[0-9])?"
+    r"|MG-[0-9]{2}\.[0-9]{3}\.[0-9]{3}\b"
+    r"|[0-9](?:[0-9./-]*[0-9])?"
     r"|\b(?:SSP|DETRAN|PC|IFP|SDS|SESP|IGP)-[A-Z]{2}\b|\bIIRGD\b"
     r"|(?i:categoria)[:\s]+\b(?P<cat>ACC|AB|AC|AD|AE|BC|BD|BE|CD|CE|DE|[A-E])\b"
 )
 _HINT_REFERENCE = _re.compile(
-    r"\d|(?i:categoria)|SSP-|DETRAN-|PC-|IFP-|SDS-|SESP-|IGP-|IIRGD")
+    r"[0-9]|(?i:categoria)|SSP-|DETRAN-|PC-|IFP-|SDS-|SESP-|IGP-|IIRGD")
 
 # field fragments, their near misses, and the characters where Unicode case
 # folding, Unicode digits and \b could set the two patterns apart
