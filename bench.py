@@ -206,7 +206,7 @@ def _run_extraction(spark, input_path: str, warm: bool = True,
     def once() -> tuple[float, int]:
         t0 = time.perf_counter()
         results, _ = pipeline.run_extraction(
-            pipeline.read_transcripts(spark, input_path), salt=8)
+            pipeline.read_transcripts(spark, input_path))
         n = results.count()
         return time.perf_counter() - t0, n
 

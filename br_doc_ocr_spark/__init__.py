@@ -6,9 +6,10 @@ Architecture (Spark-first, NOT a port):
 - ``core/``      pure pandas/NumPy extraction kernel shared verbatim between the
                  single-threaded oracle and the Spark ``mapInPandas`` UDF — this
                  is what guarantees per-turn byte equality by construction.
-- ``pipeline``   the batch DataFrame job: salted repartition by conv_id,
-                 one Arrow-batched extraction crossing, window-restored turn
-                 ordering, per-partition lineage, coalesced writes.
+- ``pipeline``   the batch DataFrame job: one range exchange on
+                 (conv_id, turn_idx) that both splits hot conversations and
+                 orders the output, one Arrow-batched extraction crossing,
+                 per-partition lineage, idempotent writes.
 - ``checkpoint`` manifest-based resumable runs (Iceberg-snapshot-compatible
                  layout over parquet; no Iceberg jars in the sandbox).
 - ``ops/``       large-scale training-data operators: dedup (exact/MinHash-LSH/

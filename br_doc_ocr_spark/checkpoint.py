@@ -31,12 +31,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as sf
 
-from br_doc_ocr_spark.pipeline import (
-    read_transcripts,
-    run_extraction,
-    unpersist_extraction,
-    with_stable_order,
-)
+from br_doc_ocr_spark.pipeline import _extraction, read_transcripts
 
 BUCKET_COL = "bucket"
 
@@ -140,7 +135,6 @@ def run_resumable(
     lineage_path: str | None = None,
     n_buckets: int = 16,
     run_id: str = "run-0",
-    salt: int = 8,
     max_buckets_per_snapshot: int | None = None,
     table_format: str | None = None,
     read_snapshot_id: int | None = None,
@@ -188,40 +182,33 @@ def run_resumable(
     ).withColumn(BUCKET_COL, bucket_of(sf.col("conv_id"), n_buckets))
     todo = transcripts.filter(sf.col(BUCKET_COL).isin([int(b) for b in pending]))
 
-    # persist: the ordered write's range-exchange sampling job, the write
-    # itself and the lineage collection all consume the kernel output — one
-    # materialized pass instead of two or three kernel runs.
-    results, lineage = run_extraction(todo.drop(BUCKET_COL), salt=salt,
-                                      persist=True)
-    ordered = with_stable_order(results).withColumn(
-        BUCKET_COL, bucket_of(sf.col("conv_id"), n_buckets))
-
-    n_rows = 0
-    try:
+    # cached only when lineage is written too: the bucket write and the
+    # lineage write both consume the kernel output
+    with _extraction(todo.drop(BUCKET_COL),
+                     cache=bool(lineage_path)) as (results, lineage):
         # Idempotent per-bucket publish: dynamic partition overwrite
         # replaces exactly the buckets written here, leaving completed ones
         # untouched. Scoped to THIS write via the writer option — mutating
         # the session conf races concurrent writers sharing the session
-        # (ADVICE r01). Inside the try: a failed write (permissions, disk
-        # full) must still release the DISK_ONLY persisted kernel output —
-        # the unguarded write leaked it for the session lifetime
-        # (review r05).
-        (ordered.write.mode("overwrite")
+        # (ADVICE r01). Sorted on (bucket, conv_id, turn_idx): the writer
+        # needs its input ordered by the partition column, so this one sort
+        # both meets that and orders every bucket file by turn.
+        bucketed = (results
+                    .withColumn(BUCKET_COL,
+                                bucket_of(sf.col("conv_id"), n_buckets))
+                    .sortWithinPartitions(BUCKET_COL, "conv_id", "turn_idx"))
+        (bucketed.write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy(BUCKET_COL)
          .parquet(output_path))
 
         if lineage_path:
             lineage_rows = lineage.select(
-                sf.lit(run_id).alias("run_id"),
-                "partition_id", "row_count", "success_count", "partial_count",
-                "failed_count", "error_count", "wall_clock_ms",
-                sf.lit(snapshot_id).alias("snapshot_id"),
-            )
+                sf.lit(run_id).alias("run_id"), *lineage.columns,
+                sf.lit(snapshot_id).alias("snapshot_id"))
             # write the DataFrame directly — a toPandas/createDataFrame
             # round-trip raises CANNOT_INFER_EMPTY_SCHEMA when the pending
-            # buckets hold zero rows, wedging the resume loop forever (the
-            # crash landed before record_snapshot AND leaked the persist).
+            # buckets hold zero rows, wedging the resume loop forever.
             # Partitioned by snapshot_id with dynamic overwrite so a crash
             # BETWEEN this write and record_snapshot cannot double-count:
             # the resume regenerates the SAME snapshot id (len(completed)
@@ -232,17 +219,14 @@ def run_resumable(
              .option("partitionOverwriteMode", "dynamic")
              .partitionBy("snapshot_id")
              .parquet(lineage_path))
-            total = lineage.agg(sf.sum("row_count")).first()[0]
-            n_rows = int(total) if total is not None else 0
-        else:
-            # no lineage: count the just-written buckets from the output
-            # footers — reporting rows=0 for a run that processed millions
-            # of rows misleads resume loops and operators (review r05)
-            n_rows = (spark.read.parquet(output_path)
-                      .filter(sf.col(BUCKET_COL)
-                              .isin([int(b) for b in pending])).count())
-    finally:
-        unpersist_extraction(results)
+
+    # count the just-written buckets from the output footers — reporting
+    # rows=0 for a run that processed millions of rows misleads resume
+    # loops and operators (review r05). The written schema is given: pending
+    # buckets holding zero rows leave no file to infer it from.
+    n_rows = (spark.read.schema(bucketed.schema).parquet(output_path)
+              .filter(sf.col(BUCKET_COL).isin([int(b) for b in pending]))
+              .count())
 
     # The manifest commits LAST — a crash before this line leaves the buckets
     # unrecorded and they are simply re-overwritten on resume (idempotent).

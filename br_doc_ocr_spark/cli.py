@@ -9,7 +9,7 @@ Cluster usage (the north rule's packaging contract):
 or locally:
 
     python -m br_doc_ocr_spark.cli extract --input t.parquet --output out/ \
-        --lineage lineage/ --salt 8
+        --lineage lineage/
     python -m br_doc_ocr_spark.cli resume  --input t.parquet --output out/ \
         --manifest m.json --buckets 64
     python -m br_doc_ocr_spark.cli synth   --turns 1000000 --output t.parquet
@@ -99,12 +99,12 @@ def cmd_extract(args) -> int:
         return 2
     run_pipeline(
         spark, args.input, output_path=args.output,
-        lineage_path=args.lineage, salt=args.salt, run_id=args.run_id,
+        lineage_path=args.lineage, run_id=args.run_id,
         max_payload_chars=args.max_payload_chars, schema=schema,
         drop_confidence=args.no_confidence, redact_fields=redact,
         table_format=args.table_format, read_snapshot_id=args.snapshot_id)
     # summarize the WRITTEN parquet — aggregating the returned frame would
-    # re-run the whole kernel (run_pipeline unpersists its cache on return)
+    # re-run the whole kernel
     summary = {r["status"]: r["n"] for r in
                spark.read.parquet(args.output)
                .groupBy("status").agg(sf.count("*").alias("n")).collect()}
@@ -165,7 +165,7 @@ def cmd_resume(args) -> int:
     summary = run_resumable(
         spark, args.input, args.output, args.manifest,
         lineage_path=args.lineage, n_buckets=args.buckets,
-        run_id=args.run_id, salt=args.salt,
+        run_id=args.run_id,
         max_buckets_per_snapshot=args.max_buckets,
         table_format=args.table_format, read_snapshot_id=args.snapshot_id)
     print(json.dumps(summary))
@@ -174,25 +174,15 @@ def cmd_resume(args) -> int:
 
 def cmd_multidoc(args) -> int:
     """FR-015: one output row per detected document segment."""
-    from pyspark import StorageLevel
-
     from br_doc_ocr_spark.pipeline import read_transcripts, run_multi_extraction
 
     spark = _session(args)
-    docs = run_multi_extraction(
+    # already in (conv_id, turn_idx, doc_idx) order: written as it comes
+    run_multi_extraction(
         read_transcripts(spark, args.input,
                          table_format=args.table_format,
                          snapshot_id=args.snapshot_id),
-        salt=args.salt)
-    # persisted around the write: the range exchange samples its child in a
-    # job of its own, which would otherwise run the kernel a second time
-    docs = docs.persist(StorageLevel.DISK_ONLY)
-    try:
-        (docs.repartitionByRange("conv_id", "turn_idx", "doc_idx")
-         .sortWithinPartitions("conv_id", "turn_idx", "doc_idx")
-         .write.mode("overwrite").parquet(args.output))
-    finally:
-        docs.unpersist()
+    ).write.mode("overwrite").parquet(args.output)
     n = spark.read.parquet(args.output).count()
     print(json.dumps({"output": args.output, "documents": n}))
     return 0
@@ -318,7 +308,7 @@ def cmd_curate(args) -> int:
     # the full stats stack (tokenize, 24-language argmax, n-gram arrays) is
     # the expensive part — materialize it ONCE for the write AND the audit
     # aggregates instead of recomputing per action (same DISK_ONLY
-    # discipline as run_extraction's write path)
+    # discipline as run_pipeline's lineage write)
     from pyspark import StorageLevel
 
     out = out.persist(StorageLevel.DISK_ONLY)
@@ -377,7 +367,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--input", required=True)
     p.add_argument("--output", required=True)
     p.add_argument("--lineage")
-    p.add_argument("--salt", type=int, default=8)
     p.add_argument("--run-id", default="run-0")
     p.add_argument("--max-payload-chars", type=int, default=None,
                    help="cap payload length before the kernel (resize analog)")
@@ -416,7 +405,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--manifest", required=True)
     p.add_argument("--lineage")
     p.add_argument("--buckets", type=int, default=64)
-    p.add_argument("--salt", type=int, default=8)
     p.add_argument("--run-id", default="run-0")
     p.add_argument("--max-buckets", type=int, default=None,
                    help="bound one invocation's snapshot size")
@@ -426,7 +414,6 @@ def main(argv: list[str] | None = None) -> int:
     p = sub.add_parser("multidoc", help="multi-document extraction (FR-015)")
     p.add_argument("--input", required=True)
     p.add_argument("--output", required=True)
-    p.add_argument("--salt", type=int, default=8)
     _add_table_format_args(p)
     p.set_defaults(func=cmd_multidoc)
 

@@ -44,7 +44,8 @@ def asof_join(left: DataFrame, right: DataFrame, time_col: str = "ts",
     are caller-deduped (the catalog query aggregates them first).
 
     Skew note: one window partition per key — salt or pre-aggregate
-    pathological hot keys exactly like the extraction job's conv salt.
+    pathological hot keys (the extraction job splits a hot conversation
+    with a range exchange on (conv_id, turn_idx)).
     """
     from pyspark.sql import Window
 
@@ -158,7 +159,8 @@ def sessionize(df: DataFrame, key_col: str = "user_id", ts_col: str = "ts",
     adds only a pre-aggregated second exchange: the partial agg collapses
     to one row per session map-side, so the second shuffle moves sessions,
     not events. Skew: one window partition per key — an adversarial single
-    hot key needs the same salt defense as the extraction job's conv salt.
+    hot key needs a split like the extraction job's range exchange on
+    (conv_id, turn_idx).
 
     ``tiebreak_col`` makes the within-key order total when timestamps can
     collide (e.g. ``event_id``); without one, equal-ts rows order

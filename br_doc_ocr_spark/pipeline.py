@@ -5,31 +5,35 @@ per-record extraction with error channel → sinks → summary), rebuilt on
 Spark's execution model per the north rule:
 
 1. scan the transcript table (parquet here; the layout is Iceberg-compatible),
-2. **salted repartition by conv_id** — extraction is per-row, so we are free
-   to break a 10^9-turn conversation across ``salt`` tasks; without salting a
-   single heavy conv_id stalls one task (SURVEY.md §4.3). The partition count
-   is ``spark.sql.shuffle.partitions``, except for an input no bigger than
-   ``spark.sql.files.openCostInBytes`` per task slot: that gets one wave of
-   Python tasks, ``min(spark.sql.shuffle.partitions, defaultParallelism)``
-   (each Python task pays a fixed start-up charge, SCALE.md),
+2. **one range exchange on (conv_id, turn_idx)** — extraction is per-row, so
+   a 10^9-turn conversation may be cut anywhere: the range partitioner cuts
+   it at sampled turn boundaries, so no single heavy conv_id stalls one task
+   (SURVEY.md §4.3), and partition i holds keys below partition i+1's. The
+   partition count is ``spark.sql.shuffle.partitions``, except for an input
+   no bigger than ``spark.sql.files.openCostInBytes`` per task slot: that
+   gets one wave of Python tasks, ``min(spark.sql.shuffle.partitions,
+   defaultParallelism)`` (each Python task pays a fixed start-up charge,
+   SCALE.md),
 3. exactly **one Arrow crossing**: ``map_kernel(extract_batch)`` over the
    shared kernel (zero per-row Python at the Spark boundary),
 4. per-partition **lineage** rows (partition id, row counts, status tallies,
    wall-clock) — PII-free by schema (counts and timings only, NFR-005/006),
-5. **stable turn ordering** restored for the sink via range-partitioned sort
-   on (conv_id, turn_idx) — fixes the reference's nondeterministic-order bug
-   (``cli/batch.py:184-190`` writes in thread-completion order),
-6. coalesced, idempotent parquet writes.
+5. **stable turn ordering**: ``sortWithinPartitions(conv_id, turn_idx)`` of
+   the kernel output, which over the range partitions is a global order —
+   fixes the reference's nondeterministic-order bug (``cli/batch.py:184-190``
+   writes in thread-completion order),
+6. idempotent parquet writes, one file per range partition, in key order.
 """
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import time
-import weakref
 from typing import Callable, Iterable, Iterator
 
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as sf
 
@@ -125,13 +129,17 @@ def map_kernel(df: DataFrame,
         run, schema=ddl + ", _partition_id int, _batch_ms long")
 
 
-def _salted_shuffle(transcripts: DataFrame, salt: int,
+def _range_exchange(transcripts: DataFrame,
                     target_partitions: int | None) -> DataFrame:
-    """The one Exchange in front of the extraction crossing: hash on
-    ``(conv_id, pmod(turn_idx, salt))`` into ``target_partitions``, by
-    default into ``spark.sql.shuffle.partitions`` — or, when the whole input
-    is at most ``spark.sql.files.openCostInBytes`` (Spark's byte-equivalent
-    of a fixed per-task charge) per task slot, into one wave of task slots.
+    """The one Exchange in front of the extraction crossing: range on
+    ``(conv_id, turn_idx)`` into ``target_partitions``, by default into
+    ``spark.sql.shuffle.partitions`` — or, when the whole input is at most
+    ``spark.sql.files.openCostInBytes`` (Spark's byte-equivalent of a fixed
+    per-task charge) per task slot, into one wave of task slots.
+
+    The range bounds come from a sampling job over the input (the scan, not
+    the kernel), so a hot conversation is cut at sampled turn boundaries
+    instead of landing in one task, and the partitions are in key order.
 
     Each Python task pays a fixed start-up charge that does not depend on
     its rows (SCALE.md); on such a small input no task holds enough rows to
@@ -152,27 +160,85 @@ def _salted_shuffle(transcripts: DataFrame, salt: int,
             .filesOpenCostInBytes()
         if int(size) <= slots * open_cost:
             n = min(n, slots)
-    return transcripts.repartition(
-        n, sf.col("conv_id"), sf.pmod(sf.col("turn_idx"), sf.lit(salt)))
+    return transcripts.repartitionByRange(n, "conv_id", "turn_idx")
+
+
+@contextlib.contextmanager
+def _extraction(transcripts: DataFrame, cache: bool,
+                target_partitions: int | None = None,
+                schema: dict | None = None,
+                max_payload_chars: int | None = None,
+                redact_fields: frozenset[str] | None = None,
+                ) -> Iterator[tuple[DataFrame, DataFrame]]:
+    """(results, lineage) of the range exchange + the one crossing, for
+    use inside the ``with`` block (options: :func:`run_extraction`).
+
+    ``cache=True`` (the caller writes both results and lineage) persists the
+    tagged kernel output for the block, so the kernel runs once, and
+    releases it on exit, also on failure. DISK_ONLY, deliberately:
+    MEMORY_AND_DISK builds in-heap columnar cache batches first and OOMed
+    the 8g JVM at 20M rows (the kernel output carries the extracted text) —
+    serialized disk blocks keep the heap bounded like a shuffle spill.
+
+    Lineage is an aggregation over the extraction output itself — computed
+    in the same plan (no second scan); counts are exact, wall-clock sums the
+    per-batch kernel timings within each partition. Redacting runs also
+    carry the per-partition residual-identifier escape count (the PII
+    completeness audit, VERDICT r03 #5) — a count, never a payload, so the
+    lineage table stays PII-free by schema.
+
+    The results are sorted within the range partitions — the sort runs on
+    the kernel OUTPUT: sorting the input ahead of the crossing held whole
+    partitions of raw payloads in the sorter and raised the peak RSS of the
+    document benchmark by a quarter."""
+    if max_payload_chars is not None:
+        transcripts = transcripts.withColumn(
+            "text", sf.substring("text", 1, max_payload_chars))
+    kernel = functools.partial(extract_batch,
+                               allowed_fields=schema_field_names(schema),
+                               redact_fields=redact_fields)
+    extracted = map_kernel(_range_exchange(transcripts, target_partitions),
+                           kernel, output_schema_ddl(redact_fields is not None))
+    if cache:
+        extracted = extracted.persist(StorageLevel.DISK_ONLY)
+    aggs = [
+        sf.count("*").alias("row_count"),
+        sf.sum(sf.when(sf.col("status") == "success", 1).otherwise(0)).alias("success_count"),
+        sf.sum(sf.when(sf.col("status") == "partial", 1).otherwise(0)).alias("partial_count"),
+        sf.sum(sf.when(sf.col("status") == "failed", 1).otherwise(0)).alias("failed_count"),
+        sf.sum(sf.when(sf.col("status") == "error", 1).otherwise(0)).alias("error_count"),
+        sf.sum("_batch_ms").alias("wall_clock_ms"),
+    ]
+    if redact_fields is not None:
+        aggs.append(sf.sum("redaction_residuals").alias("redaction_residuals"))
+    lineage = extracted.groupBy(
+        sf.col("_partition_id").alias("partition_id")
+    ).agg(*aggs)
+    results = extracted.drop(*KERNEL_TAGS).sortWithinPartitions(
+        "conv_id", "turn_idx")
+    try:
+        yield results, lineage
+    finally:
+        if cache:
+            extracted.unpersist()
 
 
 def run_extraction(
     transcripts: DataFrame,
-    salt: int = 8,
     target_partitions: int | None = None,
     schema: dict | None = None,
-    persist: bool = False,
     max_payload_chars: int | None = None,
     redact_fields: frozenset[str] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Run the extraction stage → (results, lineage).
 
-    ``salt`` splits each conv_id across up to ``salt`` shuffle keys
-    (``pmod(turn_idx, salt)``) — deterministic, order-insensitive for a
-    per-row map, and it defuses long-conversation skew. ``target_partitions``
-    defaults to ``spark.sql.shuffle.partitions``, or to one wave of task
-    slots for an input of at most ``spark.sql.files.openCostInBytes`` per
-    slot (Catalyst's size estimate) — see :func:`_salted_shuffle`.
+    The results are range-partitioned on ``(conv_id, turn_idx)`` and sorted
+    within each partition, so they are in global turn order; the one
+    exchange also splits long conversations across tasks.
+    ``target_partitions`` defaults to ``spark.sql.shuffle.partitions``, or to
+    one wave of task slots for an input of at most
+    ``spark.sql.files.openCostInBytes`` per slot (Catalyst's size estimate)
+    — see :func:`_range_exchange`.
     ``schema`` enables schema-guided extraction (US4): a JSON-Schema dict
     whose field names bound the extracted field set (shipped to executors in
     the task closure — the broadcast-variable pattern for a driver-side
@@ -191,90 +257,12 @@ def run_extraction(
     every detected span of those fields masked as ``[FIELD]`` —
     ``core.extract.DEFAULT_REDACT_FIELDS`` covers the identifier fields.
 
-    ``persist=True`` materializes the kernel output (on executor disk) so
-    that consuming BOTH returned frames runs the kernel once, not twice —
-    required whenever results AND lineage are acted on, and whenever the
-    results are written through :func:`with_stable_order`, whose range
-    exchange samples its whole child in a job of its own (the write path
-    measured 2× without it). Callers unpersist via
-    :func:`unpersist_extraction`.
+    Both frames share the kernel: acting on both runs it twice
+    (:func:`run_pipeline` caches it when it writes both).
     """
-    if max_payload_chars is not None:
-        transcripts = transcripts.withColumn(
-            "text", sf.substring("text", 1, max_payload_chars))
-    salted = _salted_shuffle(transcripts, salt, target_partitions)
-    kernel = functools.partial(extract_batch,
-                               allowed_fields=schema_field_names(schema),
-                               redact_fields=redact_fields)
-    extracted = map_kernel(salted, kernel,
-                           output_schema_ddl(redact_fields is not None))
-    if persist:
-        from pyspark import StorageLevel
-
-        # DISK_ONLY, deliberately: MEMORY_AND_DISK builds in-heap columnar
-        # cache batches first and OOMed the 8g JVM at 20M rows (the kernel
-        # output carries the extracted text) — serialized disk blocks keep
-        # the heap bounded like a shuffle spill, at any scale, and the
-        # single re-read for the ordered write is sequential I/O.
-        extracted = extracted.persist(StorageLevel.DISK_ONLY)
-
-    # Lineage is an aggregation over the extraction output itself — computed
-    # in the same plan (no second scan); counts are exact, wall-clock sums the
-    # per-batch kernel timings within each partition. Redacting runs also
-    # carry the per-partition residual-identifier escape count (the PII
-    # completeness audit, VERDICT r03 #5) — a count, never a payload, so the
-    # lineage table stays PII-free by schema.
-    aggs = [
-        sf.count("*").alias("row_count"),
-        sf.sum(sf.when(sf.col("status") == "success", 1).otherwise(0)).alias("success_count"),
-        sf.sum(sf.when(sf.col("status") == "partial", 1).otherwise(0)).alias("partial_count"),
-        sf.sum(sf.when(sf.col("status") == "failed", 1).otherwise(0)).alias("failed_count"),
-        sf.sum(sf.when(sf.col("status") == "error", 1).otherwise(0)).alias("error_count"),
-        sf.sum("_batch_ms").alias("wall_clock_ms"),
-    ]
-    if redact_fields is not None:
-        aggs.append(sf.sum("redaction_residuals").alias("redaction_residuals"))
-    lineage = extracted.groupBy(
-        sf.col("_partition_id").alias("partition_id")
-    ).agg(*aggs)
-    results = extracted.drop(*KERNEL_TAGS)
-    if persist:
-        _EXTRACTION_CACHES[results] = extracted
-    return results, lineage
-
-
-# results-frame -> persisted kernel-output frame, for unpersist_extraction.
-# A side registry (not an attribute stashed on the DataFrame instance):
-# weak keys so an abandoned results frame never pins its cache entry, and
-# no reliance on DataFrame accepting ad-hoc attributes across Spark versions.
-_EXTRACTION_CACHES: "weakref.WeakKeyDictionary[DataFrame, DataFrame]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def _share_extraction_cache(derived: DataFrame, source: DataFrame) -> None:
-    """Make ``unpersist_extraction(derived)`` release ``source``'s cache."""
-    cache = _EXTRACTION_CACHES.get(source)
-    if cache is not None:
-        _EXTRACTION_CACHES[derived] = cache
-
-
-def unpersist_extraction(results: DataFrame) -> None:
-    cache = _EXTRACTION_CACHES.pop(results, None)
-    if cache is not None:
-        cache.unpersist()
-
-
-def with_stable_order(results: DataFrame) -> DataFrame:
-    """Restore per-conversation turn order for sinks/comparisons.
-
-    ``repartitionByRange`` + ``sortWithinPartitions`` gives a globally ordered
-    layout without a single-reducer sort — the window-free way to make output
-    order deterministic at any scale (SURVEY.md §2.5/§2.6 O4).
-    """
-    return results.repartitionByRange("conv_id", "turn_idx").sortWithinPartitions(
-        "conv_id", "turn_idx"
-    )
+    with _extraction(transcripts, False, target_partitions, schema,
+                     max_payload_chars, redact_fields) as frames:
+        return frames
 
 
 def run_pipeline(
@@ -282,7 +270,6 @@ def run_pipeline(
     input_path: str,
     output_path: str | None = None,
     lineage_path: str | None = None,
-    salt: int = 8,
     run_id: str = "run-0",
     snapshot_id: str = "snap-0",
     max_payload_chars: int | None = None,
@@ -292,19 +279,23 @@ def run_pipeline(
     table_format: str | None = "parquet",
     read_snapshot_id: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """End-to-end: read → salted extract → order → (optionally) write.
+    """End-to-end: read → range exchange → extract → sort → optional write.
 
     ``table_format``/``read_snapshot_id`` select the input reader (Iceberg
     time travel on a cluster with the runtime jar) — distinct from
     ``snapshot_id``, which stamps the OUTPUT lineage rows for the resume
     manifest.
 
-    Writes are idempotent overwrites; lineage rows are stamped with
-    ``run_id``/``snapshot_id`` (FIXTURES.md §5) for the resume manifest.
-    ``schema`` enables schema-guided extraction (US4) — see
-    :func:`run_extraction`. ``drop_confidence`` strips the
-    confidence_scores / low_confidence_fields columns from the result (P2 —
-    the reference's ``--confidence`` off path, cli/extract.py:130-137).
+    Writes are idempotent overwrites: the output is replaced, and the
+    lineage table is partitioned by ``run_id`` and overwritten per run (a
+    rerun of a run id replaces its rows, other runs' rows stay). Lineage
+    rows are stamped with ``run_id``/``snapshot_id`` (FIXTURES.md §5) for
+    the resume manifest. Read back, ``run_id`` is the last column, a
+    directory one: give the reader the schema to keep a numeric-looking id a
+    string. ``schema`` enables schema-guided extraction (US4) — see
+    :func:`run_extraction`. ``drop_confidence`` strips the confidence_scores
+    / low_confidence_fields columns from the result (P2 — the reference's
+    ``--confidence`` off path, cli/extract.py:130-137).
     """
     if lineage_path and not output_path:
         # the lineage write is nested under the output write — silently
@@ -317,47 +308,38 @@ def run_pipeline(
     transcripts = read_transcripts(spark, input_path,
                                    table_format=table_format,
                                    snapshot_id=read_snapshot_id)
-    # persist whenever the ordered write runs: with_stable_order's range
-    # exchange first runs a sampling job over its whole child, so without
-    # the cache even an output-only write runs the kernel twice (and the
-    # lineage write, when asked for, would be a third pass); the returned
-    # frames recompute either way since the cache is released before return.
-    results, lineage = run_extraction(transcripts, salt=salt,
-                                      persist=bool(output_path),
-                                      max_payload_chars=max_payload_chars,
-                                      schema=schema,
-                                      redact_fields=redact_fields)
-    if drop_confidence:
-        dropped = results.drop("confidence_scores", "low_confidence_fields")
-        _share_extraction_cache(dropped, results)
-        results = dropped
-    ordered = with_stable_order(results)
-    lineage = lineage.select(
-        sf.lit(run_id).alias("run_id"),
-        sf.lit(snapshot_id).alias("snapshot_id"),
-        "partition_id", "row_count", "success_count", "partial_count",
-        "failed_count", "error_count", "wall_clock_ms",
-        *(["redaction_residuals"] if redact_fields is not None else []),
-    )
-    if output_path:
-        try:
-            ordered.write.mode("overwrite").parquet(output_path)
-            if lineage_path:
-                # Lineage is tiny — one row per task — single file.
-                lineage.coalesce(1).write.mode("append").parquet(lineage_path)
-        finally:
-            unpersist_extraction(results)
-    return ordered, lineage
+    with _extraction(
+            transcripts, cache=bool(lineage_path), schema=schema,
+            max_payload_chars=max_payload_chars,
+            redact_fields=redact_fields) as (results, lineage):
+        if drop_confidence:
+            results = results.drop("confidence_scores",
+                                   "low_confidence_fields")
+        lineage = lineage.select(sf.lit(run_id).alias("run_id"),
+                                 sf.lit(snapshot_id).alias("snapshot_id"),
+                                 *lineage.columns)
+        if output_path:
+            results.write.mode("overwrite").parquet(output_path)
+        if lineage_path:
+            # Lineage is tiny — one row per task — one file per run
+            (lineage.coalesce(1).write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
+             .partitionBy("run_id")
+             .parquet(lineage_path))
+    return results, lineage
 
 
-def run_multi_extraction(transcripts: DataFrame, salt: int = 8,
+def run_multi_extraction(transcripts: DataFrame,
                          target_partitions: int | None = None) -> DataFrame:
     """FR-015 flatMap form: one output row per detected document segment
     (reference: ``extract_document(multi_document=True)``, extraction.py:
-    102-119). Same salted-shuffle discipline as the 1:1 kernel."""
-    salted = _salted_shuffle(transcripts, salt, target_partitions)
-    return map_kernel(salted, extract_documents_batch,
-                      MULTIDOC_SCHEMA_DDL).drop(*KERNEL_TAGS)
+    102-119). Same range exchange as the 1:1 kernel; the output is sorted
+    within the range partitions on ``(conv_id, turn_idx, doc_idx)``, so it
+    is in global document order."""
+    return (map_kernel(_range_exchange(transcripts, target_partitions),
+                       extract_documents_batch, MULTIDOC_SCHEMA_DDL)
+            .drop(*KERNEL_TAGS)
+            .sortWithinPartitions("conv_id", "turn_idx", "doc_idx"))
 
 
 # ---------------------------------------------------------------------------
@@ -382,25 +364,22 @@ def result_json_column(results: DataFrame) -> DataFrame:
 
 def write_json_sinks(results: DataFrame, output_dir: str) -> None:
     """JSONL results + quarantine channel, split by status (cli/batch.py:
-    169-174,184-207): good rows to ``results/``, error rows to ``errors/``.
+    169-174,184-207): good rows to ``results/``, error rows to ``errors/``,
+    each in the order of ``results`` (global turn order for
+    :func:`run_extraction`'s results).
 
-    The split is two actions over one upstream plan, and the range exchange
-    samples its child in a job of its own: the kernel output and the ordered
-    frame are persisted for the call (DISK_ONLY, heap-bounded), so the kernel
-    and the range shuffle run once (the rule run_pipeline documents)."""
-    from pyspark import StorageLevel
-
+    The split is two actions over one upstream plan: ``results`` is
+    persisted for the call (DISK_ONLY, heap-bounded), so the kernel runs
+    once."""
     results = results.persist(StorageLevel.DISK_ONLY)
-    ordered = with_stable_order(results).persist(StorageLevel.DISK_ONLY)
     try:
-        good = ordered.filter(sf.col("status") != "error")
-        bad = ordered.filter(sf.col("status") == "error")
+        good = results.filter(sf.col("status") != "error")
+        bad = results.filter(sf.col("status") == "error")
         result_json_column(good).write.mode("overwrite").json(
             f"{output_dir}/results")
         result_json_column(bad).write.mode("overwrite").json(
             f"{output_dir}/errors")
     finally:
-        ordered.unpersist()
         results.unpersist()
 
 
@@ -505,7 +484,7 @@ def flagship_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full extraction pipeline over testdata-derived transcripts, summarized
     per (status, payload_kind) — the driver's smoke target."""
     transcripts = transcripts_from_documents(spark, sf_dir)
-    results, _ = run_extraction(transcripts, salt=4)
+    results, _ = run_extraction(transcripts)
     return (
         results.groupBy("status", "payload_kind")
         .agg(

@@ -1154,7 +1154,7 @@ def q_extract_pipeline_summary(spark, sf_dir):
     "extraction kernel: explode per-turn fields map, count per field name")
 def q_extract_field_counts(spark, sf_dir):
     from br_doc_ocr_spark.pipeline import run_extraction, transcripts_from_documents
-    results, _ = run_extraction(transcripts_from_documents(spark, sf_dir), salt=4)
+    results, _ = run_extraction(transcripts_from_documents(spark, sf_dir))
     return (results.select(sf.explode(sf.map_keys("fields")).alias("field"))
             .groupBy("field").agg(sf.count("*").alias("n"))
             .orderBy("field"))
@@ -1184,7 +1184,7 @@ def q_redact_text_audit(spark, sf_dir):
     )
 
     results, _ = run_extraction(transcripts_from_documents(spark, sf_dir),
-                                salt=4, redact_fields=DEFAULT_REDACT_FIELDS)
+                                redact_fields=DEFAULT_REDACT_FIELDS)
     mask_set = sf.array(*[sf.lit(f) for f in sorted(DEFAULT_REDACT_FIELDS)])
     masks = sf.size(sf.filter(
         "spans", lambda s: sf.array_contains(mask_set, s["field"])))
@@ -1635,7 +1635,7 @@ def q_eval_extraction_report(spark, sf_dir):
     from br_doc_ocr_spark import evaluation
     from br_doc_ocr_spark.pipeline import run_extraction, transcripts_from_documents
 
-    results, _ = run_extraction(transcripts_from_documents(spark, sf_dir), salt=4)
+    results, _ = run_extraction(transcripts_from_documents(spark, sf_dir))
     pred = results.select("conv_id", "turn_idx", "payload_kind",
                           "extracted_text", "fields", "status")
     return evaluation.evaluate(pred, pred)["per_kind"]
@@ -1665,7 +1665,7 @@ def q_extract_schema_guided(spark, sf_dir):
                                                  "format": "date"}},
               "required": ["cpf"]}
     results, _ = run_extraction(transcripts_from_documents(spark, sf_dir),
-                                salt=4, schema=schema)
+                                schema=schema)
     return (results.select(sf.explode(sf.map_keys("fields")).alias("field"))
             .groupBy("field").agg(sf.count("*").alias("n")).orderBy("field"))
 
@@ -1715,7 +1715,7 @@ def q_extract_multidoc(spark, sf_dir):
         transcripts_from_documents,
     )
 
-    docs = run_multi_extraction(transcripts_from_documents(spark, sf_dir), salt=4)
+    docs = run_multi_extraction(transcripts_from_documents(spark, sf_dir))
     return (docs.groupBy("n_docs", "status")
             .agg(sf.count("*").alias("n"),
                  sf.sum("n_fields").alias("total_fields"))
@@ -1745,7 +1745,7 @@ def q_classify_alternatives(spark, sf_dir):
         with_classification,
     )
 
-    results, _ = run_extraction(transcripts_from_documents(spark, sf_dir), salt=4)
+    results, _ = run_extraction(transcripts_from_documents(spark, sf_dir))
     classified = with_classification(results)
     return (classified.select(
         "payload_kind", "classify_confidence",

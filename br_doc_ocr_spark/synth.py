@@ -135,7 +135,7 @@ def make_transcripts_pandas(
     contract_conv: bool = True,
 ) -> pd.DataFrame:
     """Seeded pandas transcript table; one ``conv-heavy`` conversation gets
-    ``skew_factor``× the median turn count to exercise salting
+    ``skew_factor``× the median turn count to exercise the skew defense
     (FIXTURES.md §1); ``contract_conv`` appends the fixed ``conv-contract``
     edge-payload conversation (CONTRACT_PAYLOADS)."""
     rng = np.random.RandomState(seed)

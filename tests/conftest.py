@@ -34,3 +34,14 @@ def tiny_transcripts_path(tiny_transcripts, tmp_path_factory):
 
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def sorted_in_file_order(files: list[str]) -> bool:
+    """True iff the (conv_id, turn_idx) keys of ``files``, read with pandas
+    one by one in the given order and concatenated, are sorted."""
+    import pandas as pd
+
+    keys = [k for f in files
+            for k in pd.read_parquet(f, columns=["conv_id", "turn_idx"])
+            .itertuples(index=False, name=None)]
+    return keys == sorted(keys)

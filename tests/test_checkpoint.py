@@ -74,6 +74,22 @@ def test_rows_reported_without_lineage(spark, tiny_transcripts_path, paths):
     assert s["rows"] == spark.read.parquet(paths["out"]).count() > 0
 
 
+def test_bucket_files_are_ordered(spark, tiny_transcripts_path, paths):
+    """Every bucket file, read with pandas, holds its turns in (conv_id,
+    turn_idx) order — the one sort on (bucket, conv_id, turn_idx) orders
+    the files the bucketed writer cuts."""
+    import glob
+
+    from tests.conftest import sorted_in_file_order
+
+    checkpoint.run_resumable(spark, tiny_transcripts_path, paths["out"],
+                             paths["manifest"], n_buckets=4)
+    files = sorted(glob.glob(f"{paths['out']}/bucket=*/*.parquet"))
+    assert len({f.split("/")[-2] for f in files}) == 4
+    for f in files:
+        assert sorted_in_file_order([f]), f
+
+
 def test_lineage_not_duplicated_across_crash_window(spark,
                                                     tiny_transcripts_path,
                                                     paths):

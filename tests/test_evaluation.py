@@ -110,7 +110,7 @@ def test_self_evaluation_is_perfect(spark, tiny_transcripts_path):
     from br_doc_ocr_spark import pipeline
 
     results, _ = pipeline.run_extraction(
-        pipeline.read_transcripts(spark, tiny_transcripts_path), salt=4)
+        pipeline.read_transcripts(spark, tiny_transcripts_path))
     pred = results.select("conv_id", "turn_idx", "payload_kind",
                           "extracted_text", "fields", "status")
     rep = evaluation.evaluate(pred, pred)
@@ -130,7 +130,7 @@ def test_schema_guided_extraction_filters_fields(spark, tiny_transcripts_path):
                                                  "format": "date"}},
               "required": ["cpf"]}
     df = pipeline.read_transcripts(spark, tiny_transcripts_path)
-    results, _ = pipeline.run_extraction(df, salt=4, schema=schema)
+    results, _ = pipeline.run_extraction(df, schema=schema)
     from pyspark.sql import functions as sf
 
     fields = (results.select(sf.explode(sf.map_keys("fields")).alias("f"))

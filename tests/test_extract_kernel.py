@@ -296,11 +296,11 @@ def test_redaction_residuals_ride_lineage(spark, tiny_transcripts_path):
 
     _, lineage = pipeline.run_extraction(
         pipeline.read_transcripts(spark, tiny_transcripts_path),
-        salt=8, redact_fields=DEFAULT_REDACT_FIELDS)
+        redact_fields=DEFAULT_REDACT_FIELDS)
     got = lineage.toPandas()
     assert "redaction_residuals" in got.columns
     assert int(got["redaction_residuals"].sum()) == 0
     # non-redacting runs keep the lean schema
     _, plain = pipeline.run_extraction(
-        pipeline.read_transcripts(spark, tiny_transcripts_path), salt=8)
+        pipeline.read_transcripts(spark, tiny_transcripts_path))
     assert "redaction_residuals" not in plain.columns

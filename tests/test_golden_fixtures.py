@@ -49,7 +49,7 @@ def test_spark_pipeline_reproduces_committed_golden(spark, tmp_path):
     golden = pd.read_parquet(FIXTURES / "golden_extractions.parquet")
     results, _ = pipeline.run_extraction(
         pipeline.read_transcripts(
-            spark, str(FIXTURES / "transcripts_tiny.parquet")), salt=8)
+            spark, str(FIXTURES / "transcripts_tiny.parquet")))
     got = (results.toPandas()
            .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True))
     assert got["extracted_text"].tolist() == golden["extracted_text"].tolist()

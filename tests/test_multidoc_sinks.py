@@ -98,7 +98,7 @@ def test_extract_documents_batch_error_is_per_segment(monkeypatch):
 def test_spark_multidoc_matches_oracle(spark, tiny_transcripts,
                                        tiny_transcripts_path):
     got = (pipeline.run_multi_extraction(
-        pipeline.read_transcripts(spark, tiny_transcripts_path), salt=4)
+        pipeline.read_transcripts(spark, tiny_transcripts_path))
         .toPandas()
         .sort_values(["conv_id", "turn_idx", "doc_idx"]).reset_index(drop=True))
     expected = oracle_extract_documents(tiny_transcripts)
@@ -112,7 +112,7 @@ def test_spark_multidoc_matches_oracle(spark, tiny_transcripts,
 def test_json_sinks_split_and_deterministic(spark, tiny_transcripts_path,
                                             tmp_path):
     results, _ = pipeline.run_extraction(
-        pipeline.read_transcripts(spark, tiny_transcripts_path), salt=4)
+        pipeline.read_transcripts(spark, tiny_transcripts_path))
     out = str(tmp_path / "sink")
     pipeline.write_json_sinks(results, out)
     good = spark.read.json(f"{out}/results")
@@ -132,7 +132,7 @@ def test_json_sinks_split_and_deterministic(spark, tiny_transcripts_path,
 
 def test_classification_alternatives(spark, tiny_transcripts_path):
     results, _ = pipeline.run_extraction(
-        pipeline.read_transcripts(spark, tiny_transcripts_path), salt=4)
+        pipeline.read_transcripts(spark, tiny_transcripts_path))
     classified = pipeline.with_classification(results)
     row = classified.select("payload_kind", "classify_confidence",
                             "classify_alternatives").first()

@@ -9,6 +9,7 @@ import pytest
 
 from br_doc_ocr_spark.core.extract import OUTPUT_COLUMNS, oracle_extract
 from br_doc_ocr_spark import pipeline
+from tests.conftest import sorted_in_file_order
 
 
 def _normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -29,16 +30,21 @@ def _normalize(df: pd.DataFrame) -> pd.DataFrame:
 
 
 @pytest.fixture(scope="module")
-def spark_result(spark, tiny_transcripts_path, tmp_path_factory):
+def pipeline_output(spark, tiny_transcripts_path, tmp_path_factory):
+    """run_pipeline's written output path and its returned lineage frame."""
     out_dir = tmp_path_factory.mktemp("out")
-    ordered, lineage = pipeline.run_pipeline(
+    _, lineage = pipeline.run_pipeline(
         spark, tiny_transcripts_path,
         output_path=str(out_dir / "extractions.parquet"),
         lineage_path=str(out_dir / "lineage.parquet"),
-        salt=8,
     )
-    written = spark.read.parquet(str(out_dir / "extractions.parquet"))
-    return written.toPandas(), lineage.toPandas()
+    return str(out_dir / "extractions.parquet"), lineage
+
+
+@pytest.fixture(scope="module")
+def spark_result(spark, pipeline_output):
+    path, lineage = pipeline_output
+    return spark.read.parquet(path).toPandas(), lineage.toPandas()
 
 
 def test_spark_matches_oracle_per_turn(spark_result, tiny_transcripts):
@@ -71,11 +77,12 @@ def test_statuses_cover_all_classes(spark_result):
 
 
 def test_skewed_conversation_spreads_across_partitions(spark, tiny_transcripts_path):
-    """Salting must break conv-heavy across >1 task (SURVEY.md §4.3)."""
+    """The range exchange must break conv-heavy across >1 task (SURVEY.md
+    §4.3)."""
     from pyspark.sql import functions as sf
 
     transcripts = pipeline.read_transcripts(spark, tiny_transcripts_path)
-    results, lineage = pipeline.run_extraction(transcripts, salt=8)
+    results, lineage = pipeline.run_extraction(transcripts)
     parts = (
         results.withColumn("pid", sf.spark_partition_id())
         .filter(sf.col("conv_id") == "conv-heavy")
@@ -97,12 +104,37 @@ def test_lineage_counts_reconcile(spark_result, tiny_transcripts):
     }
 
 
-def test_output_is_stably_ordered_within_files(spark_result):
-    got, _ = spark_result
-    # The written parquet, read back in file order, must already be sorted
-    # within each (conv_id) run — global sort by range partitioning.
-    heavy = got[got["conv_id"] == "conv-heavy"]["turn_idx"].tolist()
-    assert heavy == sorted(heavy)
+def test_output_is_stably_ordered_within_files(pipeline_output):
+    """The written part files, read in name order, hold the turns in global
+    (conv_id, turn_idx) order: sorted within each file, and each file's keys
+    below the next file's (the range exchange orders the partitions).
+    Read with pandas, not Spark: a Spark read orders its splits by size."""
+    import glob
+
+    files = sorted(glob.glob(f"{pipeline_output[0]}/part-*.parquet"))
+    assert len(files) > 1  # the order spans files, not one coalesced file
+    assert sorted_in_file_order(files)
+
+
+def test_lineage_rewrite_of_a_run_is_idempotent(spark, tiny_transcripts,
+                                                tiny_transcripts_path,
+                                                tmp_path):
+    """Running the same run_id twice into the same paths replaces that
+    run's lineage rows instead of appending a second copy; another run id
+    adds its own rows next to them. run_id is the table's directory column:
+    read back it comes last, and a numeric-looking id is inferred as an int
+    unless the reader is given the schema, which keeps it a string."""
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lineage")
+    for run_id in ("1", "1", "2"):
+        pipeline.run_pipeline(spark, tiny_transcripts_path, output_path=out,
+                              lineage_path=lin, run_id=run_id)
+    inferred = spark.read.parquet(lin)
+    assert inferred.columns[-1] == "run_id"
+    assert dict(inferred.dtypes)["run_id"] == "int"
+    ddl = ", ".join(f"{c} {t}" for c, t in inferred.dtypes if c != "run_id")
+    got = spark.read.schema(ddl + ", run_id string").parquet(lin).toPandas()
+    assert got.groupby("run_id")["row_count"].sum().to_dict() == {
+        "1": len(tiny_transcripts), "2": len(tiny_transcripts)}
 
 
 def test_flagship_query_runs_on_testdata(spark):
@@ -131,7 +163,7 @@ def test_max_payload_chars_caps_before_kernel(spark, tiny_transcripts,
     big.to_parquet(path, index=False)
 
     results, _ = pipeline.run_extraction(
-        pipeline.read_transcripts(spark, path), salt=8, max_payload_chars=cap)
+        pipeline.read_transcripts(spark, path), max_payload_chars=cap)
     got = _normalize(results.toPandas())
 
     capped_input = big.copy()
@@ -147,15 +179,15 @@ def test_max_payload_chars_caps_before_kernel(spark, tiny_transcripts,
     assert "cpf" not in dict(row["fields"])
 
 
-def test_results_invariant_to_parallelism_and_salt(spark, tiny_transcripts_path):
+def test_results_invariant_to_parallelism(spark, tiny_transcripts_path):
     """SCALE.md: nothing in the job is order- or partition-count-dependent.
-    The same input must produce identical rows at any target_partitions and
-    any salt (both only steer the shuffle layout)."""
+    The same input must produce identical rows at any target_partitions
+    (it only steers the shuffle layout)."""
     frames = []
-    for parts, salt in [(2, 1), (16, 8), (5, 13)]:
+    for parts in (2, 16, 5):
         results, _ = pipeline.run_extraction(
             pipeline.read_transcripts(spark, tiny_transcripts_path),
-            salt=salt, target_partitions=parts)
+            target_partitions=parts)
         frames.append(_normalize(results.toPandas()))
     pd.testing.assert_frame_equal(frames[0], frames[1], check_dtype=False)
     pd.testing.assert_frame_equal(frames[0], frames[2], check_dtype=False)
@@ -171,7 +203,7 @@ def test_redact_fields_appends_masked_column(spark, tiny_transcripts_path):
 
     results, _ = pipeline.run_extraction(
         pipeline.read_transcripts(spark, tiny_transcripts_path),
-        salt=8, redact_fields=DEFAULT_REDACT_FIELDS)
+        redact_fields=DEFAULT_REDACT_FIELDS)
     got = results.toPandas().sort_values(
         ["conv_id", "turn_idx"]).reset_index(drop=True)
     assert "redacted_text" in got.columns
@@ -195,7 +227,7 @@ def test_redact_fields_appends_masked_column(spark, tiny_transcripts_path):
     assert n_masked > 0  # the fixture must actually exercise masking
 
     plain, _ = pipeline.run_extraction(
-        pipeline.read_transcripts(spark, tiny_transcripts_path), salt=8)
+        pipeline.read_transcripts(spark, tiny_transcripts_path))
     a = _normalize(got[OUTPUT_COLUMNS])
     b = _normalize(plain.toPandas())
     pd.testing.assert_frame_equal(a, b)
@@ -530,43 +562,8 @@ def test_iceberg_reader_contract(spark, tiny_transcripts, tmp_path):
                                        snapshot_id=int(snap1))
     assert pinned.count() == half.count()             # time travel honored
     # and the extraction pipeline runs unchanged over the Iceberg scan
-    results, _ = pipeline.run_extraction(pinned, salt=4)
+    results, _ = pipeline.run_extraction(pinned)
     assert results.count() == half.count()
-
-
-def test_extraction_cache_registry(spark, tiny_transcripts_path):
-    """unpersist_extraction releases the persisted kernel output via the
-    side registry (no attribute stashed on the DataFrame instance), and an
-    abandoned results frame does not pin its registry entry (weak keys)."""
-    import gc
-    import weakref
-
-    transcripts = pipeline.read_transcripts(spark, tiny_transcripts_path)
-    results, _ = pipeline.run_extraction(transcripts, persist=True)
-    assert not hasattr(results, "_extraction_cache")
-    cache = pipeline._EXTRACTION_CACHES[results]
-    assert cache.is_cached
-    pipeline.unpersist_extraction(results)
-    assert results not in pipeline._EXTRACTION_CACHES
-    assert not cache.is_cached
-
-    # drop_confidence derives a new frame; the registry entry must follow it
-    results2, _ = pipeline.run_extraction(transcripts, persist=True)
-    derived = results2.drop("confidence_scores", "low_confidence_fields")
-    pipeline._share_extraction_cache(derived, results2)
-    assert pipeline._EXTRACTION_CACHES[derived] is pipeline._EXTRACTION_CACHES[results2]
-    pipeline.unpersist_extraction(derived)
-    pipeline.unpersist_extraction(results2)  # pop the source frame's entry too
-
-    # weak keys: losing the last reference clears the entry
-    results3, _ = pipeline.run_extraction(transcripts, persist=True)
-    ref = weakref.ref(results3)
-    cache3 = pipeline._EXTRACTION_CACHES[results3]
-    del results3
-    gc.collect()
-    assert ref() is None
-    assert len(list(pipeline._EXTRACTION_CACHES.keys())) == 0
-    cache3.unpersist()
 
 
 def test_compact_parquet_accepts_hadoop_uri_spellings(spark, tmp_path):

@@ -29,43 +29,48 @@ def test_projection_and_filter_pushed_to_scan(spark):
     assert "l_extendedprice" not in read_schema
 
 
+RANGE_EXCHANGE = (r"rangepartitioning\(conv_id#\d+ ASC NULLS FIRST, "
+                  r"turn_idx#\d+ ASC NULLS FIRST, (\d+)\)")
+
+
 def test_extraction_has_single_arrow_crossing_and_shuffle(spark,
                                                           tiny_transcripts_path):
+    """Every extraction plan holds exactly one Arrow crossing and exactly
+    one Exchange in front of it, and that Exchange is the range exchange on
+    (conv_id, turn_idx) — the one shuffle that both splits hot
+    conversations and orders the output. No hash exchange anywhere."""
     import re
 
-    df = pipeline.read_transcripts(spark, tiny_transcripts_path)
-    results, _ = pipeline.run_extraction(df, salt=4)
-    plan = plan_of(results)
-    # exactly one Arrow crossing and one (salted) exchange before it
-    assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 1
-    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
-    assert "pmod(turn_idx" in plan  # the salt key is part of the partitioning
-
-    # redaction rides the SAME single crossing — no extra stage, no extra
-    # shuffle, just one more output column from the kernel
     from br_doc_ocr_spark.core.extract import DEFAULT_REDACT_FIELDS
 
-    red, _ = pipeline.run_extraction(df, salt=4,
-                                     redact_fields=DEFAULT_REDACT_FIELDS)
-    rplan = plan_of(red)
-    assert len(re.findall(r"\(\d+\) MapInPandas", rplan)) == 1
-    assert len(re.findall(r"\(\d+\) Exchange", rplan)) == 1
-    assert "redacted_text" in rplan
+    df = pipeline.read_transcripts(spark, tiny_transcripts_path)
+    plans = {
+        "run_extraction": plan_of(pipeline.run_extraction(df)[0]),
+        # redaction rides the SAME single crossing — no extra stage, no
+        # extra shuffle, just one more output column from the kernel
+        "redacting": plan_of(pipeline.run_extraction(
+            df, redact_fields=DEFAULT_REDACT_FIELDS)[0]),
+        "run_multi_extraction": plan_of(pipeline.run_multi_extraction(df)),
+    }
+    for name, plan in plans.items():
+        assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 1, name
+        assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, name
+        assert len(re.findall(RANGE_EXCHANGE, plan)) == 1, name
+        assert "hashpartitioning" not in plan, name
+    assert "redacted_text" in plans["redacting"]
 
 
 def test_extraction_partitions_are_task_slots_for_small_input_else_conf(
         spark, tiny_transcripts_path):
-    """Unless target_partitions is given, the salted Exchange gets
+    """Unless target_partitions is given, the range Exchange gets
     min(shuffle.partitions, task slots) partitions when the input is at most
     openCostInBytes per slot, and shuffle.partitions otherwise."""
     import re
 
     def exchange_partitions(**kw) -> int:
         df = pipeline.read_transcripts(spark, tiny_transcripts_path)
-        results, _ = pipeline.run_extraction(df, salt=4, **kw)
-        counts = re.findall(
-            r"hashpartitioning\(conv_id#\d+, pmod\(turn_idx#\d+, 4\), (\d+)\)",
-            plan_of(results))
+        results, _ = pipeline.run_extraction(df, **kw)
+        counts = re.findall(RANGE_EXCHANGE, plan_of(results))
         assert counts and len(set(counts)) == 1, counts
         return int(counts[0])
 
@@ -86,6 +91,22 @@ def test_extraction_partitions_are_task_slots_for_small_input_else_conf(
             assert exchange_partitions() == expect, (key, value)
         finally:
             spark.conf.set(key, old)
+
+
+def test_range_exchange_balances_hot_conversation(spark, tiny_transcripts,
+                                                  tiny_transcripts_path):
+    """Skew lock: conv-heavy holds well over half of the fixture's turns,
+    yet no kernel task gets more than 1.1× the mean rows (lineage
+    row_count per partition). A hash exchange keyed on conv_id alone would
+    put the whole conversation in one task."""
+    heavy = (tiny_transcripts["conv_id"] == "conv-heavy").sum()
+    assert heavy > len(tiny_transcripts) / 2  # premise: one hot key
+    _, lineage = pipeline.run_extraction(
+        pipeline.read_transcripts(spark, tiny_transcripts_path))
+    rows = lineage.toPandas()["row_count"]
+    assert rows.sum() == len(tiny_transcripts)
+    assert len(rows) == 4  # one wave of task slots
+    assert rows.max() / rows.mean() <= 1.1, sorted(rows)
 
 
 def test_small_dims_are_broadcast(spark):
