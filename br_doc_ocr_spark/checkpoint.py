@@ -31,7 +31,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as sf
 
-from br_doc_ocr_spark.pipeline import _extraction, read_transcripts
+from br_doc_ocr_spark.pipeline import read_transcripts, run_extraction
 
 BUCKET_COL = "bucket"
 
@@ -182,51 +182,41 @@ def run_resumable(
     ).withColumn(BUCKET_COL, bucket_of(sf.col("conv_id"), n_buckets))
     todo = transcripts.filter(sf.col(BUCKET_COL).isin([int(b) for b in pending]))
 
-    # cached only when lineage is written too: the bucket write and the
-    # lineage write both consume the kernel output
-    with _extraction(todo.drop(BUCKET_COL),
-                     cache=bool(lineage_path)) as (results, lineage):
-        # Idempotent per-bucket publish: dynamic partition overwrite
-        # replaces exactly the buckets written here, leaving completed ones
-        # untouched. Scoped to THIS write via the writer option — mutating
-        # the session conf races concurrent writers sharing the session
-        # (ADVICE r01). Sorted on (bucket, conv_id, turn_idx): the writer
-        # needs its input ordered by the partition column, so this one sort
-        # both meets that and orders every bucket file by turn.
-        bucketed = (results
-                    .withColumn(BUCKET_COL,
-                                bucket_of(sf.col("conv_id"), n_buckets))
-                    .sortWithinPartitions(BUCKET_COL, "conv_id", "turn_idx"))
-        (bucketed.write.mode("overwrite")
+    results, lineage = run_extraction(todo.drop(BUCKET_COL))
+    # Idempotent per-bucket publish: dynamic partition overwrite replaces
+    # exactly the buckets written here, leaving completed ones untouched.
+    # Scoped to THIS write via the writer option — mutating the session conf
+    # races concurrent writers sharing the session (ADVICE r01). Sorted on
+    # (bucket, conv_id, turn_idx): the writer needs its input ordered by the
+    # partition column, so this one sort both meets that and orders every
+    # bucket file by turn.
+    (results
+     .withColumn(BUCKET_COL, bucket_of(sf.col("conv_id"), n_buckets))
+     .sortWithinPartitions(BUCKET_COL, "conv_id", "turn_idx")
+     .write.mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic")
+     .partitionBy(BUCKET_COL)
+     .parquet(output_path))
+
+    # the kernel's tally of that write: pending buckets holding zero rows
+    # give an empty frame of the lineage schema
+    counts = lineage()
+    if lineage_path:
+        # Partitioned by snapshot_id with dynamic overwrite so a crash
+        # BETWEEN this write and record_snapshot cannot double-count: the
+        # resume regenerates the SAME snapshot id (len(completed) is
+        # unchanged) and replaces its own partition instead of appending a
+        # second identical batch (review r05 — plain append duplicated
+        # lineage rows on exactly that crash window).
+        (counts.select(sf.lit(run_id).alias("run_id"), *counts.columns,
+                       sf.lit(snapshot_id).alias("snapshot_id"))
+         .coalesce(1).write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")
-         .partitionBy(BUCKET_COL)
-         .parquet(output_path))
-
-        if lineage_path:
-            lineage_rows = lineage.select(
-                sf.lit(run_id).alias("run_id"), *lineage.columns,
-                sf.lit(snapshot_id).alias("snapshot_id"))
-            # write the DataFrame directly — a toPandas/createDataFrame
-            # round-trip raises CANNOT_INFER_EMPTY_SCHEMA when the pending
-            # buckets hold zero rows, wedging the resume loop forever.
-            # Partitioned by snapshot_id with dynamic overwrite so a crash
-            # BETWEEN this write and record_snapshot cannot double-count:
-            # the resume regenerates the SAME snapshot id (len(completed)
-            # is unchanged) and replaces its own partition instead of
-            # appending a second identical batch (review r05 — plain
-            # append duplicated lineage rows on exactly that crash window).
-            (lineage_rows.coalesce(1).write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("snapshot_id")
-             .parquet(lineage_path))
-
-    # count the just-written buckets from the output footers — reporting
-    # rows=0 for a run that processed millions of rows misleads resume
-    # loops and operators (review r05). The written schema is given: pending
-    # buckets holding zero rows leave no file to infer it from.
-    n_rows = (spark.read.schema(bucketed.schema).parquet(output_path)
-              .filter(sf.col(BUCKET_COL).isin([int(b) for b in pending]))
-              .count())
+         .partitionBy("snapshot_id")
+         .parquet(lineage_path))
+    # reporting rows=0 for a run that processed millions of rows misleads
+    # resume loops and operators (review r05)
+    n_rows = sum(r["row_count"] for r in counts.collect())
 
     # The manifest commits LAST — a crash before this line leaves the buckets
     # unrecorded and they are simply re-overwritten on resume (idempotent).

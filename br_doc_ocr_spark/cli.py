@@ -74,40 +74,38 @@ def _parse_redact(value: str | None) -> frozenset[str] | None:
     return frozenset(out) if out else None
 
 
-def cmd_extract(args) -> int:
-    from pyspark.sql import functions as sf
+def _load_schema(value: str | None) -> dict | None:
+    """Shared --schema loader: None passthrough, else the schema from the
+    JSON string or file. A missing or invalid schema raises ValueError
+    (SchemaError subclasses it), which the commands print to stderr and exit
+    2 on, like --redact — never a raw traceback (review r05)."""
+    if not value:
+        return None
+    from br_doc_ocr_spark.core.schemas import load_schema
 
+    return load_schema(value)
+
+
+def cmd_extract(args) -> int:
     from br_doc_ocr_spark.pipeline import run_pipeline
 
     spark = _session(args)
-    schema = None
-    if args.schema:
-        from br_doc_ocr_spark.core.schemas import load_schema
-
-        # same clean-exit contract as --redact: a missing/invalid schema
-        # file prints to stderr and exits 2, never a raw traceback
-        # (review r05 — SchemaError subclasses ValueError)
-        try:
-            schema = load_schema(args.schema)
-        except ValueError as e:
-            print(e, file=sys.stderr)
-            return 2
     try:
+        schema = _load_schema(args.schema)
         redact = _parse_redact(args.redact)
     except ValueError as e:
         print(e, file=sys.stderr)
         return 2
-    run_pipeline(
+    _, lineage = run_pipeline(
         spark, args.input, output_path=args.output,
         lineage_path=args.lineage, run_id=args.run_id,
         max_payload_chars=args.max_payload_chars, schema=schema,
         drop_confidence=args.no_confidence, redact_fields=redact,
         table_format=args.table_format, read_snapshot_id=args.snapshot_id)
-    # summarize the WRITTEN parquet — aggregating the returned frame would
-    # re-run the whole kernel
-    summary = {r["status"]: r["n"] for r in
-               spark.read.parquet(args.output)
-               .groupBy("status").agg(sf.count("*").alias("n")).collect()}
+    # the write's own lineage: no second pass over the output
+    rows = lineage().collect()
+    summary = {s: n for s in ("success", "partial", "failed", "error")
+               if (n := sum(r[f"{s}_count"] for r in rows))}
     print(json.dumps({"output": args.output, "status_counts": summary}))
     return 0
 
@@ -130,19 +128,8 @@ def cmd_extract_one(args) -> int:
             # a missing file, never a traceback
             print(f"cannot read {args.file}: {e}", file=sys.stderr)
             return 2
-    schema = None
-    if args.schema:
-        from br_doc_ocr_spark.core.schemas import load_schema
-
-        # same clean-exit contract as --redact: a missing/invalid schema
-        # file prints to stderr and exits 2, never a raw traceback
-        # (review r05 — SchemaError subclasses ValueError)
-        try:
-            schema = load_schema(args.schema)
-        except ValueError as e:
-            print(e, file=sys.stderr)
-            return 2
     try:
+        schema = _load_schema(args.schema)
         redact = _parse_redact(getattr(args, "redact", None))
     except ValueError as e:
         print(e, file=sys.stderr)
@@ -307,8 +294,8 @@ def cmd_curate(args) -> int:
         allowed_langs=langs)
     # the full stats stack (tokenize, 24-language argmax, n-gram arrays) is
     # the expensive part — materialize it ONCE for the write AND the audit
-    # aggregates instead of recomputing per action (same DISK_ONLY
-    # discipline as run_pipeline's lineage write)
+    # aggregates instead of recomputing per action (DISK_ONLY: in-heap
+    # columnar caching of wide text rows OOMs the heap, SCALE.md #4)
     from pyspark import StorageLevel
 
     out = out.persist(StorageLevel.DISK_ONLY)

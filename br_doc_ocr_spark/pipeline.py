@@ -16,8 +16,9 @@ Spark's execution model per the north rule:
    SCALE.md),
 3. exactly **one Arrow crossing**: ``map_kernel(extract_batch)`` over the
    shared kernel (zero per-row Python at the Spark boundary),
-4. per-partition **lineage** rows (partition id, row counts, status tallies,
-   wall-clock) — PII-free by schema (counts and timings only, NFR-005/006),
+4. per-partition **lineage** from the kernel's own tally (an accumulator the
+   tasks fill as they run; no persist, no job of its own) — PII-free by
+   schema (counts and timings only, NFR-005/006),
 5. **stable turn ordering**: ``sortWithinPartitions(conv_id, turn_idx)`` of
    the kernel output, which over the range partitions is a global order —
    fixes the reference's nondeterministic-order bug (``cli/batch.py:184-190``
@@ -27,13 +28,14 @@ Spark's execution model per the north rule:
 
 from __future__ import annotations
 
-import contextlib
 import functools
 import time
+from collections import Counter
 from typing import Callable, Iterable, Iterator
 
 import pandas as pd
-from pyspark import StorageLevel
+from pyspark import StorageLevel, TaskContext
+from pyspark.accumulators import Accumulator, AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as sf
 
@@ -47,8 +49,11 @@ from br_doc_ocr_spark.core.extract import (
 
 TRANSCRIPT_COLUMNS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 
-# the columns map_kernel tags every row with
-KERNEL_TAGS = ("_partition_id", "_batch_ms")
+# FIXTURES.md §5 in column order; a redacting run appends
+# ``redaction_residuals long``
+LINEAGE_DDL = ("partition_id int, row_count long, success_count long, "
+               "partial_count long, failed_count long, error_count long, "
+               "wall_clock_ms long")
 
 
 def read_transcripts(spark: SparkSession, path: str,
@@ -99,34 +104,57 @@ def read_transcripts(spark: SparkSession, path: str,
     return spark.read.parquet(path).select(*TRANSCRIPT_COLUMNS)
 
 
+class _ByPartition(AccumulatorParam):
+    """``{partition_id: tally}`` merged by replacement: a re-run or retried
+    task overwrites its partition's entry instead of counting it twice."""
+
+    def zero(self, value: dict) -> dict:
+        return {}
+
+    def addInPlace(self, value1: dict, value2: dict) -> dict:
+        return value1 | value2
+
+
 def map_kernel(df: DataFrame,
                kernel: Callable[[pd.DataFrame], pd.DataFrame],
-               ddl: str) -> DataFrame:
+               ddl: str, tally: Accumulator | None = None) -> DataFrame:
     """The one Arrow adapter: ``mapInPandas`` of a batch kernel (pandas in,
-    rows of ``ddl`` out) over ``df``, skipping empty batches. Rows carry the
-    task's ``_partition_id``; the first row of each batch carries the
-    kernel's ``_batch_ms`` (the rest 0), so lineage aggregates exactly.
-    Callers without lineage drop :data:`KERNEL_TAGS` — a projection."""
+    rows of ``ddl`` out) over ``df``, skipping empty batches.
+
+    With ``tally`` (a :class:`_ByPartition` accumulator), a task that
+    yielded rows adds its partition's rows, rows per status, kernel
+    milliseconds and residual identifiers (redacting kernels) at its end."""
 
     def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
+        counts: Counter = Counter()
         for batch in batches:
             if not len(batch):
                 continue
             t0 = time.perf_counter()
             out = kernel(batch)
-            elapsed_ms = int((time.perf_counter() - t0) * 1000)
-            out["_partition_id"] = pid
-            ms = [0] * len(out)
-            ms[0] = elapsed_ms
-            out["_batch_ms"] = ms
+            counts["wall_clock_ms"] += (time.perf_counter() - t0) * 1000
+            counts["row_count"] += len(out)
+            statuses = out["status"].value_counts().add_suffix("_count")
+            counts.update(statuses.to_dict())
+            if "redaction_residuals" in out:
+                counts["redaction_residuals"] += out["redaction_residuals"].sum()
             yield out
+        if tally is not None and counts:
+            tally.add({TaskContext.get().partitionId(): counts})
 
-    return df.mapInPandas(
-        run, schema=ddl + ", _partition_id int, _batch_ms long")
+    return df.mapInPandas(run, schema=ddl)
+
+
+def _lineage_frame(spark: SparkSession, tally: Accumulator,
+                   ddl: str) -> DataFrame:
+    """The lineage frame of ``ddl`` from a :class:`_ByPartition` tally, one
+    row per partition in partition order. Built from pandas through Arrow:
+    a frame from a list of tuples is a Python RDD, whose tasks start Python
+    workers."""
+    names = [col.split()[0] for col in ddl.split(", ")]
+    rows = [[pid] + [int(counts[c]) for c in names[1:]]
+            for pid, counts in sorted(tally.value.items())]
+    return spark.createDataFrame(pd.DataFrame(rows, columns=names), ddl)
 
 
 def _range_exchange(transcripts: DataFrame,
@@ -163,78 +191,21 @@ def _range_exchange(transcripts: DataFrame,
     return transcripts.repartitionByRange(n, "conv_id", "turn_idx")
 
 
-@contextlib.contextmanager
-def _extraction(transcripts: DataFrame, cache: bool,
-                target_partitions: int | None = None,
-                schema: dict | None = None,
-                max_payload_chars: int | None = None,
-                redact_fields: frozenset[str] | None = None,
-                ) -> Iterator[tuple[DataFrame, DataFrame]]:
-    """(results, lineage) of the range exchange + the one crossing, for
-    use inside the ``with`` block (options: :func:`run_extraction`).
-
-    ``cache=True`` (the caller writes both results and lineage) persists the
-    tagged kernel output for the block, so the kernel runs once, and
-    releases it on exit, also on failure. DISK_ONLY, deliberately:
-    MEMORY_AND_DISK builds in-heap columnar cache batches first and OOMed
-    the 8g JVM at 20M rows (the kernel output carries the extracted text) —
-    serialized disk blocks keep the heap bounded like a shuffle spill.
-
-    Lineage is an aggregation over the extraction output itself — computed
-    in the same plan (no second scan); counts are exact, wall-clock sums the
-    per-batch kernel timings within each partition. Redacting runs also
-    carry the per-partition residual-identifier escape count (the PII
-    completeness audit, VERDICT r03 #5) — a count, never a payload, so the
-    lineage table stays PII-free by schema.
-
-    The results are sorted within the range partitions — the sort runs on
-    the kernel OUTPUT: sorting the input ahead of the crossing held whole
-    partitions of raw payloads in the sorter and raised the peak RSS of the
-    document benchmark by a quarter."""
-    if max_payload_chars is not None:
-        transcripts = transcripts.withColumn(
-            "text", sf.substring("text", 1, max_payload_chars))
-    kernel = functools.partial(extract_batch,
-                               allowed_fields=schema_field_names(schema),
-                               redact_fields=redact_fields)
-    extracted = map_kernel(_range_exchange(transcripts, target_partitions),
-                           kernel, output_schema_ddl(redact_fields is not None))
-    if cache:
-        extracted = extracted.persist(StorageLevel.DISK_ONLY)
-    aggs = [
-        sf.count("*").alias("row_count"),
-        sf.sum(sf.when(sf.col("status") == "success", 1).otherwise(0)).alias("success_count"),
-        sf.sum(sf.when(sf.col("status") == "partial", 1).otherwise(0)).alias("partial_count"),
-        sf.sum(sf.when(sf.col("status") == "failed", 1).otherwise(0)).alias("failed_count"),
-        sf.sum(sf.when(sf.col("status") == "error", 1).otherwise(0)).alias("error_count"),
-        sf.sum("_batch_ms").alias("wall_clock_ms"),
-    ]
-    if redact_fields is not None:
-        aggs.append(sf.sum("redaction_residuals").alias("redaction_residuals"))
-    lineage = extracted.groupBy(
-        sf.col("_partition_id").alias("partition_id")
-    ).agg(*aggs)
-    results = extracted.drop(*KERNEL_TAGS).sortWithinPartitions(
-        "conv_id", "turn_idx")
-    try:
-        yield results, lineage
-    finally:
-        if cache:
-            extracted.unpersist()
-
-
 def run_extraction(
     transcripts: DataFrame,
     target_partitions: int | None = None,
     schema: dict | None = None,
     max_payload_chars: int | None = None,
     redact_fields: frozenset[str] | None = None,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, Callable[[], DataFrame]]:
     """Run the extraction stage → (results, lineage).
 
     The results are range-partitioned on ``(conv_id, turn_idx)`` and sorted
     within each partition, so they are in global turn order; the one
-    exchange also splits long conversations across tasks.
+    exchange also splits long conversations across tasks. The sort runs on
+    the kernel OUTPUT: sorting the input ahead of the crossing held whole
+    partitions of raw payloads in the sorter and raised the peak RSS of the
+    document benchmark by a quarter.
     ``target_partitions`` defaults to ``spark.sql.shuffle.partitions``, or to
     one wave of task slots for an input of at most
     ``spark.sql.files.openCostInBytes`` per slot (Catalyst's size estimate)
@@ -257,12 +228,28 @@ def run_extraction(
     every detected span of those fields masked as ``[FIELD]`` —
     ``core.extract.DEFAULT_REDACT_FIELDS`` covers the identifier fields.
 
-    Both frames share the kernel: acting on both runs it twice
-    (:func:`run_pipeline` caches it when it writes both).
+    ``lineage`` is a zero-argument callable returning the lineage frame
+    (FIXTURES.md §5 from ``partition_id`` on) of the actions run so far on
+    ``results``: the kernel's own tally (:func:`map_kernel`), one row per
+    partition that had rows, a re-run replacing its partition's row.
+    Redacting runs add the residual-identifier escape count (the PII
+    completeness audit, VERDICT r03 #5) — a count, never a payload. It
+    never runs the kernel; before the first action it has no rows.
     """
-    with _extraction(transcripts, False, target_partitions, schema,
-                     max_payload_chars, redact_fields) as frames:
-        return frames
+    if max_payload_chars is not None:
+        transcripts = transcripts.withColumn(
+            "text", sf.substring("text", 1, max_payload_chars))
+    kernel = functools.partial(extract_batch,
+                               allowed_fields=schema_field_names(schema),
+                               redact_fields=redact_fields)
+    spark = transcripts.sparkSession
+    tally = spark.sparkContext.accumulator({}, _ByPartition())
+    results = map_kernel(_range_exchange(transcripts, target_partitions),
+                         kernel, output_schema_ddl(redact_fields is not None),
+                         tally).sortWithinPartitions("conv_id", "turn_idx")
+    ddl = LINEAGE_DDL + (", redaction_residuals long"
+                         if redact_fields is not None else "")
+    return results, functools.partial(_lineage_frame, spark, tally, ddl)
 
 
 def run_pipeline(
@@ -278,8 +265,13 @@ def run_pipeline(
     redact_fields: frozenset[str] | None = None,
     table_format: str | None = "parquet",
     read_snapshot_id: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, Callable[[], DataFrame]]:
     """End-to-end: read → range exchange → extract → sort → optional write.
+
+    Returns ``(results, lineage)`` like :func:`run_extraction`, with the
+    lineage rows stamped with ``run_id``/``snapshot_id`` in front
+    (FIXTURES.md §5) for the resume manifest; after a write ``lineage()``
+    holds every partition of it.
 
     ``table_format``/``read_snapshot_id`` select the input reader (Iceberg
     time travel on a cluster with the runtime jar) — distinct from
@@ -288,14 +280,13 @@ def run_pipeline(
 
     Writes are idempotent overwrites: the output is replaced, and the
     lineage table is partitioned by ``run_id`` and overwritten per run (a
-    rerun of a run id replaces its rows, other runs' rows stay). Lineage
-    rows are stamped with ``run_id``/``snapshot_id`` (FIXTURES.md §5) for
-    the resume manifest. Read back, ``run_id`` is the last column, a
-    directory one: give the reader the schema to keep a numeric-looking id a
-    string. ``schema`` enables schema-guided extraction (US4) — see
-    :func:`run_extraction`. ``drop_confidence`` strips the confidence_scores
-    / low_confidence_fields columns from the result (P2 — the reference's
-    ``--confidence`` off path, cli/extract.py:130-137).
+    rerun of a run id replaces its rows, other runs' rows stay). Read back,
+    ``run_id`` is the last column, a directory one: give the reader the
+    schema to keep a numeric-looking id a string. ``schema`` enables
+    schema-guided extraction (US4) — see :func:`run_extraction`.
+    ``drop_confidence`` strips the confidence_scores / low_confidence_fields
+    columns from the result (P2 — the reference's ``--confidence`` off path,
+    cli/extract.py:130-137).
     """
     if lineage_path and not output_path:
         # the lineage write is nested under the output write — silently
@@ -303,29 +294,31 @@ def run_pipeline(
         # lineage table (review r05)
         raise ValueError(
             "run_pipeline: lineage_path requires output_path — lineage is "
-            "written alongside the output (pass output_path, or consume "
-            "the returned lineage frame directly)")
+            "written alongside the output (pass output_path, or call "
+            "the returned lineage after your own action)")
     transcripts = read_transcripts(spark, input_path,
                                    table_format=table_format,
                                    snapshot_id=read_snapshot_id)
-    with _extraction(
-            transcripts, cache=bool(lineage_path), schema=schema,
-            max_payload_chars=max_payload_chars,
-            redact_fields=redact_fields) as (results, lineage):
-        if drop_confidence:
-            results = results.drop("confidence_scores",
-                                   "low_confidence_fields")
-        lineage = lineage.select(sf.lit(run_id).alias("run_id"),
-                                 sf.lit(snapshot_id).alias("snapshot_id"),
-                                 *lineage.columns)
-        if output_path:
-            results.write.mode("overwrite").parquet(output_path)
-        if lineage_path:
-            # Lineage is tiny — one row per task — one file per run
-            (lineage.coalesce(1).write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("run_id")
-             .parquet(lineage_path))
+    results, kernel_lineage = run_extraction(
+        transcripts, schema=schema, max_payload_chars=max_payload_chars,
+        redact_fields=redact_fields)
+    if drop_confidence:
+        results = results.drop("confidence_scores", "low_confidence_fields")
+
+    def lineage() -> DataFrame:
+        counts = kernel_lineage()
+        return counts.select(sf.lit(run_id).alias("run_id"),
+                             sf.lit(snapshot_id).alias("snapshot_id"),
+                             *counts.columns)
+
+    if output_path:
+        results.write.mode("overwrite").parquet(output_path)
+    if lineage_path:
+        # Lineage is tiny — one row per task — one file per run
+        (lineage().coalesce(1).write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("run_id")
+         .parquet(lineage_path))
     return results, lineage
 
 
@@ -338,7 +331,6 @@ def run_multi_extraction(transcripts: DataFrame,
     is in global document order."""
     return (map_kernel(_range_exchange(transcripts, target_partitions),
                        extract_documents_batch, MULTIDOC_SCHEMA_DDL)
-            .drop(*KERNEL_TAGS)
             .sortWithinPartitions("conv_id", "turn_idx", "doc_idx"))
 
 

@@ -86,11 +86,15 @@ def build_session(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         # --- scan sizing: 128 MiB splits, the parquet sweet spot ---
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        # --- cached-batch sizing: the DISK_ONLY kernel-output cache stores
-        # columnar batches; the 10 000-row default holds ~10-60 MiB per batch
-        # with KB-scale text columns, and 32 concurrent scan tasks × build +
-        # decompress spikes OOMed a 24 g heap at 20M rows. 1 000 rows bounds
-        # the per-task batch working set ~10× at negligible scan cost. ---
+        # --- cached-batch sizing: DISK_ONLY persists store columnar
+        # batches; the 10 000-row default holds ~10-60 MiB per batch with
+        # KB-scale text columns, and 32 concurrent scan tasks × build +
+        # decompress spikes OOMed a 24 g heap at 20M rows (a kernel-output
+        # cache the extraction writes no longer build). 1 000 rows bounds
+        # the per-task batch working set ~10× at negligible scan cost for
+        # the persists that remain: pipeline.write_json_sinks,
+        # dataset.write_training_dataset, cli curate and the per-micro-batch
+        # one of streaming.stream_extract_with_lineage. ---
         .config("spark.sql.inMemoryColumnarStorage.batchSize", "1000")
         # --- small-file control on sinks ---
         .config("spark.sql.files.maxRecordsPerFile", "2000000")

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as sf
 
 from br_doc_ocr_spark.core.extract import extract_batch, output_schema_ddl
-from br_doc_ocr_spark.pipeline import KERNEL_TAGS, TRANSCRIPT_COLUMNS, map_kernel
+from br_doc_ocr_spark.pipeline import TRANSCRIPT_COLUMNS, map_kernel
 
 TRANSCRIPT_SCHEMA_DDL = (
     "conv_id string, turn_idx int, role string, text string, tool string, "
@@ -66,8 +66,7 @@ def extract_stream(transcripts: DataFrame,
         transcripts = transcripts.repartition(target_partitions)
     kernel = functools.partial(extract_batch, redact_fields=redact_fields)
     return map_kernel(transcripts, kernel,
-                      output_schema_ddl(redact_fields is not None)
-                      ).drop(*KERNEL_TAGS)
+                      output_schema_ddl(redact_fields is not None))
 
 
 def _start_parquet_sink(stream: DataFrame, output_path: str,

@@ -294,13 +294,14 @@ def test_redaction_residuals_ride_lineage(spark, tiny_transcripts_path):
     from br_doc_ocr_spark import pipeline
     from br_doc_ocr_spark.core.extract import DEFAULT_REDACT_FIELDS
 
-    _, lineage = pipeline.run_extraction(
+    results, lineage = pipeline.run_extraction(
         pipeline.read_transcripts(spark, tiny_transcripts_path),
         redact_fields=DEFAULT_REDACT_FIELDS)
-    got = lineage.toPandas()
+    results.write.format("noop").mode("overwrite").save()
+    got = lineage().toPandas()
     assert "redaction_residuals" in got.columns
     assert int(got["redaction_residuals"].sum()) == 0
     # non-redacting runs keep the lean schema
     _, plain = pipeline.run_extraction(
         pipeline.read_transcripts(spark, tiny_transcripts_path))
-    assert "redaction_residuals" not in plain.columns
+    assert "redaction_residuals" not in plain().columns

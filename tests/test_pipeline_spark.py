@@ -31,7 +31,7 @@ def _normalize(df: pd.DataFrame) -> pd.DataFrame:
 
 @pytest.fixture(scope="module")
 def pipeline_output(spark, tiny_transcripts_path, tmp_path_factory):
-    """run_pipeline's written output path and its returned lineage frame."""
+    """run_pipeline's written output path and its returned lineage."""
     out_dir = tmp_path_factory.mktemp("out")
     _, lineage = pipeline.run_pipeline(
         spark, tiny_transcripts_path,
@@ -44,7 +44,7 @@ def pipeline_output(spark, tiny_transcripts_path, tmp_path_factory):
 @pytest.fixture(scope="module")
 def spark_result(spark, pipeline_output):
     path, lineage = pipeline_output
-    return spark.read.parquet(path).toPandas(), lineage.toPandas()
+    return spark.read.parquet(path).toPandas(), lineage().toPandas()
 
 
 def test_spark_matches_oracle_per_turn(spark_result, tiny_transcripts):
@@ -97,11 +97,30 @@ def test_lineage_counts_reconcile(spark_result, tiny_transcripts):
     for status, col in [("success", "success_count"), ("partial", "partial_count"),
                         ("failed", "failed_count")]:
         assert lineage[col].sum() == (got["status"] == status).sum()
-    # PII-free by schema: only ids, counts, timings.
-    assert set(lineage.columns) == {
-        "run_id", "snapshot_id", "partition_id", "row_count", "success_count",
-        "partial_count", "failed_count", "error_count", "wall_clock_ms",
-    }
+    # PII-free by schema: only ids, counts, timings — FIXTURES.md §5's
+    # columns, in its order, with its types
+    assert list(lineage.dtypes.astype(str).items()) == [
+        ("run_id", "object"), ("snapshot_id", "object"),
+        ("partition_id", "int32"), ("row_count", "int64"),
+        ("success_count", "int64"), ("partial_count", "int64"),
+        ("failed_count", "int64"), ("error_count", "int64"),
+        ("wall_clock_ms", "int64"),
+    ]
+
+
+def test_lineage_counts_each_partition_once_over_two_actions(
+        spark, tiny_transcripts, tiny_transcripts_path):
+    """Lineage is the kernel's tally merged by partition id with
+    replacement: a second action over the same results re-runs every
+    partition and replaces its entry, so the sum stays the input count
+    (548), not twice it (1 096)."""
+    results, lineage = pipeline.run_extraction(
+        pipeline.read_transcripts(spark, tiny_transcripts_path))
+    for _ in range(2):
+        results.write.format("noop").mode("overwrite").save()
+    rows = lineage().toPandas()
+    assert rows["row_count"].sum() == len(tiny_transcripts)
+    assert rows["partition_id"].is_unique
 
 
 def test_output_is_stably_ordered_within_files(pipeline_output):
@@ -441,30 +460,39 @@ def test_run_pipeline_rejects_lineage_without_output(spark,
                               lineage_path="/tmp/never-written")
 
 
-def _rows_through_python(spark, action) -> int:
-    """Rows the extraction ``mapInPandas`` returned while ``action`` ran, from
-    the "number of output rows" SQL metric of every MapInPandas node in the
-    session's SQL status store (a kernel run twice counts its rows twice)."""
+def _executions_during(spark, action) -> tuple[object, list[int]]:
+    """The session's SQL status store and the ids of the executions that
+    ``action`` ran."""
     store = spark._jsparkSession.sharedState().statusStore()
 
     def executions():
         seq = store.executionsList()
-        return [seq.apply(i) for i in range(seq.size())]
+        return [seq.apply(i).executionId() for i in range(seq.size())]
 
-    before = max((e.executionId() for e in executions()), default=-1)
+    before = max(executions(), default=-1)
     action()
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return store, [e for e in executions() if e > before]
+
+
+def _plan_nodes(store, execution_id: int) -> list:
+    nodes = store.planGraph(execution_id).allNodes()
+    return [nodes.apply(i) for i in range(nodes.size())]
+
+
+def _rows_through_python(spark, action) -> int:
+    """Rows the extraction ``mapInPandas`` returned while ``action`` ran, from
+    the "number of output rows" SQL metric of every MapInPandas node in the
+    session's SQL status store (a kernel run twice counts its rows twice)."""
+    store, ids = _executions_during(spark, action)
     rows = 0
-    for e in executions():
-        if e.executionId() <= before:
-            continue
+    for e in ids:
         values = {}
-        it = store.executionMetrics(e.executionId()).iterator()
+        it = store.executionMetrics(e).iterator()
         while it.hasNext():
             kv = it.next()
             values[kv._1()] = kv._2()
-        nodes = store.planGraph(e.executionId()).allNodes()
-        for node in (nodes.apply(i) for i in range(nodes.size())):
+        for node in _plan_nodes(store, e):
             if node.name() != "MapInPandas":
                 continue
             metrics = node.metrics()
@@ -502,6 +530,27 @@ def test_ordered_writes_run_the_kernel_once(spark, tiny_transcripts,
     assert _rows_through_python(spark, lambda: cli.main([
         "multidoc", "--input", tiny_transcripts_path,
         "--output", str(tmp_path / "docs")])) == n_docs
+
+
+def test_lineage_writes_cache_nothing(spark, tiny_transcripts_path,
+                                     tmp_path):
+    """Lineage is the kernel's own tally, so no plan that run_pipeline or
+    run_resumable executes with a lineage path reads a cached relation —
+    the kernel output (extracted text included) is never persisted."""
+    from br_doc_ocr_spark import checkpoint
+
+    for action in (
+            lambda: pipeline.run_pipeline(
+                spark, tiny_transcripts_path, output_path=str(tmp_path / "o"),
+                lineage_path=str(tmp_path / "lineage")),
+            lambda: checkpoint.run_resumable(
+                spark, tiny_transcripts_path, str(tmp_path / "buckets"),
+                str(tmp_path / "manifest.json"),
+                lineage_path=str(tmp_path / "bucket_lineage"))):
+        store, ids = _executions_during(spark, action)
+        names = {node.name() for e in ids for node in _plan_nodes(store, e)}
+        assert "MapInPandas" in names  # the status store saw the kernel
+        assert not {n for n in names if "InMemory" in n}, names
 
 
 def test_compact_parquet_empty_input_returns_empty_stats(spark, tmp_path):

@@ -101,9 +101,10 @@ def test_range_exchange_balances_hot_conversation(spark, tiny_transcripts,
     put the whole conversation in one task."""
     heavy = (tiny_transcripts["conv_id"] == "conv-heavy").sum()
     assert heavy > len(tiny_transcripts) / 2  # premise: one hot key
-    _, lineage = pipeline.run_extraction(
+    results, lineage = pipeline.run_extraction(
         pipeline.read_transcripts(spark, tiny_transcripts_path))
-    rows = lineage.toPandas()["row_count"]
+    results.write.format("noop").mode("overwrite").save()
+    rows = lineage().toPandas()["row_count"]
     assert rows.sum() == len(tiny_transcripts)
     assert len(rows) == 4  # one wave of task slots
     assert rows.max() / rows.mean() <= 1.1, sorted(rows)
