@@ -176,13 +176,13 @@ def run_resumable(
                 "rows": 0}
 
     snapshot_id = f"snap-{len(manifest.completed):05d}"
-    transcripts = read_transcripts(
+    todo = read_transcripts(
         spark, input_path, table_format=table_format,
         snapshot_id=read_snapshot_id,
-    ).withColumn(BUCKET_COL, bucket_of(sf.col("conv_id"), n_buckets))
-    todo = transcripts.filter(sf.col(BUCKET_COL).isin([int(b) for b in pending]))
+    ).filter(bucket_of(sf.col("conv_id"), n_buckets)
+             .isin([int(b) for b in pending]))
 
-    results, lineage = run_extraction(todo.drop(BUCKET_COL))
+    results, lineage = run_extraction(todo)
     # Idempotent per-bucket publish: dynamic partition overwrite replaces
     # exactly the buckets written here, leaving completed ones untouched.
     # Scoped to THIS write via the writer option — mutating the session conf

@@ -164,13 +164,13 @@ def cmd_multidoc(args) -> int:
     from br_doc_ocr_spark.pipeline import read_transcripts, run_multi_extraction
 
     spark = _session(args)
-    # already in (conv_id, turn_idx, doc_idx) order: written as it comes
-    run_multi_extraction(
+    documents, lineage = run_multi_extraction(
         read_transcripts(spark, args.input,
                          table_format=args.table_format,
-                         snapshot_id=args.snapshot_id),
-    ).write.mode("overwrite").parquet(args.output)
-    n = spark.read.parquet(args.output).count()
+                         snapshot_id=args.snapshot_id))
+    # already in (conv_id, turn_idx, doc_idx) order: written as it comes
+    documents.write.mode("overwrite").parquet(args.output)
+    n = sum(r["row_count"] for r in lineage().collect())
     print(json.dumps({"output": args.output, "documents": n}))
     return 0
 

@@ -41,19 +41,22 @@ from pyspark.sql import functions as sf
 
 from br_doc_ocr_spark.core.extract import (
     MULTIDOC_SCHEMA_DDL,
+    _ddl_columns,
     extract_batch,
     extract_documents_batch,
     output_schema_ddl,
     schema_field_names,
 )
 
-TRANSCRIPT_COLUMNS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+TRANSCRIPT_SCHEMA_DDL = ("conv_id string, turn_idx int, role string, "
+                         "text string, tool string, ts timestamp")
+TRANSCRIPT_COLUMNS = _ddl_columns(TRANSCRIPT_SCHEMA_DDL)
 
 # FIXTURES.md §5 in column order; a redacting run appends
 # ``redaction_residuals long``
 LINEAGE_DDL = ("partition_id int, row_count long, success_count long, "
                "partial_count long, failed_count long, error_count long, "
-               "wall_clock_ms long")
+               "field_count long, wall_clock_ms long")
 
 
 def read_transcripts(spark: SparkSession, path: str,
@@ -117,13 +120,14 @@ class _ByPartition(AccumulatorParam):
 
 def map_kernel(df: DataFrame,
                kernel: Callable[[pd.DataFrame], pd.DataFrame],
-               ddl: str, tally: Accumulator | None = None) -> DataFrame:
+               ddl: str) -> tuple[DataFrame, Accumulator]:
     """The one Arrow adapter: ``mapInPandas`` of a batch kernel (pandas in,
-    rows of ``ddl`` out) over ``df``, skipping empty batches.
-
-    With ``tally`` (a :class:`_ByPartition` accumulator), a task that
-    yielded rows adds its partition's rows, rows per status, kernel
-    milliseconds and residual identifiers (redacting kernels) at its end."""
+    rows of ``ddl`` out) over ``df``, skipping empty batches → (output,
+    tally), the kernel's own lineage: a :class:`_ByPartition` accumulator
+    to which a task that yielded rows adds its partition's rows, rows per
+    status, fields, kernel milliseconds and residual identifiers
+    (redacting kernels) at its end."""
+    tally = df.sparkSession.sparkContext.accumulator({}, _ByPartition())
 
     def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         counts: Counter = Counter()
@@ -134,15 +138,16 @@ def map_kernel(df: DataFrame,
             out = kernel(batch)
             counts["wall_clock_ms"] += (time.perf_counter() - t0) * 1000
             counts["row_count"] += len(out)
+            counts["field_count"] += out["n_fields"].sum()
             statuses = out["status"].value_counts().add_suffix("_count")
             counts.update(statuses.to_dict())
             if "redaction_residuals" in out:
                 counts["redaction_residuals"] += out["redaction_residuals"].sum()
             yield out
-        if tally is not None and counts:
+        if counts:
             tally.add({TaskContext.get().partitionId(): counts})
 
-    return df.mapInPandas(run, schema=ddl)
+    return df.mapInPandas(run, schema=ddl), tally
 
 
 def _lineage_frame(spark: SparkSession, tally: Accumulator,
@@ -151,7 +156,7 @@ def _lineage_frame(spark: SparkSession, tally: Accumulator,
     row per partition in partition order. Built from pandas through Arrow:
     a frame from a list of tuples is a Python RDD, whose tasks start Python
     workers."""
-    names = [col.split()[0] for col in ddl.split(", ")]
+    names = _ddl_columns(ddl)
     rows = [[pid] + [int(counts[c]) for c in names[1:]]
             for pid, counts in sorted(tally.value.items())]
     return spark.createDataFrame(pd.DataFrame(rows, columns=names), ddl)
@@ -242,14 +247,14 @@ def run_extraction(
     kernel = functools.partial(extract_batch,
                                allowed_fields=schema_field_names(schema),
                                redact_fields=redact_fields)
-    spark = transcripts.sparkSession
-    tally = spark.sparkContext.accumulator({}, _ByPartition())
-    results = map_kernel(_range_exchange(transcripts, target_partitions),
-                         kernel, output_schema_ddl(redact_fields is not None),
-                         tally).sortWithinPartitions("conv_id", "turn_idx")
+    results, tally = map_kernel(
+        _range_exchange(transcripts, target_partitions), kernel,
+        output_schema_ddl(redact_fields is not None))
     ddl = LINEAGE_DDL + (", redaction_residuals long"
                          if redact_fields is not None else "")
-    return results, functools.partial(_lineage_frame, spark, tally, ddl)
+    return (results.sortWithinPartitions("conv_id", "turn_idx"),
+            functools.partial(_lineage_frame, transcripts.sparkSession,
+                              tally, ddl))
 
 
 def run_pipeline(
@@ -322,16 +327,20 @@ def run_pipeline(
     return results, lineage
 
 
-def run_multi_extraction(transcripts: DataFrame,
-                         target_partitions: int | None = None) -> DataFrame:
-    """FR-015 flatMap form: one output row per detected document segment
-    (reference: ``extract_document(multi_document=True)``, extraction.py:
-    102-119). Same range exchange as the 1:1 kernel; the output is sorted
-    within the range partitions on ``(conv_id, turn_idx, doc_idx)``, so it
-    is in global document order."""
-    return (map_kernel(_range_exchange(transcripts, target_partitions),
-                       extract_documents_batch, MULTIDOC_SCHEMA_DDL)
-            .sortWithinPartitions("conv_id", "turn_idx", "doc_idx"))
+def run_multi_extraction(
+    transcripts: DataFrame, target_partitions: int | None = None,
+) -> tuple[DataFrame, Callable[[], DataFrame]]:
+    """FR-015 flatMap form → (documents, lineage): one row per detected
+    document segment (reference: ``extract_document(multi_document=True)``,
+    extraction.py:102-119), and :func:`run_extraction`'s lineage, counting
+    documents. Same range exchange as the 1:1 kernel; sorted within the
+    range partitions on ``(conv_id, turn_idx, doc_idx)``: global order."""
+    documents, tally = map_kernel(
+        _range_exchange(transcripts, target_partitions),
+        extract_documents_batch, MULTIDOC_SCHEMA_DDL)
+    return (documents.sortWithinPartitions("conv_id", "turn_idx", "doc_idx"),
+            functools.partial(_lineage_frame, transcripts.sparkSession,
+                              tally, LINEAGE_DDL))
 
 
 # ---------------------------------------------------------------------------

@@ -1715,7 +1715,7 @@ def q_extract_multidoc(spark, sf_dir):
         transcripts_from_documents,
     )
 
-    docs = run_multi_extraction(transcripts_from_documents(spark, sf_dir))
+    docs, _ = run_multi_extraction(transcripts_from_documents(spark, sf_dir))
     return (docs.groupBy("n_docs", "status")
             .agg(sf.count("*").alias("n"),
                  sf.sum("n_fields").alias("total_fields"))

@@ -90,11 +90,10 @@ def build_session(
         # batches; the 10 000-row default holds ~10-60 MiB per batch with
         # KB-scale text columns, and 32 concurrent scan tasks × build +
         # decompress spikes OOMed a 24 g heap at 20M rows (a kernel-output
-        # cache the extraction writes no longer build). 1 000 rows bounds
+        # cache no extraction write builds any more). 1 000 rows bounds
         # the per-task batch working set ~10× at negligible scan cost for
         # the persists that remain: pipeline.write_json_sinks,
-        # dataset.write_training_dataset, cli curate and the per-micro-batch
-        # one of streaming.stream_extract_with_lineage. ---
+        # dataset.write_training_dataset and cli curate. ---
         .config("spark.sql.inMemoryColumnarStorage.batchSize", "1000")
         # --- small-file control on sinks ---
         .config("spark.sql.files.maxRecordsPerFile", "2000000")

@@ -23,31 +23,34 @@ from __future__ import annotations
 
 import functools
 
+from pyspark.accumulators import Accumulator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as sf
 
 from br_doc_ocr_spark.core.extract import extract_batch, output_schema_ddl
-from br_doc_ocr_spark.pipeline import TRANSCRIPT_COLUMNS, map_kernel
-
-TRANSCRIPT_SCHEMA_DDL = (
-    "conv_id string, turn_idx int, role string, text string, tool string, "
-    "ts timestamp"
+from br_doc_ocr_spark.pipeline import (
+    LINEAGE_DDL,
+    TRANSCRIPT_SCHEMA_DDL,
+    _lineage_frame,
+    map_kernel,
 )
 
 
-def read_transcript_stream(spark: SparkSession, input_path: str,
-                           max_files_per_trigger: int | None = None) -> DataFrame:
-    reader = (spark.readStream.schema(TRANSCRIPT_SCHEMA_DDL)
+def _read_stream(spark: SparkSession, ddl: str, path: str,
+                 max_files: int | None = None) -> DataFrame:
+    """File-source stream of ``ddl`` rows from the parquet under ``path``."""
+    reader = (spark.readStream.schema(ddl)
               .option("recursiveFileLookup", "true"))
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.parquet(input_path).select(*TRANSCRIPT_COLUMNS)
+    if max_files:
+        reader = reader.option("maxFilesPerTrigger", str(max_files))
+    return reader.parquet(path)
 
 
 def extract_stream(transcripts: DataFrame,
                    target_partitions: int | None = None,
-                   redact_fields: frozenset[str] | None = None) -> DataFrame:
-    """The same shared kernel, applied per micro-batch.
+                   redact_fields: frozenset[str] | None = None,
+                   ) -> tuple[DataFrame, Accumulator]:
+    """The same shared kernel, applied per micro-batch → (results, tally).
 
     Micro-batch parallelism = input file splits per trigger: one
     single-row-group file per trigger runs ONE task (measured 12k turns/s =
@@ -61,7 +64,11 @@ def extract_stream(transcripts: DataFrame,
 
     ``redact_fields`` mirrors the batch pipeline's PII scrubbing: the same
     kernel appends ``redacted_text`` per micro-batch (span-exact masking,
-    see ``core.extract.redact_text``)."""
+    see ``core.extract.redact_text``).
+
+    ``tally`` is :func:`pipeline.map_kernel`'s lineage accumulator. Partition
+    ids repeat from micro-batch to micro-batch: read it per batch by
+    clearing it (``tally.value = {}``) as each batch starts."""
     if target_partitions:
         transcripts = transcripts.repartition(target_partitions)
     kernel = functools.partial(extract_batch, redact_fields=redact_fields)
@@ -149,8 +156,8 @@ def stream_extract_deduplicated(
     append parquet sink. The streaming twin of
     ``dedup.drop_exact_duplicates`` + ``pipeline.run_pipeline``."""
     deduped = deduplicated_stream(
-        read_transcript_stream(spark, input_path), watermark)
-    results = extract_stream(deduped, target_partitions=target_partitions)
+        _read_stream(spark, TRANSCRIPT_SCHEMA_DDL, input_path), watermark)
+    results, _ = extract_stream(deduped, target_partitions=target_partitions)
     return _start_parquet_sink(results, output_path, checkpoint_path,
                                available_now)
 
@@ -169,8 +176,9 @@ def stream_extract(
     Exactly-once per input file via the streaming checkpoint (file-source
     offsets + sink commit log) — restartable mid-stream.
     """
-    results = extract_stream(
-        read_transcript_stream(spark, input_path, max_files_per_trigger),
+    results, _ = extract_stream(
+        _read_stream(spark, TRANSCRIPT_SCHEMA_DDL, input_path,
+                     max_files_per_trigger),
         target_partitions=target_partitions)
     return _start_parquet_sink(results, output_path, checkpoint_path,
                                available_now)
@@ -196,7 +204,8 @@ def stream_status_counts(
     checkpoint_path: str,
     available_now: bool = False,
 ):
-    counts = status_counts(extract_stream(read_transcript_stream(spark, input_path)))
+    counts = status_counts(extract_stream(
+        _read_stream(spark, TRANSCRIPT_SCHEMA_DDL, input_path))[0])
     return _start_parquet_sink(counts, output_path, checkpoint_path,
                                available_now)
 
@@ -214,31 +223,25 @@ def stream_extract_with_lineage(
     """Incremental extraction with per-micro-batch lineage rows — the
     streaming rendering of the batch job's per-partition lineage table.
 
-    ``foreachBatch`` writes each micro-batch's results and its status tallies
-    stamped with the batch id (the snapshot-id analog) in one pass over a
-    batch-local persist. Restart safety: foreachBatch is AT-LEAST-ONCE (a
-    crash between the write and the streaming-checkpoint commit replays the
-    batch), so both sinks are made idempotent the same way the batch
-    checkpoint is — partitioned by ``batch_seq`` with dynamic partition
-    overwrite: a replay rewrites exactly its own partition, never
-    duplicating. Lineage is PII-free by schema (counts only)."""
-    results = extract_stream(
-        read_transcript_stream(spark, input_path, max_files_per_trigger),
+    ``foreachBatch`` writes each micro-batch's results, then the kernel's
+    tally of that write (FIXTURES.md §5), both stamped with the batch id
+    (the snapshot-id analog); the kernel runs once, inside the output write.
+    Restart safety: foreachBatch is AT-LEAST-ONCE (a crash between the write
+    and the streaming-checkpoint commit replays the batch), so both sinks
+    are made idempotent the same way the batch checkpoint is — partitioned
+    by ``batch_seq`` with dynamic partition overwrite: a replay rewrites
+    exactly its own partition, never duplicating. Lineage is PII-free by
+    schema (counts only)."""
+    results, tally = extract_stream(
+        _read_stream(spark, TRANSCRIPT_SCHEMA_DDL, input_path,
+                     max_files_per_trigger),
         target_partitions=target_partitions)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark import StorageLevel
-
-        batch_df.persist(StorageLevel.DISK_ONLY)
-        try:
-            _overwrite_batch(batch_df, batch_id, output_path)
-            _overwrite_batch(
-                batch_df.groupBy("status")
-                .agg(sf.count("*").alias("row_count"),
-                     sf.sum("n_fields").alias("field_count"))
-                .coalesce(1), batch_id, lineage_path)
-        finally:
-            batch_df.unpersist()
+        tally.value = {}  # partition ids repeat from batch to batch
+        _overwrite_batch(batch_df, batch_id, output_path)
+        _overwrite_batch(_lineage_frame(spark, tally, LINEAGE_DDL).coalesce(1),
+                         batch_id, lineage_path)
 
     writer = (results.writeStream.foreachBatch(write_batch)
               .option("checkpointLocation", checkpoint_path))
@@ -325,8 +328,8 @@ def stream_assembled_conversations(
     partitioned by ``batch_seq`` with per-write dynamic partition overwrite;
     a replayed batch rewrites exactly its own partition instead of appending
     duplicate rows next to a failed attempt's partial files (review r04)."""
-    assembled = assemble_conversations(
-        extract_stream(read_transcript_stream(spark, input_path)))
+    assembled = assemble_conversations(extract_stream(
+        _read_stream(spark, TRANSCRIPT_SCHEMA_DDL, input_path))[0])
 
     def write_snapshot(batch_df: DataFrame, batch_id: int) -> None:
         _overwrite_batch(batch_df, batch_id, output_path)
@@ -336,19 +339,6 @@ def stream_assembled_conversations(
             .option("checkpointLocation", checkpoint_path)
             .trigger(availableNow=True)
             .start())
-
-
-def read_media_stream(spark: SparkSession, input_path: str,
-                      max_files_per_trigger: int | None = None) -> DataFrame:
-    """File-source stream over a binary-payload media table (the
-    ``multimodal.MEDIA_SCHEMA_DDL`` shape: opaque payload + typed metadata)."""
-    from br_doc_ocr_spark.ops.multimodal import MEDIA_SCHEMA_DDL
-
-    reader = (spark.readStream.schema(MEDIA_SCHEMA_DDL)
-              .option("recursiveFileLookup", "true"))
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.parquet(input_path)
 
 
 def stream_media_features(
@@ -394,7 +384,8 @@ def stream_media_features(
     under trigger retries."""
     from br_doc_ocr_spark.ops import multimodal as mm
 
-    media = read_media_stream(spark, input_path, max_files_per_trigger)
+    media = _read_stream(spark, mm.MEDIA_SCHEMA_DDL, input_path,
+                         max_files_per_trigger)
     decoder = decoder or mm.MediaDecoder()
     if kind == "image":
         feats = mm.image_features(media, decoder=decoder, on_error=on_error)

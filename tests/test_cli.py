@@ -65,6 +65,28 @@ def test_resume_command_completes_in_two_invocations(spark,
     assert third["processed_buckets"] == []
 
 
+def test_multidoc_command_counts_from_lineage(spark, tiny_transcripts,
+                                              tiny_transcripts_path, tmp_path,
+                                              capsys):
+    """multidoc prints the document count of the kernel's own tally: the
+    oracle's segment count, with no plan of the command scanning the
+    output it has just written."""
+    from br_doc_ocr_spark.core.extract import oracle_extract_documents
+    from tests.test_pipeline_spark import _executions_during, _plan_nodes
+
+    out = str(tmp_path / "docs")
+    payload = {}
+    store, ids = _executions_during(spark, lambda: payload.update(run_cli(
+        capsys, "multidoc", "--input", tiny_transcripts_path,
+        "--output", out)))
+    assert payload["documents"] == len(
+        oracle_extract_documents(tiny_transcripts))
+    scans = [node.desc() for e in ids for node in _plan_nodes(store, e)
+             if node.name().startswith("Scan")]
+    assert any(tiny_transcripts_path in d for d in scans), scans
+    assert not [d for d in scans if out in d], scans
+
+
 def test_classify_command(spark, tiny_transcripts_path, capsys):
     payload = run_cli(capsys, "classify", "--input", tiny_transcripts_path)
     assert set(payload) <= {"html", "pdf", "prose", "unknown"}

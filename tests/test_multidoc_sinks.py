@@ -98,7 +98,7 @@ def test_extract_documents_batch_error_is_per_segment(monkeypatch):
 def test_spark_multidoc_matches_oracle(spark, tiny_transcripts,
                                        tiny_transcripts_path):
     got = (pipeline.run_multi_extraction(
-        pipeline.read_transcripts(spark, tiny_transcripts_path))
+        pipeline.read_transcripts(spark, tiny_transcripts_path))[0]
         .toPandas()
         .sort_values(["conv_id", "turn_idx", "doc_idx"]).reset_index(drop=True))
     expected = oracle_extract_documents(tiny_transcripts)

@@ -104,8 +104,9 @@ def test_lineage_counts_reconcile(spark_result, tiny_transcripts):
         ("partition_id", "int32"), ("row_count", "int64"),
         ("success_count", "int64"), ("partial_count", "int64"),
         ("failed_count", "int64"), ("error_count", "int64"),
-        ("wall_clock_ms", "int64"),
+        ("field_count", "int64"), ("wall_clock_ms", "int64"),
     ]
+    assert lineage["field_count"].sum() == got["n_fields"].sum()
 
 
 def test_lineage_counts_each_partition_once_over_two_actions(
@@ -505,10 +506,11 @@ def _rows_through_python(spark, action) -> int:
 
 def test_ordered_writes_run_the_kernel_once(spark, tiny_transcripts,
                                             tiny_transcripts_path, tmp_path):
-    """with_stable_order's range exchange samples its whole child in a job of
-    its own, so an unpersisted kernel output ran through Python twice on an
-    output-only write (1 096 rows for the 548-turn fixture); the JSON sinks
-    and the multidoc CLI write range-partition the kernel output too."""
+    """Every ordered write runs the kernel once: the range exchange samples
+    the input, never the kernel output, whose sampling job would run the
+    kernel a second time (1 096 rows for the 548-turn fixture). Checked for
+    run_pipeline with and without lineage, run_resumable, the JSON sinks
+    and the multidoc CLI."""
     from br_doc_ocr_spark import checkpoint, cli
     from br_doc_ocr_spark.core.extract import oracle_extract_documents
 

@@ -50,7 +50,7 @@ def test_extraction_has_single_arrow_crossing_and_shuffle(spark,
         # extra shuffle, just one more output column from the kernel
         "redacting": plan_of(pipeline.run_extraction(
             df, redact_fields=DEFAULT_REDACT_FIELDS)[0]),
-        "run_multi_extraction": plan_of(pipeline.run_multi_extraction(df)),
+        "run_multi_extraction": plan_of(pipeline.run_multi_extraction(df)[0]),
     }
     for name, plan in plans.items():
         assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 1, name

@@ -7,9 +7,10 @@ import os
 
 import pytest
 
-from br_doc_ocr_spark import streaming
+from br_doc_ocr_spark import pipeline, streaming
 from br_doc_ocr_spark.core.extract import oracle_extract
 from br_doc_ocr_spark.synth import make_transcripts_pandas
+from tests.test_pipeline_spark import _executions_during, _plan_nodes
 
 
 @pytest.fixture()
@@ -62,11 +63,11 @@ def test_stream_windowed_status_counts(spark, stream_dirs):
     half = len(df) // 2
     _write_batch(df.iloc[:half], f"{stream_dirs['in']}/a.parquet")
     _write_batch(df.iloc[half:], f"{stream_dirs['in']}/b.parquet")
-    counts = streaming.status_counts(
-        streaming.extract_stream(
-            streaming.read_transcript_stream(spark, stream_dirs["in"],
-                                             max_files_per_trigger=1)),
-        window="1 minute", watermark="2 minutes")
+    results, _ = streaming.extract_stream(
+        streaming._read_stream(spark, pipeline.TRANSCRIPT_SCHEMA_DDL,
+                               stream_dirs["in"], max_files=1))
+    counts = streaming.status_counts(results, window="1 minute",
+                                     watermark="2 minutes")
     q = (counts.writeStream.format("parquet")
          .option("path", stream_dirs["agg"])
          .option("checkpointLocation", stream_dirs["agg_ckpt"])
@@ -140,31 +141,50 @@ def test_stateful_assembly_accumulates_across_restarts(spark, stream_dirs):
 
 
 def test_stream_lineage_per_micro_batch(spark, stream_dirs, tmp_path):
-    """stream_extract_with_lineage appends per-batch status tallies that
-    reconcile with the written results; lineage carries only counts."""
-    full = make_transcripts_pandas(n_convs=8, mean_turns=5, seed=11,
+    """stream_extract_with_lineage writes, per micro-batch, the kernel's
+    tally of that batch's output write: its rows, statuses and fields
+    reconcile with the rows written under the same batch_seq. Three landing
+    files at two per trigger give micro-batches of different partition
+    counts, so a tally carried over from the previous batch shows. No plan
+    reads a cached relation; lineage carries only counts."""
+    from br_doc_ocr_spark.core.extract import _ddl_columns
+
+    full = make_transcripts_pandas(n_convs=9, mean_turns=5, seed=11,
                                    skew_conv=False)
-    half = len(full) // 2
-    _write_batch(full.iloc[:half], os.path.join(stream_dirs["in"], "a.parquet"))
-    _write_batch(full.iloc[half:], os.path.join(stream_dirs["in"], "b.parquet"))
+    third = len(full) // 3
+    for name, rows in (("a", full.iloc[:third]),
+                       ("b", full.iloc[third:2 * third]),
+                       ("c", full.iloc[2 * third:])):
+        _write_batch(rows, os.path.join(stream_dirs["in"], f"{name}.parquet"))
     lineage_path = str(tmp_path / "lineage")
 
-    q = streaming.stream_extract_with_lineage(
-        spark, stream_dirs["in"], stream_dirs["out"], lineage_path,
-        stream_dirs["ckpt"], available_now=True, max_files_per_trigger=1)
-    q.awaitTermination()
+    def run():
+        streaming.stream_extract_with_lineage(
+            spark, stream_dirs["in"], stream_dirs["out"], lineage_path,
+            stream_dirs["ckpt"], available_now=True,
+            max_files_per_trigger=2).awaitTermination()
+
+    store, ids = _executions_during(spark, run)
+    names = {node.name() for e in ids for node in _plan_nodes(store, e)}
+    assert "MapInPandas" in names  # the status store saw the kernel
+    assert not {n for n in names if "InMemory" in n}, names
 
     out = spark.read.parquet(stream_dirs["out"]).toPandas()
     lin = spark.read.parquet(lineage_path).toPandas()
     assert len(out) == len(full)
-    assert lin["batch_seq"].nunique() == 2  # one lineage group per micro-batch
-    assert lin["row_count"].sum() == len(full)
-    by_status = lin.groupby("status")["row_count"].sum()
-    for status, n in out["status"].value_counts().items():
-        assert by_status[status] == n
-    # PII-free by schema
-    assert set(lin.columns) == {"status", "row_count", "field_count",
-                                "batch_seq"}
+    # PII-free by schema: the batch lineage columns plus the batch id
+    assert list(lin.columns) == _ddl_columns(pipeline.LINEAGE_DDL) + [
+        "batch_seq"]
+    parts = lin.groupby("batch_seq")["partition_id"].nunique()
+    assert len(parts) == 2 and parts.nunique() == 2, parts
+    for seq, batch in out.groupby("batch_seq"):
+        rows = lin[lin["batch_seq"] == seq]
+        assert rows["partition_id"].is_unique
+        assert rows["row_count"].sum() == len(batch)
+        assert rows["field_count"].sum() == batch["n_fields"].sum()
+        for status in ("success", "partial", "failed", "error"):
+            assert rows[f"{status}_count"].sum() == (
+                batch["status"] == status).sum()
 
 
 def test_stream_dedup_suppresses_repeated_content_across_batches(spark,
@@ -206,10 +226,11 @@ def test_stream_redaction_matches_batch_kernel(spark, stream_dirs):
     _write_batch(full, f"{stream_dirs['in']}/all.parquet")
 
     out_dir = stream_dirs["out"] + "_red"
-    q = (streaming.extract_stream(
-            streaming.read_transcript_stream(spark, stream_dirs["in"]),
-            redact_fields=DEFAULT_REDACT_FIELDS)
-         .writeStream.format("parquet")
+    results, _ = streaming.extract_stream(
+        streaming._read_stream(spark, pipeline.TRANSCRIPT_SCHEMA_DDL,
+                               stream_dirs["in"]),
+        redact_fields=DEFAULT_REDACT_FIELDS)
+    q = (results.writeStream.format("parquet")
          .option("path", out_dir)
          .option("checkpointLocation", stream_dirs["ckpt"] + "_red")
          .trigger(availableNow=True).start())
