@@ -45,99 +45,6 @@ BENCH_QUERIES = [
 ]
 
 
-def _cpu_sample() -> list[int]:
-    with open("/proc/stat") as f:
-        return [int(x) for x in f.readline().split()[1:]]
-
-
-class _UtilMeter:
-    """Mean busy cores + steal%% over a measured interval (host-wide
-    /proc/stat; the sandbox is otherwise idle, so host-wide == this job).
-    Used to (a) evidence how much of the host each scaling leg actually
-    consumed and (b) calibrate the equalized-leg ballast (see BENCH.md
-    'Scaling on a shared host')."""
-
-    def __enter__(self):
-        self._a = _cpu_sample()
-        self._t0 = time.perf_counter()
-        return self
-
-    def __exit__(self, *exc):
-        b = _cpu_sample()
-        d = [y - x for x, y in zip(self._a, b)]
-        total = sum(d) or 1
-        ncpu = os.cpu_count() or 32
-        # fields: user nice system idle iowait irq softirq steal
-        busy = d[0] + d[1] + d[2] + d[5] + d[6]
-        self.busy_cores = round(ncpu * busy / total, 1)
-        self.steal_pct = round(100 * d[7] / total, 1)
-
-
-def _ballast_worker(stop) -> None:
-    import numpy as np
-
-    x = np.arange(50_000, dtype=np.int64)  # L2-resident: pure CPU demand
-    while not stop.is_set():
-        x = (x * 6364136223846793005 + 1442695040888963407) & 0x7FFFFFFFFFFFFFFF
-        x ^= x >> 29
-
-
-def _probe_worker(q, n: int, iters: int) -> None:
-    import numpy as np
-
-    a = np.arange(n, dtype=np.int64)
-    t0 = time.perf_counter()
-    x = a.copy()
-    for _ in range(iters):
-        x = (x * 6364136223846793005 + 1442695040888963407) & 0x7FFFFFFFFFFFFFFF
-        x ^= x >> 29
-    q.put(time.perf_counter() - t0)
-
-
-def _host_probe(procs_low: int, procs_high: int, rounds: int = 3) -> dict:
-    """Host CPU-grant ceiling: the parallel efficiency of an embarrassingly
-    parallel, zero-communication, cache-resident numpy workload at the same
-    two thread demands as the scaling legs. No job — any scheduling/steal/
-    frequency loss measured here is the HOST's, and it upper-bounds what any
-    job could record raw on this box (BENCH.md 'Scaling on a shared host')."""
-    import multiprocessing as mp
-
-    def run(k: int) -> tuple[float, float]:
-        q = mp.Queue()
-        with _UtilMeter() as m:
-            ps = [mp.Process(target=_probe_worker, args=(q, 50_000, 1200))
-                  for _ in range(k)]
-            for p in ps:
-                p.start()
-            # the slowest worker's COMPUTE-ONLY time (each worker times just
-            # its loop, post-import) — a start-to-last-result wall also
-            # counted fork + numpy import, which is the same magnitude as
-            # the probed compute and contends hardest exactly at the high
-            # proc count, understating the real host ceiling (review r05)
-            times = [q.get() for _ in ps]
-            for p in ps:
-                p.join()
-        return max(times), m.steal_pct
-
-    walls: dict[int, list[float]] = {procs_low: [], procs_high: []}
-    steal_hi = []
-    for _ in range(rounds):  # interleaved: both demands see the same weather
-        walls[procs_low].append(run(procs_low)[0])
-        w, s = run(procs_high)
-        walls[procs_high].append(w)
-        steal_hi.append(s)
-    w_lo, w_hi = min(walls[procs_low]), min(walls[procs_high])
-    ratio = procs_high / procs_low
-    return {
-        "procs_low": procs_low, "procs_high": procs_high,
-        "wall_low_sec": round(w_lo, 3), "wall_high_sec": round(w_hi, 3),
-        "steal_pct_high": max(steal_hi),
-        # throughput(k_high) / (ratio * throughput(k_low)) for perfectly
-        # parallel work — the ceiling for ANY raw job efficiency here
-        "parallel_eff": round((procs_high / w_hi) / (ratio * procs_low / w_lo), 3),
-    }
-
-
 def _kernel_single_core(n_turns: int = 20_000, reps: int = 3) -> dict:
     """Single-thread `extract_batch` rate on synthetic turns — the
     CONTROLLED kernel metric (BENCH.md 'Scaling on a shared host'): no
@@ -223,6 +130,80 @@ def _prepare_transcripts(spark, path: str, n_turns: int) -> None:
 
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         synth_to_parquet(spark, n_turns, path)
+
+
+def _scaling(spark) -> dict:
+    """N vs 4N parallelism on the SAME (16× larger) input; stops ``spark``
+    before the legs, which build their own sessions. Leg length is the
+    steal-robustness dial: this host shows multi-minute steal bursts, and a
+    5 s high leg can sit entirely inside one — r02 recorded 0.742 from
+    exactly that. At 16× turns the HIGH leg runs ~20 s and the low leg
+    ~80 s, so a burst inflates a leg fractionally instead of swallowing it.
+
+    One protocol: the raw interleaved legs, best of k per leg, and
+    ``efficiency_raw`` = throughput(4N) / (4 · throughput(N)). The host
+    gauge spanning the legs (``perfbench/host.py``) is reported beside it,
+    never used to adjust it (BENCH.md 'One scaling protocol')."""
+    from br_doc_ocr_spark.session import build_session
+    from perfbench.host import HostGauge
+
+    n_scale = N_TURNS * 16
+    spath = f"/tmp/spark_graft_bench/transcripts_v2_{n_scale}.parquet"
+    wpath = f"/tmp/spark_graft_bench/transcripts_v2_{N_TURNS * 4}.parquet"
+    _prepare_transcripts(spark, spath, n_scale)
+    _prepare_transcripts(spark, wpath, N_TURNS * 4)  # short warm input
+    spark.stop()
+    # N = max(CPUS // 8, 1) and 4N: each local[N] task pairs a JVM thread
+    # with a Python worker, so local[4N] runs ~8N runnable threads. When
+    # CPUS is a multiple of 8, 4N is CPUS/2 and the high leg fills the host
+    # without oversubscribing it (the sandbox rendering of a cluster that
+    # sizes executor cores for the Python workers). Below 8 CPUS the legs
+    # are local[1]/local[4]: on a 4-core host the high leg runs ~8 runnable
+    # threads on 4 cores, so there it also grades oversubscription.
+    low_cpus = max(CPUS // 8, 1)
+    hi_cpus = low_cpus * 4
+    # INTERLEAVED legs: measured efficiencies swung 0.75-1.15 when each
+    # leg ran as one block, because a host-steal window can blanket one
+    # leg entirely; alternating low/high sessions and taking the best
+    # per level exposes both legs to the same steal weather. Each
+    # session warms on the SHORT table (Python-worker fork + JIT), then
+    # times the big one; the high leg takes 2 timed reps per round —
+    # it is still the shorter leg and needs more samples to catch a
+    # clean window.
+    rounds = int(os.environ.get("SPARK_GRAFT_BENCH_SCALING_ROUNDS", "3"))
+    runs_low: list[float] = []
+    runs_hi: list[float] = []
+    gauge = HostGauge()
+    # 4 shuffle partitions per core on BOTH legs: at exactly one
+    # partition per core the whole stage is a single task wave, so the
+    # slowest task IS the wall-clock (no wave smoothing) — and the
+    # wider leg has more tasks in that single wave, so it eats the
+    # straggler penalty disproportionately (measured 0.786 with 1×,
+    # 0.86 with 4× on the same input). This is the standard cluster
+    # sizing rule (2-4× tasks per core), not a benchmark trick.
+    for _ in range(rounds):
+        s_low = build_session(app_name="bench-lowpar", cpus=low_cpus,
+                              shuffle_partitions=low_cpus * 4)
+        _run_extraction(s_low, wpath, warm=False, reps=1)  # warm, untimed
+        t, _, _ = _run_extraction(s_low, spath, warm=False, reps=1)
+        runs_low.append(round(t, 3))
+        s_low.stop()
+        s_hi = build_session(app_name="bench-hipar", cpus=hi_cpus,
+                             shuffle_partitions=hi_cpus * 4)
+        _run_extraction(s_hi, wpath, warm=False, reps=1)  # warm, untimed
+        _, _, reps = _run_extraction(s_hi, spath, warm=False, reps=2)
+        runs_hi.extend(reps)
+        s_hi.stop()
+    tp_low = n_scale / min(runs_low)
+    tp_hi = n_scale / min(runs_hi)
+    return {
+        "cpus_low": low_cpus, "cpus_high": hi_cpus, "turns": n_scale,
+        "turns_per_sec_low": round(tp_low, 1),
+        "turns_per_sec_high": round(tp_hi, 1),
+        "runs_low_sec": runs_low, "runs_high_sec": runs_hi,
+        "efficiency_raw": round(tp_hi / (tp_low * (hi_cpus / low_cpus)), 3),
+        "host_gauge": gauge.finish(),
+    }
 
 
 def main() -> None:
@@ -315,150 +296,9 @@ def main() -> None:
         }
 
     if os.environ.get("SPARK_GRAFT_BENCH_SCALING", "1") != "0":
-        # N vs 4N parallelism on the SAME (16× larger) input. Leg length is
-        # the steal-robustness dial (VERDICT r02 #2): this host shows
-        # multi-minute steal bursts, and a 5 s high leg can sit entirely
-        # inside one — r02 recorded 0.742 from exactly that. At 16× turns
-        # the HIGH leg runs ~20 s and the low leg ~80 s, so a burst inflates
-        # a leg fractionally instead of swallowing it.
-        n_scale = N_TURNS * 16
-        spath = f"/tmp/spark_graft_bench/transcripts_v2_{n_scale}.parquet"
-        wpath = f"/tmp/spark_graft_bench/transcripts_v2_{N_TURNS * 4}.parquet"
-        _prepare_transcripts(spark, spath, n_scale)
-        _prepare_transcripts(spark, wpath, N_TURNS * 4)  # short warm input
+        extra["scaling"] = _scaling(spark)
+    else:
         spark.stop()
-        # N vs 4N with 4N = CPUS/2: each local[N] task pairs a JVM thread
-        # with a Python worker, so local[CPUS] runs 2×CPUS runnable threads —
-        # measuring there grades host oversubscription, not the job. A real
-        # cluster sizes executor cores for the Python workers; CPUS/2 is the
-        # sandbox rendering of that sizing.
-        low_cpus = max(CPUS // 8, 1)
-        hi_cpus = low_cpus * 4
-        # INTERLEAVED legs: measured efficiencies swung 0.75-1.15 when each
-        # leg ran as one block, because a host-steal window can blanket one
-        # leg entirely; alternating low/high sessions and taking the best
-        # per level exposes both legs to the same steal weather. Each
-        # session warms on the SHORT table (Python-worker fork + JIT), then
-        # times the big one; the high leg takes 2 timed reps per round —
-        # it is still the shorter leg and needs more samples to catch a
-        # clean window.
-        rounds = int(os.environ.get("SPARK_GRAFT_BENCH_SCALING_ROUNDS", "3"))
-        runs_low: list[float] = []
-        runs_hi: list[float] = []
-        util_low: list[float] = []
-        util_hi: list[float] = []
-        steal_hi: list[float] = []
-        # 4 shuffle partitions per core on BOTH legs: at exactly one
-        # partition per core the whole stage is a single task wave, so the
-        # slowest task IS the wall-clock (no wave smoothing) — and the
-        # wider leg has more tasks in that single wave, so it eats the
-        # straggler penalty disproportionately (measured 0.786 with 1×,
-        # 0.86 with 4× on the same input). This is the standard cluster
-        # sizing rule (2-4× tasks per core), not a benchmark trick.
-        for i in range(rounds):
-            s_low = build_session(app_name="bench-lowpar", cpus=low_cpus,
-                                  shuffle_partitions=low_cpus * 4)
-            _run_extraction(s_low, wpath, warm=False, reps=1)  # warm, untimed
-            with _UtilMeter() as m:
-                t, _, _ = _run_extraction(s_low, spath, warm=False, reps=1)
-            runs_low.append(round(t, 3))
-            util_low.append(m.busy_cores)
-            s_low.stop()
-            s_hi = build_session(app_name="bench-hipar", cpus=hi_cpus,
-                                 shuffle_partitions=hi_cpus * 4)
-            _run_extraction(s_hi, wpath, warm=False, reps=1)  # warm, untimed
-            with _UtilMeter() as m:
-                _, _, reps = _run_extraction(s_hi, spath, warm=False, reps=2)
-            runs_hi.extend(reps)
-            util_hi.append(m.busy_cores)
-            steal_hi.append(m.steal_pct)
-            s_hi.stop()
-        elapsed_low, elapsed_hi = min(runs_low), min(runs_hi)
-        tp_low = n_scale / elapsed_low
-        tp_hi = n_scale / elapsed_hi
-        eff_raw = round(tp_hi / (tp_low * (hi_cpus / low_cpus)), 3)
-
-        # Host CPU-grant ceiling at the same nominal thread demands (each
-        # local[N] task pairs a JVM thread with a Python worker → 2N).
-        probe = _host_probe(low_cpus * 2, hi_cpus * 2)
-
-        # EQUALIZED legs — the cluster-faithful rendering of N→4N executors:
-        # a real cluster grows from N to 4N by adding NODES, so per-node
-        # load, CPU frequency, and hypervisor grant stay constant. On this
-        # one shared box the wide leg alone pushes the host into its reduced
-        # turbo/grant regime (probe above), so the raw pair grades the host,
-        # not the job. The equalized low leg runs ballast threads sized from
-        # the MEASURED per-leg utilization gap, holding total host load
-        # constant across both cluster sizes; the job's own scaling is then
-        # the only variable. Full data + methodology: BENCH.md.
-        import multiprocessing as mp
-
-        ballast_n = max(0, round(max(util_hi) - max(util_low)))
-        runs_low_eq: list[float] = []
-        eq_rounds = int(os.environ.get("SPARK_GRAFT_BENCH_EQ_ROUNDS", "2"))
-        runs_hi_eq: list[float] = []
-        for i in range(eq_rounds):
-            stop = mp.Event()
-            ps = [mp.Process(target=_ballast_worker, args=(stop,))
-                  for _ in range(ballast_n)]
-            for p in ps:
-                p.start()
-            try:
-                s_low = build_session(app_name="bench-loweq", cpus=low_cpus,
-                                      shuffle_partitions=low_cpus * 4)
-                _run_extraction(s_low, wpath, warm=False, reps=1)
-                t, _, _ = _run_extraction(s_low, spath, warm=False, reps=1)
-                runs_low_eq.append(round(t, 3))
-                s_low.stop()
-            finally:
-                stop.set()
-                for p in ps:
-                    p.join()
-            s_hi = build_session(app_name="bench-hieq", cpus=hi_cpus,
-                                 shuffle_partitions=hi_cpus * 4)
-            _run_extraction(s_hi, wpath, warm=False, reps=1)
-            _, _, reps = _run_extraction(s_hi, spath, warm=False, reps=2)
-            runs_hi_eq.extend(reps)
-            if i < eq_rounds - 1:
-                s_hi.stop()
-            else:
-                spark = s_hi  # final spark.stop() below closes it
-        t_low_eq = min(runs_low_eq) if runs_low_eq else elapsed_low
-        # headline legs come from the SAME measurement window (the equalized
-        # one): mixing in the earlier raw window's best high-leg time let a
-        # lucky turbo stretch inflate the headline (ADVICE r03). The
-        # cross-window variant ships as a separate diagnostic field.
-        t_hi_eq = min(runs_hi_eq) if runs_hi_eq else min(runs_hi)
-        t_hi_eq_xw = min(runs_hi_eq + runs_hi)
-        eff_eq = round((n_scale / t_hi_eq)
-                       / ((n_scale / t_low_eq) * (hi_cpus / low_cpus)), 3)
-        eff_eq_xw = round((n_scale / t_hi_eq_xw)
-                          / ((n_scale / t_low_eq) * (hi_cpus / low_cpus)), 3)
-        extra["scaling"] = {
-            "cpus_low": low_cpus, "cpus_high": hi_cpus, "turns": n_scale,
-            "turns_per_sec_low": round(tp_low, 1),
-            "turns_per_sec_high": round(tp_hi, 1),
-            "runs_low_sec": runs_low, "runs_high_sec": runs_hi,
-            "busy_cores_low": max(util_low), "busy_cores_high": max(util_hi),
-            "steal_pct_high": max(steal_hi),
-            "efficiency_raw": eff_raw,
-            "host_grant_probe": probe,
-            "ballast_threads": ballast_n,
-            "runs_low_equalized_sec": runs_low_eq,
-            "runs_high_equalized_sec": runs_hi_eq,
-            "turns_per_sec_low_equalized": round(n_scale / t_low_eq, 1),
-            # headline: job scaling under constant host conditions (capped at
-            # 1.0 — a >1.0 reading means the calibrated ballast still
-            # over-penalized the low leg). Raw pair + host ceiling above.
-            "efficiency": min(1.0, eff_eq),
-            "efficiency_equalized_uncapped": eff_eq,
-            "efficiency_equalized_crosswindow": eff_eq_xw,  # diagnostic only
-            "note": ("equalized legs hold total host load constant across "
-                     "cluster sizes (a real 4N-executor cluster adds nodes; "
-                     "per-node conditions do not change) — see BENCH.md "
-                     "'Scaling on a shared host' for methodology + raw data"),
-        }
-    spark.stop()
 
     total = round(sum(timings.values()), 3)
     full = {
@@ -469,8 +309,8 @@ def main() -> None:
         "sf": _SF,
         **extra,
     }
-    # Full detail (per-run arrays, host probe, dedup pipeline, equalized-leg
-    # raw data) goes to bench_runs/; the FINAL stdout line stays COMPACT.
+    # Full detail (per-run arrays, dedup pipeline, scaling legs) goes to
+    # bench_runs/; the FINAL stdout line stays COMPACT.
     # The driver captures only the last ~2 KB of stdout and json-parses the
     # final line — round 4's line outgrew that window and shipped
     # `parsed: null` (VERDICT r04 #1), so the contract here is: last line
@@ -502,8 +342,8 @@ def main() -> None:
             "cpus_low": sc["cpus_low"], "cpus_high": sc["cpus_high"],
             "turns_per_sec_low": sc["turns_per_sec_low"],
             "turns_per_sec_high": sc["turns_per_sec_high"],
-            "efficiency": sc["efficiency"],
             "efficiency_raw": sc["efficiency_raw"],
+            "host_gauge": sc["host_gauge"],
         }
     line = json.dumps(compact)
     if len(line) > 1536:  # belt-and-braces: never outgrow the tail window

@@ -31,7 +31,11 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as sf
 
-from br_doc_ocr_spark.pipeline import read_transcripts, run_extraction
+from br_doc_ocr_spark.pipeline import (
+    overwrite_partitions,
+    read_transcripts,
+    run_extraction,
+)
 
 BUCKET_COL = "bucket"
 
@@ -185,18 +189,13 @@ def run_resumable(
     results, lineage = run_extraction(todo)
     # Idempotent per-bucket publish: dynamic partition overwrite replaces
     # exactly the buckets written here, leaving completed ones untouched.
-    # Scoped to THIS write via the writer option — mutating the session conf
-    # races concurrent writers sharing the session (ADVICE r01). Sorted on
-    # (bucket, conv_id, turn_idx): the writer needs its input ordered by the
-    # partition column, so this one sort both meets that and orders every
-    # bucket file by turn.
-    (results
-     .withColumn(BUCKET_COL, bucket_of(sf.col("conv_id"), n_buckets))
-     .sortWithinPartitions(BUCKET_COL, "conv_id", "turn_idx")
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy(BUCKET_COL)
-     .parquet(output_path))
+    # Sorted on (bucket, conv_id, turn_idx): the writer needs its input
+    # ordered by the partition column, so this one sort both meets that and
+    # orders every bucket file by turn.
+    overwrite_partitions(
+        results.withColumn(BUCKET_COL, bucket_of(sf.col("conv_id"), n_buckets))
+        .sortWithinPartitions(BUCKET_COL, "conv_id", "turn_idx"),
+        BUCKET_COL, output_path)
 
     # the kernel's tally of that write: pending buckets holding zero rows
     # give an empty frame of the lineage schema
@@ -208,12 +207,11 @@ def run_resumable(
         # unchanged) and replaces its own partition instead of appending a
         # second identical batch (review r05 — plain append duplicated
         # lineage rows on exactly that crash window).
-        (counts.select(sf.lit(run_id).alias("run_id"), *counts.columns,
-                       sf.lit(snapshot_id).alias("snapshot_id"))
-         .coalesce(1).write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("snapshot_id")
-         .parquet(lineage_path))
+        overwrite_partitions(
+            counts.select(sf.lit(run_id).alias("run_id"), *counts.columns,
+                          sf.lit(snapshot_id).alias("snapshot_id"))
+            .coalesce(1),
+            "snapshot_id", lineage_path)
     # reporting rows=0 for a run that processed millions of rows misleads
     # resume loops and operators (review r05)
     n_rows = sum(r["row_count"] for r in counts.collect())

@@ -36,6 +36,7 @@ from br_doc_ocr_spark.core import textops
 
 VALID_CONFIDENCE = 0.95   # deterministic stand-in for the VLM's per-field score
 INVALID_CONFIDENCE = 0.45  # < FR-013 threshold 0.5 → flagged low-confidence
+CLASSIFY_CONFIDENCE = 0.97  # deterministic stand-in for the classifier score
 
 
 def _valid_date(normalized: str) -> bool:
@@ -594,9 +595,9 @@ def classify_one(text: str | None) -> dict[str, Any]:
     rules. Response mirrors ``ClassificationResult.to_dict``
     (classification.py:26-41): document_type, confidence, alternatives,
     processing_time_ms. Confidence/alternatives follow the batch
-    ``with_classification`` constants (deterministic stand-ins for the
-    model score): 0.97 for a typed document, residual spread over the
-    other known types; 'unknown' gets 0.0 and no alternatives."""
+    ``with_classification`` rule: ``CLASSIFY_CONFIDENCE`` for a typed
+    document, residual spread over the other known types; 'unknown' gets
+    0.0 and no alternatives."""
     import time as _time
 
     t0 = _time.perf_counter()
@@ -610,7 +611,7 @@ def classify_one(text: str | None) -> dict[str, Any]:
         kind, doc_type = "unknown", "unknown"
     known = [dt for dt, _ in _DOC_TYPE_HINTS]
     if doc_type in known:
-        confidence = 0.97
+        confidence = CLASSIFY_CONFIDENCE
         residual = round((1.0 - confidence) / (len(known) - 1), 6)
         alternatives = [{"document_type": dt, "confidence": residual}
                         for dt in known if dt != doc_type]

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as sf
 
 from br_doc_ocr_spark.core.extract import (
+    CLASSIFY_CONFIDENCE,
     MULTIDOC_SCHEMA_DDL,
     _ddl_columns,
     extract_batch,
@@ -257,6 +258,19 @@ def run_extraction(
                               tally, ddl))
 
 
+def overwrite_partitions(df: DataFrame, col: str, path: str) -> None:
+    """The idempotent parquet write of every re-runnable writer: partitioned
+    by ``col`` with dynamic partition overwrite, so a re-run or replay
+    replaces exactly the ``col`` partitions ``df`` holds and leaves the
+    others untouched. The overwrite mode is set per WRITE, not in the
+    session conf: a concurrent query sharing the session must never observe
+    a mutated global overwrite mode."""
+    (df.write.mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic")
+     .partitionBy(col)
+     .parquet(path))
+
+
 def run_pipeline(
     spark: SparkSession,
     input_path: str,
@@ -320,10 +334,7 @@ def run_pipeline(
         results.write.mode("overwrite").parquet(output_path)
     if lineage_path:
         # Lineage is tiny — one row per task — one file per run
-        (lineage().coalesce(1).write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("run_id")
-         .parquet(lineage_path))
+        overwrite_partitions(lineage().coalesce(1), "run_id", lineage_path)
     return results, lineage
 
 
@@ -390,7 +401,6 @@ def write_json_sinks(results: DataFrame, output_dir: str) -> None:
 # ---------------------------------------------------------------------------
 
 PAYLOAD_KINDS = ("html", "pdf", "prose")
-CLASSIFY_CONFIDENCE = 0.97  # deterministic stand-in for the model score
 
 
 def with_classification(results: DataFrame) -> DataFrame:

@@ -33,6 +33,7 @@ from br_doc_ocr_spark.pipeline import (
     TRANSCRIPT_SCHEMA_DDL,
     _lineage_frame,
     map_kernel,
+    overwrite_partitions,
 )
 
 
@@ -47,20 +48,13 @@ def _read_stream(spark: SparkSession, ddl: str, path: str,
 
 
 def extract_stream(transcripts: DataFrame,
-                   target_partitions: int | None = None,
                    redact_fields: frozenset[str] | None = None,
                    ) -> tuple[DataFrame, Accumulator]:
     """The same shared kernel, applied per micro-batch → (results, tally).
 
     Micro-batch parallelism = input file splits per trigger: one
     single-row-group file per trigger runs ONE task (measured 12k turns/s =
-    the single-core kernel rate). ``target_partitions`` inserts a
-    per-micro-batch repartition to spread a small number of wide files
-    across the cluster — pay one shuffle of the micro-batch for N-way kernel
-    parallelism (measured 4.1× at 16 on 250k-turn single-file batches:
-    12.2k → 49.6k turns/s). Leave
-    None when triggers already contain many splits (the usual landing-zone
-    shape at scale).
+    the single-core kernel rate).
 
     ``redact_fields`` mirrors the batch pipeline's PII scrubbing: the same
     kernel appends ``redacted_text`` per micro-batch (span-exact masking,
@@ -69,8 +63,6 @@ def extract_stream(transcripts: DataFrame,
     ``tally`` is :func:`pipeline.map_kernel`'s lineage accumulator. Partition
     ids repeat from micro-batch to micro-batch: read it per batch by
     clearing it (``tally.value = {}``) as each batch starts."""
-    if target_partitions:
-        transcripts = transcripts.repartition(target_partitions)
     kernel = functools.partial(extract_batch, redact_fields=redact_fields)
     return map_kernel(transcripts, kernel,
                       output_schema_ddl(redact_fields is not None))
@@ -91,15 +83,10 @@ def _start_parquet_sink(stream: DataFrame, output_path: str,
 
 def _overwrite_batch(batch_df: DataFrame, batch_id: int, path: str) -> None:
     """The idempotent foreachBatch write: rows stamped ``batch_seq`` and
-    written with dynamic partition overwrite, so a replayed batch rewrites
-    exactly its own partition. The overwrite mode is set per WRITE, not in
-    the session conf: a concurrent query sharing the session must never
-    observe a mutated global overwrite mode (ADVICE r01)."""
-    (batch_df.withColumn("batch_seq", sf.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_seq")
-     .parquet(path))
+    written by :func:`pipeline.overwrite_partitions`, so a replayed batch
+    rewrites exactly its own partition."""
+    overwrite_partitions(batch_df.withColumn("batch_seq", sf.lit(batch_id)),
+                         "batch_seq", path)
 
 
 def deduplicated_stream(transcripts: DataFrame,
@@ -150,14 +137,13 @@ def stream_extract_deduplicated(
     checkpoint_path: str,
     watermark: str = "1 hour",
     available_now: bool = True,
-    target_partitions: int | None = None,
 ):
     """readStream → watermarked content dedup → extraction kernel →
     append parquet sink. The streaming twin of
     ``dedup.drop_exact_duplicates`` + ``pipeline.run_pipeline``."""
     deduped = deduplicated_stream(
         _read_stream(spark, TRANSCRIPT_SCHEMA_DDL, input_path), watermark)
-    results, _ = extract_stream(deduped, target_partitions=target_partitions)
+    results, _ = extract_stream(deduped)
     return _start_parquet_sink(results, output_path, checkpoint_path,
                                available_now)
 
@@ -169,7 +155,6 @@ def stream_extract(
     checkpoint_path: str,
     available_now: bool = False,
     max_files_per_trigger: int | None = None,
-    target_partitions: int | None = None,
 ):
     """Incremental extraction: file-source stream → kernel → parquet append.
 
@@ -178,8 +163,7 @@ def stream_extract(
     """
     results, _ = extract_stream(
         _read_stream(spark, TRANSCRIPT_SCHEMA_DDL, input_path,
-                     max_files_per_trigger),
-        target_partitions=target_partitions)
+                     max_files_per_trigger))
     return _start_parquet_sink(results, output_path, checkpoint_path,
                                available_now)
 
@@ -218,7 +202,6 @@ def stream_extract_with_lineage(
     checkpoint_path: str,
     available_now: bool = False,
     max_files_per_trigger: int | None = None,
-    target_partitions: int | None = None,
 ):
     """Incremental extraction with per-micro-batch lineage rows — the
     streaming rendering of the batch job's per-partition lineage table.
@@ -234,8 +217,7 @@ def stream_extract_with_lineage(
     schema (counts only)."""
     results, tally = extract_stream(
         _read_stream(spark, TRANSCRIPT_SCHEMA_DDL, input_path,
-                     max_files_per_trigger),
-        target_partitions=target_partitions)
+                     max_files_per_trigger))
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         tally.value = {}  # partition ids repeat from batch to batch
