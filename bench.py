@@ -12,6 +12,7 @@ SPARK_GRAFT_BENCH_SCALING=0 to skip it (quick iteration).
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import time
@@ -32,6 +33,19 @@ import re as _re
 _SF_MATCH = _re.search(r"(?:^|/)sf([0-9]+(?:\.[0-9]+)?)/*$", SF_DIR)
 _SF = float(_SF_MATCH.group(1)) if _SF_MATCH else 0.1
 N_TURNS = int(os.environ.get("SPARK_GRAFT_BENCH_TURNS", str(int(2_000_000 * _SF))))
+
+
+def _table_dir() -> str:
+    """Where the synthetic tables live: keyed by a hash of ``synth.py``'s
+    source, so a table is reused only by code that generates the same one
+    (a ``_SUCCESS`` marker alone said nothing about which generator wrote
+    it, and two checkouts shared one table)."""
+    from br_doc_ocr_spark import synth
+
+    with open(synth.__file__, "rb") as f:
+        digest = hashlib.sha256(f.read()).hexdigest()[:16]
+    return f"/tmp/spark_graft_bench/synth-{digest}"
+
 
 BENCH_QUERIES = [
     "pricing_summary", "join_broadcast_agg", "join_multiway",
@@ -132,7 +146,7 @@ def _prepare_transcripts(spark, path: str, n_turns: int) -> None:
         synth_to_parquet(spark, n_turns, path)
 
 
-def _scaling(spark) -> dict:
+def _scaling(spark, tables: str) -> dict:
     """N vs 4N parallelism on the SAME (16× larger) input; stops ``spark``
     before the legs, which build their own sessions. Leg length is the
     steal-robustness dial: this host shows multi-minute steal bursts, and a
@@ -148,8 +162,8 @@ def _scaling(spark) -> dict:
     from perfbench.host import HostGauge
 
     n_scale = N_TURNS * 16
-    spath = f"/tmp/spark_graft_bench/transcripts_v2_{n_scale}.parquet"
-    wpath = f"/tmp/spark_graft_bench/transcripts_v2_{N_TURNS * 4}.parquet"
+    spath = f"{tables}/transcripts_v2_{n_scale}.parquet"
+    wpath = f"{tables}/transcripts_v2_{N_TURNS * 4}.parquet"
     _prepare_transcripts(spark, spath, n_scale)
     _prepare_transcripts(spark, wpath, N_TURNS * 4)  # short warm input
     spark.stop()
@@ -210,7 +224,8 @@ def main() -> None:
     from br_doc_ocr_spark.queries import REGISTRY
     from br_doc_ocr_spark.session import build_session
 
-    tpath = f"/tmp/spark_graft_bench/transcripts_v2_{N_TURNS}.parquet"
+    tables = _table_dir()
+    tpath = f"{tables}/transcripts_v2_{N_TURNS}.parquet"
     timings: dict[str, float] = {}
     extra: dict[str, object] = {}
 
@@ -272,7 +287,7 @@ def main() -> None:
         # per bench invocation
         n_docs = int(os.environ.get("SPARK_GRAFT_BENCH_DEDUP_DOCS",
                                     str(int(20_000_000 * _SF))))
-        dpath = f"/tmp/spark_graft_bench/skewed_docs_{n_docs}.parquet"
+        dpath = f"{tables}/skewed_docs_{n_docs}.parquet"
         if not os.path.exists(os.path.join(dpath, "_SUCCESS")):
             make_skewed_documents(spark, n_docs).write.mode(
                 "overwrite").parquet(dpath)
@@ -296,7 +311,7 @@ def main() -> None:
         }
 
     if os.environ.get("SPARK_GRAFT_BENCH_SCALING", "1") != "0":
-        extra["scaling"] = _scaling(spark)
+        extra["scaling"] = _scaling(spark, tables)
     else:
         spark.stop()
 

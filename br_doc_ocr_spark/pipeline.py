@@ -13,7 +13,9 @@ Spark's execution model per the north rule:
    no bigger than ``spark.sql.files.openCostInBytes`` per task slot: that
    gets one wave of Python tasks, ``min(spark.sql.shuffle.partitions,
    defaultParallelism)`` (each Python task pays a fixed start-up charge,
-   SCALE.md),
+   SCALE.md; its largest part, the re-parse of the worker's 16 zip
+   importers, is paid once per worker process since ``map_kernel`` keeps
+   their directories),
 3. exactly **one Arrow crossing**: ``map_kernel(extract_batch)`` over the
    shared kernel (zero per-row Python at the Spark boundary),
 4. per-partition **lineage** from the kernel's own tally (an accumulator the
@@ -29,7 +31,9 @@ Spark's execution model per the north rule:
 from __future__ import annotations
 
 import functools
+import sys
 import time
+import zipimport
 from collections import Counter
 from typing import Callable, Iterable, Iterator
 
@@ -119,6 +123,33 @@ class _ByPartition(AccumulatorParam):
         return value1 | value2
 
 
+class _KeptZipImporter(zipimport.zipimporter):
+    """A zip importer whose ``invalidate_caches()`` keeps the directory it
+    already holds instead of re-parsing the archive's central directory."""
+
+    def invalidate_caches(self) -> None:
+        pass
+
+
+def _keep_zip_directories() -> None:
+    """Swap every plain ``zipimporter`` in ``sys.path_importer_cache`` for a
+    :class:`_KeptZipImporter` on the same path, built from
+    ``zipimport._zip_directory_cache`` (it reads no archive). Idempotent.
+
+    The worker calls ``importlib.invalidate_caches()`` at every task start,
+    and on CPython 3.11 each plain zipimporter then re-parses its archive:
+    ~205 ms per task over the worker's 16 importers (SCALE.md). The archives
+    do not change while a worker lives (Spark's own zips and jar, and
+    ``addPyFile`` archives, which Spark does not re-register with other
+    content); one added later is read normally and swapped at the next
+    task."""
+    directories = zipimport._zip_directory_cache
+    for path, finder in list(sys.path_importer_cache.items()):
+        if (type(finder) is zipimport.zipimporter
+                and finder.archive in directories):
+            sys.path_importer_cache[path] = _KeptZipImporter(path)
+
+
 def map_kernel(df: DataFrame,
                kernel: Callable[[pd.DataFrame], pd.DataFrame],
                ddl: str) -> tuple[DataFrame, Accumulator]:
@@ -127,10 +158,13 @@ def map_kernel(df: DataFrame,
     tally), the kernel's own lineage: a :class:`_ByPartition` accumulator
     to which a task that yielded rows adds its partition's rows, rows per
     status, fields, kernel milliseconds and residual identifiers
-    (redacting kernels) at its end."""
+    (redacting kernels) at its end. Each task first keeps its worker's zip
+    directories (:func:`_keep_zip_directories`), so only the first task of
+    a worker process re-parses them."""
     tally = df.sparkSession.sparkContext.accumulator({}, _ByPartition())
 
     def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _keep_zip_directories()
         counts: Counter = Counter()
         for batch in batches:
             if not len(batch):
@@ -177,10 +211,15 @@ def _range_exchange(transcripts: DataFrame,
 
     Each Python task pays a fixed start-up charge that does not depend on
     its rows (SCALE.md); on such a small input no task holds enough rows to
-    amortize it, so extra waves only add charges. Bigger inputs keep the
-    conf, and with it the wave smoothing of several tasks per slot. The
-    input size is Catalyst's driver-side estimate (it plans the query, runs
-    no job); a filtered input is sized by its unfiltered scan."""
+    amortize it, so extra waves only add charges. The charge's largest
+    part, the re-parse of the worker's 16 zip importers (``pyspark.zip``,
+    the ``spark-core`` jar, py4j) at every task start, is now paid once per
+    worker process (:func:`_keep_zip_directories`); SCALE.md records what
+    is left per task, against which this rule has not been re-decided.
+    Bigger inputs keep the conf, and with it the wave smoothing of several
+    tasks per slot. The input size is Catalyst's driver-side estimate (it
+    plans the query, runs no job); a filtered input is sized by its
+    unfiltered scan."""
     spark = transcripts.sparkSession
     n = target_partitions
     if not n:
@@ -214,8 +253,10 @@ def run_extraction(
     document benchmark by a quarter.
     ``target_partitions`` defaults to ``spark.sql.shuffle.partitions``, or to
     one wave of task slots for an input of at most
-    ``spark.sql.files.openCostInBytes`` per slot (Catalyst's size estimate)
-    — see :func:`_range_exchange`.
+    ``spark.sql.files.openCostInBytes`` per slot (Catalyst's size estimate),
+    against a fixed charge per Python task whose largest part, the
+    re-parse of the worker's zip importers, is now paid once per worker
+    process — see :func:`_range_exchange`.
     ``schema`` enables schema-guided extraction (US4): a JSON-Schema dict
     whose field names bound the extracted field set (shipped to executors in
     the task closure — the broadcast-variable pattern for a driver-side

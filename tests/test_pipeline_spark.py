@@ -629,3 +629,84 @@ def test_compact_parquet_accepts_hadoop_uri_spellings(spark, tmp_path):
     for spelling in (src, f"file:{src}", f"file://{src}"):
         with pytest.raises(ValueError, match="equals or nests with input_path"):
             pipeline.compact_parquet(spark, src, spelling)
+
+
+def test_kept_zip_directories_survive_invalidate_caches(tmp_path,
+                                                       monkeypatch):
+    """After ``_keep_zip_directories`` the per-task
+    ``importlib.invalidate_caches()`` re-parses no archive, and a module of
+    the archive not yet imported still imports from the kept directory."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    archive = tmp_path / "kept.zip"
+    with zipfile.ZipFile(archive, "w") as zf:
+        for name in ("pkg/__init__.py", "pkg/sub/__init__.py"):
+            zf.writestr(name, "")
+        zf.writestr("pkg/sub/a.py", "A = 1\n")
+        zf.writestr("pkg/sub/b.py", "B = 2\n")
+    monkeypatch.setattr(sys, "path", [str(archive)] + sys.path)
+    monkeypatch.setattr(sys, "path_importer_cache",
+                        dict(sys.path_importer_cache))
+    for name in ("pkg", "pkg.sub", "pkg.sub.a", "pkg.sub.b"):
+        monkeypatch.delitem(sys.modules, name, raising=False)
+    try:
+        assert importlib.import_module("pkg.sub.a").A == 1
+        calls = [0]
+        read = zipimport._read_directory
+
+        def counted(path):
+            calls[0] += 1
+            return read(path)
+
+        monkeypatch.setattr(zipimport, "_read_directory", counted)
+        importlib.invalidate_caches()
+        assert calls[0] == 3  # the archive, pkg/ and pkg/sub/
+        pipeline._keep_zip_directories()
+        kept = dict(sys.path_importer_cache)
+        pipeline._keep_zip_directories()  # idempotent: swaps nothing more
+        assert sys.path_importer_cache == kept
+        calls[0] = 0
+        importlib.invalidate_caches()
+        assert calls[0] == 0
+        assert importlib.import_module("pkg.sub.b").B == 2
+    finally:
+        for name in ("pkg", "pkg.sub", "pkg.sub.a", "pkg.sub.b"):
+            sys.modules.pop(name, None)
+
+
+def test_python_tasks_keep_zip_directories(spark):
+    """Inside a task run through ``map_kernel``, the worker's
+    ``importlib.invalidate_caches()`` re-parses no zip archive; the worker
+    has zip importers (pyspark.zip), so the zero is not vacuous."""
+    def probe(batch: pd.DataFrame) -> pd.DataFrame:
+        import importlib
+        import sys
+        import zipimport
+
+        calls = [0]
+        read = zipimport._read_directory
+
+        def counted(archive):
+            calls[0] += 1
+            return read(archive)
+
+        zipimport._read_directory = counted
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read
+        zips = sum(isinstance(f, zipimport.zipimporter)
+                   for f in sys.path_importer_cache.values())
+        return pd.DataFrame({"n_fields": [0], "status": ["success"],
+                             "reads": [calls[0]], "zips": [zips]})
+
+    out, _ = pipeline.map_kernel(
+        spark.range(0, 4, numPartitions=4), probe,
+        "n_fields int, status string, reads int, zips int")
+    got = out.toPandas()
+    assert len(got) == 4
+    assert (got["zips"] >= 1).all(), got
+    assert (got["reads"] == 0).all(), got
