@@ -28,7 +28,7 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as sf
 
 from br_doc_ocr_spark.pipeline import (

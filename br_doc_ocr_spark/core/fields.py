@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import json
 import re
-from datetime import datetime
 from typing import Any
 
 # ---------------------------------------------------------------------------

@@ -20,7 +20,8 @@ decoder is either
   or not PIL is installed. Every other payload — unknown magic, or a
   format of the wrong modality for its row — raises ``ValueError`` naming
   its leading bytes and the library that would decode it (PIL,
-  torchaudio/soundfile or PyAV), which ``on_error='skip'`` quarantines.
+  torchaudio/soundfile or PyAV); ``on_error='skip'`` quarantines it and
+  the returned tally counts it (``skipped_ValueError``).
 
 Schema:
 
@@ -34,14 +35,18 @@ from __future__ import annotations
 
 import hashlib
 import io
+from collections import Counter
 from functools import lru_cache
-from typing import Callable, Iterable, Iterator
+from typing import Callable
 
 import numpy as np
 import pandas as pd
+from pyspark.accumulators import Accumulator
 from pyspark.sql import DataFrame, SparkSession
 
+from br_doc_ocr_spark.core.extract import _ddl_columns
 from br_doc_ocr_spark.ops import aviio, jpegio, pngio, wavio
+from br_doc_ocr_spark.pipeline import map_kernel
 
 MEDIA_SCHEMA_DDL = (
     "media_id long, kind string, payload binary, "
@@ -202,7 +207,8 @@ class MediaDecoder:
 
 
 # ---------------------------------------------------------------------------
-# Kernels (mapInPandas — Arrow batches in, Arrow batches out)
+# Kernels (per Arrow batch through pipeline.map_kernel: its tally counts
+# skipped media by exception class; its tasks keep their zip directories)
 # ---------------------------------------------------------------------------
 
 IMAGE_FEATURES_DDL = (
@@ -236,36 +242,37 @@ def _phash(gray: np.ndarray) -> int:
 
 def _media_kernel(decoder, on_error: str, ddl: str,
                   featurize: Callable[..., list[tuple]]):
-    """The per-batch loop the three kernels share: ``featurize(decoder,
+    """The per-batch function the three kernels share: ``featurize(decoder,
     media_id, payload, meta)`` returns one media's output rows.
 
     ``on_error='skip'`` quarantines corrupt payloads at MEDIA granularity:
     a decode ValueError/OSError drops every row of that media (for video,
     ALL its frames — a half-sampled video would silently skew frame-level
-    dedup/aggregation) instead of failing the task. At cluster scale one
-    bad blob must not kill a 128 MB scan partition after retry exhaustion
-    (SCALE.md "Multimodal decode"). OSError too: PIL's
-    UnidentifiedImageError subclasses OSError, not ValueError (ADVICE r04).
-    The default stays ``'raise'``: small curated corpora should fail
-    loudly."""
+    dedup/aggregation) instead of failing the task, and counts it as
+    ``skipped_<ExceptionClass>`` in the output's ``attrs["counts"]``, which
+    ``map_kernel`` adds to the tally. At cluster scale one bad blob must not
+    kill a 128 MB scan partition after retry exhaustion (SCALE.md
+    "Multimodal decode"). OSError too: PIL's UnidentifiedImageError
+    subclasses OSError, not ValueError (ADVICE r04). The default stays
+    ``'raise'``: small curated corpora should fail loudly."""
     decoder = decoder or FakeDecoder()
     if on_error not in ("raise", "skip"):
         raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
-    columns = [field.split()[0] for field in ddl.split(",")]
+    columns = _ddl_columns(ddl)
 
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for media_id, payload, meta in zip(batch["media_id"],
-                                               batch["payload"], batch["meta"]):
-                try:
-                    rows += featurize(decoder, int(media_id), bytes(payload),
-                                      meta)
-                except (ValueError, OSError):
-                    if on_error == "skip":
-                        continue
+    def run(batch: pd.DataFrame) -> pd.DataFrame:
+        rows, skipped = [], Counter()
+        for media_id, payload, meta in zip(batch["media_id"],
+                                           batch["payload"], batch["meta"]):
+            try:
+                rows += featurize(decoder, int(media_id), bytes(payload), meta)
+            except (ValueError, OSError) as e:
+                if on_error == "raise":
                     raise
-            yield pd.DataFrame(rows, columns=columns)
+                skipped[f"skipped_{type(e).__name__}"] += 1
+        out = pd.DataFrame(rows, columns=columns)
+        out.attrs["counts"] = skipped
+        return out
 
     return run
 
@@ -344,27 +351,28 @@ def video_frame_sample_kernel(decoder=None, every_nth: int = 10,
 # DataFrame-level API
 # ---------------------------------------------------------------------------
 
-def image_features(media: DataFrame, decoder=None,
-                   on_error: str = "raise") -> DataFrame:
-    imgs = media.filter(media.kind == "image")
-    return imgs.mapInPandas(image_feature_kernel(decoder, on_error),
-                            schema=IMAGE_FEATURES_DDL)
+def image_features(media: DataFrame, decoder=None, on_error: str = "raise"
+                   ) -> tuple[DataFrame, Accumulator]:
+    """→ (features, tally), both from :func:`pipeline.map_kernel`."""
+    return map_kernel(media.filter(media.kind == "image"),
+                      image_feature_kernel(decoder, on_error),
+                      IMAGE_FEATURES_DDL)
 
 
-def audio_features(media: DataFrame, decoder=None,
-                   on_error: str = "raise") -> DataFrame:
-    auds = media.filter(media.kind == "audio")
-    return auds.mapInPandas(audio_feature_kernel(decoder, on_error=on_error),
-                            schema=AUDIO_FEATURES_DDL)
+def audio_features(media: DataFrame, decoder=None, on_error: str = "raise"
+                   ) -> tuple[DataFrame, Accumulator]:
+    return map_kernel(media.filter(media.kind == "audio"),
+                      audio_feature_kernel(decoder, on_error=on_error),
+                      AUDIO_FEATURES_DDL)
 
 
-def sample_video_frames(media: DataFrame, decoder=None,
-                        every_nth: int = 10,
-                        on_error: str = "raise") -> DataFrame:
-    vids = media.filter(media.kind == "video")
-    return vids.mapInPandas(
+def sample_video_frames(media: DataFrame, decoder=None, every_nth: int = 10,
+                        on_error: str = "raise"
+                        ) -> tuple[DataFrame, Accumulator]:
+    return map_kernel(
+        media.filter(media.kind == "video"),
         video_frame_sample_kernel(decoder, every_nth, on_error=on_error),
-        schema=VIDEO_FRAMES_DDL)
+        VIDEO_FRAMES_DDL)
 
 
 def _synth_gradient(i: int, width: int, height: int) -> np.ndarray:
@@ -385,8 +393,6 @@ def _synth_media_df(spark: SparkSession, rows: tuple) -> DataFrame:
     """Cached-rows → DataFrame. Meta dicts are copied per call so a cached
     tuple can never be mutated through a returned frame; payloads are
     immutable ``bytes`` already."""
-    import pandas as pd  # noqa: F811
-
     pdf = pd.DataFrame(
         [(mid, kind, payload, dict(meta)) for mid, kind, payload, meta in rows],
         columns=["media_id", "kind", "payload", "meta"])
@@ -395,8 +401,6 @@ def _synth_media_df(spark: SparkSession, rows: tuple) -> DataFrame:
 
 @lru_cache(maxsize=4)
 def _synth_png_rows(n: int) -> tuple:
-    from br_doc_ocr_spark.ops import pngio
-
     rows = []
     for i in range(n):
         width = 96 + (i % 5) * 288   # 96..1248: crosses MAX_DIMENSION
@@ -439,8 +443,6 @@ def synth_jpeg_media(spark: SparkSession, n: int = 8,
 
 @lru_cache(maxsize=4)
 def _synth_jpeg_rows(n: int, start_id: int) -> tuple:
-    from br_doc_ocr_spark.ops import jpegio
-
     rows = []
     for i in range(n):
         width = 96 + (i % 5) * 48    # 96..288
@@ -468,8 +470,6 @@ def synth_wav_media(spark: SparkSession, n: int = 8,
 
 @lru_cache(maxsize=4)
 def _synth_wav_rows(n: int, start_id: int) -> tuple:
-    from br_doc_ocr_spark.ops import wavio
-
     rows = []
     for i in range(n):
         rate = 8000
@@ -506,8 +506,6 @@ def synth_avi_media(spark: SparkSession, n: int = 6,
 
 @lru_cache(maxsize=4)
 def _synth_avi_rows(n: int, start_id: int) -> tuple:
-    from br_doc_ocr_spark.ops import aviio
-
     rows = []
     for i in range(n):
         codec = "DIB" if i % 2 else "MJPG"
@@ -530,8 +528,6 @@ def _synth_avi_rows(n: int, start_id: int) -> tuple:
 def synth_media(spark: SparkSession, n: int = 64) -> DataFrame:
     """Deterministic synthetic media table (payload = seeded bytes; metadata
     spans small and above-cap dimensions so the resize path is exercised)."""
-    import pandas as pd  # noqa: F811
-
     rows = []
     kinds = ("image", "audio", "video")
     for i in range(n):

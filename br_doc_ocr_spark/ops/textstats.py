@@ -9,11 +9,12 @@ filter/groupBy without extra shuffles — at 100 TB these run at scan speed.
 from __future__ import annotations
 
 import re
-from typing import Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as sf
+
+from br_doc_ocr_spark.pipeline import map_kernel
 
 _PLAIN_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
@@ -431,12 +432,11 @@ def with_fingerprint(df: DataFrame, text_col: str = "text",
     schema = T.StructType(list(df.schema.fields)
                           + [T.StructField(out_col, T.LongType())])
 
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            batch[out_col] = _fingerprint_batch(list(batch[text_col]))
-            yield batch
+    def kernel(batch: pd.DataFrame) -> pd.DataFrame:
+        batch[out_col] = _fingerprint_batch(list(batch[text_col]))
+        return batch
 
-    return df.mapInPandas(kernel, schema=schema)
+    return map_kernel(df, kernel, schema)[0]
 
 
 # ---------------------------------------------------------------------------

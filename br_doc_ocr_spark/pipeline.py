@@ -42,6 +42,7 @@ from pyspark import StorageLevel, TaskContext
 from pyspark.accumulators import Accumulator, AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as sf
+from pyspark.sql.types import StructType
 
 from br_doc_ocr_spark.core.extract import (
     CLASSIFY_CONFIDENCE,
@@ -152,15 +153,16 @@ def _keep_zip_directories() -> None:
 
 def map_kernel(df: DataFrame,
                kernel: Callable[[pd.DataFrame], pd.DataFrame],
-               ddl: str) -> tuple[DataFrame, Accumulator]:
+               ddl: str | StructType) -> tuple[DataFrame, Accumulator]:
     """The one Arrow adapter: ``mapInPandas`` of a batch kernel (pandas in,
     rows of ``ddl`` out) over ``df``, skipping empty batches → (output,
-    tally), the kernel's own lineage: a :class:`_ByPartition` accumulator
-    to which a task that yielded rows adds its partition's rows, rows per
-    status, fields, kernel milliseconds and residual identifiers
-    (redacting kernels) at its end. Each task first keeps its worker's zip
-    directories (:func:`_keep_zip_directories`), so only the first task of
-    a worker process re-parses them."""
+    tally): a :class:`_ByPartition` accumulator to which each task that ran
+    a batch adds its partition's counts at its end: ``row_count`` and
+    ``wall_clock_ms``; with a ``status`` column, ``field_count`` and rows
+    per status; with ``redaction_residuals``, their sum; and the kernel's
+    own counters, popped from the output's ``attrs["counts"]``. Each task
+    first keeps its worker's zip directories (:func:`_keep_zip_directories`),
+    so only the first task of a worker process re-parses them."""
     tally = df.sparkSession.sparkContext.accumulator({}, _ByPartition())
 
     def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -173,9 +175,11 @@ def map_kernel(df: DataFrame,
             out = kernel(batch)
             counts["wall_clock_ms"] += (time.perf_counter() - t0) * 1000
             counts["row_count"] += len(out)
-            counts["field_count"] += out["n_fields"].sum()
-            statuses = out["status"].value_counts().add_suffix("_count")
-            counts.update(statuses.to_dict())
+            counts.update(out.attrs.pop("counts", {}))
+            if "status" in out:
+                counts["field_count"] += out["n_fields"].sum()
+                statuses = out["status"].value_counts().add_suffix("_count")
+                counts.update(statuses.to_dict())
             if "redaction_residuals" in out:
                 counts["redaction_residuals"] += out["redaction_residuals"].sum()
             yield out

@@ -360,19 +360,20 @@ def stream_media_features(
     quarantine keeps the stream alive.
 
     The kernels are stateless, so the streaming plan is the same single
-    ``mapInPandas`` crossing as the batch functions — results for
+    ``map_kernel`` crossing as the batch functions — results for
     non-quarantined rows are bit-identical to the batch run, and the
     parquet FILE sink (not foreachBatch) keeps the sink exactly-once
-    under trigger retries."""
+    under trigger retries. The tally is dropped: partition ids repeat in
+    every micro-batch, and the quarantine metric is the difference above."""
     from br_doc_ocr_spark.ops import multimodal as mm
 
     media = _read_stream(spark, mm.MEDIA_SCHEMA_DDL, input_path,
                          max_files_per_trigger)
     decoder = decoder or mm.MediaDecoder()
     if kind == "image":
-        feats = mm.image_features(media, decoder=decoder, on_error=on_error)
+        feats, _ = mm.image_features(media, decoder=decoder, on_error=on_error)
     elif kind == "audio":
-        feats = mm.audio_features(media, decoder=decoder, on_error=on_error)
+        feats, _ = mm.audio_features(media, decoder=decoder, on_error=on_error)
     else:
         raise ValueError(
             f"kind must be 'image' or 'audio', got {kind!r} — video (AVI) "

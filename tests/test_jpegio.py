@@ -227,7 +227,7 @@ def test_image_features_end_to_end_on_real_jpegs_mixed_with_pngs(spark):
     pngs = mm.synth_png_media(spark, n=4)
     media = jpegs.unionByName(
         pngs.selectExpr("media_id + 100 AS media_id", "kind", "payload", "meta"))
-    feats = mm.image_features(media, decoder=mm.MediaDecoder())
+    feats, _ = mm.image_features(media, decoder=mm.MediaDecoder())
     got = {r["media_id"]: r for r in feats.collect()}
     assert len(got) == 10
     assert feats.columns == ["media_id", "out_width", "out_height",
@@ -375,10 +375,10 @@ def test_image_features_on_error_skip_quarantines_rows(spark):
         "cast('not an image at all' as binary) AS payload", "meta")
     mixed = media.unionByName(corrupt.limit(1))
     good = mm.image_features(mixed, decoder=mm.MediaDecoder(),
-                             on_error="skip").collect()
+                             on_error="skip")[0].collect()
     assert sorted(r["media_id"] for r in good) == [0, 1, 2, 3]
     with pytest.raises(Exception, match="unrecognized image payload"):
-        mm.image_features(mixed, decoder=mm.MediaDecoder()).collect()
+        mm.image_features(mixed, decoder=mm.MediaDecoder())[0].collect()
     with pytest.raises(ValueError, match="on_error"):
         mm.image_feature_kernel(on_error="quarantine")
 
@@ -387,7 +387,8 @@ def test_image_features_on_error_skip_quarantines_oserror(spark):
     """PIL's UnidentifiedImageError subclasses OSError, not ValueError — the
     quarantine must catch it too, or with PIL installed one corrupt blob
     still kills the partition (ADVICE r04). Simulated with a decoder that
-    raises OSError directly (PIL may be absent here)."""
+    raises OSError directly (PIL may be absent here). The skip is counted
+    by exception class in the returned tally, beside the kept rows."""
 
     class OsErrorDecoder(mm.FakeDecoder):
         def decode_image(self, payload, width, height):
@@ -400,11 +401,15 @@ def test_image_features_on_error_skip_quarantines_oserror(spark):
         "media_id + 50 AS media_id", "kind",
         "cast('bad' as binary) AS payload", "meta").limit(1)
     mixed = media.unionByName(corrupt)
-    good = mm.image_features(mixed, decoder=OsErrorDecoder(),
-                             on_error="skip").collect()
+    feats, tally = mm.image_features(mixed, decoder=OsErrorDecoder(),
+                                     on_error="skip")
+    good = feats.collect()
     assert sorted(r["media_id"] for r in good) == [0, 3]
+    counts = tally.value.values()
+    assert sum(c["skipped_OSError"] for c in counts) == 1
+    assert sum(c["row_count"] for c in counts) == len(good)
     with pytest.raises(Exception, match="cannot identify image file"):
-        mm.image_features(mixed, decoder=OsErrorDecoder()).collect()
+        mm.image_features(mixed, decoder=OsErrorDecoder())[0].collect()
 
 
 def test_oversubscribed_dht_raises_value_error():

@@ -44,19 +44,19 @@ def test_resize_contract():
 
 
 def test_image_features(media, spark):
-    feats = mm.image_features(media).toPandas()
+    feats = mm.image_features(media)[0].toPandas()
     assert len(feats) == media.filter("kind = 'image'").count()
     assert (feats["out_width"] <= 1024).all() and (feats["out_height"] <= 1024).all()
     assert feats["band_means"].apply(len).eq(3).all()
     # fake pixels are uniform-ish noise → mean near 127.5
     assert feats["mean_intensity"].between(100, 155).all()
     # deterministic: re-run yields identical hashes
-    again = mm.image_features(media).toPandas()
+    again = mm.image_features(media)[0].toPandas()
     assert sorted(feats["phash"]) == sorted(again["phash"])
 
 
 def test_audio_features(media):
-    feats = mm.audio_features(media).toPandas()
+    feats = mm.audio_features(media)[0].toPandas()
     assert (feats["n_samples"] == 16000).all()
     assert feats["rms"].between(0.4, 0.8).all()     # uniform noise RMS ≈ 0.577
     assert feats["frame_energy"].apply(len).eq(15).all()  # 16000 // 1024
@@ -64,7 +64,7 @@ def test_audio_features(media):
 
 
 def test_video_frame_sampling_is_flatmap(media):
-    frames = mm.sample_video_frames(media, every_nth=10).toPandas()
+    frames = mm.sample_video_frames(media, every_nth=10)[0].toPandas()
     vids = media.filter("kind = 'video'").select("media_id", "meta.n_frames") \
         .toPandas()
     expected = int((np.ceil(vids["n_frames"] / 10)).sum())
@@ -116,9 +116,10 @@ def test_library_decoder_is_clearly_stubbed(monkeypatch):
 def test_media_decoder_quarantines_formats_outside_the_table(monkeypatch):
     """A GIF image, an MP3 (ID3) audio payload and an MP4 video payload are
     outside the codec table: each raises ValueError, so on_error='skip'
-    drops exactly those rows and keeps the good ones, and on_error='raise'
-    names the library that would decode the format. The kernel closures
-    run directly on pandas batches."""
+    drops exactly those rows, keeps the good ones and counts the skip as
+    ``skipped_ValueError`` on the returned frame, and on_error='raise'
+    names the library that would decode the format. The per-batch kernels
+    run directly on a pandas batch."""
     import sys
 
     import pandas as pd
@@ -143,8 +144,8 @@ def test_media_decoder_quarantines_formats_outside_the_table(monkeypatch):
         batch = pd.DataFrame(
             [(1, good, meta), (2, bad, meta), (3, good, meta)],
             columns=["media_id", "payload", "meta"])
-        kept = pd.concat(kernel(decoder=mm.MediaDecoder(),
-                                on_error="skip")([batch]))
+        kept = kernel(decoder=mm.MediaDecoder(), on_error="skip")(batch)
         assert kept["media_id"].tolist() == [1, 3]
+        assert kept.attrs["counts"] == {"skipped_ValueError": 1}
         with pytest.raises(ValueError, match=library):
-            list(kernel(decoder=mm.MediaDecoder())([batch]))
+            kernel(decoder=mm.MediaDecoder())(batch)

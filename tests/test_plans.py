@@ -60,6 +60,30 @@ def test_extraction_has_single_arrow_crossing_and_shuffle(spark,
     assert "redacted_text" in plans["redacting"]
 
 
+def test_map_kernel_is_the_only_map_in_pandas_call():
+    """Every Python crossing in the package goes through
+    ``pipeline.map_kernel`` (its tally, its kept zip directories): an
+    ``ast`` scan finds exactly one ``.mapInPandas(`` call, inside it."""
+    import ast
+    from pathlib import Path
+
+    package = Path(pipeline.__file__).parent
+    found = []
+    for path in sorted(package.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        defs = [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "mapInPandas"):
+                owner = max((d for d in defs
+                             if d.lineno <= node.lineno <= d.end_lineno),
+                            key=lambda d: d.lineno, default=None)
+                found.append((path.relative_to(package).as_posix(),
+                              owner and owner.name))
+    assert found == [("pipeline.py", "map_kernel")]
+
+
 def test_extraction_partitions_are_task_slots_for_small_input_else_conf(
         spark, tiny_transcripts_path):
     """Unless target_partitions is given, the range Exchange gets

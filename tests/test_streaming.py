@@ -280,7 +280,7 @@ def test_stream_media_real_codec_quarantines_corrupt_payload(spark,
     clean = pd.concat([png, jpg], ignore_index=True)
     expected = (mm.image_features(
         spark.createDataFrame(clean, schema=mm.MEDIA_SCHEMA_DDL),
-        decoder=mm.MediaDecoder()).toPandas()
+        decoder=mm.MediaDecoder())[0].toPandas()
         .sort_values("media_id").reset_index(drop=True))
     assert 999 not in set(got["media_id"])  # quarantined, not poisoned
     assert len(got) == len(expected) == 10
@@ -349,7 +349,7 @@ def test_stream_media_audio_kind_reaches_sink(spark, stream_dirs):
            .sort_values("media_id").reset_index(drop=True))
     expected = (mm.audio_features(
         spark.createDataFrame(wav, schema=mm.MEDIA_SCHEMA_DDL),
-        decoder=mm.MediaDecoder()).toPandas()
+        decoder=mm.MediaDecoder())[0].toPandas()
         .sort_values("media_id").reset_index(drop=True))
     assert got["media_id"].tolist() == expected["media_id"].tolist()
     assert 999 not in set(got["media_id"])          # corrupt WAV quarantined
