@@ -522,7 +522,6 @@ def extract_one(
     document_type: str | None = None,
     confidence: bool = True,
     multi_document: bool = False,
-    model_version: str = "rules-v1",
     redact_fields: frozenset[str] | None = None,
 ) -> dict[str, Any] | list[dict[str, Any]]:
     """Extract one payload → the reference's ExtractionResult response dict
@@ -574,7 +573,7 @@ def extract_one(
             "extracted_text": r["extracted_text"],
             "status": r["status"],
             "error_message": error_message,
-            "model_version": model_version,
+            "model_version": "rules-v1",
         }
         if confidence:  # keys present whenever requested — contract
             result["confidence_scores"] = r["confidence_scores"]
@@ -626,12 +625,11 @@ def classify_one(text: str | None) -> dict[str, Any]:
     }
 
 
-def oracle_extract(transcripts: pd.DataFrame,
-                   schema: dict[str, Any] | None = None) -> pd.DataFrame:
+def oracle_extract(transcripts: pd.DataFrame) -> pd.DataFrame:
     """Single-threaded golden oracle: same kernel, whole table, stable order.
 
     Output is sorted by (conv_id, turn_idx) — the stable-turn-ordering
     invariant every comparison uses (SURVEY.md §7.4 risk #2).
     """
-    out = extract_batch(transcripts, schema_field_names(schema))
+    out = extract_batch(transcripts)
     return out.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)

@@ -376,7 +376,7 @@ def parse_pdf_layout(text: str) -> str:
     return "\n".join(out)
 
 
-def extract_main_content(text: str, kind: str | None = None) -> tuple[str, str]:
+def extract_main_content(text: str) -> tuple[str, str]:
     """Dispatch a payload to its extractor → (kind, extracted_text).
 
     The graft's fused preprocess stage (reference analog:
@@ -385,7 +385,7 @@ def extract_main_content(text: str, kind: str | None = None) -> tuple[str, str]:
     """
     if text is None:
         return KIND_PROSE, ""
-    k = kind or detect_payload_kind(text)
+    k = detect_payload_kind(text)
     if k == KIND_HTML:
         return k, strip_html(text)
     if k == KIND_PDF:

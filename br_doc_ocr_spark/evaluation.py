@@ -3,7 +3,8 @@
 Reference parity (``/root/reference/src/br_doc_ocr/services/evaluation.py``):
 
 - J1 pairing (``:43-78`` get_predictions): pred JOIN golden on the sample key
-  — here an equi join on (conv_id, turn_idx), broadcast when golden is small;
+  — here an equi join on (conv_id, turn_idx), broadcast or shuffled by
+  Spark's size-based join choice (``autoBroadcastJoinThreshold``, AQE);
 - J2 field alignment (``:174-191``, ``:216-227``): the union of predicted and
   actual field names, compared per field — ``map_keys`` + ``array_union`` +
   ``transform``, no explode needed for the per-sample metrics;
@@ -23,8 +24,7 @@ from pyspark.sql import functions as sf
 JOIN_KEYS = ["conv_id", "turn_idx"]
 
 
-def pair_predictions(pred: DataFrame, golden: DataFrame,
-                     broadcast_golden: bool = True) -> DataFrame:
+def pair_predictions(pred: DataFrame, golden: DataFrame) -> DataFrame:
     """J1: inner equi join on the turn key; golden columns suffixed _expected.
 
     Columns required on both sides: conv_id, turn_idx, fields
@@ -36,8 +36,6 @@ def pair_predictions(pred: DataFrame, golden: DataFrame,
         sf.col("extracted_text").alias("extracted_text_expected"),
         sf.col("status").alias("status_expected"),
     )
-    if broadcast_golden:
-        g = sf.broadcast(g)
     return pred.join(g, on=JOIN_KEYS, how="inner")
 
 
@@ -134,7 +132,6 @@ def field_accuracy(paired: DataFrame) -> DataFrame:
 
 
 def evaluate(pred: DataFrame, golden: DataFrame,
-             broadcast_golden: bool = True,
              persist: bool = False) -> dict[str, DataFrame]:
     """Full evaluation report — the Spark rendering of ``cli evaluate``
     (cli/evaluate.py:19-184): overall, per-kind, per-field, plus a coverage
@@ -143,10 +140,9 @@ def evaluate(pred: DataFrame, golden: DataFrame,
     otherwise hide: golden rows with NO prediction — an engine that lost 90%
     of its output must not score 100% unnoticed.
 
-    ``broadcast_golden=False`` for golden sets too large to broadcast
-    (the explicit hint bypasses autoBroadcastJoinThreshold entirely, so a
-    10^7-row golden would otherwise be collected to every executor);
-    the pairing then shuffles both sides on the turn key.
+    Spark picks the pairing join by size: a golden under
+    ``autoBroadcastJoinThreshold`` is broadcast, a larger one (10^7 rows)
+    is shuffled on the turn key instead of collected to every executor.
 
     ``persist=True`` caches the pairing join so collecting several report
     frames scans the predictions table ONCE instead of re-running the join
@@ -154,7 +150,7 @@ def evaluate(pred: DataFrame, golden: DataFrame,
     call :func:`unpersist_evaluation` on the returned dict when done. Left
     False by default so single-frame consumers (the catalog query reads
     only ``per_kind``) don't leak a session-lifetime cache entry."""
-    paired = pair_predictions(pred, golden, broadcast_golden)
+    paired = pair_predictions(pred, golden)
     if persist:
         from pyspark import StorageLevel
 

@@ -438,17 +438,6 @@ def simhash_signatures(df: DataFrame, id_col: str = "doc_id",
     return guarded.selectExpr("id", f"({pack}) AS {_bq(out_col)}")
 
 
-def with_simhash(df: DataFrame, text_col: str = "text",
-                 out_col: str = "simhash",
-                 id_col: str = "doc_id") -> DataFrame:
-    """Attach a simhash column by id join-back. The near-dup path uses
-    :func:`simhash_signatures` directly (no join needed); this wrapper keeps
-    the row-level API for callers that want the original columns alongside."""
-    sig = simhash_signatures(df, id_col=id_col, text_col=text_col,
-                             out_col=out_col)
-    return df.join(sig.withColumnRenamed("id", id_col), id_col, "left")
-
-
 def simhash_near_duplicates(df: DataFrame, id_col: str = "doc_id",
                             text_col: str = "text",
                             max_hamming: int = 3) -> DataFrame:

@@ -8,20 +8,19 @@ the pixel work behind a pluggable decoder. The Spark-side plumbing — schema,
 partitioning, UDF signatures, Arrow batch shapes — is real and tested; the
 decoder is either
 
-- :class:`FakeDecoder` (default): deterministic bytes→"pixels" synthesis so
-  every downstream stage (resize / orient / frame-sample / feature-extract)
-  runs end-to-end with checkable numbers, or
-- :class:`MediaDecoder`: REAL decode through one codec table that maps a
-  payload's magic bytes to (modality, decode function) — PNG (:mod:`pngio`)
-  and baseline JPEG (:mod:`jpegio`) images, RIFF/WAVE audio (:mod:`wavio`,
-  mono downmix) and MJPG/DIB-in-AVI video (:mod:`aviio`), all with no
-  external dependency. PIL is an override consulted only for image magic
-  the table does not know, so table formats give the same pixels whether
-  or not PIL is installed. Every other payload — unknown magic, or a
+- :class:`MediaDecoder` (default): REAL decode through one codec table that
+  maps a payload's magic bytes to (modality, decode function) — PNG
+  (:mod:`pngio`) and baseline JPEG (:mod:`jpegio`) images, RIFF/WAVE audio
+  (:mod:`wavio`, mono downmix) and MJPG/DIB-in-AVI video (:mod:`aviio`),
+  all with no external dependency. PIL is an override consulted only for
+  image magic the table does not know, so table formats give the same
+  pixels whether or not PIL is installed. Every other payload — unknown magic, or a
   format of the wrong modality for its row — raises ``ValueError`` naming
   its leading bytes and the library that would decode it (PIL,
   torchaudio/soundfile or PyAV); ``on_error='skip'`` quarantines it and
-  the returned tally counts it (``skipped_ValueError``).
+  the returned tally counts it (``skipped_ValueError``), or
+- :class:`FakeDecoder`, passed explicitly: deterministic bytes→"pixels"
+  synthesis, so every stage runs with checkable numbers on ``synth_media``.
 
 Schema:
 
@@ -255,7 +254,7 @@ def _media_kernel(decoder, on_error: str, ddl: str,
     "Multimodal decode"). OSError too: PIL's UnidentifiedImageError
     subclasses OSError, not ValueError (ADVICE r04). The default stays
     ``'raise'``: small curated corpora should fail loudly."""
-    decoder = decoder or FakeDecoder()
+    decoder = decoder or MediaDecoder()
     if on_error not in ("raise", "skip"):
         raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
     columns = _ddl_columns(ddl)
@@ -300,10 +299,10 @@ AUDIO_FEATURES_DDL = (
     "media_id long, n_samples int, rms double, zero_crossings int, "
     "frame_energy array<double>"
 )
+AUDIO_FRAME_SIZE = 1024  # samples per frame_energy entry
 
 
-def audio_feature_kernel(decoder=None, frame_size: int = 1024,
-                         on_error: str = "raise"):
+def audio_feature_kernel(decoder=None, on_error: str = "raise"):
     """decode → RMS / zero-crossing / framed energy, one row per clip
     (quarantine contract: :func:`_media_kernel`). ``n_samples`` reports the
     DECODED length — for :class:`FakeDecoder` that equals the metadata
@@ -314,9 +313,9 @@ def audio_feature_kernel(decoder=None, frame_size: int = 1024,
         wave = decoder.decode_audio(payload, int(meta["sample_rate"]))
         n_out = int(wave.shape[0])
         zc = int(np.sum(np.signbit(wave[1:]) != np.signbit(wave[:-1])))
-        n_frames = max(n_out // frame_size, 1)
+        n_frames = max(n_out // AUDIO_FRAME_SIZE, 1)
         energy = [float(np.sqrt(np.mean(
-            wave[i * frame_size:(i + 1) * frame_size] ** 2)))
+            wave[i * AUDIO_FRAME_SIZE:(i + 1) * AUDIO_FRAME_SIZE] ** 2)))
             for i in range(n_frames)]
         return [(media_id, n_out, float(np.sqrt(np.mean(wave ** 2))), zc,
                  energy)]
@@ -362,7 +361,7 @@ def image_features(media: DataFrame, decoder=None, on_error: str = "raise"
 def audio_features(media: DataFrame, decoder=None, on_error: str = "raise"
                    ) -> tuple[DataFrame, Accumulator]:
     return map_kernel(media.filter(media.kind == "audio"),
-                      audio_feature_kernel(decoder, on_error=on_error),
+                      audio_feature_kernel(decoder, on_error),
                       AUDIO_FEATURES_DDL)
 
 

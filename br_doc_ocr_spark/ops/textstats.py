@@ -159,11 +159,6 @@ def quality_score(text: Column) -> Column:
     )
 
 
-def lang_scores(text: Column) -> list[tuple[str, Column]]:
-    return [(lang, stopword_hits(text, words))
-            for lang, words in LANG_STOPWORDS.items()]
-
-
 # Spark-SQL rendering of _word_tokens ('\\\\' in the Python source → '\\' in
 # the SQL literal → '\' in the regex — Spark's parser un-escapes string
 # literals once)
@@ -194,30 +189,20 @@ def _spark_sql_stopword_hits(text_sql: str, words: tuple[str, ...]) -> str:
     return f"greatest(cast(({' + '.join(terms)}) as int), 0)"
 
 
-def predict_lang(text: Column | str) -> Column:
+def predict_lang(text: str) -> Column:
     """argmax over per-language stopword hit counts; 'und' when all zero.
     Ties break by language-code order (deterministic).
 
-    Pass a column NAME (or SQL fragment) for the fast build path: the whole
-    24-language argmax is generated as one SQL string and parsed in a single
-    JVM call. A Column argument keeps the composable column-expression path;
-    both build the identical expression tree (equality is pinned by
-    ``test_predict_lang_sql_path_matches_column_path``)."""
-    if isinstance(text, str):
-        structs = ", ".join(
-            f"named_struct('hits', {_spark_sql_stopword_hits(text, ws)}, "
-            f"'lang', '{lang}')"
-            for lang, ws in sorted(LANG_STOPWORDS.items()))
-        return sf.expr(
-            f"coalesce(array_max(filter(array({structs}), "
-            f"s -> s.hits > 0)).lang, 'und')")
-    scored = lang_scores(text)
-    structs = sf.array(*[
-        sf.struct(hits.alias("hits"), sf.lit(lang).alias("lang"))
-        for lang, hits in sorted(scored, key=lambda kv: kv[0])
-    ])
-    best = sf.array_max(sf.filter(structs, lambda s: s["hits"] > 0))
-    return sf.coalesce(best["lang"], sf.lit("und"))
+    ``text`` is a column NAME (or SQL fragment): the whole 24-language
+    argmax over :func:`stopword_hits`' expression tree is generated as one
+    SQL string and parsed in a single JVM call."""
+    structs = ", ".join(
+        f"named_struct('hits', {_spark_sql_stopword_hits(text, ws)}, "
+        f"'lang', '{lang}')"
+        for lang, ws in sorted(LANG_STOPWORDS.items()))
+    return sf.expr(
+        f"coalesce(array_max(filter(array({structs}), "
+        f"s -> s.hits > 0)).lang, 'und')")
 
 
 def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:

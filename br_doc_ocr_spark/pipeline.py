@@ -201,13 +201,12 @@ def _lineage_frame(spark: SparkSession, tally: Accumulator,
     return spark.createDataFrame(pd.DataFrame(rows, columns=names), ddl)
 
 
-def _range_exchange(transcripts: DataFrame,
-                    target_partitions: int | None) -> DataFrame:
+def _range_exchange(transcripts: DataFrame) -> DataFrame:
     """The one Exchange in front of the extraction crossing: range on
-    ``(conv_id, turn_idx)`` into ``target_partitions``, by default into
-    ``spark.sql.shuffle.partitions`` — or, when the whole input is at most
-    ``spark.sql.files.openCostInBytes`` (Spark's byte-equivalent of a fixed
-    per-task charge) per task slot, into one wave of task slots.
+    ``(conv_id, turn_idx)`` into ``spark.sql.shuffle.partitions`` — or,
+    when the whole input is at most ``spark.sql.files.openCostInBytes``
+    (Spark's byte-equivalent of a fixed per-task charge) per task slot, into
+    one wave of task slots. A caller steers the count through those confs.
 
     The range bounds come from a sampling job over the input (the scan, not
     the kernel), so a hot conversation is cut at sampled turn boundaries
@@ -225,24 +224,21 @@ def _range_exchange(transcripts: DataFrame,
     plans the query, runs no job); a filtered input is sized by its
     unfiltered scan."""
     spark = transcripts.sparkSession
-    n = target_partitions
-    if not n:
-        n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        slots = spark.sparkContext.defaultParallelism
-        # py4j handles (classic, non-Connect sessions only): Catalyst's size
-        # estimate and the parsed byte conf (the string may carry a unit)
-        size = transcripts._jdf.queryExecution().optimizedPlan().stats() \
-            .sizeInBytes()
-        open_cost = spark._jsparkSession.sessionState().conf() \
-            .filesOpenCostInBytes()
-        if int(size) <= slots * open_cost:
-            n = min(n, slots)
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    slots = spark.sparkContext.defaultParallelism
+    # py4j handles (classic, non-Connect sessions only): Catalyst's size
+    # estimate and the parsed byte conf (the string may carry a unit)
+    size = transcripts._jdf.queryExecution().optimizedPlan().stats() \
+        .sizeInBytes()
+    open_cost = spark._jsparkSession.sessionState().conf() \
+        .filesOpenCostInBytes()
+    if int(size) <= slots * open_cost:
+        n = min(n, slots)
     return transcripts.repartitionByRange(n, "conv_id", "turn_idx")
 
 
 def run_extraction(
     transcripts: DataFrame,
-    target_partitions: int | None = None,
     schema: dict | None = None,
     max_payload_chars: int | None = None,
     redact_fields: frozenset[str] | None = None,
@@ -255,12 +251,9 @@ def run_extraction(
     the kernel OUTPUT: sorting the input ahead of the crossing held whole
     partitions of raw payloads in the sorter and raised the peak RSS of the
     document benchmark by a quarter.
-    ``target_partitions`` defaults to ``spark.sql.shuffle.partitions``, or to
-    one wave of task slots for an input of at most
-    ``spark.sql.files.openCostInBytes`` per slot (Catalyst's size estimate),
-    against a fixed charge per Python task whose largest part, the
-    re-parse of the worker's zip importers, is now paid once per worker
-    process — see :func:`_range_exchange`.
+    The partition count is ``spark.sql.shuffle.partitions``, or one wave of
+    task slots for an input of at most ``spark.sql.files.openCostInBytes``
+    per slot (Catalyst's size estimate) — see :func:`_range_exchange`.
     ``schema`` enables schema-guided extraction (US4): a JSON-Schema dict
     whose field names bound the extracted field set (shipped to executors in
     the task closure — the broadcast-variable pattern for a driver-side
@@ -294,7 +287,7 @@ def run_extraction(
                                allowed_fields=schema_field_names(schema),
                                redact_fields=redact_fields)
     results, tally = map_kernel(
-        _range_exchange(transcripts, target_partitions), kernel,
+        _range_exchange(transcripts), kernel,
         output_schema_ddl(redact_fields is not None))
     ddl = LINEAGE_DDL + (", redaction_residuals long"
                          if redact_fields is not None else "")
@@ -322,7 +315,6 @@ def run_pipeline(
     output_path: str | None = None,
     lineage_path: str | None = None,
     run_id: str = "run-0",
-    snapshot_id: str = "snap-0",
     max_payload_chars: int | None = None,
     schema: dict | None = None,
     drop_confidence: bool = False,
@@ -333,14 +325,14 @@ def run_pipeline(
     """End-to-end: read → range exchange → extract → sort → optional write.
 
     Returns ``(results, lineage)`` like :func:`run_extraction`, with the
-    lineage rows stamped with ``run_id``/``snapshot_id`` in front
-    (FIXTURES.md §5) for the resume manifest; after a write ``lineage()``
-    holds every partition of it.
+    lineage rows stamped with ``run_id`` and ``snapshot_id`` in front
+    (FIXTURES.md §5); after a write ``lineage()`` holds every partition of
+    it. A one-shot run is one snapshot, ``snap-0``; only
+    :func:`checkpoint.run_resumable` numbers its snapshots.
 
     ``table_format``/``read_snapshot_id`` select the input reader (Iceberg
-    time travel on a cluster with the runtime jar) — distinct from
-    ``snapshot_id``, which stamps the OUTPUT lineage rows for the resume
-    manifest.
+    time travel on a cluster with the runtime jar) — distinct from the
+    lineage ``snapshot_id`` of the OUTPUT.
 
     Writes are idempotent overwrites: the output is replaced, and the
     lineage table is partitioned by ``run_id`` and overwritten per run (a
@@ -372,7 +364,7 @@ def run_pipeline(
     def lineage() -> DataFrame:
         counts = kernel_lineage()
         return counts.select(sf.lit(run_id).alias("run_id"),
-                             sf.lit(snapshot_id).alias("snapshot_id"),
+                             sf.lit("snap-0").alias("snapshot_id"),
                              *counts.columns)
 
     if output_path:
@@ -383,16 +375,15 @@ def run_pipeline(
     return results, lineage
 
 
-def run_multi_extraction(
-    transcripts: DataFrame, target_partitions: int | None = None,
-) -> tuple[DataFrame, Callable[[], DataFrame]]:
+def run_multi_extraction(transcripts: DataFrame
+                         ) -> tuple[DataFrame, Callable[[], DataFrame]]:
     """FR-015 flatMap form → (documents, lineage): one row per detected
     document segment (reference: ``extract_document(multi_document=True)``,
     extraction.py:102-119), and :func:`run_extraction`'s lineage, counting
     documents. Same range exchange as the 1:1 kernel; sorted within the
     range partitions on ``(conv_id, turn_idx, doc_idx)``: global order."""
     documents, tally = map_kernel(
-        _range_exchange(transcripts, target_partitions),
+        _range_exchange(transcripts),
         extract_documents_batch, MULTIDOC_SCHEMA_DDL)
     return (documents.sortWithinPartitions("conv_id", "turn_idx", "doc_idx"),
             functools.partial(_lineage_frame, transcripts.sparkSession,
@@ -481,10 +472,11 @@ def with_classification(results: DataFrame) -> DataFrame:
 # wrapping) and run the full extraction pipeline over them.
 # ---------------------------------------------------------------------------
 
-def transcripts_from_documents(spark: SparkSession, sf_dir: str, n_convs: int = 64) -> DataFrame:
+def transcripts_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministically wrap /root/testdata documents into the transcript
-    shape: conv_id from a hash bucket of doc_id, payload text decorated with
-    HTML/PDF/field markup by doc_id residue. Pure column expressions."""
+    shape: conv_id from one of 64 hash buckets of doc_id, payload text
+    decorated with HTML/PDF/field markup by doc_id residue. Pure column
+    expressions."""
     from pyspark.sql import Window
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -519,7 +511,7 @@ def transcripts_from_documents(spark: SparkSession, sf_dir: str, n_convs: int = 
           .otherwise(sf.col("text"))
     )
     base = docs.select(
-        sf.format_string("conv-%05d", (h % n_convs).cast("int")).alias("conv_id"),
+        sf.format_string("conv-%05d", (h % 64).cast("int")).alias("conv_id"),
         sf.col("doc_id"),
         payload.alias("text"),
         sf.element_at(

@@ -1928,7 +1928,8 @@ def q_multimodal_features(spark, sf_dir):
     from br_doc_ocr_spark.ops import multimodal as mm
 
     media = mm.synth_media(spark, n=48)
-    img = (mm.image_features(media)[0]
+    fake = mm.FakeDecoder()
+    img = (mm.image_features(media, decoder=fake)[0]
            .groupBy("out_width", "out_height")
            .agg(sf.count("*").alias("n"),
                 sf.round(sf.avg("mean_intensity"), 2).alias("v"))
@@ -1940,7 +1941,7 @@ def q_multimodal_features(spark, sf_dir):
     # decode kernel + aggregation twice (two MapInPandas subtrees, zero
     # reuse — review r05); the generator row-multiplies the final tiny
     # aggregate instead, decoding each payload once
-    aud = (mm.audio_features(media)[0]
+    aud = (mm.audio_features(media, decoder=fake)[0]
            .groupBy("n_samples")
            .agg(sf.count("*").alias("n"),
                 sf.round(sf.avg("rms"), 6).alias("rms"),
@@ -1949,7 +1950,7 @@ def q_multimodal_features(spark, sf_dir):
                "stack(2, 'audio_rms', rms, 'audio_zc', zc) AS (modality, v)",
                "n_samples AS k1", "0 AS k2", "n")
            .select("modality", "k1", "k2", "n", "v"))
-    vid = (mm.sample_video_frames(media, every_nth=10)[0]
+    vid = (mm.sample_video_frames(media, decoder=fake, every_nth=10)[0]
            .groupBy("frame_idx")
            .agg(sf.count("*").alias("n"),
                 sf.round(sf.avg("mean_intensity"), 2).alias("v"))
@@ -2024,16 +2025,14 @@ def q_multimodal_real_codec(spark, sf_dir):
 
     png = mm.synth_png_media(spark, n=12)
     jpg = mm.synth_jpeg_media(spark, n=8, start_id=100)
-    img = (mm.image_features(png.unionByName(jpg),
-                             decoder=mm.MediaDecoder())[0]
+    img = (mm.image_features(png.unionByName(jpg))[0]
            .select(sf.when(sf.col("media_id") < 100, "png")
                    .otherwise("jpeg").alias("modality"),
                    "media_id",
                    sf.col("out_width").alias("k1"),
                    sf.col("out_height").alias("k2"),
                    sf.round("mean_intensity", 4).alias("v")))
-    wav = (mm.audio_features(mm.synth_wav_media(spark, n=8, start_id=200),
-                             decoder=mm.MediaDecoder())[0]
+    wav = (mm.audio_features(mm.synth_wav_media(spark, n=8, start_id=200))[0]
            .select(sf.lit("wav").alias("modality"), "media_id",
                    sf.col("n_samples").alias("k1"),
                    sf.col("zero_crossings").alias("k2"),
@@ -2043,7 +2042,7 @@ def q_multimodal_real_codec(spark, sf_dir):
     # arithmetic shiftright reproduces the frozen Python value exactly
     avi = (mm.sample_video_frames(mm.synth_avi_media(spark, n=6,
                                                      start_id=300),
-                                  decoder=mm.MediaDecoder(), every_nth=10)[0]
+                                  every_nth=10)[0]
            .select(sf.lit("avi").alias("modality"), "media_id",
                    sf.col("frame_idx").alias("k1"),
                    sf.shiftright("phash", 31).bitwiseXOR(sf.col("phash"))

@@ -328,7 +328,6 @@ def stream_media_features(
     input_path: str,
     output_path: str,
     checkpoint_path: str,
-    decoder=None,
     on_error: str = "skip",
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
@@ -369,11 +368,10 @@ def stream_media_features(
 
     media = _read_stream(spark, mm.MEDIA_SCHEMA_DDL, input_path,
                          max_files_per_trigger)
-    decoder = decoder or mm.MediaDecoder()
     if kind == "image":
-        feats, _ = mm.image_features(media, decoder=decoder, on_error=on_error)
+        feats, _ = mm.image_features(media, on_error=on_error)
     elif kind == "audio":
-        feats, _ = mm.audio_features(media, decoder=decoder, on_error=on_error)
+        feats, _ = mm.audio_features(media, on_error=on_error)
     else:
         raise ValueError(
             f"kind must be 'image' or 'audio', got {kind!r} — video (AVI) "

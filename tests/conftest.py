@@ -45,3 +45,20 @@ def sorted_in_file_order(files: list[str]) -> bool:
             for k in pd.read_parquet(f, columns=["conv_id", "turn_idx"])
             .itertuples(index=False, name=None)]
     return keys == sorted(keys)
+
+
+def spark_jobs_of(spark, call) -> int:
+    """The number of Spark jobs ``call()`` runs: it runs under a job group of
+    its own, whose job ids the status tracker lists afterwards."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        call()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))

@@ -199,8 +199,7 @@ def test_video_frames_end_to_end_on_real_avi(spark):
     from br_doc_ocr_spark.ops import multimodal as mm
 
     media = mm.synth_avi_media(spark, n=4, start_id=300)
-    out = (mm.sample_video_frames(media, decoder=mm.MediaDecoder(),
-                                  every_nth=10)[0]
+    out = (mm.sample_video_frames(media, every_nth=10)[0]
            .orderBy("media_id", "frame_idx").collect())
     # n_frames cycle 12/21/30/12 → 2+3+3+2 sampled frames
     assert [(r.media_id, r.frame_idx) for r in out] == [
@@ -229,11 +228,10 @@ def test_video_on_error_skip_quarantines_whole_media(spark):
     ]
     pdf = pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"])
     media = spark.createDataFrame(pdf, schema=mm.MEDIA_SCHEMA_DDL)
-    kept = (mm.sample_video_frames(media, decoder=mm.MediaDecoder(),
-                                   every_nth=1, on_error="skip")[0].collect())
+    kept = (mm.sample_video_frames(media, every_nth=1, on_error="skip")[0]
+            .collect())
     assert sorted((r.media_id, r.frame_idx) for r in kept) == [(1, 0), (1, 1)]
     with pytest.raises(Exception, match="AVI"):
-        mm.sample_video_frames(media, decoder=mm.MediaDecoder(),
-                               every_nth=1)[0].collect()
+        mm.sample_video_frames(media, every_nth=1)[0].collect()
     with pytest.raises(ValueError, match="on_error must be"):
         mm.video_frame_sample_kernel(on_error="drop")

@@ -10,6 +10,7 @@ import pytest
 
 from br_doc_ocr_spark import checkpoint
 from br_doc_ocr_spark.core.extract import oracle_extract
+from tests.conftest import spark_jobs_of
 
 
 @pytest.fixture()
@@ -49,6 +50,21 @@ def test_resume_in_three_snapshots_equals_oracle(spark, tiny_transcripts,
     lineage = spark.read.parquet(paths["lineage"]).toPandas()
     assert set(lineage["snapshot_id"]) == {"snap-00000", "snap-00001", "snap-00002"}
     assert lineage["row_count"].sum() == len(expected)
+
+
+def test_run_resumable_job_budget(spark, tiny_transcripts_path, paths):
+    """Job budget: one run_resumable invocation that processes every bucket
+    runs 5 Spark jobs (the same shape as run_pipeline's: schema inference,
+    the range exchange's sampling and map-stage jobs, the bucketed write and
+    the lineage write); one with nothing pending runs none. A change that
+    adds or removes a job must change these numbers."""
+    def invocation():
+        checkpoint.run_resumable(
+            spark, tiny_transcripts_path, paths["out"], paths["manifest"],
+            lineage_path=paths["lineage"])
+
+    assert spark_jobs_of(spark, invocation) == 5
+    assert spark_jobs_of(spark, invocation) == 0  # nothing left pending
 
 
 def test_zero_bucket_slice_still_reports_pending(spark, tiny_transcripts_path,

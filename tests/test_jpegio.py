@@ -227,7 +227,7 @@ def test_image_features_end_to_end_on_real_jpegs_mixed_with_pngs(spark):
     pngs = mm.synth_png_media(spark, n=4)
     media = jpegs.unionByName(
         pngs.selectExpr("media_id + 100 AS media_id", "kind", "payload", "meta"))
-    feats, _ = mm.image_features(media, decoder=mm.MediaDecoder())
+    feats, _ = mm.image_features(media)
     got = {r["media_id"]: r for r in feats.collect()}
     assert len(got) == 10
     assert feats.columns == ["media_id", "out_width", "out_height",
@@ -374,11 +374,10 @@ def test_image_features_on_error_skip_quarantines_rows(spark):
         "media_id + 50 AS media_id", "kind",
         "cast('not an image at all' as binary) AS payload", "meta")
     mixed = media.unionByName(corrupt.limit(1))
-    good = mm.image_features(mixed, decoder=mm.MediaDecoder(),
-                             on_error="skip")[0].collect()
+    good = mm.image_features(mixed, on_error="skip")[0].collect()
     assert sorted(r["media_id"] for r in good) == [0, 1, 2, 3]
     with pytest.raises(Exception, match="unrecognized image payload"):
-        mm.image_features(mixed, decoder=mm.MediaDecoder())[0].collect()
+        mm.image_features(mixed)[0].collect()
     with pytest.raises(ValueError, match="on_error"):
         mm.image_feature_kernel(on_error="quarantine")
 

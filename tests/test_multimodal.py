@@ -44,19 +44,33 @@ def test_resize_contract():
 
 
 def test_image_features(media, spark):
-    feats = mm.image_features(media)[0].toPandas()
+    feats = mm.image_features(media, decoder=mm.FakeDecoder())[0].toPandas()
     assert len(feats) == media.filter("kind = 'image'").count()
     assert (feats["out_width"] <= 1024).all() and (feats["out_height"] <= 1024).all()
     assert feats["band_means"].apply(len).eq(3).all()
     # fake pixels are uniform-ish noise → mean near 127.5
     assert feats["mean_intensity"].between(100, 155).all()
     # deterministic: re-run yields identical hashes
-    again = mm.image_features(media)[0].toPandas()
+    again = mm.image_features(media, decoder=mm.FakeDecoder())[0].toPandas()
     assert sorted(feats["phash"]) == sorted(again["phash"])
 
 
+def test_real_decoder_is_the_default(spark):
+    """A real PNG passed without a decoder is decoded, not synthesized: the
+    default equals an explicit MediaDecoder, row for row."""
+    import pandas as pd
+
+    pngs = mm.synth_png_media(spark, n=4)
+
+    def rows(**kw):
+        feats = mm.image_features(pngs, **kw)[0].toPandas()
+        return feats.sort_values("media_id").reset_index(drop=True)
+
+    pd.testing.assert_frame_equal(rows(), rows(decoder=mm.MediaDecoder()))
+
+
 def test_audio_features(media):
-    feats = mm.audio_features(media)[0].toPandas()
+    feats = mm.audio_features(media, decoder=mm.FakeDecoder())[0].toPandas()
     assert (feats["n_samples"] == 16000).all()
     assert feats["rms"].between(0.4, 0.8).all()     # uniform noise RMS ≈ 0.577
     assert feats["frame_energy"].apply(len).eq(15).all()  # 16000 // 1024
@@ -64,7 +78,8 @@ def test_audio_features(media):
 
 
 def test_video_frame_sampling_is_flatmap(media):
-    frames = mm.sample_video_frames(media, every_nth=10)[0].toPandas()
+    frames = mm.sample_video_frames(media, decoder=mm.FakeDecoder(),
+                                    every_nth=10)[0].toPandas()
     vids = media.filter("kind = 'video'").select("media_id", "meta.n_frames") \
         .toPandas()
     expected = int((np.ceil(vids["n_frames"] / 10)).sum())
@@ -144,8 +159,8 @@ def test_media_decoder_quarantines_formats_outside_the_table(monkeypatch):
         batch = pd.DataFrame(
             [(1, good, meta), (2, bad, meta), (3, good, meta)],
             columns=["media_id", "payload", "meta"])
-        kept = kernel(decoder=mm.MediaDecoder(), on_error="skip")(batch)
+        kept = kernel(on_error="skip")(batch)
         assert kept["media_id"].tolist() == [1, 3]
         assert kept.attrs["counts"] == {"skipped_ValueError": 1}
         with pytest.raises(ValueError, match=library):
-            kernel(decoder=mm.MediaDecoder())(batch)
+            kernel()(batch)

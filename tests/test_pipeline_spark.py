@@ -9,7 +9,7 @@ import pytest
 
 from br_doc_ocr_spark.core.extract import OUTPUT_COLUMNS, oracle_extract
 from br_doc_ocr_spark import pipeline
-from tests.conftest import sorted_in_file_order
+from tests.conftest import sorted_in_file_order, spark_jobs_of
 
 
 def _normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -201,14 +201,22 @@ def test_max_payload_chars_caps_before_kernel(spark, tiny_transcripts,
 
 def test_results_invariant_to_parallelism(spark, tiny_transcripts_path):
     """SCALE.md: nothing in the job is order- or partition-count-dependent.
-    The same input must produce identical rows at any target_partitions
-    (it only steers the shuffle layout)."""
+    The same input must produce identical rows at any partition count
+    (``spark.sql.shuffle.partitions`` only steers the shuffle layout; an
+    open cost of one byte keeps the tiny input off the one-wave rule)."""
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.files.openCostInBytes")
+    old = [spark.conf.get(key) for key in keys]
     frames = []
-    for parts in (2, 16, 5):
-        results, _ = pipeline.run_extraction(
-            pipeline.read_transcripts(spark, tiny_transcripts_path),
-            target_partitions=parts)
-        frames.append(_normalize(results.toPandas()))
+    try:
+        spark.conf.set("spark.sql.files.openCostInBytes", "1")
+        for parts in (2, 16, 5):
+            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+            results, _ = pipeline.run_extraction(
+                pipeline.read_transcripts(spark, tiny_transcripts_path))
+            frames.append(_normalize(results.toPandas()))
+    finally:
+        for key, value in zip(keys, old):
+            spark.conf.set(key, value)
     pd.testing.assert_frame_equal(frames[0], frames[1], check_dtype=False)
     pd.testing.assert_frame_equal(frames[0], frames[2], check_dtype=False)
 
@@ -553,6 +561,16 @@ def test_lineage_writes_cache_nothing(spark, tiny_transcripts_path,
         names = {node.name() for e in ids for node in _plan_nodes(store, e)}
         assert "MapInPandas" in names  # the status store saw the kernel
         assert not {n for n in names if "InMemory" in n}, names
+
+
+def test_run_pipeline_job_budget(spark, tiny_transcripts_path, tmp_path):
+    """Job budget: one run_pipeline call with an output and a lineage path
+    runs 5 Spark jobs — the input's schema inference, the range exchange's
+    sampling and map-stage jobs, the output write and the lineage write. A
+    change that adds or removes a job must change this number."""
+    assert spark_jobs_of(spark, lambda: pipeline.run_pipeline(
+        spark, tiny_transcripts_path, output_path=str(tmp_path / "out"),
+        lineage_path=str(tmp_path / "lineage"))) == 5
 
 
 def test_compact_parquet_empty_input_returns_empty_stats(spark, tmp_path):

@@ -84,16 +84,63 @@ def test_map_kernel_is_the_only_map_in_pandas_call():
     assert found == [("pipeline.py", "map_kernel")]
 
 
+def test_every_option_has_a_caller():
+    """A public option exists only when a non-test caller sets it: an
+    ``ast`` scan finds, for every default-valued parameter of the public
+    functions in ``pipeline.py``, ``checkpoint.py`` and ``core/extract.py``,
+    a call in the package, ``perfbench/``, ``tools/``, ``bench.py`` or
+    ``__spark_entry__.py`` that passes it by keyword or by position.
+    ``functools.partial(f, ...)`` counts as a call of ``f``."""
+    import ast
+    from pathlib import Path
+
+    package = Path(pipeline.__file__).parent
+    repo = package.parent
+    options = {}  # (function, parameter) -> position, None if keyword-only
+    for module in ("pipeline.py", "checkpoint.py", "core/extract.py"):
+        for node in ast.parse((package / module).read_text()).body:
+            if (not isinstance(node, ast.FunctionDef)
+                    or node.name.startswith("_")):
+                continue
+            args = node.args.posonlyargs + node.args.args
+            first = len(args) - len(node.args.defaults)
+            options.update(((node.name, a.arg), i)
+                           for i, a in enumerate(args) if i >= first)
+            options.update(((node.name, a.arg), None)
+                           for a, d in zip(node.args.kwonlyargs,
+                                           node.args.kw_defaults)
+                           if d is not None)
+
+    def name(func):
+        return getattr(func, "id", None) or getattr(func, "attr", None)
+
+    callers = [*package.rglob("*.py"), *(repo / "perfbench").rglob("*.py"),
+               *(repo / "tools").rglob("*.py"), repo / "bench.py",
+               repo / "__spark_entry__.py"]
+    passed = set()
+    for path in callers:
+        for call in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(call, ast.Call):
+                continue
+            func, args = name(call.func), call.args
+            if func == "partial" and args:
+                func, args = name(args[0]), args[1:]
+            passed.update((func, k.arg) for k in call.keywords)
+            passed.update((func, p) for (f, p), i in options.items()
+                          if f == func and i is not None and i < len(args))
+    assert sorted(set(options) - passed) == []
+
+
 def test_extraction_partitions_are_task_slots_for_small_input_else_conf(
         spark, tiny_transcripts_path):
-    """Unless target_partitions is given, the range Exchange gets
-    min(shuffle.partitions, task slots) partitions when the input is at most
-    openCostInBytes per slot, and shuffle.partitions otherwise."""
+    """The range Exchange gets min(shuffle.partitions, task slots)
+    partitions when the input is at most openCostInBytes per slot, and
+    shuffle.partitions otherwise."""
     import re
 
-    def exchange_partitions(**kw) -> int:
+    def exchange_partitions() -> int:
         df = pipeline.read_transcripts(spark, tiny_transcripts_path)
-        results, _ = pipeline.run_extraction(df, **kw)
+        results, _ = pipeline.run_extraction(df)
         counts = re.findall(RANGE_EXCHANGE, plan_of(results))
         assert counts and len(set(counts)) == 1, counts
         return int(counts[0])
@@ -104,7 +151,6 @@ def test_extraction_partitions_are_task_slots_for_small_input_else_conf(
     assert spark.sparkContext.defaultParallelism == 4
     assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
     assert exchange_partitions() == 4                       # small: one wave
-    assert exchange_partitions(target_partitions=16) == 16  # explicit wins
     for key, value, expect in (
             ("spark.sql.shuffle.partitions", "2", 2),       # conf below slots
             ("spark.sql.files.openCostInBytes", str(per_slot), 4),

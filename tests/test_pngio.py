@@ -136,7 +136,7 @@ def test_image_features_end_to_end_on_real_pngs(spark):
     phash) over REAL PNG bytes, same output schema as the Fake path, values
     pinned against a driver-side numpy recomputation."""
     media = mm.synth_png_media(spark, n=8)
-    feats, _ = mm.image_features(media, decoder=mm.MediaDecoder())
+    feats, _ = mm.image_features(media)
     got = {r["media_id"]: r for r in feats.collect()}
     assert len(got) == 8
     assert feats.columns == ["media_id", "out_width", "out_height",

@@ -279,8 +279,7 @@ def test_stream_media_real_codec_quarantines_corrupt_payload(spark,
            .sort_values("media_id").reset_index(drop=True))
     clean = pd.concat([png, jpg], ignore_index=True)
     expected = (mm.image_features(
-        spark.createDataFrame(clean, schema=mm.MEDIA_SCHEMA_DDL),
-        decoder=mm.MediaDecoder())[0].toPandas()
+        spark.createDataFrame(clean, schema=mm.MEDIA_SCHEMA_DDL))[0].toPandas()
         .sort_values("media_id").reset_index(drop=True))
     assert 999 not in set(got["media_id"])  # quarantined, not poisoned
     assert len(got) == len(expected) == 10
@@ -348,8 +347,7 @@ def test_stream_media_audio_kind_reaches_sink(spark, stream_dirs):
     got = (spark.read.parquet(stream_dirs["out"]).toPandas()
            .sort_values("media_id").reset_index(drop=True))
     expected = (mm.audio_features(
-        spark.createDataFrame(wav, schema=mm.MEDIA_SCHEMA_DDL),
-        decoder=mm.MediaDecoder())[0].toPandas()
+        spark.createDataFrame(wav, schema=mm.MEDIA_SCHEMA_DDL))[0].toPandas()
         .sort_values("media_id").reset_index(drop=True))
     assert got["media_id"].tolist() == expected["media_id"].tolist()
     assert 999 not in set(got["media_id"])          # corrupt WAV quarantined

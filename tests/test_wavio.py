@@ -184,7 +184,7 @@ def test_audio_features_end_to_end_on_real_wavs(spark):
     decodes, n_samples reports FILE truth (not metadata), and values match
     a local decode of the same payloads exactly."""
     media = mm.synth_wav_media(spark, n=6)
-    feats, _ = mm.audio_features(media, decoder=mm.MediaDecoder())
+    feats, _ = mm.audio_features(media)
     got = {r["media_id"]: r for r in feats.collect()}
     assert sorted(got) == list(range(6))
     for row in media.collect():
@@ -210,9 +210,8 @@ def test_audio_features_mismatched_metadata_refused(spark):
         "'format', meta.format) AS meta").limit(1)
     mixed = media.unionByName(lying)
     with pytest.raises(Exception, match="refusing to feature-extract"):
-        mm.audio_features(mixed, decoder=mm.MediaDecoder())[0].collect()
-    good = mm.audio_features(mixed, decoder=mm.MediaDecoder(),
-                             on_error="skip")[0].collect()
+        mm.audio_features(mixed)[0].collect()
+    good = mm.audio_features(mixed, on_error="skip")[0].collect()
     assert sorted(r["media_id"] for r in good) == [0, 1, 2]
 
 
@@ -222,11 +221,10 @@ def test_audio_features_corrupt_payload_quarantined(spark):
         "media_id + 50 AS media_id", "kind",
         "cast('not audio' as binary) AS payload", "meta").limit(1)
     mixed = media.unionByName(corrupt)
-    good = mm.audio_features(mixed, decoder=mm.MediaDecoder(),
-                             on_error="skip")[0].collect()
+    good = mm.audio_features(mixed, on_error="skip")[0].collect()
     assert sorted(r["media_id"] for r in good) == [0, 1, 2, 3]
     with pytest.raises(Exception, match="WAV:"):
-        mm.audio_features(mixed, decoder=mm.MediaDecoder())[0].collect()
+        mm.audio_features(mixed)[0].collect()
 
 
 def test_library_decoder_routes_riff_to_wav_decoder():
