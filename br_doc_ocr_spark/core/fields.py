@@ -315,10 +315,8 @@ def calculate_tax_total(taxes: dict[str, Any]) -> float:
     return total
 
 
-def validate_invoice_totals(
-    data: dict[str, Any], tolerance: float = 0.01
-) -> dict[str, Any]:
-    """``valor_total ≈ valor_produtos + valor_impostos`` (±tolerance).
+def validate_invoice_totals(data: dict[str, Any]) -> dict[str, Any]:
+    """``valor_total ≈ valor_produtos + valor_impostos`` (±0.01).
 
     Parity: ``extraction.py:640-674`` including the null→0 coercion.
     """
@@ -330,7 +328,7 @@ def validate_invoice_totals(
         return {"valid": False, "error": "Invalid numeric values"}
     expected = produtos + impostos
     diff = abs(total - expected)
-    if diff <= tolerance:
+    if diff <= 0.01:
         return {"valid": True}
     return {
         "valid": False,
@@ -454,9 +452,7 @@ def flag_low_confidence(
 
 
 def enrich_extraction_result(
-    extracted_data: dict[str, Any],
-    confidence_scores: dict[str, float],
-    threshold: float = CONFIDENCE_THRESHOLD,
+    extracted_data: dict[str, Any], confidence_scores: dict[str, float]
 ) -> dict[str, Any]:
     """Wrap data + scores + low-confidence flags, preserving inputs.
 
@@ -465,7 +461,7 @@ def enrich_extraction_result(
     return {
         "extracted_data": extracted_data,
         "confidence_scores": confidence_scores,
-        "low_confidence_fields": flag_low_confidence(confidence_scores, threshold),
+        "low_confidence_fields": flag_low_confidence(confidence_scores),
     }
 
 

@@ -87,18 +87,17 @@ def json_indent2(fields: Column) -> Column:
         sf.concat(sf.lit("{\n"), sf.array_join(entries, ",\n"), sf.lit("\n}")))
 
 
-def to_training_samples(results: DataFrame, fields_col: str = "fields",
-                        document_type_col: str | None = None) -> DataFrame:
+def to_training_samples(results: DataFrame) -> DataFrame:
     """Conversation-format training samples from extraction results (M10).
 
     One row per input row with ``messages`` (array<struct<role,content>> —
     the reference's 3-message list), ``expected_output`` (indent-2 JSON of
-    the extracted fields), and ``document_type``. The multimodal payload
+    the extracted ``fields``), and ``document_type`` (derived from the
+    fields, see :func:`document_type_from_fields`). The multimodal payload
     column stays alongside if present (the reference carries ``image``
     through, dataset_adapter.py:92)."""
-    fields = sf.col(fields_col)
-    doc_type = (sf.col(document_type_col) if document_type_col
-                else document_type_from_fields(fields))
+    fields = sf.col("fields")
+    doc_type = document_type_from_fields(fields)
     assistant = json_indent2(fields)
     user = sf.concat(sf.lit(USER_MESSAGE_PREFIX), doc_type,
                      sf.lit(USER_MESSAGE_SUFFIX))
@@ -115,10 +114,9 @@ def to_training_samples(results: DataFrame, fields_col: str = "fields",
     })
 
 
-def filter_by_document_type(df: DataFrame, types: list[str],
-                            type_col: str = "document_type") -> DataFrame:
+def filter_by_document_type(df: DataFrame, types: list[str]) -> DataFrame:
     """dataset_adapter.py:119-139 — keep only the requested types."""
-    return df.filter(sf.col(type_col).isin(types))
+    return df.filter(sf.col("document_type").isin(types))
 
 
 def split_dataset(df: DataFrame, train_ratio: float = 0.8,
@@ -151,28 +149,27 @@ def split_dataset(df: DataFrame, train_ratio: float = 0.8,
     }
 
 
-def with_padded_ids(df: DataFrame, ids_col: str = "input_ids",
-                    group_col: str | None = None, pad: int = 0) -> DataFrame:
-    """Collate pad-to-max (M13, dataset_adapter.py:198-206): pad each token
-    array to the max length of its batch group (``group_col``; the whole
-    frame when None) with ``pad``. With a group column: one window max —
+def with_padded_ids(df: DataFrame, group_col: str | None = None) -> DataFrame:
+    """Collate pad-to-max (M13, dataset_adapter.py:198-206): pad each
+    ``input_ids`` array to the max length of its batch group (``group_col``;
+    the whole frame when None) with 0. With a group column: one window max —
     a bounded per-group aggregate. Without one: the global max is computed
     as a scalar aggregate and broadcast back (NOT an unpartitioned window,
     which would funnel every row into a single task)."""
-    size_col = sf.size(sf.col(ids_col))
+    size_col = sf.size(sf.col("input_ids"))
     if group_col:
         from pyspark.sql import Window
 
         maxlen = sf.max(size_col).over(Window.partitionBy(group_col))
         padded = sf.concat(
-            sf.col(ids_col), sf.array_repeat(sf.lit(pad), maxlen - size_col))
-        return df.withColumn(ids_col, padded)
+            sf.col("input_ids"), sf.array_repeat(sf.lit(0), maxlen - size_col))
+        return df.withColumn("input_ids", padded)
     max_df = df.agg(sf.max(size_col).alias("_maxlen"))
     out = df.crossJoin(sf.broadcast(max_df))
     padded = sf.concat(
-        sf.col(ids_col),
-        sf.array_repeat(sf.lit(pad), sf.col("_maxlen") - size_col))
-    return out.withColumn(ids_col, padded).drop("_maxlen")
+        sf.col("input_ids"),
+        sf.array_repeat(sf.lit(0), sf.col("_maxlen") - size_col))
+    return out.withColumn("input_ids", padded).drop("_maxlen")
 
 
 def write_training_dataset(results: DataFrame, output_dir: str,

@@ -26,45 +26,50 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as sf
 
+# The MinHash shape (word shingle width, seed permutations, LSH bands),
+# shared with its DuckDB oracle, queries._minhash_oracle_sql.
+SHINGLE_N = 3
+NUM_HASHES = 32
+BANDS = 8
+
 
 # ---------------------------------------------------------------------------
 # Exact dedup
 # ---------------------------------------------------------------------------
 
-def exact_duplicates(df: DataFrame, key_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
-    """Group identical content → (keeper id, duplicate count).
+def exact_duplicates(df: DataFrame) -> DataFrame:
+    """Group identical ``text`` → (keeper ``doc_id``, duplicate count).
 
     The reference's only dedup concept is the ``file_hash`` unique key
     (``specs/.../data-model.md:50,56``) → hash group-by here.
     """
     return (
-        df.groupBy(key_col)
-        .agg(sf.min(id_col).alias("keeper_id"), sf.count("*").alias("n_copies"))
+        df.groupBy("text")
+        .agg(sf.min("doc_id").alias("keeper_id"),
+             sf.count("*").alias("n_copies"))
         .filter(sf.col("n_copies") > 1)
     )
 
 
-def drop_exact_duplicates(df: DataFrame, key_col: str = "text",
-                          id_col: str = "doc_id") -> DataFrame:
-    """Keep the min-id row per identical content — deterministic, unlike
-    ``dropDuplicates`` whose survivor is partition-order dependent.
+def drop_exact_duplicates(df: DataFrame) -> DataFrame:
+    """Keep the min-``doc_id`` row per identical ``text`` — deterministic,
+    unlike ``dropDuplicates`` whose survivor is partition-order dependent.
 
     NULL keys dedup as one group like any other value (review r04: a plain
     semi-join's non-null-safe equality silently DELETED every NULL-text
     row — failed-extract rows are legitimate input — instead of keeping
-    one); the join condition is null-safe on the key column.
+    one); the join condition is null-safe on ``text``.
 
     Both sides are explicitly aliased and the condition built from
     qualified refs: mixing a frame's columns with its groupBy-derived
     child's made Spark log 'Constructing trivially true equals predicate'
     and resolve only via ambiguous-self-join disambiguation — working but
     fragile across Spark versions (ADVICE r04)."""
-    keepers = (df.groupBy(key_col)
-               .agg(sf.min(id_col).alias("_keeper_id")).alias("r"))
+    keepers = (df.groupBy("text")
+               .agg(sf.min("doc_id").alias("_keeper_id")).alias("r"))
     left = df.alias("l")
-    cond = (sf.col(f"l.{key_col}").eqNullSafe(sf.col(f"r.{key_col}"))
-            & (sf.col(f"l.{id_col}") == sf.col("r._keeper_id")))
+    cond = (sf.col("l.text").eqNullSafe(sf.col("r.text"))
+            & (sf.col("l.doc_id") == sf.col("r._keeper_id")))
     return left.join(keepers, on=cond, how="left_semi")
 
 
@@ -72,8 +77,8 @@ def drop_exact_duplicates(df: DataFrame, key_col: str = "text",
 # Shingling + MinHash (pure column expressions)
 # ---------------------------------------------------------------------------
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Word n-gram shingle array (distinct), built JVM-side.
+def word_shingles(text: Column) -> Column:
+    """Word ``SHINGLE_N``-gram shingle array (distinct), built JVM-side.
 
     The tokenizer output is bound to a lambda VARIABLE via a single-element
     ``transform`` wrapper before the per-position lambda consumes it: a
@@ -84,69 +89,45 @@ def word_shingles(text: Column, n: int = 3) -> Column:
     tokens = sf.split(sf.trim(sf.lower(text)), r"\s+")
 
     def grams_of(toks: Column) -> Column:
-        k = sf.size(toks) - (n - 1)
+        k = sf.size(toks) - (SHINGLE_N - 1)
         return sf.when(k <= 0, sf.array(sf.concat_ws(" ", toks))).otherwise(
             sf.transform(
                 sf.sequence(sf.lit(1), sf.greatest(k, sf.lit(1))),
-                lambda i: sf.concat_ws(" ", sf.slice(toks, i, n)),
+                lambda i: sf.concat_ws(" ", sf.slice(toks, i, SHINGLE_N)),
             )
         )
 
     return sf.array_distinct(sf.transform(sf.array(tokens), grams_of)[0])
 
 
-def minhash_signature(shingle_hashes: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature from PRE-HASHED shingles: per seed i, min over
-    ``xxhash64(h, i)`` of the shingle hashes.
+def minhash_signatures(df: DataFrame) -> DataFrame:
+    """(id, sig ARRAY<LONG>) per ``doc_id`` — the codegen-friendly MinHash
+    of ``text``.
 
-    Takes a column of LONG hashes, not strings: hash each shingle string
-    exactly once upstream (``transform(shingles, s -> xxhash64(s))``), then
-    derive the ``num_hashes`` permutations by re-hashing the 8-byte longs —
-    seed-hashing full shingle strings ``num_hashes`` times profiled ~30×
-    slower. All JVM-side, no Python.
-
-    NOTE: higher-order functions (``transform``/``array_min``) run on Spark's
-    interpreted expression path, ~1 µs per element — fine for ad-hoc use, but
-    the LSH pipeline uses :func:`minhash_signatures` (explode + codegen'd
-    projection + partial-agg min), which computes the SAME values at
-    whole-stage-codegen speed (profiled ~10× faster end-to-end).
-    """
-    return sf.array(*[
-        sf.array_min(sf.transform(shingle_hashes,
-                                  lambda h: sf.xxhash64(h, sf.lit(i))))
-        for i in range(num_hashes)
-    ])
-
-
-def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text", n: int = 3,
-                       num_hashes: int = 32) -> DataFrame:
-    """(id, sig ARRAY<LONG>) per document — the codegen-friendly MinHash.
-
-    Explodes the per-doc shingle-hash array, computes all ``num_hashes``
+    Explodes the per-doc shingle-hash array, computes all ``NUM_HASHES``
     seed-hashes ``xxhash64(h, i)`` in ONE projection (whole-stage codegen —
     higher-order lambdas are interpreted and profile ~10× slower here), and
     reduces with ``groupBy(id).min`` per seed: map-side partial aggregation
     means the shuffle carries one 8-byte min per (partition, id, seed), not
-    the shingles. Values are identical to :func:`minhash_signature` for any
-    document whose shingle array is non-empty; a NULL-text document (its
-    shingle array is null → explode emits nothing) is DROPPED here, where
-    :func:`minhash_signature` would return a null-element signature. Benign
-    for thresholded near-dup use — a shingle-less doc can't clear any
-    positive Jaccard threshold — but callers needing every id should
-    left-join signatures back onto the id set (ADVICE r01)."""
-    sh = df.select(sf.col(id_col).alias("id"),
-                   word_shingles(sf.col(text_col), n).alias("_sh"))
+    the shingles. Each shingle string is hashed once and the seeds re-hash
+    its 8-byte long (seed-hashing the strings ``NUM_HASHES`` times profiled
+    ~30× slower). A NULL-text document (its shingle array is null → explode
+    emits nothing) is DROPPED here. Benign for thresholded near-dup use — a
+    shingle-less doc can't clear any positive Jaccard threshold — but
+    callers needing every id should left-join signatures back onto the id
+    set (ADVICE r01)."""
+    sh = df.select(sf.col("doc_id").alias("id"),
+                   word_shingles(sf.col("text")).alias("_sh"))
     exploded = sh.select(
         "id", sf.explode(sf.transform("_sh", lambda s: sf.xxhash64(s))).alias("_h"))
-    # SQL-string construction for the num_hashes-wide blocks: one py4j call
+    # SQL-string construction for the NUM_HASHES-wide blocks: one py4j call
     # per column instead of ~5 — the Column-composed form spent ~0.4 s of
     # driver time per build (see the matching note in simhash_signatures)
     mins = exploded.selectExpr(
-        "id", *[f"xxhash64(_h, {i}) AS _p{i}" for i in range(num_hashes)]
+        "id", *[f"xxhash64(_h, {i}) AS _p{i}" for i in range(NUM_HASHES)]
     ).groupBy("id").agg(
-        *[sf.expr(f"min(_p{i}) AS _m{i}") for i in range(num_hashes)])
-    sig_arr = ", ".join(f"_m{i}" for i in range(num_hashes))
+        *[sf.expr(f"min(_p{i}) AS _m{i}") for i in range(NUM_HASHES)])
+    sig_arr = ", ".join(f"_m{i}" for i in range(NUM_HASHES))
     return mins.selectExpr("id", f"array({sig_arr}) AS sig")
 
 
@@ -163,13 +144,11 @@ def jaccard_counts(a: Column, b: Column) -> tuple[Column, Column]:
             sf.size(sf.array_union(a, b)))
 
 
-def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text", n: int = 3,
-                        threshold: float = 0.5) -> DataFrame:
-    """All-pairs n-gram Jaccard ≥ threshold (O(n²) — small inputs / test
+def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
+    """All-pairs shingle Jaccard ≥ threshold (O(n²) — small inputs / test
     oracle; the scale path is :func:`minhash_lsh_candidates` + verify)."""
-    sh = df.select(sf.col(id_col).alias("id"),
-                   word_shingles(sf.col(text_col), n).alias("sh"))
+    sh = df.select(sf.col("doc_id").alias("id"),
+                   word_shingles(sf.col("text")).alias("sh"))
     left = sh.alias("l")
     right = sh.alias("r")
     return (
@@ -182,34 +161,21 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def minhash_lsh_candidates(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-) -> DataFrame:
+def minhash_lsh_candidates(df: DataFrame) -> DataFrame:
     """Candidate near-dup pairs via banded MinHash (shingle → minhash → band →
     bucket self-join). Returns distinct (id_a < id_b) candidate pairs with
     their estimated signature similarity.
 
-    Shuffle profile: one explode (rows × bands) + one equi-join keyed by
+    Shuffle profile: one explode (rows × BANDS) + one equi-join keyed by
     (band_idx, band_hash) — colliding docs only; no cartesian anywhere.
     """
-    if bands < 1 or num_hashes % bands:
-        raise ValueError(
-            f"bands={bands} must divide num_hashes={num_hashes} evenly — "
-            "a remainder would silently exclude trailing signature values "
-            "from banding (and bands > num_hashes would generate malformed "
-            "SQL)")
-    rows_per_band = num_hashes // bands
-    sig = minhash_signatures(df, id_col, text_col, n, num_hashes)
+    rows_per_band = NUM_HASHES // BANDS
+    sig = minhash_signatures(df)
     # materialize the signature table ONCE before the band self-join — the
     # same double-execution shape simhash_near_duplicates fixes: without
     # this, the join's build side replans the whole shingle-explode +
     # 32-min aggregation from raw text (neither side is an Exchange, so
-    # ReuseExchange never applies). Signatures are 8·num_hashes bytes/doc,
+    # ReuseExchange never applies). Signatures are 8·NUM_HASHES bytes/doc,
     # the cheapest thing in the query to hold (interleaved A/B at sf0.1:
     # median 1.55 s → 1.37 s end-to-end). Not fault-tolerant — on a real
     # cluster prefer setCheckpointDir + .checkpoint().
@@ -220,7 +186,7 @@ def minhash_lsh_candidates(
             b=b,
             elems=", ".join(f"element_at(sig, {b * rows_per_band + r + 1})"
                             for r in range(rows_per_band)))
-        for b in range(bands))
+        for b in range(BANDS))
     banded = sig.selectExpr(
         "id", "sig", f"explode(array({band_structs})) AS band",
     ).select("id", "sig", "band.band_idx", "band.band_hash")
@@ -234,28 +200,21 @@ def minhash_lsh_candidates(
     # est_similarity is computed BEFORE the pair dedup: it depends only on the
     # two ids (their signatures), so every duplicate band-collision row carries
     # the same value — the dropDuplicates shuffle then moves 24-byte
-    # (id_a, id_b, est) rows instead of two num_hashes-long signature arrays
+    # (id_a, id_b, est) rows instead of two NUM_HASHES-long signature arrays
     # (~20× less shuffle volume for a few redundant 32-element comparisons).
     return (
         l.join(r, [sf.col("l.band_idx") == sf.col("r.band_idx"),
                    sf.col("l.band_hash") == sf.col("r.band_hash"),
                    sf.col("l.id") < sf.col("r.id")])
         .select(sf.col("l.id").alias("id_a"), sf.col("r.id").alias("id_b"),
-                sf.round(sf.size(matches) / sf.lit(float(num_hashes)), 6)
+                sf.round(sf.size(matches) / sf.lit(float(NUM_HASHES)), 6)
                   .alias("est_similarity"))
         .dropDuplicates(["id_a", "id_b"])
     )
 
 
-def minhash_near_duplicates(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.5,
-    num_hashes: int = 32,
-    bands: int = 8,
-) -> DataFrame:
+def minhash_near_duplicates(df: DataFrame,
+                            threshold: float = 0.5) -> DataFrame:
     """Scale path end-to-end: LSH candidates → exact Jaccard verify ≥ threshold.
 
     The threshold filter compares the UNROUNDED ratio (``n_common/n_union >=
@@ -263,9 +222,9 @@ def minhash_near_duplicates(
     ints), and the output carries the exact ``n_common``/``n_union`` counts
     alongside the rounded display ratio, so the cross-engine oracle can
     hash integers instead of floats."""
-    cands = minhash_lsh_candidates(df, id_col, text_col, n, num_hashes, bands)
-    sh = df.select(sf.col(id_col).alias("id"),
-                   word_shingles(sf.col(text_col), n).alias("sh"))
+    cands = minhash_lsh_candidates(df)
+    sh = df.select(sf.col("doc_id").alias("id"),
+                   word_shingles(sf.col("text")).alias("sh"))
     inter, union = jaccard_counts(sf.col("sh_a"), sf.col("sh_b"))
     verified = (
         cands.join(sh.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), "id_a")
@@ -438,8 +397,7 @@ def simhash_signatures(df: DataFrame, id_col: str = "doc_id",
     return guarded.selectExpr("id", f"({pack}) AS {_bq(out_col)}")
 
 
-def simhash_near_duplicates(df: DataFrame, id_col: str = "doc_id",
-                            text_col: str = "text",
+def simhash_near_duplicates(df: DataFrame,
                             max_hamming: int = 3) -> DataFrame:
     """Near-dups with Hamming(simhash) ≤ max_hamming via the 4×16-bit-chunk
     pigeonhole join (d ≤ 3 ⇒ at least one chunk identical) — candidates from
@@ -454,7 +412,7 @@ def simhash_near_duplicates(df: DataFrame, id_col: str = "doc_id",
             f"max_hamming={max_hamming} exceeds the 4-chunk pigeonhole "
             "guarantee (complete only for <= 3); raise the chunk count "
             "instead of silently missing pairs")
-    sh = simhash_signatures(df, id_col=id_col, text_col=text_col)
+    sh = simhash_signatures(df)
     # materialize the signature table ONCE before the self-join: without
     # this the broadcast/build side replans the whole three-stage vote
     # aggregation from the raw text (the left side is not an Exchange, so
@@ -493,11 +451,10 @@ def simhash_near_duplicates(df: DataFrame, id_col: str = "doc_id",
 # key is the exact-dup special case of this).
 # ---------------------------------------------------------------------------
 
-def connected_components(pairs: DataFrame, id_a: str = "id_a",
-                         id_b: str = "id_b",
-                         max_iterations: int = 25,
+def connected_components(pairs: DataFrame, max_iterations: int = 25,
                          stats: dict | None = None) -> DataFrame:
-    """(id, component) for every id appearing in ``pairs``, where component
+    """(id, component) for every id appearing in the ``id_a``/``id_b``
+    columns of ``pairs``, where component
     is the SMALLEST id reachable through the pair graph — deterministic
     cluster representatives.
 
@@ -514,7 +471,8 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     Raises RuntimeError if the budget is exhausted before the fixpoint —
     a silent partial labeling would merge/split clusters undetectably.
     """
-    edges = pairs.select(sf.col(id_a).alias("src"), sf.col(id_b).alias("dst"))
+    edges = pairs.select(sf.col("id_a").alias("src"),
+                         sf.col("id_b").alias("dst"))
     und = (edges.unionByName(edges.select(sf.col("dst").alias("src"),
                                           sf.col("src").alias("dst")))
            .distinct())
@@ -545,23 +503,18 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
 
 
 def drop_near_duplicates(df: DataFrame, pairs: DataFrame,
-                         id_col: str = "doc_id",
                          stats: dict | None = None) -> DataFrame:
-    """Keep one row per near-dup cluster (the min-id representative) plus
-    every row not mentioned in ``pairs`` — the end-to-end dedup sink."""
+    """Keep one row per near-dup cluster (the min-``doc_id`` representative)
+    plus every row not mentioned in ``pairs`` — the end-to-end dedup sink."""
     comps = connected_components(pairs, stats=stats)
     losers = comps.filter(sf.col("id") != sf.col("comp")).select(
-        sf.col("id").alias(id_col))
-    return df.join(losers, id_col, "left_anti")
+        sf.col("id").alias("doc_id"))
+    return df.join(losers, "doc_id", "left_anti")
 
 
-def drop_minhash_near_duplicates(df: DataFrame, id_col: str = "doc_id",
-                                 text_col: str = "text",
-                                 threshold: float = 0.5) -> DataFrame:
+def drop_minhash_near_duplicates(df: DataFrame) -> DataFrame:
     """End-to-end corpus dedup in one call: MinHash/LSH candidate pairs →
-    exact-Jaccard verify ≥ threshold → connected components → keep the
+    exact-Jaccard verify ≥ 0.5 → connected components → keep the
     min-id representative per cluster (plus all untouched rows). The full
     pretraining-dedup pipeline, every stage the bounded-shuffle scale path."""
-    pairs = minhash_near_duplicates(df, id_col=id_col, text_col=text_col,
-                                    threshold=threshold)
-    return drop_near_duplicates(df, pairs, id_col=id_col)
+    return drop_near_duplicates(df, minhash_near_duplicates(df))

@@ -1,4 +1,5 @@
-"""Similarity search over embedding columns (``array<float>``).
+"""Similarity search over ``embedding`` columns (``array<float>``) keyed
+by ``vec_id``.
 
 - :func:`cosine_topk` — brute-force cosine top-k against one query vector:
   the dot product and norms are ``aggregate``/``zip_with`` column expressions
@@ -72,8 +73,8 @@ def cosine(a: Column, b: Column) -> Column:
     ).otherwise(guarded)
 
 
-def cosine_topk(embeddings: DataFrame, query_vec: list[float], k: int = 10,
-                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def cosine_topk(embeddings: DataFrame, query_vec: list[float],
+                k: int = 10) -> DataFrame:
     """Brute-force cosine top-k vs a literal query vector (the exact baseline
     every ANN variant is verified against). Deterministic tie-break on id."""
     # one parsed literal array, not len(dim) py4j lit() round trips; repr()
@@ -81,16 +82,16 @@ def cosine_topk(embeddings: DataFrame, query_vec: list[float], k: int = 10,
     q = sf.expr(
         f"array({', '.join(f'{float(v)!r}D' for v in _finite(query_vec))})")
     scored = embeddings.select(
-        sf.col(id_col),
-        sf.round(cosine(sf.col(vec_col).cast("array<double>"), q), 6).alias("cosine"),
+        "vec_id",
+        sf.round(cosine(sf.col("embedding").cast("array<double>"), q), 6)
+        .alias("cosine"),
     )
-    return scored.orderBy(sf.desc("cosine"), sf.asc(id_col)).limit(k)
+    return scored.orderBy(sf.desc("cosine"), sf.asc("vec_id")).limit(k)
 
 
-def knn_join(queries: DataFrame, corpus: DataFrame, k: int = 5,
-             q_id: str = "q_id", c_id: str = "vec_id",
-             vec_col: str = "embedding") -> DataFrame:
-    """k nearest corpus rows per query row. The query side is broadcast (small
+def knn_join(queries: DataFrame, corpus: DataFrame, k: int = 5) -> DataFrame:
+    """k nearest corpus rows (``vec_id``) per query row (``q_id``), both
+    sides carrying an ``embedding``. The query side is broadcast (small
     dim table); the corpus streams — no shuffle of the big side ever carries
     vectors.
 
@@ -98,7 +99,7 @@ def knn_join(queries: DataFrame, corpus: DataFrame, k: int = 5,
     filter DIRECTLY over ``row_number`` lets Catalyst's InferWindowGroupLimit
     rule (SPARK-37099) insert a map-side Partial WindowGroupLimit before the
     exchange — every scan partition is cut to ≤ k rows per query BEFORE the
-    shuffle, so the shuffle carries ≤ P·Q·k slim (q_id, c_id, cosine) rows
+    shuffle, so the shuffle carries ≤ P·Q·k slim (q_id, vec_id, cosine) rows
     and the per-query final task ranks ≤ P·k rows, never the 10⁹-rows-per-
     task funnel of a raw window (tests/test_plans.py locks the Partial
     operator's presence below the Exchange). Don't restructure the filter
@@ -106,13 +107,15 @@ def knn_join(queries: DataFrame, corpus: DataFrame, k: int = 5,
     the window order) — that defeats the rule."""
     from pyspark.sql import Window
 
-    q = queries.select(sf.col(q_id), sf.col(vec_col).cast("array<double>").alias("qv"))
-    c = corpus.select(sf.col(c_id), sf.col(vec_col).cast("array<double>").alias("cv"))
+    q = queries.select("q_id",
+                       sf.col("embedding").cast("array<double>").alias("qv"))
+    c = corpus.select("vec_id",
+                      sf.col("embedding").cast("array<double>").alias("cv"))
     scored = c.join(sf.broadcast(q)).select(
-        q_id, c_id,
+        "q_id", "vec_id",
         sf.round(cosine(sf.col("cv"), sf.col("qv")), 6).alias("cosine"),
     )
-    w = Window.partitionBy(q_id).orderBy(sf.desc("cosine"), sf.asc(c_id))
+    w = Window.partitionBy("q_id").orderBy(sf.desc("cosine"), sf.asc("vec_id"))
     return (scored.withColumn("rank", sf.row_number().over(w))
             .filter(sf.col("rank") <= k))
 
@@ -159,7 +162,6 @@ def probe_buckets(query_vec: list[float], n_bits: int = 8,
 
 
 def ivf_topk(embeddings: DataFrame, query_vec: list[float], k: int = 10,
-             id_col: str = "vec_id", vec_col: str = "embedding",
              n_bits: int = 8, probe_hamming: int = 1) -> DataFrame:
     """Approximate top-k with multi-probe over an UN-materialized corpus:
     computes the quantizer per row and filters — a full scan with a cheap
@@ -170,13 +172,13 @@ def ivf_topk(embeddings: DataFrame, query_vec: list[float], k: int = 10,
     embeddings: 0.1-0.3 single-probe → 0.7-1.0 at probe_hamming=1."""
     cells = probe_buckets(query_vec, n_bits, probe_hamming)
     cell = embeddings.filter(
-        ivf_bucket(sf.col(vec_col).cast("array<double>"), n_bits).isin(cells)
+        ivf_bucket(sf.col("embedding").cast("array<double>"), n_bits)
+        .isin(cells)
     )
-    return cosine_topk(cell, query_vec, k, id_col, vec_col)
+    return cosine_topk(cell, query_vec, k)
 
 
-def write_ivf_index(embeddings: DataFrame, path: str,
-                    vec_col: str = "embedding", n_bits: int = 8,
+def write_ivf_index(embeddings: DataFrame, path: str, n_bits: int = 8,
                     files_per_cell: int = 1) -> None:
     """Materialize the IVF index: the corpus written as parquet partitioned
     by the quantizer cell (``bucket=<cell>/`` directories). A probe then
@@ -192,15 +194,15 @@ def write_ivf_index(embeddings: DataFrame, path: str,
     later scanned as) ONE task's file — raise it to salt the write shuffle
     by a deterministic hash of the vector so each cell lands as N files,
     restoring both write parallelism and probe-side split parallelism."""
-    bucketed = embeddings.withColumn(
-        "bucket", ivf_bucket(sf.col(vec_col).cast("array<double>"), n_bits))
+    bucketed = embeddings.withColumn("bucket", ivf_bucket(
+        sf.col("embedding").cast("array<double>"), n_bits))
     if files_per_cell > 1:
         # explicit partition count: files per cell = distinct shuffle
         # partitions holding that cell, so the (bucket, salt) combos need
         # at least their own partition count (2x headroom vs hash
         # collisions) — the session default would collapse them
         n_parts = 2 * (1 << n_bits) * files_per_cell
-        salt = sf.pmod(sf.hash(sf.col(vec_col)), sf.lit(files_per_cell))
+        salt = sf.pmod(sf.hash(sf.col("embedding")), sf.lit(files_per_cell))
         out = bucketed.repartition(n_parts, sf.col("bucket"), salt)
     else:
         out = bucketed.repartition(sf.col("bucket"))
@@ -208,7 +210,6 @@ def write_ivf_index(embeddings: DataFrame, path: str,
 
 
 def ivf_topk_indexed(spark, path: str, query_vec: list[float], k: int = 10,
-                     id_col: str = "vec_id", vec_col: str = "embedding",
                      n_bits: int = 8, probe_hamming: int = 1) -> DataFrame:
     """Top-k probe against a :func:`write_ivf_index` materialization: the
     ``bucket`` partition-column filter prunes at file-listing time (the scan
@@ -217,11 +218,10 @@ def ivf_topk_indexed(spark, path: str, query_vec: list[float], k: int = 10,
     the same corpus/params."""
     cells = probe_buckets(query_vec, n_bits, probe_hamming)
     cell = spark.read.parquet(path).filter(sf.col("bucket").isin(cells))
-    return cosine_topk(cell, query_vec, k, id_col, vec_col)
+    return cosine_topk(cell, query_vec, k)
 
 
 def cosine_near_duplicates(embeddings: DataFrame, threshold: float = 0.9,
-                           id_col: str = "vec_id", vec_col: str = "embedding",
                            n_bits: int = 8,
                            probe_hamming: int = 1) -> DataFrame:
     """Embedding-cosine near-dup pairs at scale: candidates from a self
@@ -237,10 +237,10 @@ def cosine_near_duplicates(embeddings: DataFrame, threshold: float = 0.9,
     missed — lower n_bits or raise probe_hamming (cost: bigger cells /
     more probes).
     """
+    vec = sf.col("embedding").cast("array<double>")
     bucketed = embeddings.select(
-        sf.col(id_col).alias("id"),
-        sf.col(vec_col).cast("array<double>").alias("v"),
-        ivf_bucket(sf.col(vec_col).cast("array<double>"), n_bits).alias("bucket"),
+        sf.col("vec_id").alias("id"), vec.alias("v"),
+        ivf_bucket(vec, n_bits).alias("bucket"),
     )
     probe_cells = [sf.col("bucket")]
     frontier = [sf.col("bucket")]
@@ -264,24 +264,23 @@ def cosine_near_duplicates(embeddings: DataFrame, threshold: float = 0.9,
             .filter(sf.col("cosine") >= threshold))
 
 
-def quantize_embeddings(df: DataFrame, vec_col: str = "embedding",
-                        scale_col: str = "q_scale",
-                        codes_col: str = "q_codes") -> DataFrame:
-    """Symmetric per-vector int8 quantization (4× storage cut for
+def quantize_embeddings(df: DataFrame) -> DataFrame:
+    """Symmetric per-vector int8 quantization of ``embedding`` into
+    ``q_scale`` and ``q_codes`` (4× storage cut for
     float32 corpora; the standard embedding-store compression):
     ``scale = max(|x|)/127``, ``code = clamp(floor(x/scale + 0.5), ±127)``.
     Pure column expressions. floor(x+0.5) — NOT round() — so the tie rule
     is explicit and identical across engines (round() half-up in Spark vs
     half-even in DuckDB would break the value-level oracle on exact .5
     codes). Zero vectors get scale 0 and all-zero codes."""
-    v = sf.col(vec_col).cast("array<double>")
+    v = sf.col("embedding").cast("array<double>")
     scale = sf.array_max(sf.transform(v, lambda x: sf.abs(x))) / 127.0
     code = lambda x: sf.greatest(  # noqa: E731
-        sf.least(sf.floor(x / sf.col(scale_col) + 0.5), sf.lit(127.0)),
+        sf.least(sf.floor(x / sf.col("q_scale") + 0.5), sf.lit(127.0)),
         sf.lit(-127.0)).cast("int")
-    return (df.withColumn(scale_col, scale)
-            .withColumn(codes_col,
-                        sf.when(sf.col(scale_col) == 0.0,
+    return (df.withColumn("q_scale", scale)
+            .withColumn("q_codes",
+                        sf.when(sf.col("q_scale") == 0.0,
                                 sf.transform(v, lambda x: sf.lit(0)))
                         .otherwise(sf.transform(v, code))))
 
@@ -339,8 +338,7 @@ def _int8_score(q_codes: list[int]) -> tuple[Column, Column]:
 
 
 def cosine_topk_int8(embeddings: DataFrame, query_vec: list[float],
-                     k: int = 10, id_col: str = "vec_id",
-                     vec_col: str = "embedding") -> DataFrame:
+                     k: int = 10) -> DataFrame:
     """Brute-force top-k over the int8 codes of :func:`quantize_embeddings` —
     the quantized scan path: at 100 TB the probe reads the 4×-smaller codes
     column instead of the float vectors.
@@ -354,45 +352,37 @@ def cosine_topk_int8(embeddings: DataFrame, query_vec: list[float],
     unrounded code-space cosine with an id tie-break; executes as
     TakeOrderedAndProject like :func:`cosine_topk`."""
     q_codes = _quantize_query(query_vec)
-    coded = quantize_embeddings(embeddings, vec_col=vec_col)
+    coded = quantize_embeddings(embeddings)
     int_dot, cos_q = _int8_score(q_codes)
-    scored = coded.select(sf.col(id_col), int_dot.alias("int_dot"),
+    scored = coded.select("vec_id", int_dot.alias("int_dot"),
                           cos_q.alias("_cos"))
-    return (scored.orderBy(sf.desc("_cos"), sf.asc(id_col)).limit(k)
-            .select(id_col, "int_dot",
+    return (scored.orderBy(sf.desc("_cos"), sf.asc("vec_id")).limit(k)
+            .select("vec_id", "int_dot",
                     sf.round(sf.col("_cos"), 6).alias("cosine_q")))
 
 
 def write_ivf_index_int8(embeddings: DataFrame, path: str,
-                         id_col: str = "vec_id", vec_col: str = "embedding",
-                         n_bits: int = 8, files_per_cell: int = 1) -> None:
+                         n_bits: int = 8) -> None:
     """Quantized IVF index (VERDICT r03 #6): the corpus stored as
-    ``(id, q_scale, q_codes array<tinyint>)`` partitioned by the sign-bit
+    ``(vec_id, q_scale, q_codes array<tinyint>)`` partitioned by the sign-bit
     quantizer cell. Two savings compose at probe time: partition pruning
     reads only the probed cells (~3.5% of files at n_bits=8, d ≤ 1), and
     the scan reads the int8 CODES instead of the float vectors (~4× fewer
     bytes — measured on parquet in tests). ``q_scale`` is stored for
     dequantization/reranking but the code-space-cosine probe never reads
-    it (column pruning, plan-locked). Same ``files_per_cell`` hot-cell
-    salting as :func:`write_ivf_index`."""
-    coded = quantize_embeddings(embeddings, vec_col=vec_col)
+    it (column pruning, plan-locked)."""
+    coded = quantize_embeddings(embeddings)
     bucketed = coded.select(
-        sf.col(id_col), sf.col("q_scale"),
+        "vec_id", "q_scale",
         sf.expr("transform(q_codes, x -> cast(x as tinyint))").alias("q_codes"),
-        ivf_bucket(sf.col(vec_col).cast("array<double>"), n_bits)
+        ivf_bucket(sf.col("embedding").cast("array<double>"), n_bits)
         .alias("bucket"))
-    if files_per_cell > 1:
-        n_parts = 2 * (1 << n_bits) * files_per_cell
-        salt = sf.pmod(sf.hash(sf.col("q_codes")), sf.lit(files_per_cell))
-        out = bucketed.repartition(n_parts, sf.col("bucket"), salt)
-    else:
-        out = bucketed.repartition(sf.col("bucket"))
-    out.write.mode("overwrite").partitionBy("bucket").parquet(path)
+    (bucketed.repartition(sf.col("bucket"))
+     .write.mode("overwrite").partitionBy("bucket").parquet(path))
 
 
 def ivf_topk_indexed_int8(spark, path: str, query_vec: list[float],
-                          k: int = 10, id_col: str = "vec_id",
-                          n_bits: int = 8,
+                          k: int = 10, n_bits: int = 8,
                           probe_hamming: int = 1) -> DataFrame:
     """Top-k probe against a :func:`write_ivf_index_int8` materialization:
     partition pruning (bucket filter at file-listing time) + codes-only
@@ -403,17 +393,16 @@ def ivf_topk_indexed_int8(spark, path: str, query_vec: list[float],
     q_codes = _quantize_query(query_vec)
     scan = spark.read.parquet(path).filter(sf.col("bucket").isin(cells))
     int_dot, cos_q = _int8_score(q_codes)
-    scored = scan.select(sf.col(id_col), int_dot.alias("int_dot"),
+    scored = scan.select("vec_id", int_dot.alias("int_dot"),
                          cos_q.alias("_cos"))
-    return (scored.orderBy(sf.desc("_cos"), sf.asc(id_col)).limit(k)
-            .select(id_col, "int_dot",
+    return (scored.orderBy(sf.desc("_cos"), sf.asc("vec_id")).limit(k)
+            .select("vec_id", "int_dot",
                     sf.round(sf.col("_cos"), 6).alias("cosine_q")))
 
 
-def dequantize_embeddings(df: DataFrame, scale_col: str = "q_scale",
-                          codes_col: str = "q_codes",
-                          out_col: str = "embedding_dq") -> DataFrame:
-    """Inverse of :func:`quantize_embeddings`: ``x ≈ code · scale``."""
+def dequantize_embeddings(df: DataFrame) -> DataFrame:
+    """Inverse of :func:`quantize_embeddings`: ``embedding_dq`` holds
+    ``x ≈ code · scale``."""
     return df.withColumn(
-        out_col, sf.transform(sf.col(codes_col),
-                              lambda c: c.cast("double") * sf.col(scale_col)))
+        "embedding_dq", sf.transform(
+            sf.col("q_codes"), lambda c: c.cast("double") * sf.col("q_scale")))

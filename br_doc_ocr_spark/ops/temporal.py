@@ -22,16 +22,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as sf
 
 
-def asof_join(left: DataFrame, right: DataFrame, time_col: str = "ts",
-              by: str = "user_id", value_cols: list[str] | None = None,
-              suffix: str = "_asof") -> DataFrame:
+def asof_join(left: DataFrame, right: DataFrame,
+              value_cols: list[str] | None = None) -> DataFrame:
     """Backward-inclusive as-of join: every left row gains the right row's
-    ``value_cols`` (suffixed) and matched timestamp ``{time_col}{suffix}``
-    from the latest right row with ``right.{time_col} <= left.{time_col}``
-    in the same ``by`` group; nulls when no prior right row exists.
+    ``value_cols`` (suffixed ``_asof``) and matched timestamp ``ts_asof``
+    from the latest right row with ``right.ts <= left.ts`` in the same
+    ``user_id`` group; nulls when no prior right row exists.
 
     Shuffle profile: one exchange of the UNION of both sides keyed by
-    ``by`` + a per-key ordered window — linear, vs the quadratic blowup of
+    ``user_id`` + a per-key ordered window — linear, vs the quadratic blowup of
     expressing this as a non-equi join. The matched right row is carried as
     ONE struct through ``last(..., ignorenulls)``, so a right row whose
     value column is genuinely NULL still matches as itself (per-column
@@ -50,49 +49,47 @@ def asof_join(left: DataFrame, right: DataFrame, time_col: str = "ts",
     from pyspark.sql import Window
 
     value_cols = value_cols or []
-    if time_col in value_cols:
-        # the matched timestamp is ALWAYS carried as {time_col}{suffix};
-        # listing it in value_cols too would build a _carry struct with two
-        # identical field names and fail later with an opaque ambiguous-
-        # field AnalysisException instead of this ValueError (review r05)
+    if "ts" in value_cols:
+        # the matched timestamp is ALWAYS carried as ts_asof; listing it in
+        # value_cols too would build a _carry struct with two identical
+        # field names and fail later with an opaque ambiguous-field
+        # AnalysisException instead of this ValueError (review r05)
         raise ValueError(
-            f"asof_join: {time_col!r} is carried automatically as "
-            f"'{time_col}{suffix}' — remove it from value_cols")
-    rmap = {c: f"{c}{suffix}" for c in value_cols}
-    reserved = {f"{time_col}{suffix}", *rmap.values(), "_src", "_carry", "_m"}
+            "asof_join: 'ts' is carried automatically as 'ts_asof' — "
+            "remove it from value_cols")
+    rmap = {c: f"{c}_asof" for c in value_cols}
+    reserved = {"ts_asof", *rmap.values(), "_src", "_carry", "_m"}
     clash = reserved & set(left.columns)
     if clash:
         raise ValueError(
             f"asof_join output columns {sorted(clash)} already exist on the "
-            f"left frame — pass a different suffix")
-    r = right.filter(sf.col(by).isNotNull() & sf.col(time_col).isNotNull()) \
+            "left frame — rename or drop those columns first")
+    r = right.filter(sf.col("user_id").isNotNull()
+                     & sf.col("ts").isNotNull()) \
         .select(
-            sf.col(by), sf.col(time_col),
+            "user_id", "ts",
             sf.lit(0).alias("_src"),
             sf.struct(
-                sf.col(time_col).alias(f"{time_col}{suffix}"),
+                sf.col("ts").alias("ts_asof"),
                 *[sf.col(c).alias(rmap[c]) for c in value_cols],
             ).alias("_carry"))
     l = left.withColumn("_src", sf.lit(1))
     u = l.unionByName(r, allowMissingColumns=True)
-    w = (Window.partitionBy(by).orderBy(time_col, "_src")
+    w = (Window.partitionBy("user_id").orderBy("ts", "_src")
          .rowsBetween(Window.unboundedPreceding, 0))
     matched = sf.last("_carry", ignorenulls=True).over(w)
     return (u.withColumn("_m", matched)
             .filter(sf.col("_src") == 1)
             .select(*left.columns,
-                    sf.col("_m")[f"{time_col}{suffix}"]
-                    .alias(f"{time_col}{suffix}"),
+                    sf.col("_m")["ts_asof"].alias("ts_asof"),
                     *[sf.col("_m")[rmap[c]].alias(rmap[c])
                       for c in value_cols]))
 
 
 def range_join(points: DataFrame, intervals: DataFrame,
-               point_ts: str = "ts", start_col: str = "start",
-               end_col: str = "end", by: str = "user_id",
                bucket_seconds: int = 3600) -> DataFrame:
-    """All (point, interval) pairs with ``start <= point_ts <= end`` per
-    ``by`` key. Intervals explode to their covered time buckets; each
+    """All (point, interval) pairs with ``start <= ts <= end`` per
+    ``user_id``. Intervals explode to their covered time buckets; each
     point has exactly ONE bucket, so the (key, bucket) equi-join plus the
     residual range filter emits every qualifying pair exactly once — no
     dedup, no cartesian. Size ``bucket_seconds`` near the typical interval
@@ -112,7 +109,8 @@ def range_join(points: DataFrame, intervals: DataFrame,
     # works either way, but the returned frame would carry two columns of
     # the same name and fail the caller's first unqualified reference with
     # AMBIGUOUS_REFERENCE far from here (review r05)
-    overlap = (set(intervals.columns) & set(points.columns)) - {by}
+    start_col, end_col = "start", "end"
+    overlap = (set(intervals.columns) & set(points.columns)) - {"user_id"}
     if overlap:
         renames = {c: f"{c}_interval" for c in sorted(overlap)}
         taken = set(renames.values()) & (set(intervals.columns)
@@ -125,37 +123,36 @@ def range_join(points: DataFrame, intervals: DataFrame,
         intervals = intervals.withColumnsRenamed(renames)
         start_col = renames.get(start_col, start_col)
         end_col = renames.get(end_col, end_col)
-    p_bucket = sf.floor(sf.unix_timestamp(sf.col(point_ts))
+    p_bucket = sf.floor(sf.unix_timestamp(sf.col("ts"))
                         / sf.lit(bucket_seconds))
     i_buckets = sf.sequence(
         sf.floor(sf.unix_timestamp(sf.col(start_col)) / sf.lit(bucket_seconds)),
         sf.floor(sf.unix_timestamp(sf.col(end_col)) / sf.lit(bucket_seconds)))
     # qualified residual filter: an intervals frame that happens to carry a
-    # column named like point_ts (or vice versa) must not make the bare-name
-    # references ambiguous (review r04 — asof_join already guards its clashes)
+    # column named ts (or vice versa) must not make the bare-name references
+    # ambiguous (review r04 — asof_join already guards its clashes)
     pts = points.withColumn("_bucket", p_bucket).alias("_p")
     ivs = intervals.withColumn("_bucket", sf.explode(i_buckets)).alias("_i")
-    joined = pts.join(ivs, [by, "_bucket"]).filter(
-        (sf.col(f"_p.{point_ts}") >= sf.col(f"_i.{start_col}"))
-        & (sf.col(f"_p.{point_ts}") <= sf.col(f"_i.{end_col}")))
+    joined = pts.join(ivs, ["user_id", "_bucket"]).filter(
+        (sf.col("_p.ts") >= sf.col(f"_i.{start_col}"))
+        & (sf.col("_p.ts") <= sf.col(f"_i.{end_col}")))
     return joined.drop("_bucket")
 
 
-def sessionize(df: DataFrame, key_col: str = "user_id", ts_col: str = "ts",
-               gap_seconds: int = 1800,
+def sessionize(df: DataFrame, gap_seconds: int = 1800,
                tiebreak_col: str | None = None) -> DataFrame:
     """Gap-based sessionization (an operator Spark lacks as a built-in —
     every large-scale event/training-data pipeline needs it): rows of the
-    same ``key_col`` whose consecutive ``ts_col`` gaps are all
+    same ``user_id`` whose consecutive ``ts`` gaps are all
     ``<= gap_seconds`` share a ``session_idx`` (0-based per key, assigned
     in time order). A NULL timestamp can never satisfy the gap predicate,
     so NULL-ts rows each OPEN a new session (they sort first and are
     flagged new) rather than silently extending a neighbor.
 
-    Shuffle profile: ONE exchange keyed by ``key_col`` + a per-key ordered
+    Shuffle profile: ONE exchange keyed by ``user_id`` + a per-key ordered
     window evaluates both the lag and the running flag-sum — the standard
     lag→flag→cumsum formulation, entirely codegen'd column expressions.
-    A per-session aggregate downstream (``groupBy(key_col, 'session_idx')``)
+    A per-session aggregate downstream (``groupBy('user_id', 'session_idx')``)
     adds only a pre-aggregated second exchange: the partial agg collapses
     to one row per session map-side, so the second shuffle moves sessions,
     not events. Skew: one window partition per key — an adversarial single
@@ -174,19 +171,19 @@ def sessionize(df: DataFrame, key_col: str = "user_id", ts_col: str = "ts",
         raise ValueError(
             "sessionize output columns (session_idx, _new_session) already "
             "exist on the input frame")
-    order = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
-    w = Window.partitionBy(key_col).orderBy(*order)
-    prev = sf.lag(ts_col).over(w)
+    order = ["ts"] + ([tiebreak_col] if tiebreak_col else [])
+    w = Window.partitionBy("user_id").orderBy(*order)
+    prev = sf.lag("ts").over(w)
     # timestamp subtraction → day-time interval, exact for both TIMESTAMP
     # (instant difference) and TIMESTAMP_NTZ (wall-clock difference) — a
     # cast-to-TIMESTAMP + unix_micros detour would shift NTZ values through
     # the session timezone, mis-sizing gaps that straddle a DST transition
     # (review r05)
-    gap_ok = ((sf.col(ts_col) - prev)
+    gap_ok = ((sf.col("ts") - prev)
               <= sf.expr(f"INTERVAL {int(gap_seconds)} SECOND"))
     new_session = sf.when(prev.isNotNull() & gap_ok,
                           sf.lit(0)).otherwise(sf.lit(1))
-    running = (Window.partitionBy(key_col).orderBy(*order)
+    running = (Window.partitionBy("user_id").orderBy(*order)
                .rowsBetween(Window.unboundedPreceding, 0))
     return (df.withColumn("_new_session", new_session)
             .withColumn("session_idx",

@@ -404,21 +404,21 @@ def _fingerprint_batch(texts) -> "list[int]":
     return out
 
 
-def with_fingerprint(df: DataFrame, text_col: str = "text",
-                     out_col: str = "fingerprint") -> DataFrame:
-    """Deterministic 61-bit polynomial rolling hash per document (content
-    fingerprint for incremental-dedup manifests).
+def with_fingerprint(df: DataFrame) -> DataFrame:
+    """Deterministic 61-bit polynomial rolling hash of ``text`` per document
+    in a ``fingerprint`` column (content fingerprint for incremental-dedup
+    manifests).
 
     When the rolling property isn't needed (pure exact-dedup keys), prefer
-    the zero-Python JVM path ``df.withColumn(c, sf.xxhash64(text_col))``."""
+    the zero-Python JVM path ``df.withColumn(c, sf.xxhash64("text"))``."""
     from pyspark.sql import types as T
 
     # NB: StructType.add mutates in place — build a fresh copy.
     schema = T.StructType(list(df.schema.fields)
-                          + [T.StructField(out_col, T.LongType())])
+                          + [T.StructField("fingerprint", T.LongType())])
 
     def kernel(batch: pd.DataFrame) -> pd.DataFrame:
-        batch[out_col] = _fingerprint_batch(list(batch[text_col]))
+        batch["fingerprint"] = _fingerprint_batch(list(batch["text"]))
         return batch
 
     return map_kernel(df, kernel, schema)[0]

@@ -218,7 +218,8 @@ def _range_exchange(transcripts: DataFrame) -> DataFrame:
     part, the re-parse of the worker's 16 zip importers (``pyspark.zip``,
     the ``spark-core`` jar, py4j) at every task start, is now paid once per
     worker process (:func:`_keep_zip_directories`); SCALE.md records what
-    is left per task, against which this rule has not been re-decided.
+    is left per task, and its "extraction mapInPandas" row the measurement
+    against which this rule was re-decided and kept.
     Bigger inputs keep the conf, and with it the wave smoothing of several
     tasks per slot. The input size is Catalyst's driver-side estimate (it
     plans the query, runs no job); a filtered input is sized by its

@@ -1200,26 +1200,28 @@ def q_redact_text_audit(spark, sf_dir):
                  sf.sum("redacted_chars").alias("total_redacted_chars")))
 
 
-def _minhash_oracle_sql(num_hashes: int = 32, bands: int = 8) -> str:
+def _minhash_oracle_sql() -> str:
     """Full DuckDB rendering of the MinHash+LSH near-dup operator, value-
     exact against ops/dedup.py: Spark's xxhash64 is reproduced bit-for-bit
     in SQL (br_doc_ocr_spark/duckdb_xxh64.py — XXH64 over UTF-8 bytes for
-    shingle and band strings, the hashLong→hashInt chain for the 32 seed
+    shingle and band strings, the hashLong→hashInt chain for the seed
     permutations), shingling/banding/verification mirror word_shingles /
     minhash_lsh_candidates / minhash_near_duplicates, and the output is the
     exact-integer (n_common, n_union) pair so no float ever enters the
-    driver's value hash."""
+    driver's value hash. The shingle width, permutation count and band
+    count are ``dedup``'s own constants, so the two sides cannot drift."""
     from br_doc_ocr_spark import duckdb_xxh64 as X
 
-    rpb = num_hashes // bands
+    rpb = dedup.NUM_HASHES // dedup.BANDS
+    gap = dedup.SHINGLE_N - 1  # a shingle is the inclusive tokens[i:i+gap]
     seed_ctes = X.seed_permutation_ctes("shx_out", ["doc_id"], "h0",
-                                        list(range(num_hashes)), "sp")
-    sig_list = ", ".join(f"min(p{i})" for i in range(num_hashes))
+                                        list(range(dedup.NUM_HASHES)), "sp")
+    sig_list = ", ".join(f"min(p{i})" for i in range(dedup.NUM_HASHES))
     band_structs = ", ".join(
         "{'band_idx': %d, 'band_str': %s}" % (
             b, " || ',' || ".join(f"sig[{b * rpb + r + 1}]::VARCHAR"
                                   for r in range(rpb)))
-        for b in range(bands))
+        for b in range(dedup.BANDS))
     shingle_hash = X.xxh64_string_ctes("shingle_rows", ["doc_id"],
                                        "shingle", "h0", "shx")
     band_hash = X.xxh64_string_ctes("band_rows",
@@ -1239,10 +1241,10 @@ def _minhash_oracle_sql(num_hashes: int = 32, bands: int = 8) -> str:
     ),
     shingled AS (
       SELECT doc_id,
-        list_distinct(CASE WHEN len(tokens) - 2 <= 0
+        list_distinct(CASE WHEN len(tokens) - {gap} <= 0
           THEN [array_to_string(tokens, ' ')]
-          ELSE list_transform(range(1, greatest(len(tokens) - 2, 1) + 1),
-                              i -> array_to_string(tokens[i:i+2], ' '))
+          ELSE list_transform(range(1, greatest(len(tokens) - {gap}, 1) + 1),
+                              i -> array_to_string(tokens[i:i+{gap}], ' '))
         END) AS sh
       FROM toks
     ),

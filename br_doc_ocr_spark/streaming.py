@@ -7,16 +7,22 @@ each micro-batch runs the SAME Arrow kernel, and Spark's checkpoint gives
 exactly-once file-source progress tracking — the streaming twin of
 ``checkpoint.run_resumable``'s manifest.
 
-Two entry points:
+Five query starters, each named with its trigger (``availableNow`` drains
+what has landed and stops; the default trigger runs until stopped):
 
 - :func:`stream_extract` — readStream → one ``mapInPandas`` crossing
   (``pipeline.map_kernel``, the batch job's adapter) → append-mode parquet
-  sink (per-turn results, same schema as the batch job);
-- :func:`stream_status_counts` — event-time tumbling-window status metrics
-  with a watermark for late data (the lineage analog, windowed by turn ``ts``).
-
-Both accept ``availableNow`` trigger for drain-and-stop semantics (used by
-tests and backfills).
+  sink (per-turn results, same schema as the batch job). ``availableNow``
+  when ``available_now=True``, else the default trigger;
+- :func:`stream_extract_deduplicated` — watermarked content dedup before
+  the kernel, same sink. Always ``availableNow``;
+- :func:`stream_extract_with_lineage` — per-micro-batch results and lineage
+  rows through ``foreachBatch``. ``availableNow`` when
+  ``available_now=True``, else the default trigger;
+- :func:`stream_assembled_conversations` — stateful per-conversation field
+  assembly, snapshots through ``foreachBatch``. Always ``availableNow``;
+- :func:`stream_media_features` — media decode/feature kernel → parquet
+  append. Always ``availableNow``.
 """
 
 from __future__ import annotations
@@ -136,16 +142,15 @@ def stream_extract_deduplicated(
     output_path: str,
     checkpoint_path: str,
     watermark: str = "1 hour",
-    available_now: bool = True,
 ):
     """readStream → watermarked content dedup → extraction kernel →
-    append parquet sink. The streaming twin of
-    ``dedup.drop_exact_duplicates`` + ``pipeline.run_pipeline``."""
+    append parquet sink, drained with ``availableNow``. The streaming twin
+    of ``dedup.drop_exact_duplicates`` + ``pipeline.run_pipeline``."""
     deduped = deduplicated_stream(
         _read_stream(spark, TRANSCRIPT_SCHEMA_DDL, input_path), watermark)
     results, _ = extract_stream(deduped)
     return _start_parquet_sink(results, output_path, checkpoint_path,
-                               available_now)
+                               available_now=True)
 
 
 def stream_extract(
@@ -154,7 +159,6 @@ def stream_extract(
     output_path: str,
     checkpoint_path: str,
     available_now: bool = False,
-    max_files_per_trigger: int | None = None,
 ):
     """Incremental extraction: file-source stream → kernel → parquet append.
 
@@ -162,8 +166,7 @@ def stream_extract(
     offsets + sink commit log) — restartable mid-stream.
     """
     results, _ = extract_stream(
-        _read_stream(spark, TRANSCRIPT_SCHEMA_DDL, input_path,
-                     max_files_per_trigger))
+        _read_stream(spark, TRANSCRIPT_SCHEMA_DDL, input_path))
     return _start_parquet_sink(results, output_path, checkpoint_path,
                                available_now)
 
@@ -179,19 +182,6 @@ def status_counts(results: DataFrame, window: str = "1 hour",
             .select(sf.col("w.start").alias("window_start"),
                     sf.col("w.end").alias("window_end"),
                     "status", "n_turns", "total_fields"))
-
-
-def stream_status_counts(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    checkpoint_path: str,
-    available_now: bool = False,
-):
-    counts = status_counts(extract_stream(
-        _read_stream(spark, TRANSCRIPT_SCHEMA_DDL, input_path))[0])
-    return _start_parquet_sink(counts, output_path, checkpoint_path,
-                               available_now)
 
 
 def stream_extract_with_lineage(
@@ -329,14 +319,13 @@ def stream_media_features(
     output_path: str,
     checkpoint_path: str,
     on_error: str = "skip",
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
     kind: str = "image",
 ):
     """Incremental REAL-codec media ingestion: file-source stream over
-    binary payloads → decode/resize/feature kernel → parquet append
-    (VERDICT r04 #7 — the 100-TB ingestion posture under Structured
-    Streaming, not only batch).
+    binary payloads → decode/resize/feature kernel → parquet append,
+    drained with ``availableNow`` (VERDICT r04 #7 — the 100-TB ingestion
+    posture under Structured Streaming, not only batch).
 
     One query per media ``kind``, mirroring the batch API's per-kind
     functions (``image_features`` / ``audio_features`` have different
@@ -378,4 +367,4 @@ def stream_media_features(
             f"decodes in batch through ops/multimodal.sample_video_frames, "
             f"which has no streaming path")
     return _start_parquet_sink(feats, output_path, checkpoint_path,
-                               available_now)
+                               available_now=True)

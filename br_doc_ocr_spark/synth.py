@@ -132,12 +132,11 @@ def make_transcripts_pandas(
     seed: int = 42,
     skew_conv: bool = True,
     skew_factor: int = 100,
-    contract_conv: bool = True,
 ) -> pd.DataFrame:
     """Seeded pandas transcript table; one ``conv-heavy`` conversation gets
     ``skew_factor``× the median turn count to exercise the skew defense
-    (FIXTURES.md §1); ``contract_conv`` appends the fixed ``conv-contract``
-    edge-payload conversation (CONTRACT_PAYLOADS)."""
+    (FIXTURES.md §1); the fixed ``conv-contract`` edge-payload conversation
+    (CONTRACT_PAYLOADS) comes last."""
     rng = np.random.RandomState(seed)
     rows: list[tuple] = []
     conv_specs = [(f"conv-{i:05d}", int(rng.randint(2, 2 * mean_turns)))
@@ -166,23 +165,20 @@ def make_transcripts_pandas(
             ts_counter += int(rng.randint(1, 90))
             rows.append((conv_id, turn_idx, role, text, tool,
                          BASE_EPOCH + pd.Timedelta(seconds=ts_counter)))
-    if contract_conv:
-        for turn_idx, text in enumerate(CONTRACT_PAYLOADS):
-            ts_counter += 7
-            rows.append(("conv-contract", turn_idx, ROLES[turn_idx % len(ROLES)],
-                         text, "", BASE_EPOCH + pd.Timedelta(seconds=ts_counter)))
+    for turn_idx, text in enumerate(CONTRACT_PAYLOADS):
+        ts_counter += 7
+        rows.append(("conv-contract", turn_idx, ROLES[turn_idx % len(ROLES)],
+                     text, "", BASE_EPOCH + pd.Timedelta(seconds=ts_counter)))
     df = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"])
     df["turn_idx"] = df["turn_idx"].astype("int32")
     return df
 
 
-def synth_to_parquet(spark, n_turns: int, path: str,
-                     n_convs: int | None = None) -> None:
+def synth_to_parquet(spark, n_turns: int, path: str) -> None:
     """Write a synthetic transcript table — the ONE recipe shared by the CLI
     ``synth`` command and bench.py (the turns//200 conv-count heuristic was
     previously restated at three call sites)."""
-    make_transcripts_spark(spark, n_turns,
-                           n_convs or max(n_turns // 200, 16)) \
+    make_transcripts_spark(spark, n_turns, max(n_turns // 200, 16)) \
         .write.mode("overwrite").parquet(path)
 
 
@@ -190,13 +186,13 @@ def synth_to_parquet(spark, n_turns: int, path: str,
 # Spark-native generator (no driver loop, no UDF): hash-derived randomness.
 # ---------------------------------------------------------------------------
 
-def make_transcripts_spark(spark, n_turns: int, n_convs: int, skew_share: float = 0.02):
+def make_transcripts_spark(spark, n_turns: int, n_convs: int):
     """Generate ``n_turns`` transcript rows as a distributed DataFrame.
 
     Pseudo-randomness comes from ``xxhash64`` of the row id — fully
     deterministic, partition-count independent, and entirely JVM-side
-    (whole-stage codegen; zero Python). ``skew_share`` of all rows collapse
-    onto a single ``conv-heavy`` id to model long-conversation skew.
+    (whole-stage codegen; zero Python). 2% of all rows collapse onto a
+    single ``conv-heavy`` id to model long-conversation skew.
     """
     from pyspark.sql import functions as sf
 
@@ -211,7 +207,7 @@ def make_transcripts_spark(spark, n_turns: int, n_convs: int, skew_share: float 
     h_kind = sf.xxhash64(sf.col("row_id"), sf.lit(3)).bitwiseAND(mask)
     conv_bucket = h % int(n_convs)
     df = base.select(
-        sf.when(h % 1000 < int(skew_share * 1000), sf.lit("conv-heavy"))
+        sf.when(h % 1000 < 20, sf.lit("conv-heavy"))
           .otherwise(sf.format_string("conv-%05d", conv_bucket.cast("int")))
           .alias("conv_id"),
         sf.col("row_id"),
@@ -273,43 +269,41 @@ def make_transcripts_spark(spark, n_turns: int, n_convs: int, skew_share: float 
     return out
 
 
-def make_skewed_documents(spark, n_docs: int, words_per_doc: int = 40,
-                          hot_every: int = 1000, dup_share: float = 0.2,
-                          n_clusters: int | None = None):
+def make_skewed_documents(spark, n_docs: int):
     """Deterministic document corpus with a SKEWED near-duplicate cluster
     distribution — the dedup-pipeline bench input (VERDICT r02 #3).
 
     Structure (all hash-derived, pure column expressions, no Python):
 
-    - ``1/hot_every`` of rows form ONE hot cluster (5 000 members at 5 M
-      docs ≈ 400× the median cluster — the LSH band bucket for that cluster
-      goes quadratic, which is exactly the skew the pipeline must survive);
-    - ``dup_share`` of rows spread over ``n_clusters`` ordinary clusters
-      (~13 members each at the defaults);
+    - 1/1000 of rows form ONE hot cluster (5 000 members at 5 M docs ≈ 400×
+      the median cluster — the LSH band bucket for that cluster goes
+      quadratic, which is exactly the skew the pipeline must survive);
+    - 20% of rows spread over ``n_docs // 64`` ordinary clusters (~13
+      members each);
     - the rest are singletons (cluster == own doc_id).
 
-    Every member of a cluster shares the cluster's ``words_per_doc``
-    hash-derived words and appends one per-doc mutation token — pairwise
+    Every member of a cluster shares the cluster's 40 hash-derived words
+    and appends one per-doc mutation token — pairwise
     shingle Jaccard ≈ 0.86, comfortably over the 0.5 near-dup threshold,
     while singletons share (almost) nothing. Returns
     (doc_id, cluster, text); ``cluster`` is ground truth for verification,
     the pipeline must not read it."""
     from pyspark.sql import functions as sf
 
-    n_clusters = n_clusters or max(n_docs // 64, 1)
+    n_clusters = max(n_docs // 64, 1)
     mask = sf.lit(0x7FFFFFFFFFFFFFFF)
     base = spark.range(n_docs).withColumnRenamed("id", "doc_id")
     h = sf.xxhash64(sf.col("doc_id"), sf.lit(11)).bitwiseAND(mask)
     cluster = (
-        sf.when(sf.col("doc_id") % hot_every == 7, sf.lit(0))
-        .when(h % 100 < int(dup_share * 100), h % n_clusters + 1)
+        sf.when(sf.col("doc_id") % 1000 == 7, sf.lit(0))
+        .when(h % 100 < 20, h % n_clusters + 1)
         .otherwise(sf.col("doc_id") + n_clusters + 2))
     df = base.select("doc_id", cluster.alias("cluster"))
     word = lambda seed_col, j: sf.conv(  # noqa: E731
         ((sf.xxhash64(seed_col, sf.lit(j)).bitwiseAND(mask)) % 46655)
         .cast("string"), 10, 36)
     words = sf.concat_ws(
-        " ", *[word(sf.col("cluster"), j) for j in range(words_per_doc)])
+        " ", *[word(sf.col("cluster"), j) for j in range(40)])
     mutation = sf.concat(sf.lit("zz"), word(sf.col("doc_id"), 99))
     return df.select(
         "doc_id", "cluster",

@@ -84,29 +84,74 @@ def test_map_kernel_is_the_only_map_in_pandas_call():
     assert found == [("pipeline.py", "map_kernel")]
 
 
+# Options that only tests set: each needs its own decision (several let a
+# test reach a decoder or an error path). The list may only shrink.
+TEST_ONLY_OPTIONS = [
+    ("cli.py", "main", "argv"),
+    ("core/fields.py", "flag_low_confidence", "threshold"),
+    ("dataset.py", "read_metrics_history", "run_id"),
+    ("dataset.py", "with_padded_ids", "group_col"),
+    ("evaluation.py", "generate_evaluation_report", "output_path"),
+    ("ops/aviio.py", "encode_avi", "quality"),
+    ("ops/dedup.py", "connected_components", "max_iterations"),
+    ("ops/dedup.py", "ngram_jaccard_pairs", "threshold"),
+    *(("ops/dedup.py", "simhash_signatures", p)
+      for p in ("id_col", "out_col", "salt_buckets", "text_col")),
+    ("ops/jpegio.py", "encode_jpeg", "restart_interval"),
+    *(("ops/multimodal.py", f, "on_error")
+      for f in ("audio_feature_kernel", "audio_features",
+                "image_feature_kernel", "image_features",
+                "sample_video_frames", "video_frame_sample_kernel")),
+    *(("ops/similarity.py", f, p)
+      for f in ("ivf_topk_indexed", "ivf_topk_indexed_int8")
+      for p in ("k", "n_bits", "probe_hamming")),
+    ("ops/similarity.py", "write_ivf_index", "files_per_cell"),
+    ("ops/similarity.py", "write_ivf_index", "n_bits"),
+    ("ops/similarity.py", "write_ivf_index_int8", "n_bits"),
+    ("ops/temporal.py", "range_join", "bucket_seconds"),
+    ("ops/textstats.py", "repetition_stats", "ngram_n"),
+    *(("ops/textstats.py", "top_ngram_share", p)
+      for p in ("id_col", "ngram_n", "text_col")),
+    ("streaming.py", "deduplicated_stream", "watermark"),
+    ("streaming.py", "extract_stream", "redact_fields"),
+    ("streaming.py", "status_counts", "watermark"),
+    ("streaming.py", "status_counts", "window"),
+    ("streaming.py", "stream_extract", "available_now"),
+    ("streaming.py", "stream_extract_deduplicated", "watermark"),
+    ("streaming.py", "stream_extract_with_lineage", "available_now"),
+    ("streaming.py", "stream_extract_with_lineage", "max_files_per_trigger"),
+    *(("streaming.py", "stream_media_features", p)
+      for p in ("kind", "max_files_per_trigger", "on_error")),
+]
+
+
 def test_every_option_has_a_caller():
     """A public option exists only when a non-test caller sets it: an
-    ``ast`` scan finds, for every default-valued parameter of the public
-    functions in ``pipeline.py``, ``checkpoint.py`` and ``core/extract.py``,
-    a call in the package, ``perfbench/``, ``tools/``, ``bench.py`` or
-    ``__spark_entry__.py`` that passes it by keyword or by position.
-    ``functools.partial(f, ...)`` counts as a call of ``f``."""
+    ``ast`` scan finds, for every default-valued parameter of the package's
+    public top-level functions, a call that passes it by keyword or by
+    position (``functools.partial(f, ...)`` counts as a call of ``f``). The
+    callers are the package, ``perfbench/``, ``tools/``, ``bench.py`` and
+    ``__spark_entry__.py``. A pass-through — ``f(x=x)`` or ``f(..., x)``
+    inside a function whose own ``x`` is an option — sets ``f``'s ``x`` only
+    once that ``x`` is set. The options in ``TEST_ONLY_OPTIONS`` are set by
+    tests alone; no other may be, and each of them must still be."""
     import ast
     from pathlib import Path
 
     package = Path(pipeline.__file__).parent
     repo = package.parent
-    options = {}  # (function, parameter) -> position, None if keyword-only
-    for module in ("pipeline.py", "checkpoint.py", "core/extract.py"):
-        for node in ast.parse((package / module).read_text()).body:
+    options = {}  # (function, parameter) -> (module, position or None)
+    for path in sorted(package.rglob("*.py")):
+        module = path.relative_to(package).as_posix()
+        for node in ast.parse(path.read_text()).body:
             if (not isinstance(node, ast.FunctionDef)
                     or node.name.startswith("_")):
                 continue
             args = node.args.posonlyargs + node.args.args
             first = len(args) - len(node.args.defaults)
-            options.update(((node.name, a.arg), i)
+            options.update(((node.name, a.arg), (module, i))
                            for i, a in enumerate(args) if i >= first)
-            options.update(((node.name, a.arg), None)
+            options.update(((node.name, a.arg), (module, None))
                            for a, d in zip(node.args.kwonlyargs,
                                            node.args.kw_defaults)
                            if d is not None)
@@ -114,21 +159,52 @@ def test_every_option_has_a_caller():
     def name(func):
         return getattr(func, "id", None) or getattr(func, "attr", None)
 
+    def calls(node, scope):
+        """Every call under ``node``, with the parameters in reach of it
+        (name -> the function that binds it)."""
+        if isinstance(node, ast.FunctionDef):
+            a = node.args
+            scope = {**scope, **{p.arg: node.name for p in
+                                 a.posonlyargs + a.args + a.kwonlyargs}}
+        if isinstance(node, ast.Call):
+            yield node, scope
+        for child in ast.iter_child_nodes(node):
+            yield from calls(child, scope)
+
     callers = [*package.rglob("*.py"), *(repo / "perfbench").rglob("*.py"),
                *(repo / "tools").rglob("*.py"), repo / "bench.py",
                repo / "__spark_entry__.py"]
-    passed = set()
-    for path in callers:
-        for call in ast.walk(ast.parse(path.read_text())):
-            if not isinstance(call, ast.Call):
-                continue
+    tests = list((repo / "tests").rglob("*.py"))
+    sets = []  # (option, set from tests, option it passes through or None)
+    for path in callers + tests:
+        for call, scope in calls(ast.parse(path.read_text()), {}):
             func, args = name(call.func), call.args
             if func == "partial" and args:
                 func, args = name(args[0]), args[1:]
-            passed.update((func, k.arg) for k in call.keywords)
-            passed.update((func, p) for (f, p), i in options.items()
-                          if f == func and i is not None and i < len(args))
-    assert sorted(set(options) - passed) == []
+            given = [(k.arg, k.value) for k in call.keywords]
+            given += [(p, args[i]) for (f, p), (_, i) in options.items()
+                      if f == func and i is not None and i < len(args)]
+            for param, value in given:
+                source = (isinstance(value, ast.Name) and value.id in scope
+                          and (scope[value.id], value.id))
+                sets.append(((func, param), path in tests,
+                             source if source in options else None))
+
+    def settled(with_tests):
+        done = set()
+        while True:
+            more = {opt for opt, from_test, source in sets
+                    if (with_tests or not from_test)
+                    and (source is None or source in done)} - done
+            if not more:
+                return done
+            done |= more
+
+    set_strictly, set_at_all = settled(False), settled(True)
+    unset = sorted((module, *opt) for opt, (module, _) in options.items()
+                   if opt not in set_strictly)
+    assert unset == sorted(TEST_ONLY_OPTIONS)
+    assert [o for o in unset if o[1:] not in set_at_all] == []
 
 
 def test_extraction_partitions_are_task_slots_for_small_input_else_conf(
