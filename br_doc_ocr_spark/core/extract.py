@@ -11,9 +11,9 @@ Every batch entry point runs one row loop, :func:`_extract_rows` — also the
 one error channel (a payload that raises becomes :func:`_error_row`) — under
 two kernels: :func:`extract_batch` (one row per turn) and
 :func:`extract_documents_batch` (one row per document segment). The Spark
-and streaming jobs run them through one ``mapInPandas`` adapter
-(``pipeline.map_kernel``); the golden oracles call them directly on a whole
-pandas table, single-threaded — identical bytes either way.
+jobs run them through one ``mapInPandas`` adapter (``pipeline.map_kernel``);
+the golden oracles call them directly on a whole pandas table,
+single-threaded — identical bytes either way.
 """
 
 from __future__ import annotations

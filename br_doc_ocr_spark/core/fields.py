@@ -39,7 +39,6 @@ _NON_DIGIT = re.compile(r"[^0-9]")
 _CPF_CANON = re.compile(r"^\d{3}\.\d{3}\.\d{3}-\d{2}$")
 _ISO_DATE = re.compile(r"^\d{4}-\d{2}-\d{2}$")
 _BR_DATE = re.compile(r"^\d{2}/\d{2}/\d{4}$")
-_PLAIN_NUMBER = re.compile(r"^-?\d+(\.\d+)?$")
 
 # órgão emissor acronym alternation (extraction.py:382-391) + generic fallback
 _ORGAO_KNOWN = re.compile(r"^(SSP|DETRAN|PC|IFP|SDS|SESP|IGP)-?[A-Z]{2}$|^IIRGD$")

@@ -246,6 +246,7 @@ class MetricsCollector:
         df.write.mode("append").partitionBy("run_id").parquet(path)
 
 
-def read_metrics_history(spark, path: str, run_id: str | None = None) -> DataFrame:
-    df = spark.read.parquet(path)
-    return df.filter(sf.col("run_id") == run_id) if run_id else df
+def read_metrics_history(spark, path: str) -> DataFrame:
+    """Every run's (run_id, step, name, value) rows; a ``run_id`` filter on
+    the result prunes to that run's partition."""
+    return spark.read.parquet(path)

@@ -216,22 +216,6 @@ def xxh64_string_ctes(input_cte: str, id_cols: list[str], str_expr: str,
     )"""
 
 
-def hash_long_aliases(l: str, seed: int, prefix: str) -> list[str]:
-    """Spark xxhash64 of one LONG child with integer seed, as a lateral-
-    alias chain: ``{prefix}_u`` lifts the signed input to unsigned,
-    ``{prefix}_f5`` is the unsigned result (use :func:`_signed` to
-    render Spark's BIGINT)."""
-    p = prefix
-    init = f"{(seed + P5 + 8) & MASK}::HUGEINT"
-    return [
-        f"CASE WHEN ({l}) < 0 THEN ({l})::HUGEINT + {M64} "
-        f"ELSE ({l})::HUGEINT END AS {p}_u",
-        f"({_mul(_rotl(_xor(init, _round0(p + '_u')), 27), str(P1))}"
-        f" + {P4}) % {M64} AS {p}_a",
-        *_fmix_aliases(f"{p}_a", f"{p}_f"),
-    ]
-
-
 def seed_permutation_ctes(input_cte: str, id_cols: list[str], long_col: str,
                           seeds: list[int], prefix: str) -> str:
     """CTE chain computing Spark ``xxhash64(long_col, lit(i))`` for every i

@@ -179,8 +179,7 @@ def unpersist_evaluation(report: dict[str, DataFrame]) -> None:
         paired.unpersist()
 
 
-def generate_evaluation_report(report: dict[str, DataFrame],
-                               output_path: str | None = None) -> str:
+def generate_evaluation_report(report: dict[str, DataFrame]) -> str:
     """Human-readable text report — byte-layout parity with the reference's
     ``generate_evaluation_report`` (evaluation.py:239-295): header rule,
     overall block, per-type lines as ``accuracy (correct/total)``, per-field
@@ -221,8 +220,4 @@ def generate_evaluation_report(report: dict[str, DataFrame],
         lines.append(f"  {r['field']}: {r['accuracy']:.2%}")
     lines.extend(["", "=" * 60])
 
-    text = "\n".join(lines)
-    if output_path:
-        with open(output_path, "w", encoding="utf-8") as f:
-            f.write(text)
-    return text
+    return "\n".join(lines)

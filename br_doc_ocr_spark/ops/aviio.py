@@ -27,8 +27,8 @@ Everything else (other fourccs, bit depths, palettes, audio-only files)
 raises a named ValueError — the module's error contract mirrors the other
 codecs: corrupt or unsupported payloads are ALWAYS ``ValueError`` with an
 ``AVI:`` prefix (MJPEG frame errors keep their ``JPEG:`` detail inside the
-message), never IndexError/struct.error, so the kernels'
-``on_error='skip'`` quarantine can rely on the exception type.
+message), never IndexError/struct.error, so the kernels' media
+quarantine can rely on the exception type.
 
 Container metadata (``strf`` dimensions, scanned frame count) is
 authoritative over caller-supplied metadata, same contract as the image
@@ -285,14 +285,13 @@ def _list(ltype: bytes, body: bytes) -> bytes:
     return _chunk(b"LIST", ltype + body)
 
 
-def encode_avi(frames, fps: float = 10.0, codec: str = "MJPG",
-               quality: int = 90) -> bytes:
+def encode_avi(frames, fps: float = 10.0, codec: str = "MJPG") -> bytes:
     """uint8 RGB frames (each (h, w, 3), all equal dims) → AVI bytes with a
     single video stream: ``MJPG`` (each frame a baseline-JFIF image via
-    :func:`jpegio.encode_jpeg`) or uncompressed 24-bit ``DIB`` (bottom-up
-    BGR, 4-byte row stride). Writes a spec-complete header set (avih, strh,
-    strf, idx1) so third-party players accept the output; the decoder in
-    this module never trusts idx1.
+    :func:`jpegio.encode_jpeg` at its default quality) or uncompressed
+    24-bit ``DIB`` (bottom-up BGR, 4-byte row stride). Writes a
+    spec-complete header set (avih, strh, strf, idx1) so third-party players
+    accept the output; the decoder in this module never trusts idx1.
     """
     if not frames:
         raise _err("encode needs at least one frame")
@@ -304,7 +303,7 @@ def encode_avi(frames, fps: float = 10.0, codec: str = "MJPG",
     if codec == "MJPG":
         from br_doc_ocr_spark.ops import jpegio
 
-        bodies = [jpegio.encode_jpeg(f, quality=quality) for f in frames]
+        bodies = [jpegio.encode_jpeg(f) for f in frames]
         ckid, compression, size_image = b"00dc", b"MJPG", w * h * 3
     elif codec == "DIB":
         stride = (w * 3 + 3) & ~3

@@ -1,9 +1,9 @@
-"""Deduplication operators: exact, n-gram Jaccard, MinHash+LSH, SimHash.
+"""Deduplication operators: n-gram Jaccard, MinHash+LSH, SimHash, and the
+connected-components keeper resolution. Exact dedup is a plain hash
+group-by, built inline by the ``dedup_exact_groups`` catalog query.
 
 Scale design notes (the part that matters at 100 TB):
 
-- **exact**: hash group-by on the content (or its fingerprint) — one shuffle,
-  map-side partial aggregation for free.
 - **MinHash+LSH**: the only pairwise method that avoids O(n²): signatures are
   computed scan-side with pure column expressions (``xxhash64`` per seed over
   the shingle array — JVM, codegen), then banded; candidate pairs come from a
@@ -17,8 +17,9 @@ Scale design notes (the part that matters at 100 TB):
   trick, pigeonhole: d ≤ 3 ⇒ ≥1 of 4 chunks equal). Spark's xxhash64 is
   reproduced bit-exactly in SQL (duckdb_xxh64.py), so the whole operator
   has a value-level oracle (queries.py).
-- **n-gram Jaccard**: exact verifier used on candidate pairs; standalone
-  variant provided for small sides / tests.
+- **n-gram Jaccard**: exact verifier used on candidate pairs;
+  :func:`ngram_jaccard_pairs` is the all-pairs variant, the exact oracle
+  the MinHash tests compare against.
 """
 
 from __future__ import annotations
@@ -31,46 +32,6 @@ from pyspark.sql import functions as sf
 SHINGLE_N = 3
 NUM_HASHES = 32
 BANDS = 8
-
-
-# ---------------------------------------------------------------------------
-# Exact dedup
-# ---------------------------------------------------------------------------
-
-def exact_duplicates(df: DataFrame) -> DataFrame:
-    """Group identical ``text`` → (keeper ``doc_id``, duplicate count).
-
-    The reference's only dedup concept is the ``file_hash`` unique key
-    (``specs/.../data-model.md:50,56``) → hash group-by here.
-    """
-    return (
-        df.groupBy("text")
-        .agg(sf.min("doc_id").alias("keeper_id"),
-             sf.count("*").alias("n_copies"))
-        .filter(sf.col("n_copies") > 1)
-    )
-
-
-def drop_exact_duplicates(df: DataFrame) -> DataFrame:
-    """Keep the min-``doc_id`` row per identical ``text`` — deterministic,
-    unlike ``dropDuplicates`` whose survivor is partition-order dependent.
-
-    NULL keys dedup as one group like any other value (review r04: a plain
-    semi-join's non-null-safe equality silently DELETED every NULL-text
-    row — failed-extract rows are legitimate input — instead of keeping
-    one); the join condition is null-safe on ``text``.
-
-    Both sides are explicitly aliased and the condition built from
-    qualified refs: mixing a frame's columns with its groupBy-derived
-    child's made Spark log 'Constructing trivially true equals predicate'
-    and resolve only via ambiguous-self-join disambiguation — working but
-    fragile across Spark versions (ADVICE r04)."""
-    keepers = (df.groupBy("text")
-               .agg(sf.min("doc_id").alias("_keeper_id")).alias("r"))
-    left = df.alias("l")
-    cond = (sf.col("l.text").eqNullSafe(sf.col("r.text"))
-            & (sf.col("l.doc_id") == sf.col("r._keeper_id")))
-    return left.join(keepers, on=cond, how="left_semi")
 
 
 # ---------------------------------------------------------------------------
@@ -144,9 +105,9 @@ def jaccard_counts(a: Column, b: Column) -> tuple[Column, Column]:
             sf.size(sf.array_union(a, b)))
 
 
-def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
-    """All-pairs shingle Jaccard ≥ threshold (O(n²) — small inputs / test
-    oracle; the scale path is :func:`minhash_lsh_candidates` + verify)."""
+def ngram_jaccard_pairs(df: DataFrame) -> DataFrame:
+    """All-pairs shingle Jaccard ≥ 0.5 (O(n²) — small inputs / test
+    oracle; the scale path is :func:`minhash_near_duplicates`)."""
     sh = df.select(sf.col("doc_id").alias("id"),
                    word_shingles(sf.col("text")).alias("sh"))
     left = sh.alias("l")
@@ -157,7 +118,7 @@ def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
             sf.col("l.id").alias("id_a"), sf.col("r.id").alias("id_b"),
             sf.round(jaccard(sf.col("l.sh"), sf.col("r.sh")), 6).alias("jaccard"),
         )
-        .filter(sf.col("jaccard") >= threshold)
+        .filter(sf.col("jaccard") >= 0.5)
     )
 
 
@@ -246,20 +207,9 @@ def minhash_near_duplicates(df: DataFrame,
 # pair join in DuckDB and the driver value-hashes both sides.
 # ---------------------------------------------------------------------------
 
-def _bq(name: str) -> str:
-    """Backtick-quote a column name for splicing into a SQL string
-    (embedded backticks doubled, per Spark identifier quoting). The
-    SQL-string query builds below take caller-supplied column names —
-    unquoted interpolation broke names with spaces/reserved words that the
-    Column API handled, and spliced arbitrary SQL verbatim (review r05)."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def simhash_signatures(df: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text",
-                       out_col: str = "simhash",
-                       salt_buckets: int = 4) -> DataFrame:
-    """(id, simhash LONG) per document — 64-bit SimHash, all JVM-side.
+def simhash_signatures(df: DataFrame, salt_buckets: int = 4) -> DataFrame:
+    """(id, simhash LONG) per ``(doc_id, text)`` document — 64-bit SimHash,
+    all JVM-side.
 
     Shape mirrors :func:`minhash_signatures` with PACKED vote lanes
     (VERDICT r02 #4): explode the token multiset, then instead of 64
@@ -318,9 +268,9 @@ def simhash_signatures(df: DataFrame, id_col: str = "doc_id",
     #   posexplode_outer null-token row would vote the bits of 42 into its
     #   signature instead of falling through to signature 0.
     toks = df.selectExpr(
-        f"{_bq(id_col)} AS id",
-        "posexplode_outer(filter(split(trim(lower("
-        f"{_bq(text_col)})), '\\\\s+'), x -> x != '')) AS (_pos, _tok)")
+        "doc_id AS id",
+        "posexplode_outer(filter(split(trim(lower(text)), '\\\\s+'), "
+        "x -> x != '')) AS (_pos, _tok)")
     h = toks.selectExpr(
         "id", f"pmod(coalesce(_pos, 0), {salt_buckets}) AS _salt",
         "CASE WHEN _tok IS NULL THEN CAST(NULL AS BIGINT) "
@@ -394,7 +344,7 @@ def simhash_signatures(df: DataFrame, id_col: str = "doc_id",
         f"{'(-9223372036854775807L - 1L)' if i == 63 else f'{1 << i}L'}"
         f" ELSE 0L END AS BIGINT)"
         for i in range(64))
-    return guarded.selectExpr("id", f"({pack}) AS {_bq(out_col)}")
+    return guarded.selectExpr("id", f"({pack}) AS simhash")
 
 
 def simhash_near_duplicates(df: DataFrame,
@@ -510,11 +460,3 @@ def drop_near_duplicates(df: DataFrame, pairs: DataFrame,
     losers = comps.filter(sf.col("id") != sf.col("comp")).select(
         sf.col("id").alias("doc_id"))
     return df.join(losers, "doc_id", "left_anti")
-
-
-def drop_minhash_near_duplicates(df: DataFrame) -> DataFrame:
-    """End-to-end corpus dedup in one call: MinHash/LSH candidate pairs →
-    exact-Jaccard verify ≥ 0.5 → connected components → keep the
-    min-id representative per cluster (plus all untouched rows). The full
-    pretraining-dedup pipeline, every stage the bounded-shuffle scale path."""
-    return drop_near_duplicates(df, minhash_near_duplicates(df))

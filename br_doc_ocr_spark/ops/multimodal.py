@@ -17,8 +17,8 @@ decoder is either
   pixels whether or not PIL is installed. Every other payload — unknown magic, or a
   format of the wrong modality for its row — raises ``ValueError`` naming
   its leading bytes and the library that would decode it (PIL,
-  torchaudio/soundfile or PyAV); ``on_error='skip'`` quarantines it and
-  the returned tally counts it (``skipped_ValueError``), or
+  torchaudio/soundfile or PyAV); the kernel quarantines it and the
+  returned tally counts it (``skipped_ValueError``), or
 - :class:`FakeDecoder`, passed explicitly: deterministic bytes→"pixels"
   synthesis, so every stage runs with checkable numbers on ``synth_media``.
 
@@ -239,24 +239,21 @@ def _phash(gray: np.ndarray) -> int:
                           signed=True)
 
 
-def _media_kernel(decoder, on_error: str, ddl: str,
-                  featurize: Callable[..., list[tuple]]):
+def _media_kernel(decoder, ddl: str, featurize: Callable[..., list[tuple]]):
     """The per-batch function the three kernels share: ``featurize(decoder,
     media_id, payload, meta)`` returns one media's output rows.
 
-    ``on_error='skip'`` quarantines corrupt payloads at MEDIA granularity:
-    a decode ValueError/OSError drops every row of that media (for video,
-    ALL its frames — a half-sampled video would silently skew frame-level
-    dedup/aggregation) instead of failing the task, and counts it as
-    ``skipped_<ExceptionClass>`` in the output's ``attrs["counts"]``, which
-    ``map_kernel`` adds to the tally. At cluster scale one bad blob must not
-    kill a 128 MB scan partition after retry exhaustion (SCALE.md
-    "Multimodal decode"). OSError too: PIL's UnidentifiedImageError
-    subclasses OSError, not ValueError (ADVICE r04). The default stays
-    ``'raise'``: small curated corpora should fail loudly."""
+    Corrupt payloads are quarantined at MEDIA granularity, like a bad row of
+    the text kernel: a decode ValueError/OSError drops every row of that
+    media (for video, ALL its frames — a half-sampled video would silently
+    skew frame-level dedup/aggregation) instead of failing the task, and
+    counts it as ``skipped_<ExceptionClass>`` in the output's
+    ``attrs["counts"]``, which ``map_kernel`` adds to the tally — never a
+    silent loss. At cluster scale one bad blob must not kill a 128 MB scan
+    partition after retry exhaustion (SCALE.md "Multimodal decode").
+    OSError too: PIL's UnidentifiedImageError subclasses OSError, not
+    ValueError (ADVICE r04)."""
     decoder = decoder or MediaDecoder()
-    if on_error not in ("raise", "skip"):
-        raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
     columns = _ddl_columns(ddl)
 
     def run(batch: pd.DataFrame) -> pd.DataFrame:
@@ -266,8 +263,6 @@ def _media_kernel(decoder, on_error: str, ddl: str,
             try:
                 rows += featurize(decoder, int(media_id), bytes(payload), meta)
             except (ValueError, OSError) as e:
-                if on_error == "raise":
-                    raise
                 skipped[f"skipped_{type(e).__name__}"] += 1
         out = pd.DataFrame(rows, columns=columns)
         out.attrs["counts"] = skipped
@@ -276,7 +271,7 @@ def _media_kernel(decoder, on_error: str, ddl: str,
     return run
 
 
-def image_feature_kernel(decoder=None, on_error: str = "raise"):
+def image_feature_kernel(decoder=None):
     """decode → resize → per-band means → perceptual hash, one row per
     image (quarantine contract: :func:`_media_kernel`)."""
 
@@ -292,7 +287,7 @@ def image_feature_kernel(decoder=None, on_error: str = "raise"):
                  [float(small[:, :, c].mean()) for c in range(3)],
                  _phash(small.mean(axis=2)))]
 
-    return _media_kernel(decoder, on_error, IMAGE_FEATURES_DDL, featurize)
+    return _media_kernel(decoder, IMAGE_FEATURES_DDL, featurize)
 
 
 AUDIO_FEATURES_DDL = (
@@ -302,7 +297,7 @@ AUDIO_FEATURES_DDL = (
 AUDIO_FRAME_SIZE = 1024  # samples per frame_energy entry
 
 
-def audio_feature_kernel(decoder=None, on_error: str = "raise"):
+def audio_feature_kernel(decoder=None):
     """decode → RMS / zero-crossing / framed energy, one row per clip
     (quarantine contract: :func:`_media_kernel`). ``n_samples`` reports the
     DECODED length — for :class:`FakeDecoder` that equals the metadata
@@ -320,7 +315,7 @@ def audio_feature_kernel(decoder=None, on_error: str = "raise"):
         return [(media_id, n_out, float(np.sqrt(np.mean(wave ** 2))), zc,
                  energy)]
 
-    return _media_kernel(decoder, on_error, AUDIO_FEATURES_DDL, featurize)
+    return _media_kernel(decoder, AUDIO_FEATURES_DDL, featurize)
 
 
 VIDEO_FRAMES_DDL = (
@@ -328,8 +323,7 @@ VIDEO_FRAMES_DDL = (
 )
 
 
-def video_frame_sample_kernel(decoder=None, every_nth: int = 10,
-                              on_error: str = "raise"):
+def video_frame_sample_kernel(decoder=None, every_nth: int = 10):
     """frame-sample (every_nth) → per-frame decode → intensity + hash.
     1→N flatMap: one output row per sampled frame (M7 explode shape;
     quarantine contract: :func:`_media_kernel`)."""
@@ -343,34 +337,33 @@ def video_frame_sample_kernel(decoder=None, every_nth: int = 10,
                          _phash(frame.mean(axis=2))))
         return rows
 
-    return _media_kernel(decoder, on_error, VIDEO_FRAMES_DDL, featurize)
+    return _media_kernel(decoder, VIDEO_FRAMES_DDL, featurize)
 
 
 # ---------------------------------------------------------------------------
 # DataFrame-level API
 # ---------------------------------------------------------------------------
 
-def image_features(media: DataFrame, decoder=None, on_error: str = "raise"
-                   ) -> tuple[DataFrame, Accumulator]:
+def image_features(media: DataFrame,
+                   decoder=None) -> tuple[DataFrame, Accumulator]:
     """→ (features, tally), both from :func:`pipeline.map_kernel`."""
     return map_kernel(media.filter(media.kind == "image"),
-                      image_feature_kernel(decoder, on_error),
+                      image_feature_kernel(decoder),
                       IMAGE_FEATURES_DDL)
 
 
-def audio_features(media: DataFrame, decoder=None, on_error: str = "raise"
-                   ) -> tuple[DataFrame, Accumulator]:
+def audio_features(media: DataFrame,
+                   decoder=None) -> tuple[DataFrame, Accumulator]:
     return map_kernel(media.filter(media.kind == "audio"),
-                      audio_feature_kernel(decoder, on_error),
+                      audio_feature_kernel(decoder),
                       AUDIO_FEATURES_DDL)
 
 
-def sample_video_frames(media: DataFrame, decoder=None, every_nth: int = 10,
-                        on_error: str = "raise"
+def sample_video_frames(media: DataFrame, decoder=None, every_nth: int = 10
                         ) -> tuple[DataFrame, Accumulator]:
     return map_kernel(
         media.filter(media.kind == "video"),
-        video_frame_sample_kernel(decoder, every_nth, on_error=on_error),
+        video_frame_sample_kernel(decoder, every_nth),
         VIDEO_FRAMES_DDL)
 
 

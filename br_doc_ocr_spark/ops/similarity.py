@@ -8,10 +8,9 @@ by ``vec_id``.
   sort, no single-reducer bottleneck).
 - :func:`knn_join` — k-NN for *every* row of a query set via a broadcast of
   the (small) query side + per-query window top-k.
-- :func:`ivf_topk` — the scale path: a deterministic coarse quantizer (sign
-  bits of the leading dimensions) buckets vectors at write time; a query
-  probes only its own bucket (+ optional neighbors), turning a full scan into
-  a partition-pruned one.
+- :func:`ivf_topk` — the approximate path: a deterministic coarse
+  quantizer (sign bits of the leading dimensions) buckets vectors; a query
+  scores only its own bucket (+ optional neighbors).
 """
 
 from __future__ import annotations
@@ -122,8 +121,8 @@ def knn_join(queries: DataFrame, corpus: DataFrame, k: int = 5) -> DataFrame:
 
 def ivf_bucket(vec: Column, n_bits: int = 8) -> Column:
     """Deterministic coarse quantizer: the sign pattern of the first
-    ``n_bits`` dimensions → an integer bucket id (2^n_bits cells). At write
-    time the corpus is partitioned by this column; a probe reads one cell."""
+    ``n_bits`` dimensions → an integer bucket id (2^n_bits cells); a probe
+    scores only the cells it names."""
     # a vector shorter than n_bits would make element_at throw (ANSI) or
     # yield NULL buckets that silently filter every row out — fail loudly
     checked = sf.when(
@@ -163,61 +162,16 @@ def probe_buckets(query_vec: list[float], n_bits: int = 8,
 
 def ivf_topk(embeddings: DataFrame, query_vec: list[float], k: int = 10,
              n_bits: int = 8, probe_hamming: int = 1) -> DataFrame:
-    """Approximate top-k with multi-probe over an UN-materialized corpus:
-    computes the quantizer per row and filters — a full scan with a cheap
-    predicate. Correctness/recall twin of :func:`ivf_topk_indexed`; at scale
-    use :func:`write_ivf_index` + :func:`ivf_topk_indexed`, which prunes the
-    scan to the probed cells (≈ Σ C(n_bits, d)/2^n_bits of the files —
-    n_bits=8, d ≤ 1 → 9/256 ≈ 3.5%). Measured recall@10 on the testdata
-    embeddings: 0.1-0.3 single-probe → 0.7-1.0 at probe_hamming=1."""
+    """Approximate top-k with multi-probe: computes the quantizer per row
+    and filters — a full scan with a cheap predicate, then cosine scoring of
+    the probed cells only (≈ Σ C(n_bits, d)/2^n_bits of the rows — n_bits=8,
+    d ≤ 1 → 9/256 ≈ 3.5%). Measured recall@10 on the testdata embeddings:
+    0.1-0.3 single-probe → 0.7-1.0 at probe_hamming=1."""
     cells = probe_buckets(query_vec, n_bits, probe_hamming)
     cell = embeddings.filter(
         ivf_bucket(sf.col("embedding").cast("array<double>"), n_bits)
         .isin(cells)
     )
-    return cosine_topk(cell, query_vec, k)
-
-
-def write_ivf_index(embeddings: DataFrame, path: str, n_bits: int = 8,
-                    files_per_cell: int = 1) -> None:
-    """Materialize the IVF index: the corpus written as parquet partitioned
-    by the quantizer cell (``bucket=<cell>/`` directories). A probe then
-    reads ONLY its probed cells via partition pruning — at 100 TB this is
-    the difference between a full scan per query and touching ~3.5% of the
-    files (and cells are further splittable into many files each, so a hot
-    cell still parallelizes). Write shuffle: one repartition by bucket so
-    each cell is a few large files rather than every input task writing a
-    sliver into every cell (small-files problem at 1000 executors).
-
-    ``files_per_cell`` is the hot-cell dial: skewed corpora concentrate in
-    few quantizer cells, and with the default a hot cell is written (and
-    later scanned as) ONE task's file — raise it to salt the write shuffle
-    by a deterministic hash of the vector so each cell lands as N files,
-    restoring both write parallelism and probe-side split parallelism."""
-    bucketed = embeddings.withColumn("bucket", ivf_bucket(
-        sf.col("embedding").cast("array<double>"), n_bits))
-    if files_per_cell > 1:
-        # explicit partition count: files per cell = distinct shuffle
-        # partitions holding that cell, so the (bucket, salt) combos need
-        # at least their own partition count (2x headroom vs hash
-        # collisions) — the session default would collapse them
-        n_parts = 2 * (1 << n_bits) * files_per_cell
-        salt = sf.pmod(sf.hash(sf.col("embedding")), sf.lit(files_per_cell))
-        out = bucketed.repartition(n_parts, sf.col("bucket"), salt)
-    else:
-        out = bucketed.repartition(sf.col("bucket"))
-    out.write.mode("overwrite").partitionBy("bucket").parquet(path)
-
-
-def ivf_topk_indexed(spark, path: str, query_vec: list[float], k: int = 10,
-                     n_bits: int = 8, probe_hamming: int = 1) -> DataFrame:
-    """Top-k probe against a :func:`write_ivf_index` materialization: the
-    ``bucket`` partition-column filter prunes at file-listing time (the scan
-    node shows it under ``PartitionFilters`` — locked by tests/test_plans.py),
-    so only the probed cells are read. Same results as :func:`ivf_topk` on
-    the same corpus/params."""
-    cells = probe_buckets(query_vec, n_bits, probe_hamming)
-    cell = spark.read.parquet(path).filter(sf.col("bucket").isin(cells))
     return cosine_topk(cell, query_vec, k)
 
 
@@ -324,8 +278,8 @@ def _int8_score(q_codes: list[int]) -> tuple[Column, Column]:
                f"ELSE raise_error(concat('int8 probe: index dimension ', "
                f"cast(size(q_codes) AS STRING), "
                f"' != query dimension {len(q_codes)}')) END")
-    # widen BEFORE multiplying: the int8 index stores array<tinyint>, and
-    # same-type tinyint*tinyint stays tinyint — 127² overflows it under ANSI
+    # widen BEFORE multiplying: a tinyint codes column would keep
+    # tinyint*tinyint as tinyint — 127² overflows it under ANSI
     int_dot = sf.expr(
         f"aggregate(zip_with({checked}, {qc}, "
         f"(x, y) -> cast(x as long) * y), cast(0 as long), (acc, x) -> acc + x)")
@@ -356,45 +310,6 @@ def cosine_topk_int8(embeddings: DataFrame, query_vec: list[float],
     int_dot, cos_q = _int8_score(q_codes)
     scored = coded.select("vec_id", int_dot.alias("int_dot"),
                           cos_q.alias("_cos"))
-    return (scored.orderBy(sf.desc("_cos"), sf.asc("vec_id")).limit(k)
-            .select("vec_id", "int_dot",
-                    sf.round(sf.col("_cos"), 6).alias("cosine_q")))
-
-
-def write_ivf_index_int8(embeddings: DataFrame, path: str,
-                         n_bits: int = 8) -> None:
-    """Quantized IVF index (VERDICT r03 #6): the corpus stored as
-    ``(vec_id, q_scale, q_codes array<tinyint>)`` partitioned by the sign-bit
-    quantizer cell. Two savings compose at probe time: partition pruning
-    reads only the probed cells (~3.5% of files at n_bits=8, d ≤ 1), and
-    the scan reads the int8 CODES instead of the float vectors (~4× fewer
-    bytes — measured on parquet in tests). ``q_scale`` is stored for
-    dequantization/reranking but the code-space-cosine probe never reads
-    it (column pruning, plan-locked)."""
-    coded = quantize_embeddings(embeddings)
-    bucketed = coded.select(
-        "vec_id", "q_scale",
-        sf.expr("transform(q_codes, x -> cast(x as tinyint))").alias("q_codes"),
-        ivf_bucket(sf.col("embedding").cast("array<double>"), n_bits)
-        .alias("bucket"))
-    (bucketed.repartition(sf.col("bucket"))
-     .write.mode("overwrite").partitionBy("bucket").parquet(path))
-
-
-def ivf_topk_indexed_int8(spark, path: str, query_vec: list[float],
-                          k: int = 10, n_bits: int = 8,
-                          probe_hamming: int = 1) -> DataFrame:
-    """Top-k probe against a :func:`write_ivf_index_int8` materialization:
-    partition pruning (bucket filter at file-listing time) + codes-only
-    column pruning + exact-integer code-space cosine, executed as
-    TakeOrderedAndProject. Returns (id, int_dot, cosine_q) like
-    :func:`cosine_topk_int8`."""
-    cells = probe_buckets(query_vec, n_bits, probe_hamming)
-    q_codes = _quantize_query(query_vec)
-    scan = spark.read.parquet(path).filter(sf.col("bucket").isin(cells))
-    int_dot, cos_q = _int8_score(q_codes)
-    scored = scan.select("vec_id", int_dot.alias("int_dot"),
-                         cos_q.alias("_cos"))
     return (scored.orderBy(sf.desc("_cos"), sf.asc("vec_id")).limit(k)
             .select("vec_id", "int_dot",
                     sf.round(sf.col("_cos"), 6).alias("cosine_q")))

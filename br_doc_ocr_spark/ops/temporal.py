@@ -86,14 +86,13 @@ def asof_join(left: DataFrame, right: DataFrame,
                       for c in value_cols]))
 
 
-def range_join(points: DataFrame, intervals: DataFrame,
-               bucket_seconds: int = 3600) -> DataFrame:
+def range_join(points: DataFrame, intervals: DataFrame) -> DataFrame:
     """All (point, interval) pairs with ``start <= ts <= end`` per
-    ``user_id``. Intervals explode to their covered time buckets; each
+    ``user_id``. Intervals explode to their covered one-hour buckets; each
     point has exactly ONE bucket, so the (key, bucket) equi-join plus the
     residual range filter emits every qualifying pair exactly once — no
-    dedup, no cartesian. Size ``bucket_seconds`` near the typical interval
-    length: candidates per point ≈ intervals overlapping its bucket.
+    dedup, no cartesian. Candidates per point ≈ intervals overlapping its
+    hour.
     """
     # reserved working-column guard, same contract as asof_join: withColumn
     # would silently OVERWRITE a caller's pre-existing _bucket (e.g. the
@@ -123,11 +122,10 @@ def range_join(points: DataFrame, intervals: DataFrame,
         intervals = intervals.withColumnsRenamed(renames)
         start_col = renames.get(start_col, start_col)
         end_col = renames.get(end_col, end_col)
-    p_bucket = sf.floor(sf.unix_timestamp(sf.col("ts"))
-                        / sf.lit(bucket_seconds))
+    p_bucket = sf.floor(sf.unix_timestamp(sf.col("ts")) / sf.lit(3600))
     i_buckets = sf.sequence(
-        sf.floor(sf.unix_timestamp(sf.col(start_col)) / sf.lit(bucket_seconds)),
-        sf.floor(sf.unix_timestamp(sf.col(end_col)) / sf.lit(bucket_seconds)))
+        sf.floor(sf.unix_timestamp(sf.col(start_col)) / sf.lit(3600)),
+        sf.floor(sf.unix_timestamp(sf.col(end_col)) / sf.lit(3600)))
     # qualified residual filter: an intervals frame that happens to carry a
     # column named ts (or vice versa) must not make the bare-name references
     # ambiguous (review r04 — asof_join already guards its clashes)

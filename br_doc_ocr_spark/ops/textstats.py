@@ -247,8 +247,7 @@ def _sql_filtered_tokens(text_sql: str) -> str:
     return f"filter({_SQL_WORD_TOKENS.format(t=text_sql)}, x -> x <> '')"
 
 
-def repetition_stats(df: DataFrame, text_col: str = "text",
-                     ngram_n: int = 3) -> DataFrame:
+def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Attach ``dup_line_frac`` / ``dup_line_char_frac`` / ``dup_ngram_frac``.
 
     Exact formulas (deterministic, engine-portable):
@@ -258,7 +257,7 @@ def repetition_stats(df: DataFrame, text_col: str = "text",
       (character-weighted variant: every repeat of a line counts its full
       length against the document)
     - ``dup_ngram_frac``  = 1 − distinct(word n-grams) / n-grams over the
-      :func:`_word_tokens` tokenization (n = ``ngram_n``)
+      :func:`_word_tokens` tokenization (n = 3)
 
     All three are 0.0 for documents with no lines / too few tokens. Emitted
     as single parsed SQL expressions (the langid/dedup build-time lesson).
@@ -280,7 +279,7 @@ def repetition_stats(df: DataFrame, text_col: str = "text",
         "_rs_toks": sf.expr(_sql_filtered_tokens(t)),
     }).withColumns({
         "_rs_dlines": sf.expr("array_distinct(_rs_lines)"),
-        "_rs_grams": sf.expr(_sql_word_ngrams("_rs_toks", ngram_n)),
+        "_rs_grams": sf.expr(_sql_word_ngrams("_rs_toks", 3)),
     })
     return staged.withColumns({
         "dup_line_frac": sf.expr(
@@ -294,28 +293,6 @@ def repetition_stats(df: DataFrame, text_col: str = "text",
             "round(CASE WHEN size(_rs_grams) = 0 THEN 0.0 ELSE "
             "1.0 - size(array_distinct(_rs_grams)) / size(_rs_grams) END, 6)"),
     }).drop("_rs_lines", "_rs_toks", "_rs_dlines", "_rs_grams")
-
-
-def top_ngram_share(df: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text", ngram_n: int = 2) -> DataFrame:
-    """(id, top_ngram, top_ngram_share): share of the document's n-grams
-    taken by its single most frequent n-gram (Gopher's top-n-gram filter).
-
-    One explode → partial-aggregated count per (id, gram) → ``max_by`` per
-    id; ties break to the lexicographically smallest gram for determinism.
-    Two shuffles on (id[, gram]) — at corpus scale both are linear,
-    partial-agg'd, and skew-free (keys are per-document)."""
-    exploded = (df.select(sf.col(id_col).alias("id"),
-                          sf.expr(_sql_filtered_tokens(_sql_ident(text_col)))
-                          .alias("_tn_toks"))
-                .select("id", sf.explode(
-                    sf.expr(_sql_word_ngrams("_tn_toks", ngram_n)))
-                    .alias("gram")))
-    counts = exploded.groupBy("id", "gram").agg(sf.count("*").alias("c"))
-    return (counts.groupBy("id")
-            .agg(sf.expr("min_by(gram, struct(-c, gram))").alias("top_ngram"),
-                 sf.round(sf.max("c") / sf.sum("c"), 6)
-                 .alias("top_ngram_share")))
 
 
 # ---------------------------------------------------------------------------
@@ -451,8 +428,7 @@ def curate_documents(
     audit (what share died to which rule — the number a curation run is
     judged by). Everything is per-row column expressions — map-only,
     shuffle-free (plan-tested), so it composes with any scan at 100 TB
-    scan cost; the one aggregate signal (top-n-gram share) stays a
-    separate opt-in pass (:func:`top_ngram_share`).
+    scan cost.
     """
     out = repetition_stats(with_text_stats(df, text_col), text_col)
     # NULL text first, explicitly: every stat below is NULL for a NULL

@@ -21,8 +21,8 @@ Supported profile:
 Everything else (ADPCM, A-law/µ-law, WAVE_FORMAT_EXTENSIBLE sub-formats)
 raises a named ValueError — the module's error contract mirrors the image
 codecs: corrupt or unsupported payloads are ALWAYS ``ValueError`` with a
-``WAV:`` prefix, never IndexError/struct.error, so the kernels'
-``on_error='skip'`` quarantine can rely on the type.
+``WAV:`` prefix, never IndexError/struct.error, so the kernels' media
+quarantine can rely on the type.
 
 Decoding is vectorized: one ``np.frombuffer`` over the data chunk plus a
 constant number of array ops (the 24-bit path pads each 3-byte frame via a

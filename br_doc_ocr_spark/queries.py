@@ -8,16 +8,17 @@ Conventions (the driver hash-compares sorted-by-name columns at sf=0.01):
 - timestamps in outputs are formatted to strings;
 - deterministic tie-breaks everywhere a limit/rank appears.
 
-Queries whose kernels are hash- or Python-based (MinHash, SimHash, rolling
-fingerprint, the extraction pipeline itself) have no SQL oracle — the driver
-records a rows-only check; their correctness gate is the pytest golden suite.
+Every entry has an oracle, the hash- and Python-based ones included:
+MinHash and SimHash through the bit-exact SQL rendering of Spark's xxhash64
+(``duckdb_xxh64``), the rolling fingerprint through its SQL fold, and the
+extraction family through committed per-SF golden-kernel fixtures.
 """
 
 from __future__ import annotations
 
 import os
 from dataclasses import dataclass
-from typing import Callable, Optional
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as sf
@@ -74,16 +75,16 @@ def _sql_stopword_hits(words) -> str:
 
 @dataclass
 class QueryDef:
-    """One catalog entry: Spark implementation + optional DuckDB oracle SQL."""
+    """One catalog entry: Spark implementation + DuckDB oracle SQL."""
     fn: Callable[[SparkSession, str], DataFrame]
-    sql: Optional[str]
+    sql: str
     doc: str
 
 
 REGISTRY: dict[str, QueryDef] = {}
 
 
-def register(name: str, sql: Optional[str], doc: str):
+def register(name: str, sql: str, doc: str):
     def wrap(fn):
         REGISTRY[name] = QueryDef(fn=fn, sql=sql, doc=doc)
         return fn
@@ -2165,4 +2166,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return {name: q.sql for name, q in REGISTRY.items() if q.sql is not None}
+    return {name: q.sql for name, q in REGISTRY.items()}

@@ -40,7 +40,7 @@ def test_dib_roundtrip_is_exact_including_odd_stride():
 
 def test_mjpg_roundtrip_is_close_and_deterministic():
     frames = _frames(3, w=48, h=32, seed=2)
-    p = encode_avi(frames, codec="MJPG", quality=90)
+    p = encode_avi(frames, codec="MJPG")
     info = parse_avi(p)
     assert info.codec == "MJPG" and info.n_frames == 3
     for i, f in enumerate(frames):
@@ -228,10 +228,9 @@ def test_video_on_error_skip_quarantines_whole_media(spark):
     ]
     pdf = pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"])
     media = spark.createDataFrame(pdf, schema=mm.MEDIA_SCHEMA_DDL)
-    kept = (mm.sample_video_frames(media, every_nth=1, on_error="skip")[0]
-            .collect())
+    frames, tally = mm.sample_video_frames(media, every_nth=1)
+    kept = frames.collect()
     assert sorted((r.media_id, r.frame_idx) for r in kept) == [(1, 0), (1, 1)]
-    with pytest.raises(Exception, match="AVI"):
-        mm.sample_video_frames(media, every_nth=1)[0].collect()
-    with pytest.raises(ValueError, match="on_error must be"):
-        mm.video_frame_sample_kernel(on_error="drop")
+    assert sum(c["skipped_ValueError"] for c in tally.value.values()) == 1
+    with pytest.raises(ValueError, match="AVI"):
+        mm.MediaDecoder().decode_video_frame(b"garbage-not-an-avi", 0, 16, 8)

@@ -159,7 +159,7 @@ def test_metrics_collector_parquet_sink(spark, tmp_path):
         for i, loss in enumerate(losses):
             mc.log(i + 1, loss=loss)
         mc.append_parquet(spark, path)
-    hist = ds.read_metrics_history(spark, path, run_id="run-a")
+    hist = ds.read_metrics_history(spark, path).filter("run_id = 'run-a'")
     rows = {(r["step"], r["name"]): r["value"]
             for r in hist.collect()}
     assert rows == {(1, "loss"): 1.5, (2, "loss"): 1.1}

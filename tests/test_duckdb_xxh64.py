@@ -117,20 +117,6 @@ LONGS = [0, 1, -1, 42, 2**31, -(2**31), 2**63 - 1, -(2**63),
          123456789123456789, -987654321987654321]
 
 
-def test_duckdb_hash_long_matches_python_model():
-    con = duckdb.connect()
-    con.execute("CREATE TABLE t AS SELECT * FROM (VALUES "
-                + ", ".join(f"({i}, ({v})::BIGINT)"
-                            for i, v in enumerate(LONGS))
-                + ") v(id, l)")
-    aliases = ",\n".join(X.hash_long_aliases("l", 42, "_g"))
-    sql = (f"SELECT id, {X._signed('_g_f5')} AS h FROM "
-           f"(SELECT id, {aliases} FROM t) ORDER BY id")
-    got = dict(con.execute(sql).fetchall())
-    want = {i: _signed(hash_long(v & M, 42)) for i, v in enumerate(LONGS)}
-    assert got == want
-
-
 def test_duckdb_seed_permutation_ctes_match_python_model():
     """The layered (per-avalanche-level CTE) seed-permutation chain — the
     form the MinHash oracle actually uses, since deep lateral-alias chains

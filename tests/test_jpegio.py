@@ -366,20 +366,20 @@ def test_fuzzed_payloads_raise_value_error_or_decode(pos, val):
 
 
 def test_image_features_on_error_skip_quarantines_rows(spark):
-    """One corrupt blob in a media table drops that ROW under
-    on_error='skip' (the 100-TB posture, SCALE.md) and fails the task
-    under the default on_error='raise'."""
+    """One corrupt blob in a media table drops that ROW (the 100-TB
+    posture, SCALE.md) and is counted by exception class in the tally."""
     media = mm.synth_jpeg_media(spark, n=4)
     corrupt = media.selectExpr(
         "media_id + 50 AS media_id", "kind",
         "cast('not an image at all' as binary) AS payload", "meta")
     mixed = media.unionByName(corrupt.limit(1))
-    good = mm.image_features(mixed, on_error="skip")[0].collect()
+    feats, tally = mm.image_features(mixed)
+    good = feats.collect()
     assert sorted(r["media_id"] for r in good) == [0, 1, 2, 3]
-    with pytest.raises(Exception, match="unrecognized image payload"):
-        mm.image_features(mixed)[0].collect()
-    with pytest.raises(ValueError, match="on_error"):
-        mm.image_feature_kernel(on_error="quarantine")
+    counts = tally.value.values()
+    assert sum(c["skipped_ValueError"] for c in counts) == 1
+    with pytest.raises(ValueError, match="unrecognized image payload"):
+        mm.MediaDecoder().decode_image(b"not an image at all", 16, 16)
 
 
 def test_image_features_on_error_skip_quarantines_oserror(spark):
@@ -400,15 +400,12 @@ def test_image_features_on_error_skip_quarantines_oserror(spark):
         "media_id + 50 AS media_id", "kind",
         "cast('bad' as binary) AS payload", "meta").limit(1)
     mixed = media.unionByName(corrupt)
-    feats, tally = mm.image_features(mixed, decoder=OsErrorDecoder(),
-                                     on_error="skip")
+    feats, tally = mm.image_features(mixed, decoder=OsErrorDecoder())
     good = feats.collect()
     assert sorted(r["media_id"] for r in good) == [0, 3]
     counts = tally.value.values()
     assert sum(c["skipped_OSError"] for c in counts) == 1
     assert sum(c["row_count"] for c in counts) == len(good)
-    with pytest.raises(Exception, match="cannot identify image file"):
-        mm.image_features(mixed, decoder=OsErrorDecoder())[0].collect()
 
 
 def test_oversubscribed_dht_raises_value_error():
@@ -416,7 +413,7 @@ def test_oversubscribed_dht_raises_value_error():
     one-bit codes) must raise the named ValueError — the r05 LUT build
     over-indexed its table and raised IndexError, which escapes the image
     kernels' (ValueError, OSError) row quarantine and would let one corrupt
-    blob kill a streaming trigger (review r05)."""
+    blob kill a task (review r05)."""
     img = _gradient_rgb(16, 16)
     payload = bytearray(jpegio.encode_jpeg(img, quality=90))
     dht = payload.find(b"\xff\xc4")

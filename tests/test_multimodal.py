@@ -117,8 +117,8 @@ def test_library_decoder_is_clearly_stubbed(monkeypatch):
 
     monkeypatch.setitem(sys.modules, "PIL", None)  # PIL absent
     d = mm.MediaDecoder()
-    # formats outside the codec table raise ValueError (quarantinable under
-    # on_error='skip') naming the library that would decode them; PNG/JPEG
+    # formats outside the codec table raise ValueError (which the kernels
+    # quarantine) naming the library that would decode them; PNG/JPEG
     # payloads decode dependency-free (test_jpegio)
     with pytest.raises(ValueError, match="PIL"):
         d.decode_image(b"GIF89a....", 1, 1)
@@ -130,11 +130,10 @@ def test_library_decoder_is_clearly_stubbed(monkeypatch):
 
 def test_media_decoder_quarantines_formats_outside_the_table(monkeypatch):
     """A GIF image, an MP3 (ID3) audio payload and an MP4 video payload are
-    outside the codec table: each raises ValueError, so on_error='skip'
-    drops exactly those rows, keeps the good ones and counts the skip as
-    ``skipped_ValueError`` on the returned frame, and on_error='raise'
-    names the library that would decode the format. The per-batch kernels
-    run directly on a pandas batch."""
+    outside the codec table: each raises ValueError naming the library
+    that would decode the format, so the kernel drops exactly those rows,
+    keeps the good ones and counts the skip as ``skipped_ValueError`` on the
+    returned frame. The per-batch kernels run directly on a pandas batch."""
     import sys
 
     import pandas as pd
@@ -145,22 +144,26 @@ def test_media_decoder_quarantines_formats_outside_the_table(monkeypatch):
     img = np.zeros((8, 16, 3), np.uint8)
     meta = {"width": 16, "height": 8, "n_frames": 2, "sample_rate": 8000,
             "format": "mixed"}
+    d = mm.MediaDecoder()
     cases = [
         (mm.image_feature_kernel, pngio.encode_png(img),
-         b"GIF89a\x10\x00\x08\x00", "PIL"),
+         b"GIF89a\x10\x00\x08\x00", "PIL",
+         lambda p: d.decode_image(p, 16, 8)),
         (mm.audio_feature_kernel,
          wavio.encode_wav(np.zeros(800, np.int16), 8000),
-         b"ID3\x04\x00\x00\x00\x00\x00\x00", "torchaudio"),
+         b"ID3\x04\x00\x00\x00\x00\x00\x00", "torchaudio",
+         lambda p: d.decode_audio(p, 8000)),
         (mm.video_frame_sample_kernel, aviio.encode_avi([img, img],
                                                         codec="DIB"),
-         b"\x00\x00\x00\x18ftypmp42", "PyAV"),
+         b"\x00\x00\x00\x18ftypmp42", "PyAV",
+         lambda p: d.decode_video_frame(p, 0, 16, 8)),
     ]
-    for kernel, good, bad, library in cases:
+    for kernel, good, bad, library, decode in cases:
         batch = pd.DataFrame(
             [(1, good, meta), (2, bad, meta), (3, good, meta)],
             columns=["media_id", "payload", "meta"])
-        kept = kernel(on_error="skip")(batch)
+        kept = kernel()(batch)
         assert kept["media_id"].tolist() == [1, 3]
         assert kept.attrs["counts"] == {"skipped_ValueError": 1}
         with pytest.raises(ValueError, match=library):
-            kernel()(batch)
+            decode(bad)

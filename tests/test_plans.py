@@ -63,65 +63,71 @@ def test_extraction_has_single_arrow_crossing_and_shuffle(spark,
 def test_map_kernel_is_the_only_map_in_pandas_call():
     """Every Python crossing in the package goes through
     ``pipeline.map_kernel`` (its tally, its kept zip directories): an
-    ``ast`` scan finds exactly one ``.mapInPandas(`` call, inside it."""
+    ``ast`` scan finds exactly one call of any Python-crossing API —
+    ``mapInPandas``, ``mapInArrow``, ``applyInPandas``,
+    ``applyInPandasWithState``, ``pandas_udf`` or ``udf``, called or used
+    as a decorator — and it is the ``.mapInPandas(`` inside ``map_kernel``."""
     import ast
     from pathlib import Path
 
+    crossings = {"mapInPandas", "mapInArrow", "applyInPandas",
+                 "applyInPandasWithState", "pandas_udf", "udf"}
     package = Path(pipeline.__file__).parent
     found = []
     for path in sorted(package.rglob("*.py")):
         tree = ast.parse(path.read_text())
         defs = [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]
-        for node in ast.walk(tree):
-            if (isinstance(node, ast.Call)
-                    and isinstance(node.func, ast.Attribute)
-                    and node.func.attr == "mapInPandas"):
+        uses = [n.func for n in ast.walk(tree) if isinstance(n, ast.Call)]
+        uses += [d for n in ast.walk(tree)
+                 if isinstance(n, (ast.FunctionDef, ast.ClassDef))
+                 for d in n.decorator_list
+                 if isinstance(d, (ast.Name, ast.Attribute))]
+        for node in uses:
+            api = _name(node)
+            if api in crossings:
                 owner = max((d for d in defs
                              if d.lineno <= node.lineno <= d.end_lineno),
                             key=lambda d: d.lineno, default=None)
                 found.append((path.relative_to(package).as_posix(),
-                              owner and owner.name))
-    assert found == [("pipeline.py", "map_kernel")]
+                              owner and owner.name, api))
+    assert found == [("pipeline.py", "map_kernel", "mapInPandas")]
 
 
-# Options that only tests set: each needs its own decision (several let a
-# test reach a decoder or an error path). The list may only shrink.
+def _name(node):
+    """The name a ``Name`` or ``Attribute`` node refers to, else None."""
+    return getattr(node, "id", None) or getattr(node, "attr", None)
+
+
+def _sources():
+    """(package dir, non-test caller files, test files) of the caller
+    rules: the callers are the package, ``perfbench/``, ``tools/``,
+    ``bench.py`` and ``__spark_entry__.py``."""
+    from pathlib import Path
+
+    package = Path(pipeline.__file__).parent
+    repo = package.parent
+    callers = [*package.rglob("*.py"), *(repo / "perfbench").rglob("*.py"),
+               *(repo / "tools").rglob("*.py"), repo / "bench.py",
+               repo / "__spark_entry__.py"]
+    return package, callers, list((repo / "tests").rglob("*.py"))
+
+
+# Options that only tests set, each kept for the reason beside it. The list
+# may only shrink.
 TEST_ONLY_OPTIONS = [
+    # tests drive the CLI in-process; the console entry passes sys.argv
     ("cli.py", "main", "argv"),
+    # F17: the reference's signature; its parity tests set the threshold
     ("core/fields.py", "flag_low_confidence", "threshold"),
-    ("dataset.py", "read_metrics_history", "run_id"),
+    # M13: pad-to-max per batch group, the reference collate's shape
     ("dataset.py", "with_padded_ids", "group_col"),
-    ("evaluation.py", "generate_evaluation_report", "output_path"),
-    ("ops/aviio.py", "encode_avi", "quality"),
+    # reaches the iteration-budget RuntimeError on a long chain
     ("ops/dedup.py", "connected_components", "max_iterations"),
-    ("ops/dedup.py", "ngram_jaccard_pairs", "threshold"),
-    *(("ops/dedup.py", "simhash_signatures", p)
-      for p in ("id_col", "out_col", "salt_buckets", "text_col")),
+    # reaches the per-lane capacity guard with a short document
+    ("ops/dedup.py", "simhash_signatures", "salt_buckets"),
+    # the only way to build a DRI (restart-marker) JPEG, which the decoder
+    # must handle on outside input
     ("ops/jpegio.py", "encode_jpeg", "restart_interval"),
-    *(("ops/multimodal.py", f, "on_error")
-      for f in ("audio_feature_kernel", "audio_features",
-                "image_feature_kernel", "image_features",
-                "sample_video_frames", "video_frame_sample_kernel")),
-    *(("ops/similarity.py", f, p)
-      for f in ("ivf_topk_indexed", "ivf_topk_indexed_int8")
-      for p in ("k", "n_bits", "probe_hamming")),
-    ("ops/similarity.py", "write_ivf_index", "files_per_cell"),
-    ("ops/similarity.py", "write_ivf_index", "n_bits"),
-    ("ops/similarity.py", "write_ivf_index_int8", "n_bits"),
-    ("ops/temporal.py", "range_join", "bucket_seconds"),
-    ("ops/textstats.py", "repetition_stats", "ngram_n"),
-    *(("ops/textstats.py", "top_ngram_share", p)
-      for p in ("id_col", "ngram_n", "text_col")),
-    ("streaming.py", "deduplicated_stream", "watermark"),
-    ("streaming.py", "extract_stream", "redact_fields"),
-    ("streaming.py", "status_counts", "watermark"),
-    ("streaming.py", "status_counts", "window"),
-    ("streaming.py", "stream_extract", "available_now"),
-    ("streaming.py", "stream_extract_deduplicated", "watermark"),
-    ("streaming.py", "stream_extract_with_lineage", "available_now"),
-    ("streaming.py", "stream_extract_with_lineage", "max_files_per_trigger"),
-    *(("streaming.py", "stream_media_features", p)
-      for p in ("kind", "max_files_per_trigger", "on_error")),
 ]
 
 
@@ -130,16 +136,14 @@ def test_every_option_has_a_caller():
     ``ast`` scan finds, for every default-valued parameter of the package's
     public top-level functions, a call that passes it by keyword or by
     position (``functools.partial(f, ...)`` counts as a call of ``f``). The
-    callers are the package, ``perfbench/``, ``tools/``, ``bench.py`` and
-    ``__spark_entry__.py``. A pass-through — ``f(x=x)`` or ``f(..., x)``
-    inside a function whose own ``x`` is an option — sets ``f``'s ``x`` only
-    once that ``x`` is set. The options in ``TEST_ONLY_OPTIONS`` are set by
-    tests alone; no other may be, and each of them must still be."""
+    callers are those of :func:`_sources`. A pass-through — ``f(x=x)`` or
+    ``f(..., x)`` inside a function whose own ``x`` is an option — sets
+    ``f``'s ``x`` only once that ``x`` is set. The options in
+    ``TEST_ONLY_OPTIONS`` are set by tests alone; no other may be, and each
+    of them must still be."""
     import ast
-    from pathlib import Path
 
-    package = Path(pipeline.__file__).parent
-    repo = package.parent
+    package, callers, tests = _sources()
     options = {}  # (function, parameter) -> (module, position or None)
     for path in sorted(package.rglob("*.py")):
         module = path.relative_to(package).as_posix()
@@ -156,9 +160,6 @@ def test_every_option_has_a_caller():
                                            node.args.kw_defaults)
                            if d is not None)
 
-    def name(func):
-        return getattr(func, "id", None) or getattr(func, "attr", None)
-
     def calls(node, scope):
         """Every call under ``node``, with the parameters in reach of it
         (name -> the function that binds it)."""
@@ -171,16 +172,12 @@ def test_every_option_has_a_caller():
         for child in ast.iter_child_nodes(node):
             yield from calls(child, scope)
 
-    callers = [*package.rglob("*.py"), *(repo / "perfbench").rglob("*.py"),
-               *(repo / "tools").rglob("*.py"), repo / "bench.py",
-               repo / "__spark_entry__.py"]
-    tests = list((repo / "tests").rglob("*.py"))
     sets = []  # (option, set from tests, option it passes through or None)
     for path in callers + tests:
         for call, scope in calls(ast.parse(path.read_text()), {}):
-            func, args = name(call.func), call.args
+            func, args = _name(call.func), call.args
             if func == "partial" and args:
-                func, args = name(args[0]), args[1:]
+                func, args = _name(args[0]), args[1:]
             given = [(k.arg, k.value) for k in call.keywords]
             given += [(p, args[i]) for (f, p), (_, i) in options.items()
                       if f == func and i is not None and i < len(args)]
@@ -205,6 +202,107 @@ def test_every_option_has_a_caller():
                    if opt not in set_strictly)
     assert unset == sorted(TEST_ONLY_OPTIONS)
     assert [o for o in unset if o[1:] not in set_at_all] == []
+
+
+# Public functions and classes that only tests reach, each kept for the
+# reason beside it: the COVERAGE.md row of the reference operator it
+# implements, or the test it is the oracle of. The list may only shrink.
+TEST_ONLY_FUNCTIONS = [
+    ("core/fields.py", "normalize_dates_in_result", "F3"),
+    ("core/fields.py", "validate_cnh_fields", "F7"),
+    ("core/fields.py", "extract_state_from_orgao", "F10"),
+    ("core/fields.py", "validate_rg_fields", "F11"),
+    ("core/fields.py", "validate_invoice_totals", "F14"),
+    ("core/fields.py", "validate_invoice_fields", "F15"),
+    ("core/fields.py", "parse_payload_json", "F16"),
+    ("core/fields.py", "JSONParseError", "F16"),
+    ("core/fields.py", "enrich_extraction_result", "F18"),
+    ("core/fields.py", "fill_placeholder_confidence", "F22"),
+    ("core/fields.py", "calculate_tax_total", "A5"),
+    ("core/schemas.py", "to_struct_type", "S5"),
+    ("core/schemas.py", "filter_to_schema", "P1"),
+    ("core/schemas.py", "create_empty_result", "P3"),
+    ("core/schemas.py", "validate_against_schema", "F19"),
+    ("core/schemas.py", "schema_example", "F21"),
+    ("dataset.py", "MetricsCollector", "A8"),
+    ("dataset.py", "read_metrics_history", "A8"),
+    ("dataset.py", "with_padded_ids", "M13"),
+    ("evaluation.py", "generate_evaluation_report", "S9"),
+    ("pipeline.py", "result_json_column", "S6"),
+    ("pipeline.py", "write_json_sinks", "S7, S8"),
+    ("ops/dedup.py", "jaccard", "test oracle for "
+     "test_minhash_lsh_finds_what_exact_jaccard_finds"),
+    ("ops/dedup.py", "ngram_jaccard_pairs", "test oracle for "
+     "test_minhash_lsh_finds_what_exact_jaccard_finds"),
+]
+
+
+def test_every_public_function_has_a_caller():
+    """A public top-level function or class of the package exists only when
+    non-test code reaches it: an ``ast`` scan follows name references from
+    the roots — the module-level code of the package, the ``__all__``
+    exports, the ``@register`` catalog builders and every other caller of
+    :func:`_sources` — into the bodies of the definitions they reach, to a
+    fixed point. A reference from inside a definition that nothing reaches
+    does not count. The definitions in ``TEST_ONLY_FUNCTIONS`` are reached
+    by tests alone, each for its stated reason; no other may be, and each
+    must still be reached by a test."""
+    import ast
+    import re
+    from pathlib import Path
+
+    package, callers, tests = _sources()
+
+    def names(node):
+        return {_name(n) for n in ast.walk(node)} - {None}
+
+    defs, roots = {}, set()  # name -> [(module, node)]; reached names
+    for path in sorted(package.rglob("*.py")):
+        module = path.relative_to(package).as_posix()
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                defs.setdefault(node.name, []).append((module, node))
+                for d in node.decorator_list:
+                    roots |= names(d)
+                    if _name(getattr(d, "func", d)) == "register":
+                        roots.add(node.name)
+            elif (module == "__init__.py" and isinstance(node, ast.Assign)
+                  and [_name(t) for t in node.targets] == ["__all__"]):
+                roots |= {e.value for e in node.value.elts}
+            elif module != "__init__.py":
+                roots |= names(node)
+    package_files = set(package.rglob("*.py"))
+    for path in callers:
+        if path not in package_files:
+            roots |= names(ast.parse(path.read_text()))
+
+    def reach(roots):
+        reached, todo = set(), sorted(roots & set(defs))
+        while todo:
+            name = todo.pop()
+            if name not in reached:
+                reached.add(name)
+                todo += [m for _, node in defs[name] for m in names(node)
+                         if m in defs and m not in reached]
+        return reached
+
+    reached = reach(roots)
+    unreached = sorted((module, name) for name, found in defs.items()
+                       if not name.startswith("_") and name not in reached
+                       for module, _ in found)
+    assert unreached == sorted((m, f) for m, f, _ in TEST_ONLY_FUNCTIONS)
+
+    coverage = Path(package.parent / "COVERAGE.md").read_text()
+    from_tests = reach(roots.union(*(names(ast.parse(p.read_text()))
+                                     for p in tests)))
+    for module, name, reason in TEST_ONLY_FUNCTIONS:
+        oracle_of = reason.removeprefix("test oracle for ")
+        rows = re.findall(r"[A-Z]\d+", reason)
+        assert (oracle_of != reason and any(
+                    f"def {oracle_of}(" in p.read_text() for p in tests)
+                or rows and all(re.search(rf"\| {r}\b", coverage)
+                                for r in rows)), (name, reason)
+        assert name in from_tests, name
 
 
 def test_extraction_partitions_are_task_slots_for_small_input_else_conf(
@@ -336,66 +434,6 @@ def test_minhash_signatures_use_codegen_partial_agg(spark):
     assert "array_min" not in plan
 
 
-def test_ivf_indexed_probe_prunes_partitions(spark, tmp_path):
-    """An ivf_topk_indexed probe must prune at file-listing time: the bucket
-    filter has to appear in the scan's PartitionFilters (NOT as a post-scan
-    Filter over a full read) — at 100 TB this is a ~3.5% read vs a full scan
-    per query."""
-    from br_doc_ocr_spark.ops import similarity
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    path = str(tmp_path / "ivf")
-    similarity.write_ivf_index(emb, path, n_bits=4)
-    qv = [float(v) for v in emb.select("embedding").first()[0]]
-    probe = similarity.ivf_topk_indexed(spark, path, qv, k=10, n_bits=4,
-                                        probe_hamming=1)
-    plan = plan_of(probe)
-    part_line = [l for l in plan.splitlines() if "PartitionFilters" in l][0]
-    assert "bucket" in part_line and "IN" in part_line.upper()
-    # pruned read touches exactly the 5 probed cells (home + 4 Hamming-1)
-    cells = similarity.probe_buckets(qv, n_bits=4, probe_hamming=1)
-    assert len(cells) == 5
-
-
-def test_ivf_hot_cell_skew_splits_and_prunes(spark, tmp_path):
-    """Dynamic hot-cell handling under REAL skew (VERDICT r02 #6): with 90%
-    of the corpus in ONE quantizer cell, files_per_cell must land that cell
-    as multiple parquet files (write + probe-side split parallelism), the
-    probe must still prune at file-listing time (PartitionFilters), and the
-    pruned probe must return exactly the brute-force top-k of the probed
-    cells."""
-    import glob
-
-    from br_doc_ocr_spark.ops import similarity
-
-    n = 2000
-    jit = (sf.col("vec_id") % 7).cast("double") * 0.01
-    hot = sf.array(*[sf.lit(0.5) + jit for _ in range(4)])
-    cold = sf.array(sf.lit(-0.5) - jit, sf.lit(0.5), sf.lit(-0.5), sf.lit(0.5))
-    emb = (spark.range(n).select(sf.col("id").alias("vec_id"))
-           .select("vec_id",
-                   sf.when(sf.col("vec_id") % 10 < 9, hot).otherwise(cold)
-                   .alias("embedding")))
-    path = str(tmp_path / "ivf_skew")
-    similarity.write_ivf_index(emb, path, n_bits=4, files_per_cell=4)
-    # the hot cell (all-positive signs → bucket 15) holds 90% of rows and
-    # must be split across several files
-    hot_files = glob.glob(path + "/bucket=15/*.parquet")
-    assert len(hot_files) >= 2, hot_files
-    qv = [0.5, 0.5, 0.5, 0.5]
-    probe = similarity.ivf_topk_indexed(spark, path, qv, k=5, n_bits=4,
-                                        probe_hamming=1)
-    plan = plan_of(probe)
-    part_line = [l for l in plan.splitlines() if "PartitionFilters" in l][0]
-    assert "bucket" in part_line and "IN" in part_line.upper()
-    cells = similarity.probe_buckets(qv, n_bits=4, probe_hamming=1)
-    brute = similarity.cosine_topk(
-        emb.filter(similarity.ivf_bucket(
-            sf.col("embedding"), 4).isin(cells)), qv, k=5)
-    assert [(r["vec_id"], r["cosine"]) for r in probe.collect()] == \
-        [(r["vec_id"], r["cosine"]) for r in brute.collect()]
-
-
 def test_knn_join_has_partial_window_group_limit(spark):
     """knn_join's per-query top-k must be two-phase: a map-side Partial
     WindowGroupLimit BEFORE the exchange (each scan partition cut to ≤ k rows
@@ -515,25 +553,3 @@ def test_heap_scales_with_task_concurrency(spark, monkeypatch):
     # spikes that OOMed the 24 g heap at 20M rows (session.py rationale)
     assert spark.conf.get(
         "spark.sql.inMemoryColumnarStorage.batchSize") == "1000"
-
-
-def test_ivf_int8_probe_prunes_partitions_and_columns(spark, tmp_path):
-    """The quantized IVF probe (VERDICT r03 #6) composes BOTH savings:
-    bucket partition pruning at file-listing time AND codes-only column
-    pruning — q_scale is stored in the index but the code-space-cosine
-    probe must not read it (ReadSchema is the scan's byte bill at 100 TB)."""
-    from br_doc_ocr_spark.ops import similarity
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    path = str(tmp_path / "ivf8")
-    similarity.write_ivf_index_int8(emb, path, n_bits=4)
-    qv = [float(v) for v in emb.select("embedding").first()[0]]
-    probe = similarity.ivf_topk_indexed_int8(spark, path, qv, k=10, n_bits=4,
-                                             probe_hamming=1)
-    plan = plan_of(probe)
-    part_line = [l for l in plan.splitlines() if "PartitionFilters" in l][0]
-    assert "bucket" in part_line and "IN" in part_line.upper()
-    read_line = [l for l in plan.splitlines() if "ReadSchema" in l][0]
-    assert "q_codes" in read_line
-    assert "q_scale" not in read_line   # scales cancel — never read
-    assert "TakeOrderedAndProject" in plan

@@ -200,8 +200,8 @@ def test_audio_features_end_to_end_on_real_wavs(spark):
 
 def test_audio_features_mismatched_metadata_refused(spark):
     """A WAV whose header rate disagrees with the metadata must raise (the
-    same mislabeled-media refusal as the image decoders) — and quarantine
-    under on_error='skip'."""
+    same mislabeled-media refusal as the image decoders), which the kernel
+    quarantines and counts."""
     media = mm.synth_wav_media(spark, n=3)
     lying = media.selectExpr(
         "media_id + 50 AS media_id", "kind", "payload",
@@ -209,10 +209,14 @@ def test_audio_features_mismatched_metadata_refused(spark):
         "'n_frames', meta.n_frames, 'sample_rate', 16000, "
         "'format', meta.format) AS meta").limit(1)
     mixed = media.unionByName(lying)
-    with pytest.raises(Exception, match="refusing to feature-extract"):
-        mm.audio_features(mixed)[0].collect()
-    good = mm.audio_features(mixed, on_error="skip")[0].collect()
+    lying_row = lying.first()
+    with pytest.raises(ValueError, match="refusing to feature-extract"):
+        mm.MediaDecoder().decode_audio(bytes(lying_row["payload"]),
+                                       lying_row["meta"]["sample_rate"])
+    feats, tally = mm.audio_features(mixed)
+    good = feats.collect()
     assert sorted(r["media_id"] for r in good) == [0, 1, 2]
+    assert sum(c["skipped_ValueError"] for c in tally.value.values()) == 1
 
 
 def test_audio_features_corrupt_payload_quarantined(spark):
@@ -221,10 +225,12 @@ def test_audio_features_corrupt_payload_quarantined(spark):
         "media_id + 50 AS media_id", "kind",
         "cast('not audio' as binary) AS payload", "meta").limit(1)
     mixed = media.unionByName(corrupt)
-    good = mm.audio_features(mixed, on_error="skip")[0].collect()
+    feats, tally = mm.audio_features(mixed)
+    good = feats.collect()
     assert sorted(r["media_id"] for r in good) == [0, 1, 2, 3]
-    with pytest.raises(Exception, match="WAV:"):
-        mm.audio_features(mixed)[0].collect()
+    assert sum(c["skipped_ValueError"] for c in tally.value.values()) == 1
+    with pytest.raises(ValueError, match="WAV:"):
+        mm.MediaDecoder().decode_audio(b"not audio", 8000)
 
 
 def test_library_decoder_routes_riff_to_wav_decoder():
