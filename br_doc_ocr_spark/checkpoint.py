@@ -15,6 +15,11 @@ to data-parallel batch semantics:
 - each completed bucket's output is written under ``bucket=<k>/`` via dynamic
   partition overwrite (idempotent: re-running a bucket replaces, never
   duplicates);
+- the one range exchange leads with the bucket, ``(bucket, conv_id,
+  turn_idx)``: each task holds a run of consecutive buckets and writes a
+  file only into those, so an invocation writes at most (buckets + tasks
+  - 1) files instead of one per task and bucket, and a hot conversation's
+  bucket is still cut at sampled turn boundaries;
 - a JSON manifest records completed buckets per snapshot; on resume, pending
   work = all buckets ANTI-JOIN manifest (driver-side set difference — the
   manifest is tiny);
@@ -154,6 +159,15 @@ def run_resumable(
     partitioned or bucketed by conv_id hash the same filter would prune
     the scan too.
 
+    One invocation with a lineage path runs 4 Spark jobs (none with nothing
+    pending): the range exchange's sampling and map-stage jobs, the
+    bucketed write and the lineage write. The input is read with its
+    declared schema (``pipeline.read_transcripts``), so no schema-inference
+    job runs, and is ranged and sorted on ``(bucket, conv_id, turn_idx)``;
+    that sort also meets the bucketed writer's required order, and each
+    task writes a file only into the buckets its range holds: at most
+    (pending buckets + tasks - 1) files.
+
     ``table_format``/``read_snapshot_id`` select the input reader
     (``pipeline.read_transcripts``); pinning an Iceberg read snapshot
     matters MOST here — a resume that reads a newer snapshot than the
@@ -180,22 +194,20 @@ def run_resumable(
                 "rows": 0}
 
     snapshot_id = f"snap-{len(manifest.completed):05d}"
+    bucket = bucket_of(sf.col("conv_id"), n_buckets)
     todo = read_transcripts(
         spark, input_path, table_format=table_format,
         snapshot_id=read_snapshot_id,
-    ).filter(bucket_of(sf.col("conv_id"), n_buckets)
-             .isin([int(b) for b in pending]))
+    ).filter(bucket.isin([int(b) for b in pending]))
 
-    results, lineage = run_extraction(todo)
+    # Ranged and sorted on (bucket, conv_id, turn_idx): each task holds a
+    # run of consecutive buckets, in the order the bucketed writer needs,
+    # so it writes a file only into the buckets it holds.
+    results, lineage = run_extraction(todo, lead_key=bucket)
     # Idempotent per-bucket publish: dynamic partition overwrite replaces
     # exactly the buckets written here, leaving completed ones untouched.
-    # Sorted on (bucket, conv_id, turn_idx): the writer needs its input
-    # ordered by the partition column, so this one sort both meets that and
-    # orders every bucket file by turn.
-    overwrite_partitions(
-        results.withColumn(BUCKET_COL, bucket_of(sf.col("conv_id"), n_buckets))
-        .sortWithinPartitions(BUCKET_COL, "conv_id", "turn_idx"),
-        BUCKET_COL, output_path)
+    overwrite_partitions(results.withColumn(BUCKET_COL, bucket),
+                         BUCKET_COL, output_path)
 
     # the kernel's tally of that write: pending buckets holding zero rows
     # give an empty frame of the lineage schema

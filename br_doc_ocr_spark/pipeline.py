@@ -4,7 +4,8 @@ Reference analog: the batch fan-out executor ``cli/batch.py:24-217`` (scan →
 per-record extraction with error channel → sinks → summary), rebuilt on
 Spark's execution model per the north rule:
 
-1. scan the transcript table (parquet here; the layout is Iceberg-compatible),
+1. scan the transcript table (parquet here; the layout is Iceberg-compatible)
+   with its declared schema, so no schema-inference job runs,
 2. **one range exchange on (conv_id, turn_idx)** — extraction is per-row, so
    a 10^9-turn conversation may be cut anywhere: the range partitioner cuts
    it at sampled turn boundaries, so no single heavy conv_id stalls one task
@@ -40,7 +41,7 @@ from typing import Callable, Iterable, Iterator
 import pandas as pd
 from pyspark import StorageLevel, TaskContext
 from pyspark.accumulators import Accumulator, AccumulatorParam
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as sf
 from pyspark.sql.types import StructType
 
@@ -57,6 +58,10 @@ from br_doc_ocr_spark.core.extract import (
 TRANSCRIPT_SCHEMA_DDL = ("conv_id string, turn_idx int, role string, "
                          "text string, tool string, ts timestamp")
 TRANSCRIPT_COLUMNS = _ddl_columns(TRANSCRIPT_SCHEMA_DDL)
+# The parquet read schema: the declared one with turn_idx read as a long,
+# which Spark widens INT32 columns to, so int32 and int64 tables both read
+_PARQUET_READ_DDL = TRANSCRIPT_SCHEMA_DDL.replace("turn_idx int",
+                                                  "turn_idx long")
 
 # FIXTURES.md §5 in column order; a redacting run appends
 # ``redaction_residuals long``
@@ -68,10 +73,18 @@ LINEAGE_DDL = ("partition_id int, row_count long, success_count long, "
 def read_transcripts(spark: SparkSession, path: str,
                      table_format: str | None = "parquet",
                      snapshot_id: int | None = None) -> DataFrame:
-    """Scan the transcript table, projecting exactly the job's columns so
-    Catalyst prunes the read to them. ``table_format=None`` means
-    unspecified and reads parquet (callers like the CLI pass their
-    optional flag straight through).
+    """Scan the transcript table as exactly the job's columns
+    (:data:`TRANSCRIPT_COLUMNS`), so Catalyst prunes the read to them.
+    ``table_format=None`` means unspecified and reads parquet (callers like
+    the CLI pass their optional flag straight through).
+
+    Parquet is read with the declared schema (:data:`TRANSCRIPT_SCHEMA_DDL`),
+    so no schema-inference job runs (FIXTURES.md §1). ``turn_idx`` is read
+    as a long, to which Spark widens an INT32 column, and cast to the
+    declared int: int32 and int64 tables read alike, and a value outside
+    the int range fails the read. A declared column the files lack reads
+    as null, like a null cell; columns beyond the declared ones are not
+    read.
 
     ``table_format='iceberg'`` loads ``path`` as an Iceberg table name (or
     HDFS table dir) through the DataSourceV2 reader — identical projection
@@ -110,7 +123,8 @@ def read_transcripts(spark: SparkSession, path: str,
         raise ValueError(
             "snapshot_id requires table_format='iceberg' — plain parquet "
             "has no snapshot to pin")
-    return spark.read.parquet(path).select(*TRANSCRIPT_COLUMNS)
+    return (spark.read.schema(_PARQUET_READ_DDL).parquet(path)
+            .withColumn("turn_idx", sf.col("turn_idx").cast("int")))
 
 
 class _ByPartition(AccumulatorParam):
@@ -201,10 +215,10 @@ def _lineage_frame(spark: SparkSession, tally: Accumulator,
     return spark.createDataFrame(pd.DataFrame(rows, columns=names), ddl)
 
 
-def _range_exchange(transcripts: DataFrame) -> DataFrame:
+def _range_exchange(transcripts: DataFrame, *lead: Column) -> DataFrame:
     """The one Exchange in front of the extraction crossing: range on
-    ``(conv_id, turn_idx)`` into ``spark.sql.shuffle.partitions`` — or,
-    when the whole input is at most ``spark.sql.files.openCostInBytes``
+    ``(*lead, conv_id, turn_idx)`` into ``spark.sql.shuffle.partitions``
+    — or, when the whole input is at most ``spark.sql.files.openCostInBytes``
     (Spark's byte-equivalent of a fixed per-task charge) per task slot, into
     one wave of task slots. A caller steers the count through those confs.
 
@@ -235,7 +249,7 @@ def _range_exchange(transcripts: DataFrame) -> DataFrame:
         .filesOpenCostInBytes()
     if int(size) <= slots * open_cost:
         n = min(n, slots)
-    return transcripts.repartitionByRange(n, "conv_id", "turn_idx")
+    return transcripts.repartitionByRange(n, *lead, "conv_id", "turn_idx")
 
 
 def run_extraction(
@@ -243,12 +257,17 @@ def run_extraction(
     schema: dict | None = None,
     max_payload_chars: int | None = None,
     redact_fields: frozenset[str] | None = None,
+    lead_key: Column | None = None,
 ) -> tuple[DataFrame, Callable[[], DataFrame]]:
     """Run the extraction stage → (results, lineage).
 
     The results are range-partitioned on ``(conv_id, turn_idx)`` and sorted
     within each partition, so they are in global turn order; the one
-    exchange also splits long conversations across tasks. The sort runs on
+    exchange also splits long conversations across tasks. ``lead_key``
+    leads both the range and the sort key: an expression of ``conv_id``
+    and ``turn_idx`` only, since the range evaluates it on the input and
+    the sort on the output. ``checkpoint.run_resumable`` passes its bucket,
+    so each task holds a run of consecutive buckets. The sort runs on
     the kernel OUTPUT: sorting the input ahead of the crossing held whole
     partitions of raw payloads in the sorter and raised the peak RSS of the
     document benchmark by a quarter.
@@ -287,12 +306,13 @@ def run_extraction(
     kernel = functools.partial(extract_batch,
                                allowed_fields=schema_field_names(schema),
                                redact_fields=redact_fields)
+    lead = [] if lead_key is None else [lead_key]
     results, tally = map_kernel(
-        _range_exchange(transcripts), kernel,
+        _range_exchange(transcripts, *lead), kernel,
         output_schema_ddl(redact_fields is not None))
     ddl = LINEAGE_DDL + (", redaction_residuals long"
                          if redact_fields is not None else "")
-    return (results.sortWithinPartitions("conv_id", "turn_idx"),
+    return (results.sortWithinPartitions(*lead, "conv_id", "turn_idx"),
             functools.partial(_lineage_frame, transcripts.sparkSession,
                               tally, ddl))
 

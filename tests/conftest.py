@@ -47,6 +47,16 @@ def sorted_in_file_order(files: list[str]) -> bool:
     return keys == sorted(keys)
 
 
+def part_file_bytes(path: str) -> list[tuple[str, bytes]]:
+    """Each parquet part file under ``path`` as (its directory relative to
+    ``path``, its bytes), in path order (part files of one write share a
+    job id in their names, so path order is partition order)."""
+    from pathlib import Path
+
+    return [(str(f.parent.relative_to(path)), f.read_bytes())
+            for f in sorted(Path(path).rglob("*.parquet"))]
+
+
 def spark_jobs_of(spark, call) -> int:
     """The number of Spark jobs ``call()`` runs: it runs under a job group of
     its own, whose job ids the status tracker lists afterwards."""

@@ -10,7 +10,7 @@ import pytest
 
 from br_doc_ocr_spark import checkpoint
 from br_doc_ocr_spark.core.extract import oracle_extract
-from tests.conftest import spark_jobs_of
+from tests.conftest import part_file_bytes, spark_jobs_of
 
 
 @pytest.fixture()
@@ -54,17 +54,78 @@ def test_resume_in_three_snapshots_equals_oracle(spark, tiny_transcripts,
 
 def test_run_resumable_job_budget(spark, tiny_transcripts_path, paths):
     """Job budget: one run_resumable invocation that processes every bucket
-    runs 5 Spark jobs (the same shape as run_pipeline's: schema inference,
-    the range exchange's sampling and map-stage jobs, the bucketed write and
-    the lineage write); one with nothing pending runs none. A change that
-    adds or removes a job must change these numbers."""
+    runs 4 Spark jobs (the same shape as run_pipeline's: the range
+    exchange's sampling and map-stage jobs, the bucketed write and the
+    lineage write; the input is read with its declared schema, so no
+    schema-inference job runs); one with nothing pending runs none. A change
+    that adds or removes a job must change these numbers."""
     def invocation():
         checkpoint.run_resumable(
             spark, tiny_transcripts_path, paths["out"], paths["manifest"],
             lineage_path=paths["lineage"])
 
-    assert spark_jobs_of(spark, invocation) == 5
+    assert spark_jobs_of(spark, invocation) == 4
     assert spark_jobs_of(spark, invocation) == 0  # nothing left pending
+
+
+def test_invocation_writes_each_bucket_from_the_tasks_that_hold_it(
+        spark, tiny_transcripts_path, paths):
+    """File and task lock: the range leads with the bucket, so each task
+    holds a run of consecutive buckets and writes a file only into those;
+    only a bucket cut by a task boundary gets a second file. One invocation
+    thus writes at most (buckets written + kernel tasks - 1) files, where a
+    range on (conv_id, turn_idx) alone had every task write into every
+    bucket (tasks × buckets). The tiny fixture runs in one wave of the 4
+    task slots."""
+    import glob
+
+    checkpoint.run_resumable(
+        spark, tiny_transcripts_path, paths["out"], paths["manifest"],
+        lineage_path=paths["lineage"])
+    tasks = spark.read.parquet(paths["lineage"]).count()
+    files = glob.glob(f"{paths['out']}/bucket=*/*.parquet")
+    buckets = {f.split("/")[-2] for f in files}
+    assert tasks == 4
+    # premise: more buckets than tasks, so one file per task and bucket
+    # would break the bound several times over
+    assert len(buckets) > tasks
+    assert len(files) <= len(buckets) + tasks - 1, sorted(files)
+
+
+def test_invocation_balances_hot_conversation(spark, tiny_transcripts,
+                                              tiny_transcripts_path, paths):
+    """Skew lock: conv-heavy holds over half of the fixture's turns, and
+    its bucket is cut at sampled turn boundaries like any other range, so
+    no kernel task of the invocation gets more than 1.1× the mean rows
+    (lineage row_count) — run_extraction's bound."""
+    heavy = (tiny_transcripts["conv_id"] == "conv-heavy").sum()
+    assert heavy > len(tiny_transcripts) / 2  # premise: one hot key
+    checkpoint.run_resumable(
+        spark, tiny_transcripts_path, paths["out"], paths["manifest"],
+        lineage_path=paths["lineage"])
+    rows = spark.read.parquet(paths["lineage"]).toPandas()["row_count"]
+    assert rows.sum() == len(tiny_transcripts)
+    assert len(rows) == 4  # one wave of task slots
+    assert rows.max() / rows.mean() <= 1.1, sorted(rows)
+
+
+def test_turn_idx_width_gives_identical_bucket_output(spark, tiny_transcripts,
+                                                      tmp_path):
+    """A table with int32 turn_idx and one with int64 turn_idx give
+    byte-identical bucket files: both read as int (FIXTURES.md §1)."""
+    outputs = []
+    for width in ("int32", "int64"):
+        src = str(tmp_path / f"{width}.parquet")
+        tiny_transcripts.astype(
+            {"turn_idx": width, "ts": "datetime64[us]"}).to_parquet(
+                src, index=False)
+        out = str(tmp_path / width / "out")
+        checkpoint.run_resumable(spark, src, out,
+                                 str(tmp_path / width / "manifest.json"),
+                                 n_buckets=4)
+        outputs.append(part_file_bytes(out))
+    assert len({d for d, _ in outputs[0]}) == 4
+    assert outputs[0] == outputs[1]
 
 
 def test_zero_bucket_slice_still_reports_pending(spark, tiny_transcripts_path,

@@ -9,7 +9,8 @@ import pytest
 
 from br_doc_ocr_spark.core.extract import OUTPUT_COLUMNS, oracle_extract
 from br_doc_ocr_spark import pipeline
-from tests.conftest import sorted_in_file_order, spark_jobs_of
+from tests.conftest import (part_file_bytes, sorted_in_file_order,
+                            spark_jobs_of)
 
 
 def _normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -279,6 +280,48 @@ def test_read_transcripts_iceberg_seam(spark, tiny_transcripts_path):
     # default path unchanged
     assert pipeline.read_transcripts(
         spark, tiny_transcripts_path).columns == pipeline.TRANSCRIPT_COLUMNS
+
+
+def test_turn_idx_width_gives_byte_identical_output(spark, tiny_transcripts,
+                                                    tmp_path):
+    """The parquet read declares the transcript schema, with turn_idx read
+    as a long (Spark widens INT32 to it) and cast back to int: a table with
+    int32 turn_idx and one with int64 both read as int, and run_pipeline
+    writes byte-identical output for them."""
+    outputs = []
+    for width in ("int32", "int64"):
+        src = str(tmp_path / f"{width}.parquet")
+        tiny_transcripts.astype(
+            {"turn_idx": width, "ts": "datetime64[us]"}).to_parquet(
+                src, index=False)
+        assert pd.read_parquet(src)["turn_idx"].dtype == width  # premise
+        assert dict(pipeline.read_transcripts(spark, src).dtypes)[
+            "turn_idx"] == "int"
+        out = str(tmp_path / f"{width}_out")
+        pipeline.run_pipeline(spark, src, output_path=out)
+        outputs.append(part_file_bytes(out))
+    assert outputs[0] and outputs[0] == outputs[1]
+
+
+def test_missing_column_reads_as_null(spark, tiny_transcripts, tmp_path):
+    """A table without one of the declared columns reads that column as
+    null (the read declares the schema instead of inferring it, so nothing
+    fails at analysis): a table without ``tool`` gives the full table's
+    output with ``tool`` null."""
+    full = tiny_transcripts.astype({"ts": "datetime64[us]"})
+    outputs = {}
+    for name, df in (("full", full), ("no_tool", full.drop(columns="tool"))):
+        src = str(tmp_path / f"{name}.parquet")
+        df.to_parquet(src, index=False)
+        read = pipeline.read_transcripts(spark, src)
+        assert read.columns == pipeline.TRANSCRIPT_COLUMNS
+        out = str(tmp_path / f"{name}_out")
+        pipeline.run_pipeline(spark, src, output_path=out)
+        outputs[name] = _normalize(spark.read.parquet(out).toPandas())
+    assert outputs["no_tool"]["tool"].isna().all()
+    assert (outputs["full"]["tool"].notna()).all()
+    pd.testing.assert_frame_equal(outputs["no_tool"].drop(columns="tool"),
+                                  outputs["full"].drop(columns="tool"))
 
 
 def test_compact_parquet_rewrites_small_files(spark, tmp_path):
@@ -565,12 +608,13 @@ def test_lineage_writes_cache_nothing(spark, tiny_transcripts_path,
 
 def test_run_pipeline_job_budget(spark, tiny_transcripts_path, tmp_path):
     """Job budget: one run_pipeline call with an output and a lineage path
-    runs 5 Spark jobs — the input's schema inference, the range exchange's
-    sampling and map-stage jobs, the output write and the lineage write. A
-    change that adds or removes a job must change this number."""
+    runs 4 Spark jobs — the range exchange's sampling and map-stage jobs,
+    the output write and the lineage write. The input is read with its
+    declared schema, so no schema-inference job runs. A change that adds or
+    removes a job must change this number."""
     assert spark_jobs_of(spark, lambda: pipeline.run_pipeline(
         spark, tiny_transcripts_path, output_path=str(tmp_path / "out"),
-        lineage_path=str(tmp_path / "lineage"))) == 5
+        lineage_path=str(tmp_path / "lineage"))) == 4
 
 
 def test_compact_parquet_empty_input_returns_empty_stats(spark, tmp_path):
