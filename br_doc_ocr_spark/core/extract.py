@@ -39,13 +39,6 @@ INVALID_CONFIDENCE = 0.45  # < FR-013 threshold 0.5 → flagged low-confidence
 CLASSIFY_CONFIDENCE = 0.97  # deterministic stand-in for the classifier score
 
 
-def _valid_date(normalized: str) -> bool:
-    # direct calendar check — comparing normalize_date(x) == x is vacuous for
-    # ISO-invalid inputs because normalize_date returns invalid input
-    # UNCHANGED ('2020-02-31' would otherwise score valid)
-    return F.is_valid_iso_date(normalized)
-
-
 # Per-field (normalizer, validator); matching is done by ONE combined
 # alternation pass (named groups) — 8 separate finditer scans profiled as the
 # kernel's dominant cost. Alternation order encodes claim priority at equal
@@ -59,7 +52,9 @@ _FIELD_FNS: dict[str, tuple[Any, Any]] = {
     "registro_geral": (F.normalize_rg, lambda s: F.validate_rg_number(s)["valid"]),
     "orgao_emissor": (lambda s: s.strip().upper(), F.validate_orgao_emissor),
     "categoria_habilitacao": (lambda s: s, lambda s: s in F.CNH_CATEGORIES),
-    "data": (F.normalize_date, _valid_date),
+    # a calendar check: normalize_date returns ISO-invalid input UNCHANGED,
+    # so normalize_date(x) == x would score '2020-02-31' valid
+    "data": (F.normalize_date, F.is_valid_iso_date),
     "valor": (lambda s: (lambda v: str(v) if v is not None else s)(F.parse_currency(s)),
               lambda s: F.parse_currency(s) is not None),
 }

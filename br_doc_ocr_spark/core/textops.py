@@ -320,10 +320,10 @@ def strip_html(html: str) -> str:
     try:
         parser.feed(html)
         parser.close()
-    except Exception:
-        # Malformed markup: degrade to tag-stripped text (never raise — the
-        # batch executor's per-row error channel handles truly broken rows,
-        # mirroring cli/batch.py:155-160).
+    except ValueError:
+        # The tokenizer's known raising path: html.unescape of a decimal
+        # character reference past CPython's int-string limit (4 300
+        # digits). Degrade to tag-stripped text.
         return _WS.sub(" ", re.sub(r"<[^>]*>", " ", html)).strip()
     return "\n".join(parser.blocks)
 

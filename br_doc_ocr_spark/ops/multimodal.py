@@ -47,9 +47,10 @@ from br_doc_ocr_spark.core.extract import _ddl_columns
 from br_doc_ocr_spark.ops import aviio, jpegio, pngio, wavio
 from br_doc_ocr_spark.pipeline import map_kernel
 
+# nested fields join with ',' alone, so _ddl_columns reads the four columns
 MEDIA_SCHEMA_DDL = (
     "media_id long, kind string, payload binary, "
-    "meta struct<width:int, height:int, n_frames:int, sample_rate:int, "
+    "meta struct<width:int,height:int,n_frames:int,sample_rate:int,"
     "format:string>"
 )
 
@@ -387,7 +388,7 @@ def _synth_media_df(spark: SparkSession, rows: tuple) -> DataFrame:
     immutable ``bytes`` already."""
     pdf = pd.DataFrame(
         [(mid, kind, payload, dict(meta)) for mid, kind, payload, meta in rows],
-        columns=["media_id", "kind", "payload", "meta"])
+        columns=_ddl_columns(MEDIA_SCHEMA_DDL))
     return spark.createDataFrame(pdf, schema=MEDIA_SCHEMA_DDL)
 
 
@@ -532,5 +533,5 @@ def synth_media(spark: SparkSession, n: int = 64) -> DataFrame:
             "width": width, "height": height,
             "n_frames": 30 + (i % 4) * 30,
             "sample_rate": 16000, "format": "synthetic"}))
-    pdf = pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"])
+    pdf = pd.DataFrame(rows, columns=_ddl_columns(MEDIA_SCHEMA_DDL))
     return spark.createDataFrame(pdf, schema=MEDIA_SCHEMA_DDL)

@@ -84,15 +84,6 @@ def punct_ratio(text: Column) -> Column:
     return sf.round(sf.length(stripped) / sf.greatest(sf.length(text), sf.lit(1)), 6)
 
 
-def _word_tokens(text: Column) -> Column:
-    """Lowercased word tokens: non-letter/digit runs collapse to a single
-    space, then split — punctuation-bounded and adjacent occurrences all
-    tokenize cleanly (a ``\\s<word>\\s`` split consumed the shared delimiter
-    and missed 'the the' and 'the.')."""
-    return sf.split(
-        sf.regexp_replace(sf.lower(text), r"[^\p{L}\p{N}]+", " "), " ")
-
-
 def _is_cjk(word: str) -> bool:
     """True for words that must be SUBSTRING-counted (no word boundaries in
     running text): CJK ideographs, kana (Japanese), Hangul (Korean
@@ -104,73 +95,19 @@ def _is_cjk(word: str) -> bool:
         for ch in word)
 
 
-def stopword_hits(text: Column, words: tuple[str, ...]) -> Column:
-    """Total occurrences of the given stopwords in the text.
-
-    Latin-script words count by exact token equality over
-    :func:`_word_tokens`; CJK entries (no word boundaries in running text —
-    ``\\s的\\s`` can never match Chinese prose) count by substring
-    occurrence. Both are whole-stage-friendly column expressions with exact
-    DuckDB renderings (queries.py keeps the SQL in lockstep).
-    """
-    lowered = sf.lower(text)
-    tokens = _word_tokens(text)
-    counts = []
-    latin = tuple(w for w in words if not _is_cjk(w))
-    if latin:
-        # ONE filter with a multi-way IN per language (not one filter per
-        # word): equals the sum of per-word equality counts, at 1/len(words)
-        # the array passes. Closure factory, NOT a default-arg lambda: a
-        # two-parameter lambda in sf.filter is the (element, index) form.
-        def _in(ws):
-            return lambda x: x.isin(*ws)
-
-        counts.append(sf.size(sf.filter(tokens, _in(latin))))
-    for w in words:
-        if _is_cjk(w):
-            counts.append(
-                (sf.length(lowered)
-                 - sf.length(sf.replace(lowered, sf.lit(w), sf.lit(""))))
-                / len(w))
-    if not counts:
-        # empty word tuple: zero hits, not an IndexError at plan build
-        # (review r05 — e.g. a language entry with no stopwords yet)
-        return sf.lit(0)
-    total = counts[0]
-    for c in counts[1:]:
-        total = total + c
-    return sf.greatest(total.cast("int"), sf.lit(0))
-
-
-def quality_score(text: Column) -> Column:
-    """Deterministic document quality score ∈ [0,1]: rewards mid-range length,
-    low punctuation share, and English-stopword presence — the standard
-    pretraining-filter shape (length/punct/stopword ratios)."""
-    n_tokens = token_count(text)
-    len_component = sf.least(n_tokens / sf.lit(64.0), sf.lit(1.0))
-    punct_component = sf.lit(1.0) - sf.least(punct_ratio(text) * 5, sf.lit(1.0))
-    stop_component = sf.least(
-        stopword_hits(text, LANG_STOPWORDS["en"]) / sf.greatest(n_tokens, sf.lit(1))
-        * sf.lit(4.0),
-        sf.lit(1.0),
-    )
-    return sf.round(
-        len_component * 0.4 + punct_component * 0.3 + stop_component * 0.3, 6
-    )
-
-
-# Spark-SQL rendering of _word_tokens ('\\\\' in the Python source → '\\' in
-# the SQL literal → '\' in the regex — Spark's parser un-escapes string
-# literals once)
+# Lowercased word tokens as Spark SQL: non-letter/digit runs collapse to one
+# space, then split, so 'the the' and 'the.' both tokenize ('\\\\' in the
+# Python source → '\\' in the SQL literal → '\' in the regex).
 _SQL_WORD_TOKENS = ("split(regexp_replace(lower({t}), "
                     "'[^\\\\p{{L}}\\\\p{{N}}]+', ' '), ' ')")
 
 
 def _spark_sql_stopword_hits(text_sql: str, words: tuple[str, ...]) -> str:
-    """Spark-SQL rendering of :func:`stopword_hits` — the same expression
-    tree, emitted as ONE string for a single parse call instead of dozens of
-    driver py4j round trips per language (the 24-language argmax built
-    column-by-column cost ~1.1 s of pure plan construction)."""
+    """Total occurrences of ``words`` in the text, as one Spark-SQL string
+    (one parse call, not dozens of py4j round trips per language): Latin
+    words by token equality over ``_SQL_WORD_TOKENS`` in one multi-way IN,
+    CJK entries (no word boundaries in running text) by substring count.
+    queries.py keeps the DuckDB rendering in lockstep."""
     toks = _SQL_WORD_TOKENS.format(t=text_sql)
     terms = []
     latin = tuple(w for w in words if not _is_cjk(w))
@@ -183,10 +120,34 @@ def _spark_sql_stopword_hits(text_sql: str, words: tuple[str, ...]) -> str:
                 f"((length(lower({text_sql})) - "
                 f"length(replace(lower({text_sql}), '{w}', ''))) / {len(w)})")
     if not terms:
-        # empty word tuple renders literal 0, matching stopword_hits —
-        # joining zero terms produced 'cast(() as int)', a SQL parse error
+        # empty word tuple: zero hits, not a parse error at plan build
+        # (review r05 — e.g. a language entry with no stopwords yet)
         return "0"
     return f"greatest(cast(({' + '.join(terms)}) as int), 0)"
+
+
+def stopword_hits(text: str, words: tuple[str, ...]) -> Column:
+    """:func:`_spark_sql_stopword_hits` of a column NAME or SQL fragment."""
+    return sf.expr(_spark_sql_stopword_hits(text, words))
+
+
+def quality_score(text: str) -> Column:
+    """Deterministic document quality score ∈ [0,1]: rewards mid-range length,
+    low punctuation share, and English-stopword presence — the standard
+    pretraining-filter shape (length/punct/stopword ratios). ``text`` is a
+    column NAME (or SQL fragment)."""
+    t = sf.expr(text)
+    n_tokens = token_count(t)
+    len_component = sf.least(n_tokens / sf.lit(64.0), sf.lit(1.0))
+    punct_component = sf.lit(1.0) - sf.least(punct_ratio(t) * 5, sf.lit(1.0))
+    stop_component = sf.least(
+        stopword_hits(text, LANG_STOPWORDS["en"]) / sf.greatest(n_tokens, sf.lit(1))
+        * sf.lit(4.0),
+        sf.lit(1.0),
+    )
+    return sf.round(
+        len_component * 0.4 + punct_component * 0.3 + stop_component * 0.3, 6
+    )
 
 
 def predict_lang(text: str) -> Column:
@@ -194,8 +155,8 @@ def predict_lang(text: str) -> Column:
     Ties break by language-code order (deterministic).
 
     ``text`` is a column NAME (or SQL fragment): the whole 24-language
-    argmax over :func:`stopword_hits`' expression tree is generated as one
-    SQL string and parsed in a single JVM call."""
+    argmax over :func:`_spark_sql_stopword_hits` is generated as one SQL
+    string and parsed in a single JVM call."""
     structs = ", ".join(
         f"named_struct('hits', {_spark_sql_stopword_hits(text, ws)}, "
         f"'lang', '{lang}')"
@@ -208,11 +169,12 @@ def predict_lang(text: str) -> Column:
 def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Attach n_tokens / punct_ratio / quality / lang_pred columns."""
     t = sf.col(text_col)
+    text_sql = _sql_ident(text_col)
     return df.withColumns({
         "n_tokens": token_count(t),
         "punct_ratio": punct_ratio(t),
-        "quality": quality_score(t),
-        "lang_pred": predict_lang(_sql_ident(text_col)),
+        "quality": quality_score(text_sql),
+        "lang_pred": predict_lang(text_sql),
     })
 
 
@@ -243,7 +205,7 @@ def _sql_word_ngrams(toks_col: str, n: int) -> str:
 
 
 def _sql_filtered_tokens(text_sql: str) -> str:
-    """Empty-filtered :func:`_word_tokens` tokenization as SQL."""
+    """Empty-filtered ``_SQL_WORD_TOKENS`` tokenization as SQL."""
     return f"filter({_SQL_WORD_TOKENS.format(t=text_sql)}, x -> x <> '')"
 
 
@@ -257,7 +219,7 @@ def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
       (character-weighted variant: every repeat of a line counts its full
       length against the document)
     - ``dup_ngram_frac``  = 1 − distinct(word n-grams) / n-grams over the
-      :func:`_word_tokens` tokenization (n = 3)
+      ``_SQL_WORD_TOKENS`` tokenization (n = 3)
 
     All three are 0.0 for documents with no lines / too few tokens. Emitted
     as single parsed SQL expressions (the langid/dedup build-time lesson).

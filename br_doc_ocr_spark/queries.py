@@ -862,7 +862,7 @@ def _quality_tokens_oracle_sql() -> str:
 def q_text_quality(spark, sf_dir):
     d = t_wide(spark, sf_dir, "documents")
     quality = (d.select("source",
-                        textstats.quality_score(sf.col("text")).alias("q"))
+                        textstats.quality_score("text").alias("q"))
                .groupBy("source")
                .agg(sf.round(sf.avg("q"), 6).alias("avg_v"),
                     sf.count("*").alias("n"))
@@ -1807,7 +1807,7 @@ _SQL_CUR_LINES = ("list_filter(list_transform("
                   "string_split_regex(text, '\\r?\\n'), "
                   "x -> trim(x)), x -> x <> '')")
 # composed from _SQL_TOKENS, not re-spelled: the tokenization must stay in
-# lockstep with Spark's textstats._word_tokens, and a regex-class fix
+# lockstep with Spark's textstats._SQL_WORD_TOKENS, and a regex-class fix
 # applied to one hand-written copy but not the other would skew ONLY the
 # dup_ngrams oracle — a confusing single-query mismatch (review r05)
 _SQL_CUR_TOKS = f"list_filter({_SQL_TOKENS}, x -> x <> '')"
@@ -2100,65 +2100,17 @@ def q_sessionize_events(spark, sf_dir):
                  (us(sf.max("ts")) - us(sf.min("ts"))).alias("duration_us")))
 
 
-# ---------------------------------------------------------------------------
-# Driver-coverage guard (VERDICT r02 #1/#7): the driver records CORRECTNESS
-# rows for only the FIRST DRIVER_RECORD_CAP entries of queries(). Round 2
-# shipped 60 entries and the last 10 — including every round-1 failure —
-# silently fell out of the hard correctness signal. The catalog is therefore
-# consolidated to ≤ 50 entries (merged entries name their r02 parents in
-# their docstrings) and re-ordered so the 10 previously-unrecorded names
-# come first. Adding an entry past the cap raises at import time — a new
-# query can never again silently push an existing one out of coverage.
-# ---------------------------------------------------------------------------
+# The driver records CORRECTNESS rows for only the first DRIVER_RECORD_CAP
+# entries of queries(). Adding an entry past the cap raises at import time, so
+# a new query can never silently push an existing one out of coverage.
 
 DRIVER_RECORD_CAP = 50
 
-_DRIVER_ORDER = [
-    # new this round (r05): the REAL-codec decode paths get a hard driver
-    # row (VERDICT r04 #4) — slots freed by merging the three FakeDecoder
-    # multimodal entries into one tagged union — and gap-based
-    # sessionization lands in the remaining free slot
-    "multimodal_real_codec", "sessionize_events",
-    # new in r04: the round-3 flagship ops got hard driver rows
-    # (VERDICT r03 #1) — slots freed by merging text_token_stats into
-    # text_quality and fn_state_extraction into explode_digit_counts
-    "redact_text_audit", "curate_drop_reasons",
-    # the entries with no driver CORRECTNESS row in r02 (VERDICT r02 #1);
-    # the three multimodal_* entries merged into multimodal_features in r05
-    "text_fingerprint", "eval_extraction_report", "extract_schema_guided",
-    "explode_multidoc_segments", "extract_multidoc", "classify_alternatives",
-    "text_langid", "multimodal_features",
-    # new in r03
-    "ann_cosine_topk_int8",
-    # extraction + LLM-data operators
-    "extract_pipeline_summary", "extract_field_counts",
-    "dedup_minhash_lsh", "dedup_simhash", "dedup_components",
-    "dedup_exact_groups", "dedup_token_jaccard", "dedup_embedding_cosine",
-    "ann_topk", "ann_knn_join", "embedding_quantize_int8", "temporal_joins",
-    # relational surface
-    "pricing_summary", "filter_isin", "projection_pushdown",
-    "projection_null_init", "status_routing", "join_broadcast_agg",
-    "join_multiway", "join_semi_anti", "join_full_outer_alignment",
-    "window_topk_running", "window_lag_gap", "sort_report",
-    "agg_rollup_time", "agg_approx_distinct", "set_ops",
-    "explode_digit_counts", "fn_cnpj_date_normalize", "fn_currency_parse",
-    "fn_invoice_totals", "fn_json_extract",
-    "deterministic_split", "event_time_window", "eval_prf_flags",
-    "dataset_conversation", "text_quality",
-]
-
-if set(_DRIVER_ORDER) != set(REGISTRY):
+if len(REGISTRY) > DRIVER_RECORD_CAP:
     raise RuntimeError(
-        "queries.py registry drift: _DRIVER_ORDER and @register entries "
-        f"disagree — missing from order: {sorted(set(REGISTRY) - set(_DRIVER_ORDER))}, "
-        f"stale in order: {sorted(set(_DRIVER_ORDER) - set(REGISTRY))}")
-if len(_DRIVER_ORDER) > DRIVER_RECORD_CAP:
-    raise RuntimeError(
-        f"catalog has {len(_DRIVER_ORDER)} entries but the driver records "
+        f"catalog has {len(REGISTRY)} entries but the driver records "
         f"only the first {DRIVER_RECORD_CAP} — merge entries (see the "
         "tagged-union pattern in set_ops) instead of exceeding the cap")
-
-REGISTRY = {name: REGISTRY[name] for name in _DRIVER_ORDER}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

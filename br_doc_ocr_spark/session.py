@@ -1,9 +1,10 @@
 """SparkSession factory with the scale-oriented configuration the job needs.
 
 These confs are the sandbox (local[N]) rendering of the 1000-executor design:
-AQE on (runtime re-plan, skew-join splitting, partition coalescing), Arrow on
-(the extraction kernel crosses the JVM↔Python boundary in columnar batches),
-shuffle partitions sized to the core count, and small-file control on writes.
+Arrow on (the extraction kernel crosses the JVM↔Python boundary in columnar
+batches), shuffle partitions sized to the core count, and small-file control
+on writes. AQE (runtime re-plan, skew-join splitting, partition coalescing)
+is on by Spark's default: only confs that differ from a default are set.
 """
 
 from __future__ import annotations
@@ -74,18 +75,12 @@ def build_session(
                    .config("spark.driver.memory", driver_memory_for(cpus)))
     builder = (
         builder
-        # --- adaptive execution: runtime re-plan, skew defense, coalesce ---
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # --- shuffle sizing: one partition per core at test scale; on a real
         # cluster this scales with executor count (set via spark-submit) ---
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # --- Arrow: the only sanctioned Python crossing is columnar ---
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-        # --- scan sizing: 128 MiB splits, the parquet sweet spot ---
-        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # --- cached-batch sizing: DISK_ONLY persists store columnar
         # batches; the 10 000-row default holds ~10-60 MiB per batch with
         # KB-scale text columns, and 32 concurrent scan tasks × build +
@@ -93,11 +88,11 @@ def build_session(
         # cache no extraction write builds any more). 1 000 rows bounds
         # the per-task batch working set ~10× at negligible scan cost for
         # the persists that remain: pipeline.write_json_sinks,
-        # dataset.write_training_dataset and cli curate. ---
+        # dataset.write_training_dataset, cli curate and
+        # evaluation.evaluate(persist=True). ---
         .config("spark.sql.inMemoryColumnarStorage.batchSize", "1000")
         # --- small-file control on sinks ---
         .config("spark.sql.files.maxRecordsPerFile", "2000000")
-        .config("spark.sql.parquet.compression.codec", "snappy")
         # --- deterministic timestamp behavior across engines ---
         .config("spark.sql.session.timeZone", "UTC")
         # (spark.driver.memory is set in the local-only branch above:

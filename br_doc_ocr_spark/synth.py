@@ -186,6 +186,17 @@ def synth_to_parquet(spark, n_turns: int, path: str) -> None:
 # Spark-native generator (no driver loop, no UDF): hash-derived randomness.
 # ---------------------------------------------------------------------------
 
+def _cpf_column(h):
+    """``ddd.ddd.ddd-dd`` CPF text from a non-negative long column."""
+    from pyspark.sql import functions as sf
+
+    d = sf.lpad((h % 99999999999).cast("string"), 11, "0")
+    return sf.concat_ws("", sf.substring(d, 1, 3), sf.lit("."),
+                        sf.substring(d, 4, 3), sf.lit("."),
+                        sf.substring(d, 7, 3), sf.lit("-"),
+                        sf.substring(d, 10, 2))
+
+
 def make_transcripts_spark(spark, n_turns: int, n_convs: int):
     """Generate ``n_turns`` transcript rows as a distributed DataFrame.
 
@@ -215,11 +226,7 @@ def make_transcripts_spark(spark, n_turns: int, n_convs: int):
         (h_kind % 100).alias("kind_roll"),
         sf.xxhash64(sf.col("row_id"), sf.lit(1)).bitwiseAND(mask).alias("h2"),
     )
-    cpf_digits = sf.lpad((sf.col("h2") % 99999999999).cast("string"), 11, "0")
-    cpf = sf.concat_ws("", sf.substring(cpf_digits, 1, 3), sf.lit("."),
-                       sf.substring(cpf_digits, 4, 3), sf.lit("."),
-                       sf.substring(cpf_digits, 7, 3), sf.lit("-"),
-                       sf.substring(cpf_digits, 10, 2))
+    cpf = _cpf_column(sf.col("h2"))
     day = (sf.col("h2") % 28 + 1).cast("int")
     month = (sf.col("h2") % 12 + 1).cast("int")
     year = (sf.col("h2") % 60 + 1965).cast("int")

@@ -336,7 +336,7 @@ def test_quality_score_ordering(spark):
         ("!!! ??? ### $$$ %%%",),                # punctuation garbage
     ], "text string")
     scores = [r[0] for r in df.select(
-        textstats.quality_score(sf.col("text"))).collect()]
+        textstats.quality_score("text")).collect()]
     assert scores[0] > scores[1]
 
 
@@ -393,8 +393,8 @@ def test_stopword_counts_punctuation_adjacency_and_cjk(spark):
         [("the the cat, the.",), ("这是我的书，的的",),
          ("não informação órgão!",)], "text string")
     out = df.select(
-        textstats.stopword_hits(sf.col("text"), ("the",)).alias("the_hits"),
-        textstats.stopword_hits(sf.col("text"), ("的",)).alias("zh_hits"),
+        textstats.stopword_hits("text", ("the",)).alias("the_hits"),
+        textstats.stopword_hits("text", ("的",)).alias("zh_hits"),
         textstats.punct_ratio(sf.col("text")).alias("punct"),
         textstats.predict_lang("text").alias("lang"),
     ).collect()

@@ -394,6 +394,38 @@ def test_aqe_and_arrow_enabled(spark):
     assert spark.conf.get("spark.sql.execution.arrow.pyspark.enabled") == "true"
 
 
+def test_build_session_sets_no_spark_sql_default(spark):
+    """Every literal ``spark.sql.*`` key that ``build_session`` passes to
+    ``.config(`` (read by ``ast``) holds a value other than the one Spark
+    reports for it when unset: a conf equal to Spark's default is a second
+    copy of Spark's decision. Byte sizes compare by value (an unset
+    ``maxPartitionBytes`` reads ``134217728b``)."""
+    import ast
+    import inspect
+    import re
+
+    from br_doc_ocr_spark import session
+
+    tree = ast.parse(inspect.getsource(session.build_session))
+    keys = sorted(
+        node.args[0].value for node in ast.walk(tree)
+        if isinstance(node, ast.Call) and _name(node.func) == "config"
+        and node.args and isinstance(node.args[0], ast.Constant)
+        and str(node.args[0].value).startswith("spark.sql."))
+    assert keys, "no spark.sql.* conf found in build_session"
+
+    def value(v):
+        return re.sub(r"^(\d+)b$", r"\1", v.strip().lower())
+
+    fresh = spark.newSession()
+    restated = []
+    for key in keys:
+        fresh.conf.unset(key)
+        if value(spark.conf.get(key)) == value(fresh.conf.get(key)):
+            restated.append(key)
+    assert not restated, f"build_session restates Spark's default: {restated}"
+
+
 def test_hash_aggregate_with_partial_pass(spark):
     plan = plan_of(REGISTRY["pricing_summary"].fn(spark, SF_DIR))
     # map-side partial + final hash aggregate (two HashAggregate operators)

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from br_doc_ocr_spark.core import textops as T
 
 
@@ -52,6 +54,19 @@ def test_strip_html_link_density():
 def test_strip_html_malformed_degrades():
     out = T.strip_html("<div><p>unclosed but content is long enough here")
     assert "content is long enough" in out
+
+
+def test_strip_html_falls_back_on_an_overlong_character_reference():
+    """A decimal character reference past CPython's int-string limit makes
+    html.unescape, and so the block tokenizer, raise ValueError: the one
+    input that reaches strip_html's tag-stripping fallback."""
+    html = ("<div><nav>Home</nav><p>Content before the reference &#"
+            + "1" * 5000 + "; and after it.</p></div>")
+    with pytest.raises(ValueError):
+        T._BlockCollector().feed(html)
+    out = T.strip_html(html)
+    assert out.startswith("Home Content before the reference &#111")
+    assert out.endswith("; and after it.")
 
 
 def test_parse_pdf_layout_single_column():
